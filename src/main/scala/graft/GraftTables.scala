@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.{BtCell, CellCodec}
-import graft.store.{BigtableStores, InMemoryBigtable, SocketBigtableServer}
+import graft.store.{BigtableStores, InMemoryBigtable, ProtoSocketBigtableServer}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, unix_micros}
@@ -189,30 +189,31 @@ object GraftTables {
   }
 
   // -------------------------------------------------------------------
-  // Remote (socket-transport) store: the seeded emulator served over a
-  // real localhost TCP hop, registered under its own name so gates can
-  // read THROUGH the process-boundary seam (the offline stand-in for the
-  // reference's executor-side gRPC channel, datasource.rs:81-88).
+  // Remote (wire-transport) store: the seeded emulator served over a
+  // real localhost TCP hop in Bigtable v2 protobuf frames, registered
+  // under its own name so gates can read THROUGH the process-boundary
+  // seam (the offline stand-in for the reference's executor-side gRPC
+  // channel, datasource.rs:81-88).
   // -------------------------------------------------------------------
 
-  private val remoteServers = scala.collection.mutable.Map.empty[String, SocketBigtableServer]
+  private val remoteServers = scala.collection.mutable.Map.empty[String, ProtoSocketBigtableServer]
 
   def remoteStoreName(sfDir: String): String = s"${storeName(sfDir)}-remote"
 
-  /** Seed the fixture store, then serve it over a localhost socket and
-    * register the client-side handle. Idempotent per sfDir; the server
-    * thread is a daemon, so JVM exit is never blocked.
+  /** Seed the fixture store, then serve it over the protobuf wire
+    * transport and register the client-side handle. Idempotent per
+    * sfDir; the server thread is a daemon, so JVM exit is never blocked.
     */
   def ensureRemote(spark: SparkSession, sfDir: String): Unit = synchronized {
     ensure(spark, sfDir)
     if (!remoteServers.contains(sfDir)) {
-      val server = new SocketBigtableServer(BigtableStores.get(storeName(sfDir)))
+      val server = new ProtoSocketBigtableServer(BigtableStores.get(storeName(sfDir)))
       remoteServers(sfDir) = server
       BigtableStores.register(remoteStoreName(sfDir), server.clientStore)
     }
   }
 
-  /** nation over the connector THROUGH the socket transport. */
+  /** nation over the connector THROUGH the protobuf wire transport. */
   def nationRemote(spark: SparkSession, sfDir: String): DataFrame = {
     ensureRemote(spark, sfDir)
     spark.read.format("bigtable").option("store", remoteStoreName(sfDir))

@@ -403,13 +403,13 @@ object SparkEntry {
     //     last delivered key, so results are identical to the healthy
     //     scan — the behavior a real gRPC transport needs ---
     "bt_retry_scan" -> ((s, dir) => {
-      // retry THROUGH the socket transport (r13 advice): every healthy
-      // read crosses a real TCP hop, and each mid-stream resume opens a
-      // FRESH connection over only the remaining key space — the exact
-      // recovery a gRPC-backed deployment runs when a ReadRows channel
-      // drops. The injector sits between the retry layer and the socket
-      // client so faults are deterministic; raw connection-drop recovery
-      // is pinned separately in SocketStoreSpec.
+      // retry THROUGH the protobuf wire transport (r13 advice): every
+      // healthy read crosses a real TCP hop, and each mid-stream resume
+      // opens a FRESH connection over only the remaining key space — the
+      // exact recovery a gRPC-backed deployment runs when a ReadRows
+      // channel drops. The injector sits between the retry layer and the
+      // wire client so faults are deterministic; raw connection-drop
+      // recovery is pinned separately in ReadRowsProtoSpec.
       GraftTables.ensureRemote(s, dir)
       val flaky = s"${GraftTables.storeName(dir)}-flaky"
       if (!graft.store.BigtableStores.contains(flaky))
@@ -658,12 +658,13 @@ object SparkEntry {
         .limit(4)),
 
     // The full connector pipeline across a REAL process-boundary seam:
-    // the seeded store served over a localhost TCP socket
-    // (SocketBigtableServer), the scan reading through the client-side
-    // SocketBigtableStore whose only state is (host, port) — the
-    // offline stand-in for the reference's executor-side gRPC channel
-    // (datasource.rs:81-88). Range pruning, server-side filters, and
-    // the pivot all cross the wire; results must equal the in-JVM scan.
+    // the seeded store served in Bigtable v2 protobuf frames over a
+    // localhost TCP socket (ProtoSocketBigtableServer), the scan reading
+    // through the client-side ProtoSocketBigtableStore whose only state
+    // is (host, port) — the offline stand-in for the reference's
+    // executor-side gRPC channel (datasource.rs:81-88). Range pruning,
+    // server-side filters, and the pivot all cross the wire; results
+    // must equal the in-JVM scan.
     "bt_remote_scan" -> ((s, dir) =>
       GraftTables.nationRemote(s, dir)
         .where(col("n_key").between("0005", "0015"))

@@ -82,7 +82,7 @@ final class BigtableColumnarPartitionReader(
   override def get(): ColumnarBatch = batch
 
   override def close(): Unit = {
-    groupIter.close() // release a partially-consumed store scan (socket)
+    groupIter.close() // release a partially-consumed store scan (wire connection)
     batch.close()
   }
 }

@@ -709,7 +709,7 @@ final class BigtablePartitionReader(
   override def get(): InternalRow = current
 
   // release the underlying store scan even when partially consumed — a
-  // pushed limit/topN stops mid-stream, and a socket-backed scan must
-  // not leak its connection (ADVICE r13)
+  // pushed limit/topN stops mid-stream, and a wire-transport scan
+  // (ProtoSocketBigtableStore) must not leak its connection (ADVICE r13)
   override def close(): Unit = groupIter.close()
 }

@@ -52,8 +52,8 @@ private[connector] object BigtablePivot {
     */
   /** Group iterator that can RELEASE the underlying store scan: a
     * pushed limit/topN consumes partially (`take(n)` never drains the
-    * source), and a wire-transport store (SocketBigtableStore) would
-    * otherwise leak its client socket — and pin the server's writer
+    * source), and a wire-transport store (ProtoSocketBigtableStore)
+    * would otherwise leak its client socket — and pin the server's writer
     * thread — until JVM exit (ADVICE r13). PartitionReader.close()
     * calls this on every code path; in-memory stores return plain
     * iterators and close() is a no-op for them.

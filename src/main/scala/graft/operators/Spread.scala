@@ -38,8 +38,7 @@ private[graft] object Spread {
   private[graft] val DefaultTargetPartitionBytes = 128L * 1024 * 1024
 
   private def targetPartitionBytes(spark: SparkSession): Long =
-    spark.conf.getOption(TargetPartitionBytesConf).map(_.toLong)
-      .getOrElse(DefaultTargetPartitionBytes)
+    graft.SessionConf.long(spark, TargetPartitionBytesConf, DefaultTargetPartitionBytes)
 
   /** Data-size-adaptive partition count (VERDICT r18 #3): floor at
     * `defaultParallelism` (keep every core busy at fixture scale),

@@ -18,16 +18,25 @@ import java.util.concurrent.atomic.AtomicBoolean
   * consumes, so a real client drops in behind [[BigtableStore]] without
   * touching the composer or the pivot.
   *
-  * Connection protocol (one RPC per connection, like the object-stream
-  * transport): the client sends one method byte, then its request as one
-  * frame; the server answers with zero or more `flag=0` message frames
-  * (each a `ReadRowsResponse` batch / `SampleRowKeysResponse` element /
-  * `MutateRowsResponse`), then exactly one terminal frame: `flag=1`
-  * empty (OK end-of-stream, gRPC's trailers-only success) or `flag=2`
-  * carrying a `google.rpc.Status` with the canonical code — re-thrown
-  * client-side as the matching exception class, so the mandatory-filter
-  * guard, unknown-table, and transient-fault semantics keep their shape
-  * across the hop (same contract [[SocketBigtableStore]] certifies).
+  * Connection protocol (one RPC per connection): the client sends one
+  * method byte, then its request as one frame; the server answers with
+  * zero or more `flag=0` message frames (each a `ReadRowsResponse` batch
+  * / `SampleRowKeysResponse` element / `MutateRowsResponse`), then
+  * exactly one terminal frame: `flag=1` empty (OK end-of-stream, gRPC's
+  * trailers-only success) or `flag=2` carrying a `google.rpc.Status`
+  * with the canonical code — re-thrown client-side as the matching
+  * exception class, so the mandatory-filter guard, unknown-table, and
+  * transient-fault semantics keep their shape across the hop.
+  *
+  * Frame sizes: no frame exceeds [[ProtoSocket.MaxFrameBytes]]. Both
+  * sides pack rows with [[ProtoSocket.packRows]] — a `ReadRowsResponse`
+  * (server) or `MutateRowsRequest` (client) closes at
+  * [[ProtoSocket.BatchRows]] rows or before the row that would carry it
+  * past [[ProtoSocket.FrameBudgetBytes]], so a large scan or write
+  * becomes several frames or requests (`MutateRows` is atomic per row
+  * only, so splitting a write keeps its semantics). A single row that
+  * encodes past `MaxFrameBytes` cannot travel: [[ProtoSocket.writeFrame]]
+  * refuses it with an `IllegalArgumentException` naming the limit.
   *
   * Two emulator-extension methods sit OUTSIDE the Bigtable data API
   * (their real-world counterparts live elsewhere): EstimateSize (the
@@ -49,20 +58,49 @@ object ProtoSocket {
   val FlagEndOk: Byte = 1
   val FlagError: Byte = 2
 
-  /** Rows per ReadRowsResponse frame — the same bounded-batch discipline
-    * as [[SocketProtocol.BatchRows]].
+  /** Rows per `ReadRowsResponse` frame / `MutateRowsRequest`: bounds
+    * both sides' memory while amortizing per-frame overhead.
     */
   val BatchRows = 512
 
-  /** Refuse absurd frames before allocating (a corrupt length prefix
-    * must not become a multi-GB allocation).
+  /** Bytes after which a frame of several rows closes: gRPC's default
+    * inbound message limit (4 MiB), well below [[MaxFrameBytes]].
+    */
+  val FrameBudgetBytes: Int = 4 * 1024 * 1024
+
+  /** Hard frame limit on both sides: a corrupt length prefix must not
+    * become a multi-GB allocation, and a row that encodes past it is
+    * refused rather than sent.
     */
   val MaxFrameBytes: Int = 64 * 1024 * 1024
 
   def writeFrame(out: DataOutputStream, flag: Byte, payload: Array[Byte]): Unit = {
+    require(payload.length <= MaxFrameBytes,
+      s"proto frame of ${payload.length} bytes exceeds MaxFrameBytes ($MaxFrameBytes bytes): " +
+        "a single row must encode below this limit to cross the wire")
     out.writeByte(flag.toInt)
     out.writeInt(payload.length)
     out.write(payload)
+  }
+
+  /** Groups encoded rows into frames: a frame takes rows until it holds
+    * [[BatchRows]] of them or the next row would carry it past
+    * [[FrameBudgetBytes]]; a row larger than the budget travels alone.
+    */
+  def packRows(rows: Iterator[Array[Byte]]): Iterator[Vector[Array[Byte]]] = {
+    val in = rows.buffered
+    Iterator.continually {
+      val frame = Vector.newBuilder[Array[Byte]]
+      var n = 0
+      var bytes = 0L
+      while (in.hasNext && n < BatchRows && (n == 0 || bytes + in.head.length <= FrameBudgetBytes)) {
+        val row = in.next()
+        frame += row
+        n += 1
+        bytes += row.length
+      }
+      frame.result()
+    }.takeWhile(_.nonEmpty)
   }
 
   def readFrame(in: DataInputStream): (Byte, Array[Byte]) = {
@@ -113,26 +151,18 @@ final class ProtoSocketBigtableServer(backing: BigtableStore, bindAddress: Strin
       sock.setTcpNoDelay(true)
       val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
       val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
-      val method = in.readByte()
-      val (_, req) = readFrame(in)
       try {
+        // inside the try: a bad request frame gets a Status reply, not a
+        // dropped connection
+        val method = in.readByte()
+        val (_, req) = readFrame(in)
         method match {
           case MethodReadRows =>
             val (table, ranges, filters) = ReadRowsProto.decodeReadRowsRequest(req)
-            val it = backing.readRows(table, ranges, filters)
-            val batch = Vector.newBuilder[BtRow]
-            var n = 0
-            while (it.hasNext) {
-              batch += it.next()
-              n += 1
-              if (n == BatchRows) {
-                writeFrame(out, FlagMessage, ReadRowsProto.encodeReadRowsResponse(batch.result()))
-                out.flush()
-                batch.clear(); n = 0
-              }
-            }
-            if (n > 0)
-              writeFrame(out, FlagMessage, ReadRowsProto.encodeReadRowsResponse(batch.result()))
+            // responses concatenate: one row's chunks per part, one part per row
+            val rows = backing.readRows(table, ranges, filters)
+              .map(r => ReadRowsProto.encodeReadRowsResponse(Seq(r)))
+            packRows(rows).foreach(frame => writeFrame(out, FlagMessage, Array.concat(frame: _*)))
             writeFrame(out, FlagEndOk, Array.emptyByteArray)
           case MethodSampleRowKeys =>
             val table = ReadRowsProto.decodeSampleRowKeysRequest(req)
@@ -198,12 +228,14 @@ final class ProtoSocketBigtableStore(host: String, port: Int) extends MutableBig
 
   private def connect(method: Byte, request: Array[Byte]): (Socket, DataInputStream) = {
     val sock = new Socket(host, port)
-    sock.setTcpNoDelay(true)
-    val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
-    out.writeByte(method.toInt)
-    writeFrame(out, FlagMessage, request)
-    out.flush()
-    (sock, new DataInputStream(new BufferedInputStream(sock.getInputStream)))
+    try {
+      sock.setTcpNoDelay(true)
+      val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+      out.writeByte(method.toInt)
+      writeFrame(out, FlagMessage, request)
+      out.flush()
+      (sock, new DataInputStream(new BufferedInputStream(sock.getInputStream)))
+    } catch { case e: Throwable => sock.close(); throw e }
   }
 
   private def rethrow(status: Array[Byte]): Nothing = {
@@ -295,8 +327,14 @@ final class ProtoSocketBigtableStore(host: String, port: Int) extends MutableBig
     result
   }
 
+  /** One `MutateRows` RPC per packed request ([[ProtoSocket.packRows]]):
+    * a large write splits at row boundaries, which keeps its per-row
+    * atomicity.
+    */
   override def mutateRows(table: String, mutations: Seq[(String, Seq[BtCell])]): Unit =
-    drain(MethodMutateRows, ReadRowsProto.encodeMutateRowsRequest(table, mutations))(_ => ())
+    packRows(mutations.iterator.map { case (key, cells) => ReadRowsProto.encodeMutateRowsEntry(key, cells) })
+      .foreach(entries =>
+        drain(MethodMutateRows, ReadRowsProto.encodeMutateRowsRequest(table, entries))(_ => ()))
 
   override def truncateTable(table: String): Unit =
     drain(MethodTruncateTable, ReadRowsProto.encodeSampleRowKeysRequest(table))(_ => ())

@@ -419,22 +419,27 @@ object ReadRowsProto {
     (key, off)
   }
 
-  def encodeMutateRowsRequest(table: String, mutations: Seq[(String, Seq[BtCell])]): Array[Byte] = {
+  /** One `MutateRowsRequest.Entry` (row_key=1, mutations=2), so a
+    * client can size each row before packing rows into requests.
+    */
+  def encodeMutateRowsEntry(key: String, cells: Seq[BtCell]): Array[Byte] = {
+    val e = new Writer
+    e.bytes(1, utf8(key))
+    cells.foreach(c => e.message(2, m => m.message(1, sc => {
+      sc.string(1, c.family)
+      sc.bytes(2, utf8(c.qualifier))
+      sc.int(3, c.timestampMicros)
+      sc.bytes(4, if (c.value == null) Array.emptyByteArray else c.value)
+      ()
+    }): Unit): Unit)
+    e.result()
+  }
+
+  /** A `MutateRowsRequest` from entries encoded by [[encodeMutateRowsEntry]]. */
+  def encodeMutateRowsRequest(table: String, entries: Seq[Array[Byte]]): Array[Byte] = {
     val w = new Writer
     w.string(1, table)
-    mutations.foreach { case (key, cells) =>
-      w.message(2, e => {
-        e.bytes(1, utf8(key))
-        cells.foreach(c => e.message(2, m => m.message(1, sc => {
-          sc.string(1, c.family)
-          sc.bytes(2, utf8(c.qualifier))
-          sc.int(3, c.timestampMicros)
-          sc.bytes(4, if (c.value == null) Array.emptyByteArray else c.value)
-          ()
-        }): Unit): Unit)
-        ()
-      }): Unit
-    }
+    entries.foreach(w.bytes(2, _))
     w.result()
   }
 

@@ -74,9 +74,10 @@ final class RetryingStore(
 
   // AutoCloseable (ADVICE r14): the connector's partition reader closes
   // its row source on early termination (pushed limit/topN), and a plain
-  // Iterator wrapper here would swallow that close — leaking the client
-  // socket and pinning the server writer thread on exactly the
-  // retry-wrapped configuration a real deployment runs.
+  // Iterator wrapper here would swallow that close — leaking the
+  // ProtoSocketBigtableStore connection and pinning the server writer
+  // thread on exactly the retry-wrapped configuration a real deployment
+  // runs.
   override def readRows(
       table: String,
       ranges: Seq[RowRange],

@@ -94,7 +94,7 @@ object StreamingDedup {
     "spark.graft.streaming.maintenanceParallelism"
 
   private def verifySemiFilterMinBytes(spark: SparkSession): Long =
-    spark.conf.getOption(VerifySemiFilterConf).map(_.toLong).getOrElse(VerifySemiFilterMinBytes)
+    graft.SessionConf.long(spark, VerifySemiFilterConf, VerifySemiFilterMinBytes)
 
   /** Duplicate-coverage ceiling for the verify semi filter: the filter
     * only pays when the candidate ids are a SMALL fraction of the
@@ -647,8 +647,7 @@ object StreamingDedup {
     // wall time), but a memory-tight deployment can set
     // `spark.graft.streaming.maintenanceParallelism` to 2 or 1 to stage
     // the passes sequentially at the cost of idle tails.
-    val width = spark.conf.getOption(MaintenanceParallelismConf)
-      .map(_.toInt).getOrElse(3)
+    val width = graft.SessionConf.int(spark, MaintenanceParallelismConf, 3)
     val out = new java.util.concurrent.ConcurrentHashMap[String, DatasetCompaction]()
     parallelUnits(maxThreads = width, units = Seq(
       () => out.put("bands",

@@ -47,8 +47,7 @@ object StreamingSpanDedup {
     "spark.graft.streaming.spanProbeBroadcastMaxRows"
 
   private def spanProbeBroadcastMaxRows(spark: SparkSession): Long =
-    spark.conf.getOption(SpanProbeBroadcastConf).map(_.toLong)
-      .getOrElse(SpanProbeBroadcastMaxRows)
+    graft.SessionConf.long(spark, SpanProbeBroadcastConf, SpanProbeBroadcastMaxRows)
 
   /** The index probe: exploded batch spans not yet claimed by the
     * accumulated index. With `broadcastProbe` (a batch inside the
@@ -223,8 +222,7 @@ object StreamingSpanDedup {
     // data only, so no such ordering exists between these two.)
     val out =
       new java.util.concurrent.ConcurrentHashMap[String, TieredCompaction.DatasetCompaction]()
-    val width = spark.conf.getOption(StreamingDedup.MaintenanceParallelismConf)
-      .map(_.toInt).getOrElse(2)
+    val width = graft.SessionConf.int(spark, StreamingDedup.MaintenanceParallelismConf, 2)
     StreamingDedup.parallelUnits(maxThreads = width, units = Seq(
       () => out.put("spans",
         TieredCompaction.compactKeyed(spark, s"$workDir/spans", targetRecordsPerFile,

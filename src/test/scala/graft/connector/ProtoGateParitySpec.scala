@@ -5,14 +5,20 @@ import graft.store.{BigtableStores, ProtoSocketBigtableServer}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The protobuf-wire twin of [[SocketGateParitySpec]]: every `bt_*`
-  * gate must return identical results when the fixture store is
-  * resolved through a [[graft.store.ProtoSocketBigtableStore]] — every
-  * scan crossing the wire as REAL Bigtable v2 `ReadRowsRequest` /
-  * `ReadRowsResponse` protobuf bytes in gRPC frame layout
-  * ([[graft.store.ReadRowsProto]]). This certifies the bytes the
-  * connector produces and consumes are the production wire contract;
-  * only the HTTP/2 channel itself is swapped for plain TCP.
+/** Process-boundary certification of the whole connector gate suite:
+  * every `bt_*` gate must return identical results when the fixture
+  * store is resolved through a [[graft.store.ProtoSocketBigtableStore]]
+  * — every `readRows` / `sampleRowKeys` / `estimateSize` crossing the
+  * wire as REAL Bigtable v2 protobuf bytes in gRPC frame layout
+  * ([[graft.store.ReadRowsProto]]). The swap is a registry
+  * re-registration under the SAME store name, so no gate code changes.
+  * This certifies the bytes the connector produces and consumes are the
+  * production wire contract; only the HTTP/2 channel itself is swapped
+  * for plain TCP.
+  *
+  * Gates that build their OWN stores (write roundtrips, retry
+  * injection) keep them — the suite proves the shared fixture path;
+  * their store wiring is their own test subject.
   */
 class ProtoGateParitySpec extends AnyFunSuite {
   private lazy val spark = graft.SparkTestSession.spark

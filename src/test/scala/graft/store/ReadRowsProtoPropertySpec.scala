@@ -94,7 +94,8 @@ class ReadRowsProtoPropertySpec extends AnyFunSuite {
         randKey() -> Seq.fill(rnd.nextInt(4))(
           BtCell("f", "q" + rnd.nextInt(3), rnd.nextLong().abs % 4000000000000000L, randBytes())))
       val (t2, m2) = ReadRowsProto.decodeMutateRowsRequest(
-        ReadRowsProto.encodeMutateRowsRequest(table, muts))
+        ReadRowsProto.encodeMutateRowsRequest(table,
+          muts.map { case (k, cs) => ReadRowsProto.encodeMutateRowsEntry(k, cs) }))
       assert(t2 == table)
       assert(m2.map { case (k, cs) =>
         (k, cs.map(c => (c.family, c.qualifier, c.timestampMicros, c.value.toSeq))) } ==

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (what `protoc` would emit for the same message), and round-trips
   * cover the full connector-emitted shape space. The transport tests
   * then prove the bytes drive a real scan across a TCP hop with the
-  * same semantics the object-stream transport certifies.
+  * semantics of the store it fronts: parity, streaming, error shapes,
+  * frame limits, connection release, and fault recovery.
   */
 class ReadRowsProtoSpec extends AnyFunSuite {
 
@@ -164,5 +165,177 @@ class ReadRowsProtoSpec extends AnyFunSuite {
       }).clientStore.mutateRows("t", Seq(("k", Seq(cell("q", 1L, "v")))))
     }
     assert(e.getMessage.contains("status 12"))
+  }
+
+  test("proto transport: client state is only (host, port): a serialized clone still reads") {
+    val bytes = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val oos = new java.io.ObjectOutputStream(bos)
+      oos.writeObject(client)
+      oos.close()
+      bos.toByteArray
+    }
+    assert(bytes.length < 4096, s"proto store handle should be tiny, was ${bytes.length}B")
+    val clone = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
+      .readObject().asInstanceOf[ProtoSocketBigtableStore]
+    assert(clone.readRows("t", Seq(RowRange.point("a")), Nil).map(_.rowKey).toSeq == Seq("a"))
+  }
+
+  test("proto transport: partially-consumed scan releases the connection via close()") {
+    val it = client.readRows("wide", Seq(RowRange.full), Nil)
+    assert(it.next().rowKey == "k000000") // pull one row, leave the rest
+    it match {
+      case c: AutoCloseable => c.close()
+      case other            => fail(s"proto scan iterator must be AutoCloseable, got ${other.getClass}")
+    }
+    // the socket is gone: further pulls see a closed stream, not a hang
+    assert(!it.hasNext)
+  }
+
+  test("proto transport: mid-scan connection drop is a transient fault and RetryingStore resumes exactly") {
+    // A rogue server that speaks the REAL protocol but hard-drops the
+    // first two scans' connections after 2 frames — no end-of-stream, no
+    // Status, just a closed socket (a crashed server / reset network).
+    // The client must surface the truncation as TransientStoreException
+    // (NOT a clean end — that would be silent data loss), and
+    // RetryingStore must resume past the last delivered key over a fresh
+    // connection with no dupes or gaps.
+    import ProtoSocket._
+    import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+    val requests = new java.util.concurrent.ConcurrentLinkedQueue[Seq[RowRange]]()
+    val served = new java.util.concurrent.atomic.AtomicInteger(0)
+    val srv = new java.net.ServerSocket(0, 8, java.net.InetAddress.getByName("127.0.0.1"))
+    val accept = new Thread(() => {
+      try while (true) {
+        val sock = srv.accept()
+        val n = served.getAndIncrement()
+        val t = new Thread(() => {
+          try {
+            val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+            val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+            in.readByte() // method: ReadRows
+            val (table, ranges, filters) = ReadRowsProto.decodeReadRowsRequest(readFrame(in)._2)
+            requests.add(ranges)
+            val frames = backing.readRows(table, ranges, filters).grouped(100).zipWithIndex
+            var dropped = false
+            while (frames.hasNext && !dropped) {
+              val (batch, i) = frames.next()
+              writeFrame(out, FlagMessage, ReadRowsProto.encodeReadRowsResponse(batch))
+              out.flush()
+              // drop the first TWO scans (the raw-client probe below and
+              // the retried run's first attempt); later connections serve
+              if (n <= 1 && i == 1) { sock.close(); dropped = true } // hard drop
+            }
+            if (!dropped) {
+              writeFrame(out, FlagEndOk, Array.emptyByteArray); out.flush()
+              sock.close()
+            }
+          } catch { case _: Throwable => () }
+        })
+        t.setDaemon(true); t.start()
+      } catch { case _: Throwable => () }
+    })
+    accept.setDaemon(true); accept.start()
+    try {
+      val flaky = new ProtoSocketBigtableStore("127.0.0.1", srv.getLocalPort)
+      val e = intercept[TransientStoreException] {
+        flaky.readRows("wide", Seq(RowRange.full), Nil).size
+      }
+      assert(e.getMessage.contains("mid-stream"))
+      val retried = new RetryingStore(flaky, sleep = _ => ())
+      val keys = retried.readRows("wide", Seq(RowRange.full), Nil).map(_.rowKey).toSeq
+      assert(keys.size == 1500)
+      assert(keys == keys.sorted && keys.distinct.size == 1500)
+      val reqs = requests.toArray(Array.empty[Seq[RowRange]])
+      assert(reqs.length >= 3) // probe scan, dropped scan, resumed scan
+      val resumed = reqs.last
+      assert(RowRange.compareKeys(resumed.head.startKey, "k000199") > 0,
+        s"resumed scan must start past the last delivered key, got ${resumed.head.startKey}")
+    } finally srv.close()
+  }
+
+  test("proto transport: concurrent scans from many threads interleave safely") {
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val threads = (0 until 8).map { _ =>
+      new Thread(() => {
+        try counts.add(client.readRows("wide", Seq(RowRange.full), Nil).size)
+        catch { case _: Throwable => counts.add(-1) }
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join(30000))
+    import scala.jdk.CollectionConverters._
+    assert(counts.asScala.toSeq == Seq.fill(8)(1500))
+  }
+
+  test("proto transport: a bad request frame gets a Status reply, not a dropped connection") {
+    import java.io.{DataInputStream, DataOutputStream}
+    val sock = new java.net.Socket(server.host, server.port)
+    try {
+      val out = new DataOutputStream(sock.getOutputStream)
+      out.writeByte(ProtoSocket.MethodReadRows.toInt)
+      out.writeByte(ProtoSocket.FlagMessage.toInt)
+      out.writeInt(-1) // corrupt length prefix
+      out.flush()
+      val (flag, payload) = ProtoSocket.readFrame(new DataInputStream(sock.getInputStream))
+      assert(flag == ProtoSocket.FlagError)
+      val (code, msg) = ReadRowsProto.decodeStatus(payload)
+      assert(code == 3 && msg.contains("bad frame length"), s"$code: $msg")
+    } finally sock.close()
+  }
+
+  // ---- frame limits: rows the size of documents -------------------------
+
+  private val BigRows = 512
+  private val BigCellBytes = 200 * 1024
+
+  /** 512 rows of one 200 KB cell each (~100 MB): far past one frame. */
+  private def bigRows: Seq[(String, Seq[BtCell])] = (0 until BigRows).map { i =>
+    f"r$i%04d" -> Seq(BtCell("f", "doc", 1L, Array.fill(BigCellBytes)((i % 127).toByte)))
+  }
+
+  private def assertBigRows(rows: Iterator[BtRow]): Unit = {
+    var n = 0
+    rows.foreach { r =>
+      assert(r.rowKey == f"r$n%04d")
+      val v = r.cells.head.value
+      assert(v.length == BigCellBytes && v.forall(_ == (n % 127).toByte), s"row ${r.rowKey}")
+      n += 1
+    }
+    assert(n == BigRows)
+  }
+
+  test("proto transport: a 512-row scan of 200 KB cells streams within the frame limit") {
+    val b = new InMemoryBigtable.Builder
+    bigRows.foreach { case (k, cells) => cells.foreach(c => b.put("docs", k, c)) }
+    val srv = new ProtoSocketBigtableServer(b.build())
+    try assertBigRows(srv.clientStore.readRows("docs", Seq(RowRange.full), Nil))
+    finally srv.close()
+  }
+
+  test("proto transport: a 512-row mutateRows of 200 KB cells splits into requests under the limit") {
+    val mutable = new ConcurrentBigtable
+    val srv = new ProtoSocketBigtableServer(mutable)
+    try {
+      srv.clientStore.mutateRows("docs", bigRows)
+      assertBigRows(mutable.readRows("docs", Seq(RowRange.full), Nil))
+    } finally srv.close()
+  }
+
+  test("proto transport: a single row over MaxFrameBytes fails with a typed error naming the limit") {
+    val huge = Seq("big" -> Seq(BtCell("f", "doc", 1L, new Array[Byte](ProtoSocket.MaxFrameBytes + 1))))
+    val mutable = new ConcurrentBigtable
+    mutable.mutateRows("docs", huge)
+    val srv = new ProtoSocketBigtableServer(mutable)
+    try {
+      // write: refused client-side, before a byte is sent
+      val w = intercept[IllegalArgumentException](srv.clientStore.mutateRows("docs", huge))
+      assert(w.getMessage.contains("MaxFrameBytes"), w.getMessage)
+      // read: refused server-side, answered as INVALID_ARGUMENT
+      val r = intercept[IllegalArgumentException] {
+        srv.clientStore.readRows("docs", Seq(RowRange.full), Nil).size
+      }
+      assert(r.getMessage.contains("MaxFrameBytes") && r.getMessage.contains("status 3"), r.getMessage)
+    } finally srv.close()
   }
 }

@@ -390,6 +390,16 @@ class StreamingDedupSpec extends AnyFunSuite {
       (1L, 11L), (2L, 11L), (10L, 11L)), s"unexpected pair set: $direct")
   }
 
+  test("a malformed maintenanceParallelism conf fails naming the key and the value") {
+    val work = java.nio.file.Files.createTempDirectory("sdedup-conf").toString
+    spark.conf.set(StreamingDedup.MaintenanceParallelismConf, "three")
+    val e =
+      try intercept[IllegalArgumentException](StreamingDedup.compactIndexDetailed(spark, work))
+      finally spark.conf.unset(StreamingDedup.MaintenanceParallelismConf)
+    assert(e.getMessage.contains(StreamingDedup.MaintenanceParallelismConf) &&
+      e.getMessage.contains("'three'"), e.getMessage)
+  }
+
   test("incremental pairs equal the batch operator's pairs on the same corpus") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
