@@ -402,9 +402,7 @@ final class BigtableScan(
     * letting Catalyst auto-broadcast small connector tables in joins.
     */
   override def estimateStatistics(): Statistics = {
-    val est =
-      try BigtableStores.resolve(cfg.storeName, shippedStore).estimateSize(cfg.table, comp.ranges)
-      catch { case _: IllegalStateException => None }
+    val est = estimate
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         est.map(e => java.util.OptionalLong.of(e._2)).getOrElse(java.util.OptionalLong.empty())
@@ -474,18 +472,39 @@ final class BigtableScan(
       s"rowFilters=${comp.rowFilters.size} cols=${requiredSchema.fieldNames.mkString(",")}$tsDesc$limitDesc$aggDesc$pushedDesc"
   }
 
+  /** Store metadata, asked at most once per scan. Spark re-derives a
+    * `BatchScanExec`'s partitions on every copy of the plan node, and
+    * all copies share this one `Scan`, so the answers are kept here:
+    * one `estimateSize` shared by [[estimateStatistics]] and
+    * [[useColumnar]], one `sampleRowKeys` shared by every
+    * [[planInputPartitions]] call (before and after runtime filtering).
+    * Both are lazy, so a scan that never needs one never asks.
+    * Planning on a driver without the store answers "unknown".
+    */
+  private lazy val estimate: Option[(Long, Long)] =
+    try BigtableStores.resolve(cfg.storeName, shippedStore).estimateSize(cfg.table, comp.ranges)
+    catch { case _: IllegalStateException => None }
+
+  private lazy val samples: Seq[String] =
+    try BigtableStores.resolve(cfg.storeName, shippedStore).sampleRowKeys(cfg.table)
+    catch { case _: IllegalStateException => Nil }
+
   /** One InputPartition per split range group. Composed ranges are split
     * at the store's sampled row keys (the emulator analogue of
     * Bigtable's `SampleRowKeys` RPC, used exactly this way by the
     * public HBase/Beam connectors) so a large BETWEEN range fans out
     * across executors instead of reading on one task like the
     * reference's single-partition scan (execute_plan.rs:84-86).
+    *
+    * The samples are fetched at most once per scan, and not at all when
+    * every effective range is a point: [[BigtableScan.splitRanges]] cuts
+    * only at keys strictly inside a range, so a point range never splits
+    * and the partitions are the same without them. A key-filtered lookup
+    * thus plans with no `SampleRowKeys` round trip.
     */
   override def planInputPartitions(): Array[InputPartition] = {
-    val samples =
-      try BigtableStores.resolve(cfg.storeName, shippedStore).sampleRowKeys(cfg.table)
-      catch { case _: IllegalStateException => Nil } // planning on a driver without the store
-    val split = BigtableScan.splitRanges(effectiveRanges, samples)
+    val ranges = effectiveRanges
+    val split = if (ranges.forall(_.isPoint)) ranges else BigtableScan.splitRanges(ranges, samples)
     val groups = BigtableScan.chunkContiguous(split, cfg.maxPartitions)
     groups.map(g => BigtableInputPartition(g, tsRange): InputPartition).toArray
   }
@@ -497,12 +516,8 @@ final class BigtableScan(
     * allocation loses ~10% on point lookups — the default should
     * follow the data). Unknown statistics stay on the row path.
     */
-  private lazy val useColumnar: Boolean = cfg.vectorized.getOrElse {
-    val est =
-      try BigtableStores.resolve(cfg.storeName, shippedStore).estimateSize(cfg.table, comp.ranges)
-      catch { case _: IllegalStateException => None }
-    est.exists(_._1 >= cfg.vectorizedAutoRows)
-  }
+  private lazy val useColumnar: Boolean =
+    cfg.vectorized.getOrElse(estimate.exists(_._1 >= cfg.vectorizedAutoRows))
 
   override def createReaderFactory(): PartitionReaderFactory =
     // agg mode ignores the pushed limit: Spark never pushes a limit

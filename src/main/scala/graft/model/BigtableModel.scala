@@ -52,6 +52,9 @@ final case class RowRange(
         val c = RowRange.compareKeys(key, e)
         if (endInclusive) c <= 0 else c < 0
     })
+
+  /** A single-key range `[k, k]`: no key lies strictly inside it. */
+  def isPoint: Boolean = endInclusive && endKey.contains(startKey)
 }
 
 object RowRange {

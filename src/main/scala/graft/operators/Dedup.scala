@@ -176,10 +176,11 @@ object Dedup {
     //    computes least(own label, min neighbor label) DIRECTLY — the
     //    old second join (labels ⟕ neighborMin + least/coalesce update)
     //    is gone, and with it one exchange of the label frame per round;
-    //  - edges are hash-partitioned on the probe side `b` BEFORE the
-    //    lineage cut (Dataset.checkpoint preserves outputPartitioning in
-    //    the LogicalRDD), so the per-round join re-shuffles only the
-    //    label frame, never the larger edge frame;
+    //  - edges are cut ONCE, as `distinct()` left them (hash-partitioned
+    //    on (a, b), partition count set by AQE — see below); they are
+    //    not repartitioned on the probe side `b`, so a round's join may
+    //    shuffle the edge frame as well as the label frame (a
+    //    repartition on `b` before the cut would avoid that, unmeasured);
     //  - the convergence signal rides the round's own materialization:
     //    labels only ever DECREASE under min-propagation, so the label
     //    sum is strictly decreasing until the fixed point, and an

@@ -3,6 +3,7 @@ package graft.store
 import graft.model._
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentSkipListMap}
+import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 /** A [[BigtableStore]] that also accepts writes — the `MutateRows` RPC
@@ -40,32 +41,35 @@ trait MutableBigtableStore extends BigtableStore {
 final class ConcurrentBigtable extends MutableBigtableStore {
 
   private type Row = ConcurrentHashMap[(String, String, Long), Array[Byte]]
-  private val tables =
-    new ConcurrentHashMap[String, ConcurrentSkipListMap[String, Row]]()
 
-  /** O(1) whole-table statistics ledger, maintained by the write path:
-    * (rowCount, cellBytes) per table. Without it every `estimateSize` /
-    * `sampleRowKeys` on a full-scan table walks the entire skip list
-    * single-threaded on the DRIVER at planning time — a per-query cost
-    * that grows linearly with table size (the r12 `stream_bt_write`
-    * scaling outlier: the timed query is a small read-back, the O(N)
-    * planning walk was the part that grew). Byte accounting mirrors
-    * `estimateSize`'s formula exactly (key.length on row creation,
-    * 16 + qualifier + value per live cell, adjusted on overwrite).
+  /** One table: its rows plus a ledger the write path maintains, so
+    * planning-time metadata calls need not walk the skip list on the
+    * driver for every scan (a per-query cost that grows linearly with
+    * table size — the r12 `stream_bt_write` scaling outlier).
+    *   - `rowCount`/`cellBytes` answer a full-scan `estimateSize` in
+    *     O(1). Byte accounting mirrors `estimateSize`'s formula exactly
+    *     (key.length on row creation, 16 + qualifier + value per live
+    *     cell, adjusted on overwrite).
+    *   - `rowCount` is also the key-set epoch: no single row is ever
+    *     deleted (a truncate drops the whole `Table`), so it moves exactly
+    *     when a key is created, and only after the key is in the map.
+    *     `samples` caches the last `sampleRowKeys` walk with the count
+    *     read before it, so the keys are walked once per key-set change,
+    *     not once per scan plan. Table and ledger live in one object: a
+    *     truncate drops both at once, and no walk can cache one table's
+    *     keys in another's ledger.
     */
-  private final class Ledger {
-    val rows = new java.util.concurrent.atomic.AtomicLong(0L)
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-  }
-  private val ledgers = new ConcurrentHashMap[String, Ledger]()
-
-  private def newTable(): ConcurrentSkipListMap[String, Row] =
-    new ConcurrentSkipListMap[String, Row](
+  private final class Table {
+    val data = new ConcurrentSkipListMap[String, Row](
       (a: String, b: String) => RowRange.compareKeys(a, b))
+    val rowCount = new AtomicLong(0L)
+    val cellBytes = new AtomicLong(0L)
+    @volatile var samples: (Long, Vector[String]) = (-1L, Vector.empty)
+  }
+  private val tables = new ConcurrentHashMap[String, Table]()
 
   override def mutateRows(table: String, mutations: Seq[(String, Seq[BtCell])]): Unit = {
-    val t = tables.computeIfAbsent(table, _ => newTable())
-    val ledger = ledgers.computeIfAbsent(table, _ => new Ledger())
+    val t = tables.computeIfAbsent(table, _ => new Table())
     mutations.foreach { case (key, cells) =>
       // putIfAbsent, not computeIfAbsent-with-flag: ConcurrentSkipListMap
       // does NOT guarantee the mapping function runs atomically/once, so
@@ -74,14 +78,14 @@ final class ConcurrentBigtable extends MutableBigtableStore {
       // sampleRowKeys / the AUTO vectorized-path decision (ADVICE r13).
       // putIfAbsent returning null is the single authoritative "I made
       // this row" signal.
-      var row = t.get(key)
+      var row = t.data.get(key)
       if (row == null) {
         val fresh = new Row()
-        val prev = t.putIfAbsent(key, fresh)
+        val prev = t.data.putIfAbsent(key, fresh)
         if (prev == null) {
           row = fresh
-          ledger.rows.incrementAndGet()
-          ledger.bytes.addAndGet(key.length.toLong)
+          t.rowCount.incrementAndGet()
+          t.cellBytes.addAndGet(key.length.toLong)
         } else row = prev
       }
       cells.foreach { c =>
@@ -89,15 +93,13 @@ final class ConcurrentBigtable extends MutableBigtableStore {
         val delta =
           if (prev == null) 16L + c.qualifier.length + c.value.length
           else c.value.length.toLong - prev.length
-        ledger.bytes.addAndGet(delta)
+        t.cellBytes.addAndGet(delta)
       }
     }
   }
 
-  override def truncateTable(table: String): Unit = {
-    tables.remove(table)
-    ledgers.remove(table): Unit
-  }
+  override def truncateTable(table: String): Unit =
+    tables.remove(table): Unit
 
   private def cellsOf(row: Row): Vector[BtCell] =
     row.entrySet().iterator().asScala.map { e =>
@@ -114,11 +116,11 @@ final class ConcurrentBigtable extends MutableBigtableStore {
       ranges.nonEmpty,
       "readRows requires at least one RowRange; use Seq(RowRange.full) for an explicit full scan"
     )
-    val data = tables.get(table)
-    if (data == null)
+    val t = tables.get(table)
+    if (t == null)
       throw new IllegalArgumentException(s"unknown bigtable table: $table")
     RowRange.normalize(ranges).iterator.flatMap { r =>
-      data.tailMap(r.startKey, true).entrySet().iterator().asScala
+      t.data.tailMap(r.startKey, true).entrySet().iterator().asScala
         .takeWhile { e =>
           r.endKey match {
             case None    => true
@@ -134,21 +136,35 @@ final class ConcurrentBigtable extends MutableBigtableStore {
     }
   }
 
+  /** Served from the table's cache while its row count is unchanged; a
+    * walk happens once per key-set change. Samples are split hints and
+    * never decide correctness, so a walk that races a write is safe: a
+    * key the walk missed was put after the walk read the count, so its
+    * increment lands after that read too, and the next call walks again.
+    */
   override def sampleRowKeys(table: String): Seq[String] = {
-    val data = tables.get(table)
-    if (data == null) return Nil
-    // ledger row count instead of skip-list size(): size() is O(n) and
-    // this runs at planning time on the driver for every scan
-    val n = Option(ledgers.get(table)).map(_.rows.get()).getOrElse(0L)
+    val t = tables.get(table)
+    if (t == null) return Nil
+    val n = t.rowCount.get()
+    val (cachedN, cached) = t.samples
+    if (cachedN == n) return cached
+    val walked = walkSamples(t, n)
+    t.samples = (n, walked)
+    walked
+  }
+
+  /** ~32 evenly spaced keys in one streaming pass (no full key-set
+    * materialization); the ledger row count `n` sets the stride, since
+    * skip-list size() is itself O(n).
+    */
+  private def walkSamples(t: Table, n: Long): Vector[String] = {
     val targetSamples = 32
-    if (n <= 1) Nil
+    if (n <= 1) Vector.empty
     else {
       val step = math.max(1L, n / targetSamples)
-      // one streaming pass collecting ~targetSamples keys (no full
-      // key-set materialization)
       val out = Vector.newBuilder[String]
       var i = 0L
-      val it = data.keySet().iterator()
+      val it = t.data.keySet().iterator()
       while (it.hasNext) {
         val k = it.next()
         if (i > 0 && i % step == 0) out += k
@@ -159,19 +175,17 @@ final class ConcurrentBigtable extends MutableBigtableStore {
   }
 
   override def estimateSize(table: String, ranges: Seq[RowRange]): Option[(Long, Long)] = {
-    val data = tables.get(table)
-    if (data == null) return Some((0L, 0L))
+    val t = tables.get(table)
+    if (t == null) return Some((0L, 0L))
     val normalized = RowRange.normalize(ranges)
     // full scan: answer from the O(1) ledger instead of walking the
     // table (planning-time driver cost must not grow with table size)
-    if (normalized == Vector(RowRange.full)) {
-      val ledger = ledgers.get(table)
-      if (ledger != null) return Some((ledger.rows.get(), ledger.bytes.get()))
-    }
+    if (normalized == Vector(RowRange.full))
+      return Some((t.rowCount.get(), t.cellBytes.get()))
     var rows = 0L
     var bytes = 0L
     normalized.foreach { r =>
-      data.tailMap(r.startKey, true).entrySet().iterator().asScala
+      t.data.tailMap(r.startKey, true).entrySet().iterator().asScala
         .takeWhile { e =>
           r.endKey match {
             case None    => true

@@ -644,7 +644,9 @@ object StreamingDedup {
     // ~Nx the maintenance pass's peak memory envelope for the overlap —
     // cheap at fixture scale (MaintenanceEnvelopeProbe, 10x fixture,
     // warm-JIT alternation: peak heap ~13% over staged for ~40% less
-    // wall time), but a memory-tight deployment can set
+    // wall time; the ~13% is an upper-biased estimate, since the probe
+    // sums per-pool peaks reached at different instants), but a
+    // memory-tight deployment can set
     // `spark.graft.streaming.maintenanceParallelism` to 2 or 1 to stage
     // the passes sequentially at the cost of idle tails.
     val width = graft.SessionConf.int(spark, MaintenanceParallelismConf, 3)

@@ -10,6 +10,12 @@ import org.apache.spark.sql.SparkSession
   * memory pools bounds the whole cluster-side envelope. Peaks are reset
   * before each compaction and read after it.
   *
+  * The reported figure is biased upward: `peakHeapMb` SUMS each heap
+  * pool's own peak, and the pools (eden, survivor, old gen) reach those
+  * peaks at different instants, so the sum can exceed any heap size the
+  * JVM actually held at one moment. Read it as an upper bound, and a
+  * width-vs-width ratio of two such sums as an estimate only.
+  *
   * Usage: runMain graft.tools.MaintenanceEnvelopeProbe [sfDir] [widths=3,1]
   */
 object MaintenanceEnvelopeProbe {

@@ -107,4 +107,46 @@ class ComposerPropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("partitions planned with the point-range shortcut == split-at-samples over 300 random cases") {
+    val name = "prop-samples"
+    try {
+      (1 to 300).foreach { i =>
+        val keys = Seq.fill(1 + rnd.nextInt(8))(alphabet(rnd.nextInt(alphabet.size)))
+        // every third case is points only: the shortcut path
+        val ranges = RowRange.normalize(keys.map { a =>
+          val b = alphabet(rnd.nextInt(alphabet.size))
+          val (lo, hi) = if (RowRange.compareKeys(a, b) <= 0) (a, b) else (b, a)
+          if (i % 3 == 0 || rnd.nextInt(3) == 0) RowRange.point(a)
+          else if (rnd.nextBoolean() || lo == hi) RowRange.closed(lo, hi)
+          else RowRange.closedOpen(lo, hi)
+        })
+        val samples = alphabet.filter(_ => rnd.nextBoolean())
+        val sampleCalls = new java.util.concurrent.atomic.AtomicInteger()
+        graft.store.BigtableStores.register(name, new graft.store.BigtableStore {
+          override def readRows(t: String, r: Seq[RowRange], f: Seq[RowFilter]): Iterator[BtRow] =
+            Iterator.empty
+          override def sampleRowKeys(t: String): Seq[String] = {
+            sampleCalls.incrementAndGet()
+            samples
+          }
+        })
+        val maxPartitions = 1 + rnd.nextInt(4)
+        val cfg = BigtableConfig(
+          storeName = name, table = "t", columnFamily = "f",
+          partitionCols = Seq("_row_key"), separator = "#",
+          qualifiers = Seq(("q", StringType)),
+          onlyReadLatest = true, allowFullScan = false, maxPartitions = maxPartitions)
+        val scan = new BigtableScan(cfg, cfg.schema, RowRangeComposer.Composition(ranges, Vector.empty))
+        val planned = scan.planInputPartitions().toVector
+          .map(_.asInstanceOf[BigtableInputPartition].ranges.toVector)
+        val expected = BigtableScan.chunkContiguous(BigtableScan.splitRanges(ranges, samples), maxPartitions)
+        assert(planned == expected, s"case $i\nranges=$ranges\nsamples=$samples")
+        scan.planInputPartitions(): Unit
+        val allPoints = ranges.forall(_.isPoint)
+        assert(sampleCalls.get == (if (allPoints) 0 else 1),
+          s"case $i: ${sampleCalls.get} sampleRowKeys calls for ranges=$ranges")
+      }
+    } finally graft.store.BigtableStores.unregister(name)
+  }
 }

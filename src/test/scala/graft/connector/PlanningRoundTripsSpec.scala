@@ -1,0 +1,131 @@
+package graft.connector
+
+import graft.SparkTestSession
+import graft.model._
+import graft.store.{BigtableStore, BigtableStores, InMemoryBigtable}
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+/** The scan-planning contract, counted at the store: a key-filtered
+  * query plans with no `sampleRowKeys` round trip when every range is a
+  * point, and with at most one `sampleRowKeys` and one `estimateSize`
+  * per scan otherwise. Each query runs through a counting decorator and
+  * again through the bare store; the answers must agree.
+  */
+class PlanningRoundTripsSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+
+  /** Counts metadata calls per (method, table); reads pass through. */
+  private final class CountingStore(underlying: BigtableStore) extends BigtableStore {
+    private val counts = new ConcurrentHashMap[(String, String), AtomicInteger]()
+    private def bump(method: String, table: String): Unit =
+      counts.computeIfAbsent((method, table), _ => new AtomicInteger()).incrementAndGet(): Unit
+    def count(method: String, table: String): Int =
+      Option(counts.get((method, table))).map(_.get).getOrElse(0)
+    def reset(): Unit = counts.clear()
+
+    override def readRows(table: String, ranges: Seq[RowRange], filters: Seq[RowFilter]): Iterator[BtRow] =
+      underlying.readRows(table, ranges, filters)
+    override def sampleRowKeys(table: String): Seq[String] = {
+      bump("sample", table)
+      underlying.sampleRowKeys(table)
+    }
+    override def estimateSize(table: String, ranges: Seq[RowRange]): Option[(Long, Long)] = {
+      bump("estimate", table)
+      underlying.estimateSize(table, ranges)
+    }
+  }
+
+  private val users = 2000
+  private def user(i: Int) = f"u$i%05d"
+
+  /** One seeded snapshot, registered bare and behind the counter. */
+  private lazy val counting: CountingStore = {
+    val b = new InMemoryBigtable.Builder
+    (0 until users).foreach { i =>
+      b.put("users", user(i), BtCell("f", "age", 1L, CellCodec.encodeLong(20L + i % 50)))
+    }
+    (0 until users by 97).foreach { i =>
+      b.put("vip", user(i), BtCell("f", "level", 1L, CellCodec.encodeString(if (i % 2 == 0) "gold" else "silver")))
+    }
+    val store = b.build()
+    BigtableStores.register("prt-bare", store)
+    val counted = new CountingStore(store)
+    BigtableStores.register("prt-counting", counted)
+    counted
+  }
+
+  /** The same views over both stores, named with a per-store suffix. */
+  private def registerViews(): Unit = {
+    counting: Unit
+    for ((store, suffix) <- Seq("prt-bare" -> "bare", "prt-counting" -> "counted")) {
+      def view(name: String, opts: (String, String)*): Unit =
+        spark.read.format("bigtable")
+          .options(Map("store" -> store, "columnFamily" -> "f") ++ opts)
+          .load().createOrReplaceTempView(s"${name}_$suffix")
+      view("users", "table" -> "users", "qualifiers" -> "age:long")
+      view("users_fs", "table" -> "users", "qualifiers" -> "age:long", "allowFullScan" -> "true")
+      view("vip", "table" -> "vip", "qualifiers" -> "level:string", "allowFullScan" -> "true")
+    }
+  }
+
+  /** Run `sql` (with `$v` standing for the view suffix) on the counting
+    * store, check it against the bare store, and return the counted
+    * run's executed plan.
+    */
+  private def runCounted(sql: String): String = {
+    registerViews()
+    val expected = spark.sql(sql.replace("$v", "bare")).collect().map(_.toString).sorted.toSeq
+    counting.reset()
+    val df = spark.sql(sql.replace("$v", "counted"))
+    val got = df.collect().map(_.toString).sorted.toSeq
+    assert(got == expected, s"counted run differs from the bare run for: $sql")
+    assert(got.nonEmpty, s"query should return rows: $sql")
+    df.queryExecution.executedPlan.toString
+  }
+
+  /** (sampleRowKeys, estimateSize) calls on `table` for one query. */
+  private def counted(sql: String, table: String): (Int, Int) = {
+    runCounted(sql): Unit
+    (counting.count("sample", table), counting.count("estimate", table))
+  }
+
+  test("a point lookup plans with no sampleRowKeys call") {
+    val (samples, estimates) = counted(s"SELECT _row_key, age FROM users_$$v WHERE _row_key = '${user(42)}'", "users")
+    assert(samples == 0)
+    assert(estimates <= 1)
+  }
+
+  test("a 20-key IN list plans with no sampleRowKeys call") {
+    val keys = (0 until 20).map(i => s"'${user(i * 37)}'").mkString(", ")
+    val (samples, estimates) = counted(s"SELECT _row_key, age FROM users_$$v WHERE _row_key IN ($keys)", "users")
+    assert(samples == 0)
+    assert(estimates <= 1)
+  }
+
+  test("a BETWEEN plans with exactly one sampleRowKeys and at most one estimateSize") {
+    val (samples, estimates) = counted(
+      s"SELECT _row_key, age FROM users_$$v WHERE _row_key BETWEEN '${user(100)}' AND '${user(900)}'", "users")
+    assert(samples == 1)
+    assert(estimates <= 1)
+  }
+
+  test("a prefix LIKE plans with exactly one sampleRowKeys and at most one estimateSize") {
+    val (samples, estimates) = counted("SELECT _row_key, age FROM users_$v WHERE _row_key LIKE 'u01%'", "users")
+    assert(samples == 1)
+    assert(estimates <= 1)
+  }
+
+  test("a DPP join asks each scan for its samples at most once") {
+    val sql = "SELECT u._row_key, u.age FROM users_fs_$v u JOIN vip_$v v ON u._row_key = v._row_key " +
+      "WHERE v.level = 'gold'"
+    val plan = runCounted(sql)
+    assert(plan.contains("dynamicpruningexpression"), s"expected a runtime filter on the users scan:\n$plan")
+    assert(counting.count("sample", "users") <= 1)
+    assert(counting.count("sample", "vip") <= 1)
+    assert(counting.count("estimate", "users") <= 1)
+    assert(counting.count("estimate", "vip") <= 1)
+  }
+}

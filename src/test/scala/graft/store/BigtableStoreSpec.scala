@@ -159,4 +159,78 @@ class BigtableStoreSpec extends AnyFunSuite {
     val wrong = store.readRows("t", Seq(RowRange.point("a")), chain.reverse).toSeq
     assert(wrong.flatMap(_.cells.filter(_.qualifier == "q1")).map(c => new String(c.value)) == Seq("olda"))
   }
+
+  /** The samples a fresh walk of `table` yields: every ~n/32-th key. */
+  private def walkedSamples(store: BigtableStore, table: String): Seq[String] = {
+    val keys =
+      try store.readRows(table, Seq(RowRange.full), Nil).map(_.rowKey).toVector
+      catch { case _: IllegalArgumentException => Vector.empty } // truncated: no table
+    val step = math.max(1, keys.size / 32)
+    if (keys.size <= 1) Nil else keys.zipWithIndex.collect { case (k, i) if i > 0 && i % step == 0 => k }
+  }
+
+  test("ConcurrentBigtable.sampleRowKeys == an uncached walk after every step of random writes and truncates") {
+    val rnd = new scala.util.Random(20261017L)
+    val store = new ConcurrentBigtable
+    var truncates = 0
+    (1 to 400).foreach { step =>
+      if (rnd.nextInt(40) == 0) {
+        store.truncateTable("t")
+        truncates += 1
+      } else {
+        // new keys, rewrites of existing keys, or both in one batch
+        val batch = Seq.fill(1 + rnd.nextInt(4)) {
+          val k = f"k${rnd.nextInt(300)}%03d"
+          k -> Seq(cell("q1", rnd.nextInt(3).toLong, s"v$step"))
+        }
+        store.mutateRows("t", batch)
+      }
+      assert(store.sampleRowKeys("t") == walkedSamples(store, "t"), s"step $step")
+      // a second call is served from the cache and must agree too
+      assert(store.sampleRowKeys("t") == walkedSamples(store, "t"), s"step $step (cached)")
+    }
+    assert(truncates > 0)
+  }
+
+  test("ConcurrentBigtable.sampleRowKeys sees a key landing between two cached samples") {
+    val store = new ConcurrentBigtable
+    store.mutateRows("t", (0 until 64).map(i => f"k$i%03d0" -> Seq(cell("q1", 1L, "v"))))
+    val before = store.sampleRowKeys("t")
+    assert(before.size >= 2 && before == walkedSamples(store, "t"))
+    // strictly between the first two samples: every later sample shifts
+    val between = before.head + "5"
+    assert(RowRange.compareKeys(before.head, between) < 0 && RowRange.compareKeys(between, before(1)) < 0)
+    store.mutateRows("t", Seq(between -> Seq(cell("q1", 1L, "v"))))
+    val after = store.sampleRowKeys("t")
+    assert(after != before)
+    assert(after == walkedSamples(store, "t"))
+    // a rewrite of existing keys leaves the key set, and the samples, alone
+    store.mutateRows("t", Seq(between -> Seq(cell("q1", 2L, "w"))))
+    assert(store.sampleRowKeys("t") == after)
+  }
+
+  test("ConcurrentBigtable.sampleRowKeys under a concurrent writer: key order, live keys only") {
+    val store = new ConcurrentBigtable
+    store.mutateRows("t", (0 until 200).map(i => f"k$i%05d" -> Seq(cell("q1", 1L, "v"))))
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writer = new Thread(() => {
+      val rnd = new scala.util.Random(7L)
+      try (0 until 400).foreach { b =>
+        store.mutateRows("t", Seq.fill(8)(f"k${rnd.nextInt(100000)}%05d" -> Seq(cell("q1", b.toLong, "v"))))
+      } finally done.set(true)
+    })
+    writer.start()
+    val seen = Vector.newBuilder[Seq[String]]
+    seen += store.sampleRowKeys("t")
+    while (!done.get) seen += store.sampleRowKeys("t")
+    writer.join()
+    // keys are never removed here, so every key a sample ever named is live
+    val live = store.readRows("t", Seq(RowRange.full), Nil).map(_.rowKey).toSet
+    seen.result().foreach { samples =>
+      assert(samples.sliding(2).forall(p => p.size < 2 || RowRange.compareKeys(p.head, p(1)) < 0),
+        s"samples out of key order: $samples")
+      assert(samples.forall(live.contains))
+    }
+    assert(store.sampleRowKeys("t") == walkedSamples(store, "t"))
+  }
 }
