@@ -184,9 +184,10 @@ object Dedup {
     //  - the convergence signal rides the round's own materialization:
     //    labels only ever DECREASE under min-propagation, so the label
     //    sum is strictly decreasing until the fixed point, and an
-    //    `Observation` on the checkpoint job (see graft.tools
-    //    .ObserveProbe) delivers it without the old separate count()
-    //    job — jobs per localCheckpoint round drop from 2 to 1;
+    //    `Observation` on the checkpoint job (a batch Observation fires
+    //    on checkpoint actions, OPTIMIZATION_r19.md) delivers it without
+    //    the old separate count() job — jobs per localCheckpoint round
+    //    drop from 2 to 1;
     //  - round 1 needs NO join at all: initial label(x) = x, so the
     //    first round's labels are just min(b) per a over the self-loop
     //    edges, which also erases the old labels-init cut job.

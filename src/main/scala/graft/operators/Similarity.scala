@@ -384,8 +384,9 @@ object Similarity {
     * current commit: the manifest's fileset names exactly one build dir
     * (`data/<uuid>/`) carrying `_centroids.txt` (appends add vector
     * files but never centroids), so readers always see the centroid set
-    * that produced the files they are about to prune. Falls back to the
-    * legacy table-root location for indexes built before versioning.
+    * that produced the files they are about to prune. A fileset with no
+    * build dir carrying centroids is not an IVF index: that fails naming
+    * the dir.
     */
   def loadCentroids(dir: String): Seq[Seq[Double]] = {
     val buildDirs = graft.streaming.CommitLog.currentFiles(dir)
@@ -398,7 +399,8 @@ object Similarity {
       .filter(java.nio.file.Files.exists(_))
     val path = buildDirs match {
       case Seq(one) => one
-      case Seq() => java.nio.file.Paths.get(dir, "_centroids.txt") // legacy layout
+      case Seq() => throw new IllegalStateException(
+        s"no IVF centroids: no build dir in the current fileset of $dir carries _centroids.txt")
       case many => throw new IllegalStateException(
         s"ambiguous IVF centroids: ${many.size} build dirs in the current fileset of $dir")
     }

@@ -120,37 +120,6 @@ object CommitLog {
     }
   }
 
-  /** Evolve the recorded schema by ADDING columns: `newSchema` must be a
-    * superset of the current one (same names/types for existing fields,
-    * any order). Parquet schema evolution makes this safe for readers —
-    * files written before the evolution return null for the added
-    * columns — so owners that version their row format (e.g. the
-    * streaming dedup bands index gaining a sketch column) migrate with
-    * one call instead of bricking on analysis. Idempotent; throws when
-    * `newSchema` drops or retypes an existing field (that would need a
-    * data rewrite, not a metadata edit).
-    */
-  def evolveSchema(dir: String, newSchema: StructType): Unit = {
-    val sf = Paths.get(dir, "_schema.json")
-    require(Files.exists(sf), s"no commit log at $dir")
-    val current = schemaOf(dir)
-    val byName = newSchema.fields.map(f => f.name -> f.dataType).toMap
-    current.fields.foreach { f =>
-      require(byName.get(f.name).contains(f.dataType),
-        s"evolveSchema may only ADD columns: existing field ${f.name}: ${f.dataType} " +
-          s"missing or retyped in the new schema")
-    }
-    if (current.fields.length != newSchema.fields.length) {
-      // same tmp + ATOMIC_MOVE discipline as every other metadata
-      // publish: a truncate-in-place write that dies mid-flush leaves a
-      // torn _schema.json that bricks every later read of the log
-      val tmp = Paths.get(dir, s".tmp-schema-${java.util.UUID.randomUUID()}")
-      Files.write(tmp, newSchema.json.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, sf,
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE): Unit
-    }
-  }
-
   /** The table schema recorded at [[init]]. */
   def schemaOf(dir: String): StructType =
     DataType.fromJson(
@@ -316,7 +285,7 @@ object CommitLog {
     Option(new java.io.File(s"$dir/_commits").listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.startsWith(".tmp-"))
       .foreach(f => Files.deleteIfExists(f.toPath): Unit)
-    // crashed evolveSchema publishes leave .tmp-schema-* at the root
+    // crashed init schema writes leave .tmp-schema-* at the root
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.startsWith(".tmp-schema-"))
       .foreach(f => Files.deleteIfExists(f.toPath): Unit)

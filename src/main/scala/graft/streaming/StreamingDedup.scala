@@ -87,12 +87,6 @@ object StreamingDedup {
   private[graft] val VerifySemiFilterConf =
     "spark.graft.streaming.verifySemiFilterMinBytes"
 
-  /** Concurrent compaction width for [[compactIndexDetailed]] (default
-    * 3 = one thread per dataset): see the envelope note there.
-    */
-  private[graft] val MaintenanceParallelismConf =
-    "spark.graft.streaming.maintenanceParallelism"
-
   private def verifySemiFilterMinBytes(spark: SparkSession): Long =
     graft.SessionConf.long(spark, VerifySemiFilterConf, VerifySemiFilterMinBytes)
 
@@ -121,10 +115,9 @@ object StreamingDedup {
     * job's tasks back-fill executors freed by the current job's tail).
     * Propagates the first failure; always waits for every unit.
     */
-  private[streaming] def parallelUnits(units: Seq[() => Unit], maxThreads: Int = Int.MaxValue): Unit = {
-    val width = math.min(units.size, math.max(1, maxThreads))
-    if (width <= 1 || units.size <= 1) { units.foreach(_.apply()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
+  private[streaming] def parallelUnits(units: Seq[() => Unit]): Unit = {
+    if (units.size <= 1) { units.foreach(_.apply()); return }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(units.size)
     try {
       val fs = units.map(u => pool.submit(new java.util.concurrent.Callable[Unit] {
         override def call(): Unit = u()
@@ -221,17 +214,28 @@ object StreamingDedup {
     */
   def incrementalNearDuplicatesInit(spark: SparkSession, workDir: String): Unit = {
     CommitLog.init(s"$workDir/bands", bandsSchema)
-    // migrate pre-sigb bands logs in place (ADVICE r14): init never
-    // rewrites an existing _schema.json, so a workDir created before the
-    // sketch column froze a 3-column schema and every later batch failed
-    // analysis on col("o.sigb"). Adding the column is a metadata edit
-    // (parquet schema evolution reads legacy rows with sigb = null; the
-    // null-tolerant prefilter below routes them to exact verify).
-    CommitLog.evolveSchema(s"$workDir/bands", bandsSchema)
+    requireBandsSchema(s"$workDir/bands")
     CommitLog.init(s"$workDir/shingles", shinglesSchema)
     CommitLog.init(s"$workDir/pairs",
       StructType(Seq(StructField("id1", LongType), StructField("id2", LongType),
         StructField("jaccard", org.apache.spark.sql.types.DoubleType))))
+  }
+
+  /** Fail fast on a bands log whose recorded schema is not
+    * [[bandsSchema]]. `init` never rewrites an existing `_schema.json`,
+    * so a log recorded without the `sigb` sketch column would otherwise
+    * surface as an analysis error on `o.sigb` deep inside the probe join.
+    * There is no migration: rebuild such an index from its documents.
+    */
+  private def requireBandsSchema(bandsDir: String): Unit = {
+    val recorded = CommitLog.schemaOf(bandsDir)
+    if (recorded != bandsSchema) {
+      val missing = bandsSchema.fieldNames.filterNot(recorded.fieldNames.contains)
+      throw new IllegalStateException(
+        s"bands log at $bandsDir records schema ${recorded.simpleString}, expected " +
+          s"${bandsSchema.simpleString}" +
+          (if (missing.isEmpty) "" else s" (missing column ${missing.mkString(", ")})"))
+    }
   }
 
   /** Per-batch I/O telemetry returned by [[processBatch]]: how far the
@@ -269,13 +273,13 @@ object StreamingDedup {
         Seq("pairs", "bands", "shingles").forall(d =>
           CommitLog.isCommitted(s"$workDir/$d", b))))
       return BatchStats(replayed = true, 0, 0, 0L, 0L, 0, 0, 0L, 0L)
-    // batch-mode callers may drive a legacy (pre-sigb) workDir without
-    // going through init — same validation and metadata-only migration
-    // (a floor-divided rowsPerBand would silently band over a signature
+    // batch-mode callers may skip init — same validation (a
+    // floor-divided rowsPerBand would silently band over a signature
     // prefix, diverging from every Dedup.minhashCandidates run)
     require(bands > 0 && numHashes % bands == 0,
       s"numHashes=$numHashes must divide into bands=$bands")
-    CommitLog.evolveSchema(s"$workDir/bands", bandsSchema)
+    val bandsDir = s"$workDir/bands"
+    requireBandsSchema(bandsDir)
     val rowsPerBand = numHashes / bands
     // the id is hashed (xxhash64) by both partition prunes against logs
     // whose compaction writer hashed LONGS — an IntegerType id from a
@@ -304,7 +308,6 @@ object StreamingDedup {
       // whose bucket-hash partition this batch's (band, bucket) pairs
       // touch are read — identical join result (a matching index row
       // shares the batch row's (band, bucket), hence its partition)
-      val bandsDir = s"$workDir/bands"
       val allBandFiles = CommitLog.currentFiles(bandsDir)
       val bandFiles = {
         val moduli =
@@ -324,19 +327,13 @@ object StreamingDedup {
         }
       }
       val oldBands =
-        CommitLog.readFiles(spark, bandsDir, CommitLog.schemaOf(bandsDir), bandFiles)
+        CommitLog.readFiles(spark, bandsDir, bandsSchema, bandFiles)
       // estimated-Jaccard prefilter inline in both bucket joins (batch
       // operator's exact machinery — see Dedup.estimateCut): the low-j
       // candidate mass dies in codegen before distinct/verify.
-      // NULL-TOLERANT (ADVICE r14): index rows written before the sigb
-      // column exist with sigb = null after the schema migration, and a
-      // null predicate would silently drop every candidate against the
-      // pre-upgrade index — coalesce(..., true) routes those rows past
-      // the prefilter to exact verification instead.
       val estCut = Dedup.estimateCut(threshold, numHashes)
       def estOk(a: Column, b: Column): Column =
-        if (estCut > 0.0) coalesce(Dedup.sigAgreement(a, b) >= lit(estCut), lit(true))
-        else lit(true)
+        if (estCut > 0.0) Dedup.sigAgreement(a, b) >= lit(estCut) else lit(true)
       // Index-side join shape — the sf10 curve-bender (VERDICT r14 #5):
       // the batch side is micro-batch-sized, so BROADCAST it and let the
       // accumulated index STREAM map-side — the index (the one frame that
@@ -638,20 +635,11 @@ object StreamingDedup {
     require(maxTiers >= 1, s"maxTiers must be >= 1, got $maxTiers")
     // the three datasets are independent logs with independent replace
     // commits — compact them CONCURRENTLY (guide-§2.6 overlap; same
-    // single-writer-per-dataset contract as before). Width is an ops
-    // knob (VERDICT r18 #6): each compaction pipeline carries its own
-    // shuffle/write footprint, so running all three at once trades
-    // ~Nx the maintenance pass's peak memory envelope for the overlap —
-    // cheap at fixture scale (MaintenanceEnvelopeProbe, 10x fixture,
-    // warm-JIT alternation: peak heap ~13% over staged for ~40% less
-    // wall time; the ~13% is an upper-biased estimate, since the probe
-    // sums per-pool peaks reached at different instants), but a
-    // memory-tight deployment can set
-    // `spark.graft.streaming.maintenanceParallelism` to 2 or 1 to stage
-    // the passes sequentially at the cost of idle tails.
-    val width = graft.SessionConf.int(spark, MaintenanceParallelismConf, 3)
+    // single-writer-per-dataset contract as before). Each compaction
+    // pipeline carries its own shuffle/write footprint, so the pass's
+    // peak memory envelope is the sum of the three running at once.
     val out = new java.util.concurrent.ConcurrentHashMap[String, DatasetCompaction]()
-    parallelUnits(maxThreads = width, units = Seq(
+    parallelUnits(Seq(
       () => out.put("bands",
         TieredCompaction.compactKeyed(spark, s"$workDir/bands", targetRecordsPerFile,
           bandsPartitions match {

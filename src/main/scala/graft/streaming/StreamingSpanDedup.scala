@@ -222,8 +222,7 @@ object StreamingSpanDedup {
     // data only, so no such ordering exists between these two.)
     val out =
       new java.util.concurrent.ConcurrentHashMap[String, TieredCompaction.DatasetCompaction]()
-    val width = graft.SessionConf.int(spark, StreamingDedup.MaintenanceParallelismConf, 2)
-    StreamingDedup.parallelUnits(maxThreads = width, units = Seq(
+    StreamingDedup.parallelUnits(Seq(
       () => out.put("spans",
         TieredCompaction.compactKeyed(spark, s"$workDir/spans", targetRecordsPerFile,
           indexPartitions, keyCols = Seq("sh"), hybridSort = Seq("sh"),

@@ -162,9 +162,8 @@ object TieredCompaction {
     // like the full write would). The estimate compares the probe's
     // per-row bytes to the SAMPLED FILES' own per-row bytes. Datasets
     // too small to sample meaningfully (row floor, or a sample that
-    // would exceed 1/4 of the input) and sessions that set
-    // `spark.graft.compaction.sampledAutoLayout=false` keep the
-    // measured full-write decision.
+    // would exceed 1/4 of the input) keep the measured full-write
+    // decision.
     val df = CommitLog.read(spark, dir)
     val rows = CommitLog.rowCount(spark, dir)
     val inBytes = baseBytes + deltaBytes
@@ -177,7 +176,7 @@ object TieredCompaction {
       else autoDefault
     var p = autoP
     if (partitions == AutoLayout && wantP == AutoLayout && p > 1 &&
-        rows >= AutoSampleMinRows && sampledAutoLayout(spark)) {
+        rows >= AutoSampleMinRows) {
       val byHash = all.sortBy(f => scala.util.hashing.MurmurHash3.stringHash(f))
       val sampleFiles = scala.collection.mutable.ArrayBuffer.empty[String]
       var sRows = 0L
@@ -239,12 +238,6 @@ object TieredCompaction {
     * the first major's double write halves.
     */
   private[streaming] val AutoSampleMinRows = 262144L
-
-  private[graft] val SampledAutoLayoutConf =
-    "spark.graft.compaction.sampledAutoLayout"
-
-  private def sampledAutoLayout(spark: SparkSession): Boolean =
-    spark.conf.getOption(SampledAutoLayoutConf).forall(_.toBoolean)
 
   /** Exact row count of a file subset from parquet footers. */
   private def footerRowsOf(spark: SparkSession, dir: String, files: Seq[String]): Long = {

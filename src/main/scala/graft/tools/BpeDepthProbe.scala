@@ -5,14 +5,6 @@ import graft.operators.{Bpe, BpeMerge}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev probe: where does the [[Bpe.tokensCol]] composed fold chain stop
-  * being viable? Builds a synthetic merge list of depth N and times
-  * (a) plan analysis+optimization, (b) evaluation over a small frame,
-  * at increasing N — the measurement behind the merge-count ceiling
-  * enforced by tokensCol (codegen bails to interpreted well before the
-  * plan itself becomes pathological; the ceiling has to catch BOTH).
-  * Usage: runMain graft.tools.BpeDepthProbe [depths...]
-  */
 /** Dev probe: time the doc_bpe_collapse training run (driver path, full
   * vocabulary collapse) at a scale dir and report steps executed —
   * the SCALING.md evidence behind "vocabulary-scale step counts viable".
@@ -49,6 +41,14 @@ object BpeCollapseProbe {
   }
 }
 
+/** Dev probe: where does the [[Bpe.tokensCol]] composed fold chain stop
+  * being viable? Builds a synthetic merge list of depth N and times
+  * (a) plan analysis+optimization, (b) evaluation over a small frame,
+  * at increasing N — the measurement behind the merge-count ceiling
+  * enforced by tokensCol (codegen bails to interpreted well before the
+  * plan itself becomes pathological; the ceiling has to catch BOTH).
+  * Usage: runMain graft.tools.BpeDepthProbe [depths...]
+  */
 object BpeDepthProbe {
   def main(args: Array[String]): Unit = {
     val depths =

@@ -267,6 +267,13 @@ class SimilaritySpec extends AnyFunSuite {
     assert(fromIndex == direct, "post-rebuild indexed search diverged")
   }
 
+  test("loadCentroids on a fileset with no build dir fails naming the dir") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivfidx-none").toString
+    graft.streaming.CommitLog.append(emb.limit(3), dir, batchId = 0L): Unit
+    val e = intercept[IllegalStateException](Similarity.loadCentroids(dir))
+    assert(e.getMessage.contains(dir), e.getMessage)
+  }
+
   test("IVF appends: streamed vectors join the index; probing all buckets is exact") {
     val work = java.nio.file.Files.createTempDirectory("graft-ivfidx-s").toString
     val src = s"$work/src"; val dir = s"$work/idx"; val cp = s"$work/cp"

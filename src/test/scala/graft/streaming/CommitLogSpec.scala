@@ -132,30 +132,6 @@ class CommitLogSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](CommitLog.pruneBelow(dir, 99L))
   }
 
-  test("evolveSchema adds columns (idempotent), rejects drops/retypes; legacy rows read null") {
-    import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("clog-evolve").toString
-    CommitLog.append(Seq((1L, "a")).toDF("k", "v"), dir, batchId = 0L): Unit
-    val evolved = StructType(Seq(
-      StructField("k", LongType), StructField("v", StringType),
-      StructField("extra", BinaryType)))
-    CommitLog.evolveSchema(dir, evolved)
-    CommitLog.evolveSchema(dir, evolved) // idempotent
-    assert(CommitLog.schemaOf(dir).fieldNames.toSeq == Seq("k", "v", "extra"))
-    // pre-evolution rows surface with the added column null
-    val r = CommitLog.read(spark, dir).where($"k" === 1L).head()
-    assert(r.isNullAt(r.fieldIndex("extra")))
-    // dropping or retyping an existing field needs a data rewrite — refuse
-    intercept[IllegalArgumentException](
-      CommitLog.evolveSchema(dir, StructType(Seq(StructField("k", LongType)))))
-    intercept[IllegalArgumentException](
-      CommitLog.evolveSchema(dir, StructType(Seq(
-        StructField("k", StringType), StructField("v", StringType),
-        StructField("extra", BinaryType)))))
-    // no tmp debris after a clean evolve
-    assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith(".tmp-")))
-  }
-
   test("rowCount answers from parquet footers and matches read().count()") {
     val dir = java.nio.file.Files.createTempDirectory("clog-rows").toString
     assert(CommitLog.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir, 0L))

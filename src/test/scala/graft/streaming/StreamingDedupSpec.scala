@@ -74,43 +74,26 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(raw.toSet == Set((1L, 2L), (1L, 10L), (2L, 10L)))
   }
 
-  test("legacy pre-sigb bands index migrates in place and still yields cross-batch pairs") {
+  test("a pre-sigb bands log is rejected naming its dir and the missing sigb column") {
     import spark.implicits._
+    import org.apache.spark.sql.types._
     val work = java.nio.file.Files.createTempDirectory("sdedup-legacy").toString
-    // build a real index for batch 0 with the current code...
-    StreamingDedup.incrementalNearDuplicatesInit(spark, work)
-    val b1 = Seq((1L, base),
-      (3L, "completely different text about spark partitions " * 5)).toDF("id", "text")
-    StreamingDedup.processBatch(b1, work, 0.9, 5, 120, 20, batchId = Some(0L))
-    // ...then simulate a PRE-UPGRADE workDir: the bands log frozen with
-    // the 3-column schema and data files carrying no sigb at all
+    // a bands log recorded with the 3-column schema and data files
+    // carrying no sigb at all
     val bandsDir = s"$work/bands"
-    val legacyRows = CommitLog.read(spark, bandsDir).drop("sigb").collect().toSeq
-    val legacySchema = org.apache.spark.sql.types.StructType(
-      CommitLog.schemaOf(bandsDir).filterNot(_.name == "sigb"))
-    def rm(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.list(p).forEach(rm(_))
-      java.nio.file.Files.deleteIfExists(p): Unit
-    }
-    rm(java.nio.file.Paths.get(bandsDir))
+    val legacySchema = StructType(Seq(
+      StructField("id", LongType), StructField("band", IntegerType), StructField("bucket", LongType)))
     CommitLog.init(bandsDir, legacySchema)
-    CommitLog.append(
-      spark.createDataFrame(spark.sparkContext.parallelize(legacyRows), legacySchema),
-      bandsDir, 0L)
-    assert(CommitLog.schemaOf(bandsDir).fieldNames.toSeq == Seq("id", "band", "bucket"))
-    // the next batch must (a) not fail analysis against the legacy log —
-    // processBatch migrates the schema in place — and (b) still find the
-    // cross-batch duplicate: legacy rows read with sigb = null, and the
-    // null-tolerant prefilter routes them to exact verification instead
-    // of silently dropping every candidate against the old index
-    val b2 = Seq((10L, base + "tail.")).toDF("id", "text")
-    StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, batchId = Some(1L))
-    assert(CommitLog.schemaOf(bandsDir).fieldNames.contains("sigb"), "schema not migrated")
-    val pairs = StreamingDedup.pairs(spark, work)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 10L)), s"cross-batch pair against legacy index missing: $pairs")
-    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L), s"false positives: $pairs")
+    CommitLog.append(Seq((1L, 0, 7L)).toDF("id", "band", "bucket"), bandsDir, 0L): Unit
+    def assertRejected(e: IllegalStateException): Unit =
+      assert(e.getMessage.contains(bandsDir) && e.getMessage.contains("missing column sigb"),
+        e.getMessage)
+    assertRejected(intercept[IllegalStateException](
+      StreamingDedup.incrementalNearDuplicatesInit(spark, work)))
+    val b = Seq((10L, base)).toDF("id", "text")
+    assertRejected(intercept[IllegalStateException](
+      StreamingDedup.processBatch(b, work, 0.9, 5, 120, 20, batchId = Some(1L))))
+    assert(CommitLog.schemaOf(bandsDir) == legacySchema, "the rejected log was rewritten")
   }
 
   test("restart from checkpoint resumes the index and converges to the batch oracle") {
@@ -390,13 +373,17 @@ class StreamingDedupSpec extends AnyFunSuite {
       (1L, 11L), (2L, 11L), (10L, 11L)), s"unexpected pair set: $direct")
   }
 
-  test("a malformed maintenanceParallelism conf fails naming the key and the value") {
+  test("a malformed verifySemiFilterMinBytes conf fails naming the key and the value") {
+    import spark.implicits._
     val work = java.nio.file.Files.createTempDirectory("sdedup-conf").toString
-    spark.conf.set(StreamingDedup.MaintenanceParallelismConf, "three")
+    StreamingDedup.incrementalNearDuplicatesInit(spark, work)
+    val b = Seq((1L, base), (2L, base)).toDF("id", "text")
+    spark.conf.set(StreamingDedup.VerifySemiFilterConf, "three")
     val e =
-      try intercept[IllegalArgumentException](StreamingDedup.compactIndexDetailed(spark, work))
-      finally spark.conf.unset(StreamingDedup.MaintenanceParallelismConf)
-    assert(e.getMessage.contains(StreamingDedup.MaintenanceParallelismConf) &&
+      try intercept[IllegalArgumentException](
+        StreamingDedup.processBatch(b, work, 0.9, 5, 120, 20, batchId = Some(0L)))
+      finally spark.conf.unset(StreamingDedup.VerifySemiFilterConf)
+    assert(e.getMessage.contains(StreamingDedup.VerifySemiFilterConf) &&
       e.getMessage.contains("'three'"), e.getMessage)
   }
 
