@@ -6,7 +6,10 @@ import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.expressions.aggregate._
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /** A pushed partial aggregate the store-side reader can fold: global
   * COUNT(*) / COUNT(col) / MIN(col) / MAX(col) / SUM(col). Beyond the reference
@@ -125,6 +128,13 @@ private[connector] final class AggFold(srcSchema: StructType, aggs: Seq[Bigtable
     case other                    => throw new IllegalStateException(s"unfoldable agg type $other")
   }
 
+  // source rows are views into a reused columnar batch: a string kept
+  // past its row is copied, or the next batch would overwrite it
+  private def keep(v: Any): Any = v match {
+    case s: UTF8String => s.clone()
+    case other         => other
+  }
+
   private val acc = new Array[Any](aggs.size)
   private val counts = new Array[Long](aggs.size)
 
@@ -143,12 +153,12 @@ private[connector] final class AggFold(srcSchema: StructType, aggs: Seq[Bigtable
         case _: MinAgg =>
           if (!row.isNullAt(ord)) {
             val v = row.get(ord, dt)
-            if (acc(i) == null || lt(dt, v, acc(i))) acc(i) = v
+            if (acc(i) == null || lt(dt, v, acc(i))) acc(i) = keep(v)
           }
         case _: MaxAgg =>
           if (!row.isNullAt(ord)) {
             val v = row.get(ord, dt)
-            if (acc(i) == null || lt(dt, acc(i), v)) acc(i) = v
+            if (acc(i) == null || lt(dt, acc(i), v)) acc(i) = keep(v)
           }
         case s: SumAgg =>
           if (!row.isNullAt(ord)) {
@@ -183,13 +193,21 @@ private[connector] final class AggFold(srcSchema: StructType, aggs: Seq[Bigtable
   }
 }
 
-/** Folds the wrapped reader's rows into ONE partial row per partition
-  * in the order of `aggs` — no per-row transfer out of the scan.
-  * `srcSchema` is the source projection the inner reader emits; each
-  * agg's reference is resolved to an ordinal in it.
+private[connector] object AggFold {
+  /** The rows of a columnar reader's batches, in order. Each row is a
+    * view into the current batch, valid until the next batch is read.
+    */
+  def rows(batches: PartitionReader[ColumnarBatch]): Iterator[InternalRow] =
+    Iterator.continually(batches).takeWhile(_.next()).flatMap(_.get().rowIterator().asScala)
+}
+
+/** Folds the rows of the wrapped columnar reader's batches into ONE
+  * partial row per partition in the order of `aggs` — no per-row
+  * transfer out of the scan. `srcSchema` is the source projection the
+  * batches carry; each agg's reference is resolved to an ordinal in it.
   */
 final class BigtableAggregateReader(
-    inner: PartitionReader[InternalRow],
+    batches: PartitionReader[ColumnarBatch],
     srcSchema: StructType,
     aggs: Seq[BigtableAgg]
 ) extends PartitionReader[InternalRow] {
@@ -201,14 +219,14 @@ final class BigtableAggregateReader(
     if (emitted) return false
     val fold = new AggFold(srcSchema, aggs)
     fold.reset()
-    while (inner.next()) fold.update(inner.get())
+    AggFold.rows(batches).foreach(fold.update)
     result = new GenericInternalRow(fold.result())
     emitted = true
     true
   }
 
   override def get(): InternalRow = result
-  override def close(): Unit = inner.close()
+  override def close(): Unit = batches.close()
 }
 
 /** Grouped partial fold: one partial row per distinct group per
@@ -227,7 +245,7 @@ final class BigtableAggregateReader(
   * time.
   */
 final class BigtableGroupedAggregateReader(
-    inner: PartitionReader[InternalRow],
+    batches: PartitionReader[ColumnarBatch],
     srcSchema: StructType,
     groupCols: Seq[String],
     aggs: Seq[BigtableAgg]
@@ -235,10 +253,8 @@ final class BigtableGroupedAggregateReader(
 
   private val groupOrds: Array[Int] = groupCols.map(srcSchema.fieldIndex).toArray
   private val fold = new AggFold(srcSchema, aggs)
+  private val rows = AggFold.rows(batches)
 
-  // group key values are UTF8Strings from freshly-allocated
-  // GenericInternalRows (the row reader never reuses buffers), so
-  // holding references across next() calls is safe
   private var currentGroup: Array[UTF8String] = _
   private var haveGroup = false
   private var result: InternalRow = _
@@ -253,6 +269,10 @@ final class BigtableGroupedAggregateReader(
     }
     g
   }
+
+  // the held group outlives its row, whose strings are views into a
+  // reused columnar batch: copy them (row-key components are never null)
+  private def kept(g: Array[UTF8String]): Array[UTF8String] = g.map(_.clone())
 
   private def sameGroup(a: Array[UTF8String], b: Array[UTF8String]): Boolean = {
     var i = 0
@@ -273,11 +293,11 @@ final class BigtableGroupedAggregateReader(
 
   override def next(): Boolean = {
     if (exhausted) return false
-    while (inner.next()) {
-      val row = inner.get()
+    while (rows.hasNext) {
+      val row = rows.next()
       val g = groupOf(row)
       if (!haveGroup) {
-        currentGroup = g
+        currentGroup = kept(g)
         haveGroup = true
         fold.reset()
         fold.update(row)
@@ -286,7 +306,7 @@ final class BigtableGroupedAggregateReader(
       } else {
         // group boundary: emit the finished group, start the new one
         result = emit(currentGroup)
-        currentGroup = g
+        currentGroup = kept(g)
         fold.reset()
         fold.update(row)
         return true
@@ -301,5 +321,5 @@ final class BigtableGroupedAggregateReader(
   }
 
   override def get(): InternalRow = result
-  override def close(): Unit = inner.close()
+  override def close(): Unit = batches.close()
 }

@@ -8,22 +8,21 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Vectorized (columnar) read path, opt-in via `vectorized=true`: the
-  * same store read and cell→row pivot as [[BigtablePartitionReader]] —
-  * literally the same code, both readers consume
-  * [[BigtablePivot.groups]]/[[BigtablePivot.extract]] — but decoded
-  * values land DIRECTLY in `OnHeapColumnVector`s (no per-row
-  * `GenericInternalRow` allocation) and Spark consumes whole
-  * `ColumnarBatch`es (the scan feeds whole-stage codegen through a
-  * vectorized ColumnarToRow, the same shape as the built-in parquet
-  * reader). The reference pivots to a columnar Arrow `RecordBatch` the
-  * same way, but materializes the ENTIRE result as one batch
-  * (execute_plan.rs:186-307); here batches are bounded at `batchSize`
-  * rows so memory stays flat at any scan volume.
+/** The connector's read path: the store read and cell→row pivot
+  * ([[BigtablePivot.groups]]/[[BigtablePivot.extract]]) decode values
+  * DIRECTLY into `OnHeapColumnVector`s (no per-row `InternalRow`
+  * allocation) and Spark consumes whole `ColumnarBatch`es (the scan
+  * feeds whole-stage codegen through a vectorized ColumnarToRow, the
+  * same shape as the built-in parquet reader). Batch scans, micro-batch
+  * scans and the pushed-aggregate folds all read through it. The
+  * reference pivots to a columnar Arrow `RecordBatch` the same way, but
+  * materializes the ENTIRE result as one batch (execute_plan.rs:186-307);
+  * here batches are bounded at `batchSize` rows so memory stays flat at
+  * any scan volume.
   *
-  * Emission order is identical to the row reader ((rowKey, timestamp)
-  * ascending per partition) — `SupportsReportOrdering` stays truthful
-  * in both modes.
+  * Rows are emitted in (rowKey, timestamp) ascending order per
+  * partition, which is what `SupportsReportOrdering` reports. The
+  * vectors are reused: each `next()` overwrites the previous batch.
   */
 final class BigtableColumnarPartitionReader(
     cfg: BigtableConfig,
@@ -33,13 +32,11 @@ final class BigtableColumnarPartitionReader(
     tsRange: Option[(Long, Long)],
     limit: Option[Int] = None,
     shippedStore: Option[graft.store.BigtableStore] = None,
-    batchSize: Int = 4096,
-    postFilter: Option[BigtablePivot.Group => Boolean] = None
+    postFilter: Option[BigtablePivot.Group => Boolean] = None,
+    batchSize: Int = BigtableColumnarPartitionReader.MaxBatchRows
 ) extends PartitionReader[ColumnarBatch] {
 
-  require(batchSize > 0,
-    s"vectorizedBatchSize must be positive, got $batchSize (a non-positive batch would " +
-      "silently truncate the scan to zero rows)")
+  require(batchSize > 0, s"batchSize must be positive, got $batchSize")
 
   private val plan = BigtablePivot.fieldPlan(cfg, readSchema)
 
@@ -58,9 +55,8 @@ final class BigtableColumnarPartitionReader(
       val g = groupIter.next()
       var i = 0
       while (i < plan.length) {
-        // shared boxed extraction (identical to the row reader), then an
-        // unbox into the vector — the win here is no per-row row object,
-        // and LongType/DoubleType decode already boxes via Option anyway
+        // boxed extraction, then an unbox into the vector — no per-row
+        // row object; LongType/DoubleType decode already boxes via Option
         BigtablePivot.extract(plan(i), g) match {
           case null          => vectors(i).putNull(n)
           case v: Long       => vectors(i).putLong(n, v)
@@ -85,4 +81,9 @@ final class BigtableColumnarPartitionReader(
     groupIter.close() // release a partially-consumed store scan (wire connection)
     batch.close()
   }
+}
+
+object BigtableColumnarPartitionReader {
+  /** Rows per emitted batch, at most. */
+  val MaxBatchRows = 4096
 }

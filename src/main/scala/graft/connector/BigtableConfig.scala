@@ -70,27 +70,7 @@ final case class BigtableConfig(
       * filters — Spark only pushes aggregates past a scan with zero
       * residual filters. Default off for reference-parity plan shapes.
       */
-    exactFilterPushdown: Boolean = false,
-    /** Vectorized read path: readers emit bounded `ColumnarBatch`es
-      * (values decoded straight into column vectors, no per-row
-      * allocation) instead of `InternalRow`s. The reference is also
-      * columnar (Arrow RecordBatch, execute_plan.rs:307) but
-      * materializes ONE batch per scan; ours are bounded at
-      * `vectorizedBatchSize` rows.
-      *
-      * `Some(v)` = pinned by reader option or session conf; `None` =
-      * AUTO — the scan picks columnar when its estimated row volume
-      * clears [[vectorizedAutoRows]] (measured r13: columnar wins ~20%
-      * on scans past ~100k rows, loses ~10% of fixed batch-allocation
-      * overhead on point lookups — so the default follows the DATA, the
-      * shape that is right at 100 TB and at `key = x` alike).
-      */
-    vectorized: Option[Boolean] = None,
-    /** AUTO-mode threshold: estimated scan rows at or above this pick
-      * the columnar reader (unknown statistics stay on the row path).
-      */
-    vectorizedAutoRows: Long = 32768L,
-    vectorizedBatchSize: Int = 4096
+    exactFilterPushdown: Boolean = false
 ) extends Serializable {
 
   /** Fixed schema in the reference's column order (datasource.rs:68-79):
@@ -124,23 +104,6 @@ object BigtableConfig {
   /** Reserved single-key column name (reference datasource.rs:21). */
   val RowKeyCol = "_row_key"
 
-  /** Session-level default for the vectorized read path, consulted only
-    * when the per-reader `vectorized` option is absent — the same
-    * option-wins-over-conf layering as Spark's own
-    * `spark.sql.parquet.enableVectorizedReader`. Lets a deployment (or a
-    * parity test) flip every bigtable scan to columnar without touching
-    * call sites. Read at plan time on the driver (`fromOptions` runs
-    * when the DSv2 Table is instantiated); the parsed config ships to
-    * executors as a value.
-    */
-  val VectorizedDefaultConf = "spark.graft.bigtable.vectorizedDefault"
-
-  /** Current session's value for a free-form conf key, None outside an
-    * active session (e.g. bare unit tests constructing configs directly).
-    */
-  private def sessionDefault(key: String): Option[String] =
-    try Option(org.apache.spark.sql.internal.SQLConf.get.getConfString(key, null)).filter(_.nonEmpty)
-    catch { case _: Throwable => None }
   /** Reserved cell-timestamp column name (reference datasource.rs:22). */
   val TimestampCol = "_timestamp"
 
@@ -155,7 +118,14 @@ object BigtableConfig {
     *   onlyReadLatest    default true
     *   allowFullScan     default false (reference behavior: composer.rs:72-77)
     *   maxPartitions     scan split budget (default 32)
+    *   maxComposedRanges range-set budget before collapsing to one range (default 4096)
+    *   exactFilterPushdown  report provably-exact filters as pushed (default false)
+    *   streamStepMicros  micro-batch timestamp step (default: no step)
+    *   shipStore         serialize the store handle into the scan (default false)
+    *   writeTimestampMicros, writeBatchRows  write path (defaults 0, 512)
     * }}}
+    * A boolean or integer option with a malformed value fails with an
+    * `IllegalArgumentException` naming the option and the value.
     */
   def fromOptions(opts: java.util.Map[String, String]): BigtableConfig = {
     def req(k: String): String = {
@@ -164,6 +134,16 @@ object BigtableConfig {
       v
     }
     def opt(k: String, d: String): String = Option(opts.get(k)).filter(_.nonEmpty).getOrElse(d)
+    // every non-string option parses here, so a bad value fails naming
+    // the option instead of a bare "For input string"
+    def typed[A](k: String, default: A, kind: String)(parse: String => A): A =
+      Option(opts.get(k)).filter(_.nonEmpty).fold(default) { v =>
+        try parse(v)
+        catch {
+          case _: IllegalArgumentException =>
+            throw new IllegalArgumentException(s"invalid value for bigtable option '$k': '$v' is not $kind")
+        }
+      }
     def parseType(t: String): DataType = t.trim.toLowerCase match {
       case "long" | "int64" | "bigint" => LongType
       case "string" | "utf8"           => StringType
@@ -203,23 +183,15 @@ object BigtableConfig {
       separator = opt("separator", "#"),
       qualifiers = quals,
       qualifierFamilies = qualFams,
-      onlyReadLatest = opt("onlyReadLatest", "true").toBoolean,
-      allowFullScan = opt("allowFullScan", "false").toBoolean,
-      maxPartitions = opt("maxPartitions", "32").toInt,
-      maxComposedRanges = opt("maxComposedRanges", "4096").toInt,
-      streamStepMicros = Option(opts.get("streamStepMicros")).filter(_.nonEmpty).map(_.toLong),
-      shipStore = opt("shipStore", "false").toBoolean,
-      writeTimestampMicros = opt("writeTimestampMicros", "0").toLong,
-      writeBatchRows = opt("writeBatchRows", "512").toInt,
-      exactFilterPushdown = opt("exactFilterPushdown", "false").toBoolean,
-      vectorized = Option(opts.get("vectorized")).filter(_.nonEmpty).map(_.toBoolean)
-        .orElse(sessionDefault(VectorizedDefaultConf).map(_.toBoolean)),
-      vectorizedAutoRows = opt("vectorizedAutoRows", "32768").toLong,
-      vectorizedBatchSize = {
-        val bs = opt("vectorizedBatchSize", "4096").toInt
-        require(bs > 0, s"vectorizedBatchSize must be positive, got $bs")
-        bs
-      }
+      onlyReadLatest = typed("onlyReadLatest", true, "a boolean")(_.toBoolean),
+      allowFullScan = typed("allowFullScan", false, "a boolean")(_.toBoolean),
+      maxPartitions = typed("maxPartitions", 32, "an integer")(_.toInt),
+      maxComposedRanges = typed("maxComposedRanges", 4096, "an integer")(_.toInt),
+      streamStepMicros = typed[Option[Long]]("streamStepMicros", None, "an integer")(v => Some(v.toLong)),
+      shipStore = typed("shipStore", false, "a boolean")(_.toBoolean),
+      writeTimestampMicros = typed("writeTimestampMicros", 0L, "an integer")(_.toLong),
+      writeBatchRows = typed("writeBatchRows", 512, "an integer")(_.toInt),
+      exactFilterPushdown = typed("exactFilterPushdown", false, "a boolean")(_.toBoolean)
     )
   }
 }

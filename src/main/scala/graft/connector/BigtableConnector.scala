@@ -4,17 +4,12 @@ import graft.model._
 import graft.store.BigtableStores
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
-
-import java.util.regex.Pattern
-import scala.jdk.CollectionConverters._
 
 /** Spark DataSource V2 connector for the Bigtable-shaped store — the
   * Spark-native re-expression of the reference's TableProvider +
@@ -28,8 +23,8 @@ import scala.jdk.CollectionConverters._
   * one [[BigtableInputPartition]] per *split* key range — true
   * partition-aware parallelism the reference lacks
   * (`UnknownPartitioning(1)`, execute_plan.rs:84-86; unchecked roadmap
-  * item README.md:50) — with readers that stream rows incrementally
-  * instead of materializing one batch (execute_plan.rs:306-310).
+  * item README.md:50) — with readers that stream bounded columnar
+  * batches instead of materializing one batch (execute_plan.rs:306-310).
   */
 class BigtableTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "bigtable"
@@ -424,7 +419,7 @@ final class BigtableScan(
     * order: ranges are normalized (sorted, disjoint), grouped
     * contiguously, and the store streams each range from a key-ordered
     * seek; the pivot then emits versions ascending (see
-    * [[BigtablePartitionReader]]). Report it so Catalyst's
+    * [[BigtablePivot.groups]]). Report it so Catalyst's
     * RemoveRedundantSorts drops `ORDER BY key` sorts (single-partition
     * scans) and sort-based downstream operators skip their per-partition
     * sort — a whole sort stage saved at 100 TB scan volume.
@@ -475,9 +470,9 @@ final class BigtableScan(
   /** Store metadata, asked at most once per scan. Spark re-derives a
     * `BatchScanExec`'s partitions on every copy of the plan node, and
     * all copies share this one `Scan`, so the answers are kept here:
-    * one `estimateSize` shared by [[estimateStatistics]] and
-    * [[useColumnar]], one `sampleRowKeys` shared by every
-    * [[planInputPartitions]] call (before and after runtime filtering).
+    * one `estimateSize` for [[estimateStatistics]], one `sampleRowKeys`
+    * shared by every [[planInputPartitions]] call (before and after
+    * runtime filtering).
     * Both are lazy, so a scan that never needs one never asks.
     * Planning on a driver without the store answers "unknown".
     */
@@ -509,22 +504,12 @@ final class BigtableScan(
     groups.map(g => BigtableInputPartition(g, tsRange): InputPartition).toArray
   }
 
-  /** Read-path selection: explicit option/conf wins; AUTO picks the
-    * columnar reader only when the scan's estimated row volume clears
-    * `vectorizedAutoRows` (r13 measurement: columnar decodes ~20%
-    * faster past ~100k rows, but its fixed per-partition batch
-    * allocation loses ~10% on point lookups — the default should
-    * follow the data). Unknown statistics stay on the row path.
-    */
-  private lazy val useColumnar: Boolean =
-    cfg.vectorized.getOrElse(estimate.exists(_._1 >= cfg.vectorizedAutoRows))
-
   override def createReaderFactory(): PartitionReaderFactory =
     // agg mode ignores the pushed limit: Spark never pushes a limit
     // below an aggregate, and capping the fold's input would be wrong
     new BigtablePartitionReaderFactory(
       cfg, requiredSchema, comp.rowFilters,
-      if (aggs.isDefined) None else limit, shippedStore, aggs, postFilters, useColumnar)
+      if (aggs.isDefined) None else limit, shippedStore, aggs, postFilters)
 
   /** Streaming read: cell versions become a change stream ordered by
     * cell timestamp (micro-batch offsets = timestamp high-watermark).
@@ -636,95 +621,28 @@ final class BigtablePartitionReaderFactory(
       * closure holds UTF8String literals — cheap to rebuild, awkward to
       * ship).
       */
-    postFilters: Seq[Filter] = Nil,
-    /** Resolved read path (explicit pin or AUTO-by-volume — see
-      * [[BigtableScan.useColumnar]]); agg mode always reads rows (one
-      * partial per partition — nothing to vectorize).
-      */
-    useColumnar: Boolean = false
+    postFilters: Seq[Filter] = Nil
 ) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[BigtableInputPartition]
-    val base = new BigtablePartitionReader(cfg, readSchema, rowFilters, p.ranges, p.tsRange, limit,
-      shippedStore, ValuePredicate.compile(cfg, postFilters))
-    aggs match {
-      case None                           => base
-      case Some((gcols, as)) if gcols.isEmpty =>
-        new BigtableAggregateReader(base, readSchema, as)
-      case Some((gcols, as)) =>
-        new BigtableGroupedAggregateReader(base, readSchema, gcols, as)
-    }
-  }
-
-  /** Vectorized path: batches of decoded columns, except in agg mode
-    * (one partial row per partition — nothing to vectorize).
+  /** Every scan reads columnar batches, except in agg mode, whose one
+    * partial row per partition (or per group) is a row.
     */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    useColumnar && aggs.isEmpty
+  override def supportColumnarReads(partition: InputPartition): Boolean = aggs.isEmpty
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[BigtableInputPartition]
     new BigtableColumnarPartitionReader(
       cfg, readSchema, rowFilters, p.ranges, p.tsRange, limit, shippedStore,
-      cfg.vectorizedBatchSize, ValuePredicate.compile(cfg, postFilters))
+      ValuePredicate.compile(cfg, postFilters))
   }
-}
 
-/** Executor-side reader: issues the store read (the reference's one gRPC
-  * `ReadRows`, execute_plan.rs:169-183) for this partition's ranges and
-  * performs the cell→row pivot (A13, execute_plan.rs:186-304)
-  * *incrementally*: one `(row_key, timestamp)` group at a time, in
-  * deterministic (rowKey, timestamp) order — never materializing the
-  * result set like the reference's nested-HashMap pivot.
-  *
-  * Semantics mirrored exactly: composite keys split on the separator
-  * into the partition columns (execute_plan.rs:236-251); with
-  * `onlyReadLatest=false` every cell version becomes its own output row
-  * keyed by `(row_key, timestamp)` (execute_plan.rs:223-271).
-  * Deliberate fix: a projected qualifier with no cell in the group
-  * yields SQL NULL (the reference pushes empty bytes and would panic
-  * decoding Int64, execute_plan.rs:264-267).
-  */
-final class BigtablePartitionReader(
-    cfg: BigtableConfig,
-    readSchema: StructType,
-    rowFilters: Seq[RowFilter],
-    ranges: Seq[RowRange],
-    tsRange: Option[(Long, Long)],
-    limit: Option[Int] = None,
-    shippedStore: Option[graft.store.BigtableStore] = None,
-    postFilter: Option[BigtablePivot.Group => Boolean] = None
-) extends PartitionReader[InternalRow] {
-
-  // key-split / ts-window / version-explosion / decode all live in
-  // BigtablePivot, shared verbatim with the columnar reader
-  private val fields = readSchema.fields
-  private val plan = BigtablePivot.fieldPlan(cfg, readSchema)
-
-  private val groupIter: BigtablePivot.GroupIterator =
-    BigtablePivot.groups(cfg, rowFilters, ranges, tsRange, limit, shippedStore, postFilter)
-  private val rowIter: Iterator[InternalRow] =
-    groupIter.map { g =>
-      val values = new Array[Any](fields.length)
-      var i = 0
-      while (i < fields.length) {
-        values(i) = BigtablePivot.extract(plan(i), g)
-        i += 1
-      }
-      new GenericInternalRow(values)
-    }
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    if (rowIter.hasNext) { current = rowIter.next(); true }
-    else false
-
-  override def get(): InternalRow = current
-
-  // release the underlying store scan even when partially consumed — a
-  // pushed limit/topN stops mid-stream, and a wire-transport scan
-  // (ProtoSocketBigtableStore) must not leak its connection (ADVICE r13)
-  override def close(): Unit = groupIter.close()
+  /** Agg mode only: the folds run over the columnar reader's batches. */
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = aggs match {
+    case Some((gcols, as)) if gcols.isEmpty =>
+      new BigtableAggregateReader(createColumnarReader(partition), readSchema, as)
+    case Some((gcols, as)) =>
+      new BigtableGroupedAggregateReader(createColumnarReader(partition), readSchema, gcols, as)
+    case None =>
+      throw new UnsupportedOperationException("bigtable scans without a pushed aggregate read columnar")
+  }
 }

@@ -16,7 +16,7 @@ final case class TsOffset(ts: Long) extends Offset {
 /** Micro-batch streaming read of the store: cell versions are treated
   * as a change stream ordered by cell timestamp. Batch N delivers all
   * cells with `start < timestampMicros <= end` within the composed key
-  * ranges, pivoted to rows exactly like the batch reader (one row per
+  * ranges, pivoted by the batch scan's columnar reader (one row per
   * (row key, timestamp) group inside the window).
   *
   * The emulator derives offsets by scanning min/max cell timestamps (a
@@ -99,10 +99,8 @@ final class BigtableMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // streaming micro-batches are ts-windowed (small); AUTO stays on
-    // the row path — only an explicit pin selects columnar here
     new BigtablePartitionReaderFactory(cfg, readSchema, comp.rowFilters, None, shippedStore,
-      aggs = None, postFilters = postFilters, useColumnar = cfg.vectorized.contains(true))
+      aggs = None, postFilters = postFilters)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -8,12 +8,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.regex.Pattern
 
-/** THE shared cell→row pivot used by both scan paths. The row reader
-  * ([[BigtablePartitionReader]]) and the columnar reader
-  * ([[BigtableColumnarPartitionReader]]) consume the same group
-  * iterator and the same per-field extraction, so the key-split /
-  * ts-window / version-explosion / decode semantics cannot drift
-  * between them — a decode fix lands in both readers by construction.
+/** The cell→row pivot behind the connector's one read path
+  * ([[BigtableColumnarPartitionReader]]): the group iterator and the
+  * per-field extraction carry the key-split / ts-window /
+  * version-explosion / decode semantics.
   *
   * Semantics (cited once, here): one Bigtable row → one output row per
   * distinct cell timestamp, ascending (the reference's pivot,

@@ -16,7 +16,7 @@ import scala.collection.mutable.ArrayBuffer
   * `mode("overwrite")` truncates the table first (SupportsTruncate).
   *
   * Encoding is the exact inverse of the read-side pivot
-  * ([[BigtablePartitionReader]]): partition columns join with the
+  * ([[BigtablePivot]]): partition columns join with the
   * separator into the row key, each remaining column becomes one cell
   * in its declared family/qualifier ([[CellCodec]] byte conventions),
   * and a NULL column writes no cell — so a written row reads back

@@ -75,7 +75,7 @@ final class ConcurrentBigtable extends MutableBigtableStore {
       // does NOT guarantee the mapping function runs atomically/once, so
       // two writers racing on a new key could both observe created=true
       // and permanently over-count the ledger that feeds estimateSize /
-      // sampleRowKeys / the AUTO vectorized-path decision (ADVICE r13).
+      // sampleRowKeys (ADVICE r13).
       // putIfAbsent returning null is the single authoritative "I made
       // this row" signal.
       var row = t.data.get(key)

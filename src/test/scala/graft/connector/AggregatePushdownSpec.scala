@@ -214,4 +214,44 @@ class AggregatePushdownSpec extends AnyFunSuite {
     assert(df.collect()(0).getLong(0) == 10L) // 0+1+2+3+4
     assert(!scanDesc(df).contains("agg="), "distinct sums must not push")
   }
+
+  test("folds over more than two batches of one partition keep their strings and group keys") {
+    import graft.model.{BtCell, CellCodec}
+    // 10 000 keys, every third with a second version: 13 334 rows in
+    // one partition, over four 4096-row batches; the MIN and MAX of s
+    // ("00000" at key 0, "10006" at key 1040) sit in the first batch
+    val b = new graft.store.InMemoryBigtable.Builder
+    (0 until 10000).foreach { i =>
+      val key = f"k$i%05d"
+      val versions = if (i % 3 == 0) Seq(1L, 2L) else Seq(1L)
+      versions.foreach { ts =>
+        b.put("big", key, BtCell("f", "s", ts, CellCodec.encodeString(f"${(i * 7919L + (ts - 1) * 5003L) % 10007L}%05d")))
+        b.put("big", key, BtCell("f", "v", ts, CellCodec.encodeLong(i * 10L + ts)))
+      }
+    }
+    graft.store.BigtableStores.register("agg-multibatch", b.build())
+    def table(extra: Map[String, String]) =
+      extra.foldLeft(spark.read.format("bigtable")
+        .option("store", "agg-multibatch").option("table", "big")
+        .option("columnFamily", "f").option("partitionCols", "k")
+        .option("qualifiers", "s:string,v:long")
+        .option("onlyReadLatest", "false")
+        .option("maxPartitions", "1")) { case (r, (k, v)) => r.option(k, v) }
+        .load()
+        .where(col("k").between("k00000", "k99999"))
+    def global(extra: Map[String, String]) =
+      table(extra).agg(min("s").as("min_s"), max("s").as("max_s"), count("*").as("n"))
+    def grouped(extra: Map[String, String]) =
+      table(extra).groupBy(col("k")).agg(count("*").as("n"), sum("v").as("sum_v")).orderBy(col("k"))
+    val exact = Map("exactFilterPushdown" -> "true")
+    assert(scanDesc(global(exact)).contains("agg=[MIN(s), MAX(s), COUNT(*)]"), scanDesc(global(exact)))
+    assert(scanDesc(grouped(exact)).contains("groupBy=[k] agg=[COUNT(*), SUM(v)]"), scanDesc(grouped(exact)))
+    assert(table(Map.empty).rdd.getNumPartitions == 1)
+    val plain = global(Map.empty).collect().toSeq
+    assert(plain.map(r => (r.getString(0), r.getString(1), r.getLong(2))) == Seq(("00000", "10006", 13334L)), plain)
+    assert(global(exact).collect().toSeq == plain)
+    val plainGroups = grouped(Map.empty).collect().toSeq
+    assert(plainGroups.size == 10000)
+    assert(grouped(exact).collect().toSeq == plainGroups)
+  }
 }

@@ -316,4 +316,21 @@ class BigtableConnectorSpec extends AnyFunSuite {
       .select(col("_row_key"))
     assert(df.collect().map(_.getString(0)).toSeq == Seq("b"))
   }
+
+  test("a malformed boolean or integer reader option fails naming the option and the value") {
+    val badValues = Seq(
+      "onlyReadLatest" -> "yes", "allowFullScan" -> "1", "shipStore" -> "on",
+      "exactFilterPushdown" -> "maybe", "maxPartitions" -> "x", "maxComposedRanges" -> "4k",
+      "streamStepMicros" -> "1.5", "writeTimestampMicros" -> "now", "writeBatchRows" -> "many")
+    badValues.foreach { case (option, value) =>
+      val e = intercept[IllegalArgumentException] {
+        spark.read.format("bigtable")
+          .option("store", Fixtures.StoreName).option("table", "weather_balloons")
+          .option("columnFamily", "measurements").option("qualifiers", "pressure:long")
+          .option(option, value)
+          .load()
+      }
+      assert(e.getMessage.contains(s"'$option'") && e.getMessage.contains(s"'$value'"), e.getMessage)
+    }
+  }
 }

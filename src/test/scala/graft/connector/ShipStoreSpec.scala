@@ -75,9 +75,11 @@ class ShipStoreSpec extends AnyFunSuite {
         .asInstanceOf[BigtablePartitionReaderFactory]
 
       BigtableStores.unregister(name) // simulate the fresh executor JVM
-      val r = revived.createReader(
+      val r = revived.createColumnarReader(
         BigtableInputPartition(Seq(graft.model.RowRange.closed("k03", "k04"))))
-      val keys = Iterator.continually(r).takeWhile(_.next()).map(_.get().getUTF8String(0).toString).toList
+      val keys = Iterator.continually(r).takeWhile(_.next())
+        .flatMap(b => (0 until b.get().numRows()).map(b.get().column(0).getUTF8String(_).toString)).toList
+      r.close()
       assert(keys == List("k03", "k04"))
       // the deserialized handle is installed so sibling tasks share it
       assert(BigtableStores.contains(name))
