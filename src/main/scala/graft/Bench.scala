@@ -19,8 +19,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * Plan-regression tripwire (round-3 item 9): every query's
   * EXPLAIN FORMATTED is persisted to SPARK_GRAFT_PLANS_DIR (default
-  * ./PLANS) so a plan flap between rounds shows up as a text diff, not a
-  * bench-number mystery.
+  * ./PLANS), and so is each streaming gate's query plan
+  * (`<gate>.stream.txt`), so a plan flap between rounds shows up as a
+  * text diff, not a bench-number mystery. Only Bench writes there.
   *
   * A failing query contributes an entry in "errors" (and -1 in
   * "queries"), never a bogus timing in "value" — so the bench number
@@ -72,6 +73,7 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     try Files.createDirectories(Paths.get(plansDir))
     catch { case _: Throwable => () }
+    SparkEntry.streamPlansDir = Some(Paths.get(plansDir))
     // dev aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run (unset for the driver)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     SparkEntry.queries.toSeq.sortBy(_._1)

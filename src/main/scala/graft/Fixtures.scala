@@ -1,13 +1,13 @@
 package graft
 
 import graft.model.{BtCell, CellCodec}
-import graft.store.{BigtableStores, InMemoryBigtable}
+import graft.store.{BigtableStores, ConcurrentBigtable}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Canonical test fixtures (FIXTURES.md §1): the reference's 5-row
   * `weather_balloons` table (reference: script/insert_rows.py:9-15,
-  * script/create_table.sh:2-3) seeded into the in-memory store, plus
+  * script/create_table.sh:2-3) seeded into a [[ConcurrentBigtable]], plus
   * the two logical table views from the reference's tests —
   * single `_row_key` (datasource.rs:179-194) and composite
   * `region/balloon_id/event_minute` key (datasource.rs:245-264).
@@ -25,22 +25,21 @@ object Fixtures {
   /** Idempotently seed the fixture store into the JVM-wide registry. */
   def ensureSeeded(): Unit = synchronized {
     if (!BigtableStores.contains(StoreName)) {
-      val b = new InMemoryBigtable.Builder
-      BalloonRows.foreach { case (key, pressure, temperature, ts) =>
-        b.put("weather_balloons", key, BtCell("measurements", "pressure", ts, CellCodec.encodeLong(pressure)))
-        b.put("weather_balloons", key, BtCell("measurements", "temperature", ts, CellCodec.encodeString(temperature)))
-      }
+      val store = new ConcurrentBigtable
+      def put(table: String, rows: Seq[(String, Long, String, Long)]): Unit =
+        rows.foreach { case (key, pressure, temperature, ts) =>
+          store.mutateRows(table, Seq(key -> Seq(
+            BtCell("measurements", "pressure", ts, CellCodec.encodeLong(pressure)),
+            BtCell("measurements", "temperature", ts, CellCodec.encodeString(temperature)))))
+        }
+      put("weather_balloons", BalloonRows)
       // multi-version fixture the reference never tests (SURVEY.md §7.3):
       // same key layout, two timestamped versions per qualifier
-      Seq(
+      put("balloon_history", Seq(
         ("us-west2#3698#2021-03-05-1200", 94000L, "9.1", 1614945605100000L),
         ("us-west2#3698#2021-03-05-1200", 94558L, "9.6", 1614945665200000L),
-        ("us-west2#3698#2021-03-05-1201", 94122L, "9.7", 1614945725300000L)
-      ).foreach { case (key, pressure, temperature, ts) =>
-        b.put("balloon_history", key, BtCell("measurements", "pressure", ts, CellCodec.encodeLong(pressure)))
-        b.put("balloon_history", key, BtCell("measurements", "temperature", ts, CellCodec.encodeString(temperature)))
-      }
-      BigtableStores.register(StoreName, b.build())
+        ("us-west2#3698#2021-03-05-1201", 94122L, "9.7", 1614945725300000L)))
+      BigtableStores.register(StoreName, store)
     }
   }
 

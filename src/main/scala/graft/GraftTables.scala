@@ -1,13 +1,13 @@
 package graft
 
 import graft.model.{BtCell, CellCodec}
-import graft.store.{BigtableStores, InMemoryBigtable, ProtoSocketBigtableServer}
+import graft.store.{BigtableStores, ConcurrentBigtable, ProtoSocketBigtableServer}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
-/** Seeds the in-memory Bigtable store from the driver's parquet test
+/** Seeds a [[ConcurrentBigtable]] from the driver's parquet test
   * tables (TESTDATA.md) so connector-level queries are checkable
   * against a DuckDB oracle running on the same parquet.
   *
@@ -44,24 +44,18 @@ object GraftTables {
     if (seeded(sfDir)) return
     val name = storeName(sfDir)
     if (!BigtableStores.contains(name)) {
-      val b = new InMemoryBigtable.Builder
+      val store = new ConcurrentBigtable
 
       // Every seeded column is cast DataFrame-side to its canonical type
       // BEFORE collect(): the driver regenerates the fixtures between
       // rounds and has already drifted physical widths once (events.ts),
       // so `Row.getAs` must never depend on what the file happens to hold.
-      spark.read.parquet(s"$sfDir/nation.parquet")
-        .select(col("n_nationkey").cast("long").as("n_nationkey"),
-          col("n_name").cast("string").as("n_name"),
-          col("n_regionkey").cast("long").as("n_regionkey"))
-        .collect().foreach { r =>
-          val key = f"${r.getAs[Long]("n_nationkey")}%04d"
-          b.put("nation", key, BtCell("f", "n_name", FixedTs, CellCodec.encodeString(r.getAs[String]("n_name"))))
-          b.put("nation", key, BtCell("f", "n_regionkey", FixedTs, CellCodec.encodeLong(r.getAs[Long]("n_regionkey"))))
-          // multi-family variant: same data, one family per qualifier
-          b.put("nation_mf", key, BtCell("meta", "n_name", FixedTs, CellCodec.encodeString(r.getAs[String]("n_name"))))
-          b.put("nation_mf", key, BtCell("stats", "n_regionkey", FixedTs, CellCodec.encodeLong(r.getAs[Long]("n_regionkey"))))
-        }
+      val nation = nationRows(spark, sfDir)
+      store.mutateRows("nation", nation)
+      // multi-family variant: same data, one family per qualifier
+      store.mutateRows("nation_mf", nation.map { case (key, cells) =>
+        key -> cells.map(c => c.copy(family = if (c.qualifier == "n_name") "meta" else "stats"))
+      })
 
       spark.read.parquet(s"$sfDir/orders.parquet")
         .select(col("o_orderstatus").cast("string").as("o_orderstatus"),
@@ -72,9 +66,9 @@ object GraftTables {
         .collect().foreach { r =>
           val key = s"${r.getAs[String]("o_orderstatus")}#${r.getAs[String]("o_orderpriority")}#" +
             f"${r.getAs[Long]("o_orderkey")}%010d"
-          b.put("orders", key, BtCell("f", "o_custkey", FixedTs, CellCodec.encodeLong(r.getAs[Long]("o_custkey"))))
-          b.put("orders", key, BtCell("f", "o_totalprice", FixedTs,
-            CellCodec.encodeString(r.getAs[Double]("o_totalprice").toString)))
+          store.mutateRows("orders", Seq(key -> Seq(
+            BtCell("f", "o_custkey", FixedTs, CellCodec.encodeLong(r.getAs[Long]("o_custkey"))),
+            BtCell("f", "o_totalprice", FixedTs, CellCodec.encodeString(r.getAs[Double]("o_totalprice").toString)))))
         }
 
       {
@@ -84,6 +78,9 @@ object GraftTables {
         // streaming gates' (ts, event_id) ordering to arrival luck — fail
         // loudly at seed time instead of hash-mismatching downstream
         val seenUserTs = scala.collection.mutable.HashSet.empty[(Long, Long)]
+        // one mutation per user, not per event: every write to a stored
+        // row rebuilds its cell vector
+        val userCells = scala.collection.mutable.Map.empty[String, Vector[BtCell]]
         eventsWithMicros(spark, s"$sfDir/events.parquet").foreach { r =>
           val key = f"${r.getAs[Long]("user_id")}%06d"
           val micros = r.getAs[Long]("ts_us")
@@ -92,23 +89,24 @@ object GraftTables {
               s"at ts_us=$micros — the cell store cannot represent both and the " +
               s"streaming conversation/session gates would be order-dependent")
           maxMicros = math.max(maxMicros, micros)
-          b.put("events", key, BtCell("f", "event_type", micros, CellCodec.encodeString(r.getAs[String]("event_type"))))
-          b.put("events", key, BtCell("f", "value", micros, CellCodec.encodeString(r.getAs[Double]("value").toString)))
-          // flush variant: same data + two watermark-advancing sentinels,
-          // for streaming operators that must drain event-time state at
-          // end-of-replay (stream_sessionize)
-          b.put("events_flush", key, BtCell("f", "event_type", micros, CellCodec.encodeString(r.getAs[String]("event_type"))))
-          b.put("events_flush", key, BtCell("f", "value", micros, CellCodec.encodeString(r.getAs[Double]("value").toString)))
+          userCells(key) = userCells.getOrElse(key, Vector.empty) :+
+            BtCell("f", "event_type", micros, CellCodec.encodeString(r.getAs[String]("event_type"))) :+
+            BtCell("f", "value", micros, CellCodec.encodeString(r.getAs[Double]("value").toString))
         }
-        // Sentinels (user keys >= 999990, filtered out of results): the
-        // first advances the watermark past every real session's timeout
-        // (end + gap); the second lands one stream step later so one more
-        // batch runs and the event-time timers actually fire.
-        Seq(("999991", maxMicros + 3600000000L), ("999992", maxMicros + 3600000000L + FlushStepMicros))
-          .foreach { case (key, ts) =>
-            b.put("events_flush", key, BtCell("f", "event_type", ts, CellCodec.encodeString("flush")))
-            b.put("events_flush", key, BtCell("f", "value", ts, CellCodec.encodeString("0.0")))
+        store.mutateRows("events", userCells.toSeq)
+        // flush variant: same data + two watermark-advancing sentinels,
+        // for streaming operators that must drain event-time state at
+        // end-of-replay (stream_sessionize). Sentinels (user keys >=
+        // 999990, filtered out of results): the first advances the
+        // watermark past every real session's timeout (end + gap); the
+        // second lands one stream step later so one more batch runs and
+        // the event-time timers actually fire.
+        val sentinels = Seq(("999991", maxMicros + 3600000000L), ("999992", maxMicros + 3600000000L + FlushStepMicros))
+          .map { case (key, ts) =>
+            key -> Seq(BtCell("f", "event_type", ts, CellCodec.encodeString("flush")),
+              BtCell("f", "value", ts, CellCodec.encodeString("0.0")))
           }
+        store.mutateRows("events_flush", userCells.toSeq ++ sentinels)
       }
 
       // documents as a change stream: one cell per doc, timestamps spread
@@ -121,13 +119,29 @@ object GraftTables {
           val docId = r.getAs[Long]("doc_id")
           val key = f"$docId%08d"
           val ts = FixedTs + (docId % 8) * 1000000L
-          b.put("documents", key, BtCell("f", "text", ts, CellCodec.encodeString(r.getAs[String]("text"))))
+          store.mutateRows("documents", Seq(key -> Seq(
+            BtCell("f", "text", ts, CellCodec.encodeString(r.getAs[String]("text"))))))
         }
 
-      BigtableStores.register(name, b.build())
+      BigtableStores.register(name, store)
     }
     seeded += sfDir
   }
+
+  /** `nation` in the `f`-family cell layout (key `lpad(n_nationkey, 4,
+    * '0')`; quals n_name, n_regionkey), ready for `mutateRows` — shared by
+    * the fixture store and gates that seed a nation-only store of their own.
+    */
+  private[graft] def nationRows(spark: SparkSession, sfDir: String): Seq[(String, Seq[BtCell])] =
+    spark.read.parquet(s"$sfDir/nation.parquet")
+      .select(col("n_nationkey").cast("long").as("n_nationkey"),
+        col("n_name").cast("string").as("n_name"),
+        col("n_regionkey").cast("long").as("n_regionkey"))
+      .collect().toSeq.map { r =>
+        f"${r.getAs[Long]("n_nationkey")}%04d" -> Seq(
+          BtCell("f", "n_name", FixedTs, CellCodec.encodeString(r.getAs[String]("n_name"))),
+          BtCell("f", "n_regionkey", FixedTs, CellCodec.encodeLong(r.getAs[Long]("n_regionkey"))))
+      }
 
   /** `events.parquet` with `ts` decoded to epoch microseconds (`ts_us`),
     * schema-driven: the driver's generator has shipped this column as

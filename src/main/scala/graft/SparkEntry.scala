@@ -30,6 +30,13 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
+  /** Where [[snapshotStreamingPlan]] writes: set by [[Bench]] to its plans
+    * dir for the run, unset everywhere else, so only a Bench run writes
+    * snapshot files (a Verify run or a test never rewrites the committed
+    * ones).
+    */
+  @volatile private[graft] var streamPlansDir: Option[java.nio.file.Path] = None
+
   /** Persist a completed streaming query's physical plan next to the
     * batch plan snapshots (Bench snapshots only the post-replay batch
     * plan of the returned DataFrame — the streaming plan, watermarks and
@@ -37,18 +44,16 @@ object SparkEntry {
     */
   private def snapshotStreamingPlan(
       q: org.apache.spark.sql.streaming.StreamingQuery, name: String): Unit =
-    try {
+    try streamPlansDir.foreach { dir =>
       val buf = new java.io.ByteArrayOutputStream()
       Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) { q.explain() }
-      val dir = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "PLANS"))
-      if (java.nio.file.Files.isDirectory(dir))
-        java.nio.file.Files.write(
-          dir.resolve(s"$name.stream.txt"),
-          // normalized (PlanSnapshot): streaming plans embed runIds,
-          // temp checkpoint paths and batch timestamps — strip them so
-          // committed snapshots only diff on structure (ADVICE r12)
-          graft.tools.PlanSnapshot.normalize(new String(buf.toByteArray, "UTF-8"))
-            .getBytes("UTF-8"))
+      java.nio.file.Files.write(
+        dir.resolve(s"$name.stream.txt"),
+        // normalized (PlanSnapshot): streaming plans embed runIds,
+        // temp checkpoint paths and batch timestamps — strip them so
+        // committed snapshots only diff on structure (ADVICE r12)
+        graft.tools.PlanSnapshot.normalize(new String(buf.toByteArray, "UTF-8"))
+          .getBytes("UTF-8"))
     } catch { case _: Throwable => () }
 
   /** Run a streaming replay gate with a small shuffle-partition count.
@@ -357,18 +362,9 @@ object SparkEntry {
     "bt_shipstore" -> ((s, dir) => {
       val name = s"${GraftTables.storeName(dir)}-nation-only"
       if (!graft.store.BigtableStores.contains(name)) {
-        val b = new graft.store.InMemoryBigtable.Builder
-        s.read.parquet(s"$dir/nation.parquet")
-          .select(col("n_nationkey").cast("long").as("n_nationkey"),
-            col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
-          .collect().foreach { r =>
-            val key = f"${r.getAs[Long]("n_nationkey")}%04d"
-            b.put("nation", key, graft.model.BtCell("f", "n_name", GraftTables.FixedTs,
-              graft.model.CellCodec.encodeString(r.getAs[String]("n_name"))))
-            b.put("nation", key, graft.model.BtCell("f", "n_regionkey", GraftTables.FixedTs,
-              graft.model.CellCodec.encodeLong(r.getAs[Long]("n_regionkey"))))
-          }
-        graft.store.BigtableStores.register(name, b.build())
+        val store = new graft.store.ConcurrentBigtable
+        store.mutateRows("nation", GraftTables.nationRows(s, dir))
+        graft.store.BigtableStores.register(name, store)
       }
       s.read.format("bigtable")
         .option("store", name)

@@ -46,12 +46,13 @@ final case class BigtableConfig(
     streamStepMicros: Option[Long] = None,
     /** Cluster deployment path: serialize the registered store handle
       * into the scan so executor JVMs that never saw
-      * `BigtableStores.register` can still read. For the in-memory
-      * emulator this ships the immutable snapshot; a gRPC-backed store
+      * `BigtableStores.register` can still read. For the in-process
+      * emulator this ships a copy of the whole store, as it stands
+      * when the tasks are serialized; a gRPC-backed store
       * serializes as its connection config and reopens lazily on the
       * executor — the reference's executor-side channel
       * (datasource.rs:81-88). Default off: in local[*] the registry is
-      * shared and shipping the snapshot would bloat every task binary.
+      * shared and shipping the store would bloat every task binary.
       */
     shipStore: Boolean = false,
     /** Cell timestamp for writes when the input has no `_timestamp`

@@ -40,10 +40,11 @@ final class BigtableMicroBatchStream(
     with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
-  /** AvailableNow target: the store snapshot is immutable, so the
-    * prepared end offset is simply the current max cell timestamp —
-    * batches then step toward it under `streamStepMicros` admission
-    * control until caught up.
+  /** AvailableNow target: the end offset is the max cell timestamp,
+    * read once when the stream first asks for an offset (`maxTs`), so a
+    * run stops at the cells present when it started — batches step
+    * toward it under `streamStepMicros` admission control until caught
+    * up; cells written during the run wait for the next one.
     */
   override def prepareForTriggerAvailableNow(): Unit = ()
 

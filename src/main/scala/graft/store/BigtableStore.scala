@@ -3,7 +3,6 @@ package graft.store
 import graft.model._
 
 import java.util.concurrent.ConcurrentHashMap
-import scala.collection.immutable.TreeMap
 import scala.jdk.CollectionConverters._
 
 /** Storage abstraction standing in for the Bigtable service.
@@ -13,8 +12,8 @@ import scala.jdk.CollectionConverters._
   * (reference: src/execute_plan.rs:169-183). A production deployment
   * would implement this trait with a gRPC client whose channel is
   * opened lazily on the executor (inside `PartitionReader` creation);
-  * the in-memory implementation below is the emulator used by tests
-  * and the driver harness.
+  * [[ConcurrentBigtable]] is the in-process emulator every test, fixture
+  * and benchmark seeds.
   */
 trait BigtableStore extends Serializable {
   /** Read rows whose key falls in any of `ranges` (lexicographic on
@@ -49,206 +48,8 @@ trait BigtableStore extends Serializable {
   def estimateSize(table: String, ranges: Seq[RowRange]): Option[(Long, Long)] = None
 }
 
-/** In-memory, immutable-snapshot Bigtable emulator.
-  *
-  * Data layout: table -> TreeMap(rowKey -> cells). TreeMap ordering uses
-  * UTF-8-byte unsigned order so range reads match Bigtable key order.
-  * Instances are serializable, so a snapshot can ship inside a Spark
-  * task closure when no shared JVM is available; in local mode readers
-  * resolve the store through [[BigtableStores]] by name instead.
-  */
-final class InMemoryBigtable private (
-    private val tables: Map[String, TreeMap[String, Vector[BtCell]]]
-) extends BigtableStore {
-
-  override def readRows(
-      table: String,
-      ranges: Seq[RowRange],
-      filters: Seq[RowFilter]
-  ): Iterator[BtRow] = {
-    require(
-      ranges.nonEmpty,
-      "readRows requires at least one RowRange; use Seq(RowRange.full) for an explicit full scan"
-    )
-    val data = tables.getOrElse(
-      table,
-      throw new IllegalArgumentException(s"unknown bigtable table: $table")
-    )
-    // Normalize (sort + coalesce overlaps) so per-range sub-iterators are
-    // disjoint and in global key order; then stream them back-to-back
-    // without materializing the key set (scale: a range read is O(log n)
-    // to seek + O(rows emitted), never O(table)).
-    RowRange.normalize(ranges).iterator.flatMap { r =>
-      data
-        .rangeFrom(r.startKey)
-        .iterator
-        .takeWhile { case (k, _) =>
-          r.endKey match {
-            case None    => true
-            case Some(e) =>
-              val c = RowRange.compareKeys(k, e)
-              if (r.endInclusive) c <= 0 else c < 0
-          }
-        }
-        .flatMap { case (k, cells) =>
-          val kept = applyFilters(cells, filters)
-          if (kept.isEmpty) None else Some(BtRow(k, kept))
-        }
-    }
-  }
-
-  /** Whole-table (rows, bytes) per table, computed once on first use —
-    * the snapshot is immutable, so full-scan `estimateSize` answers in
-    * O(1) after that instead of walking the table on the driver at
-    * every planning pass (a per-query cost that would grow linearly
-    * with table size).
-    */
-  private lazy val tableTotals: Map[String, (Long, Long)] =
-    tables.map { case (t, data) =>
-      var bytes = 0L
-      data.foreach { case (k, cells) =>
-        bytes += k.length + cells.iterator.map(c => 16L + c.qualifier.length + c.value.length).sum
-      }
-      t -> ((data.size.toLong, bytes))
-    }
-
-  override def estimateSize(table: String, ranges: Seq[RowRange]): Option[(Long, Long)] = {
-    val data = tables.getOrElse(table, return Some((0L, 0L)))
-    if (RowRange.normalize(ranges) == Vector(RowRange.full))
-      return Some(tableTotals.getOrElse(table, (0L, 0L)))
-    var rows = 0L
-    var bytes = 0L
-    RowRange.normalize(ranges).foreach { r =>
-      data
-        .rangeFrom(r.startKey)
-        .iterator
-        .takeWhile { case (k, _) =>
-          r.endKey match {
-            case None    => true
-            case Some(e) =>
-              val c = RowRange.compareKeys(k, e)
-              if (r.endInclusive) c <= 0 else c < 0
-          }
-        }
-        .foreach { case (k, cells) =>
-          rows += 1
-          bytes += k.length + cells.iterator.map(c => 16L + c.qualifier.length + c.value.length).sum
-        }
-    }
-    Some((rows, bytes))
-  }
-
-  override def sampleRowKeys(table: String): Seq[String] = {
-    val data = tables.getOrElse(table, return Nil)
-    val n = data.size
-    val targetSamples = 32
-    if (n <= 1) Nil
-    else {
-      val step = math.max(1, n / targetSamples)
-      data.keysIterator.zipWithIndex.collect {
-        case (k, i) if i > 0 && i % step == 0 => k
-      }.toVector
-    }
-  }
-
-  /** Apply the filter chain in order, as Bigtable does
-    * (execute_plan.rs:175-180): each filter narrows the surviving cells.
-    */
-  private def applyFilters(cells: Vector[BtCell], filters: Seq[RowFilter]): Vector[BtCell] =
-    CellFilters(cells, filters)
-}
-
-/** The server-side cell filter chain, shared by every emulator-backed
-  * [[BigtableStore]] (immutable snapshot and mutable alike).
-  */
-private[store] object CellFilters {
-  def apply(cells: Vector[BtCell], filters: Seq[RowFilter]): Vector[BtCell] =
-    filters.foldLeft(cells) { (cs, f) =>
-      f match {
-        case RowFilter.FamilyNameRegex(re) =>
-          val p = re.r.pattern
-          cs.filter(c => p.matcher(c.family).matches())
-        case RowFilter.ColumnQualifierRegex(re) =>
-          val p = re.r.pattern
-          cs.filter(c => p.matcher(c.qualifier).matches())
-        case RowFilter.CellsPerColumnLimit(n) =>
-          // keep newest n versions per (family, qualifier)
-          cs.groupBy(c => (c.family, c.qualifier))
-            .valuesIterator
-            .flatMap(_.sortBy(-_.timestampMicros).take(n))
-            .toVector
-        case RowFilter.QualifierValueRange(fam, q, lo, loInc, hi, hiInc) =>
-          cs.filter { c =>
-            c.family != fam || c.qualifier != q || {
-              val loOk = lo.forall { b =>
-                val cmp = java.util.Arrays.compareUnsigned(c.value, b)
-                if (loInc) cmp >= 0 else cmp > 0
-              }
-              val hiOk = hi.forall { b =>
-                val cmp = java.util.Arrays.compareUnsigned(c.value, b)
-                if (hiInc) cmp <= 0 else cmp < 0
-              }
-              loOk && hiOk
-            }
-          }
-        case RowFilter.QualifierValueRegex(fam, q, re) =>
-          val p = re.r.pattern
-          cs.filter { c =>
-            c.family != fam || c.qualifier != q ||
-              p.matcher(new String(c.value, java.nio.charset.StandardCharsets.UTF_8)).matches()
-          }
-      }
-    }.sortBy(c => (c.family, c.qualifier, -c.timestampMicros))
-}
-
-object InMemoryBigtable {
-  /** Bigtable key order = unsigned byte order of the UTF-8 encoding. */
-  val keyOrdering: Ordering[String] = (a: String, b: String) => RowRange.compareKeys(a, b)
-
-  def apply(tables: Map[String, Seq[(String, Seq[BtCell])]]): InMemoryBigtable = {
-    val built = tables.map { case (t, rows) =>
-      val grouped = rows
-        .groupBy(_._1)
-        .map { case (k, vs) => k -> vs.flatMap(_._2).toVector }
-      t -> (TreeMap.empty[String, Vector[BtCell]](keyOrdering) ++ grouped)
-    }
-    new InMemoryBigtable(built)
-  }
-
-  /** Builder-style mutable seeder, then snapshot. */
-  final class Builder {
-    private val rows =
-      scala.collection.mutable.Map.empty[String, scala.collection.mutable.Map[String, Vector[BtCell]]]
-
-    def put(table: String, rowKey: String, cell: BtCell): this.type = {
-      val t = rows.getOrElseUpdate(table, scala.collection.mutable.Map.empty)
-      t.updateWith(rowKey) {
-        case Some(cs) => Some(cs :+ cell)
-        case None     => Some(Vector(cell))
-      }
-      this
-    }
-
-    def putAll(table: String, rowKey: String, cells: Iterable[BtCell]): this.type = {
-      val t = rows.getOrElseUpdate(table, scala.collection.mutable.Map.empty)
-      t.updateWith(rowKey) {
-        case Some(cs) => Some(cs ++ cells)
-        case None     => Some(cells.toVector)
-      }
-      this
-    }
-
-    def build(): InMemoryBigtable = {
-      val built = rows.toMap.map { case (t, m) =>
-        t -> (TreeMap.empty[String, Vector[BtCell]](keyOrdering) ++ m)
-      }
-      new InMemoryBigtable(built)
-    }
-  }
-}
-
 /** JVM-wide named registry so executor-side readers can resolve the
-  * emulator without shipping the snapshot in every task (valid in
+  * emulator without shipping the store in every task (valid in
   * local[*] where executors share the driver JVM — the deployment mode
   * of this harness). A cluster deployment swaps in a gRPC-backed
   * [[BigtableStore]] resolved from connection options instead.

@@ -107,12 +107,14 @@ object SnapshotUpsert {
         .collect().map(_.getInt(0)).toSet
       if (touched.isEmpty) return // empty batch: nothing to merge, no commit
 
-      val (rewrite, carried) = CommitLog.currentFiles(dir).partition { f =>
-        bucketOfPath(f) match {
-          case Some(b) => touched.contains(b)
-          case None => true // un-bucketed legacy file: fold it in (self-healing)
-        }
+      val files = CommitLog.currentFiles(dir)
+      files.find(bucketOfPath(_).isEmpty).foreach { f =>
+        throw new IllegalStateException(
+          s"snapshot $dir lists un-bucketed data file $f: every version this " +
+            "object publishes is hash-bucketed, so bucket pruning cannot merge " +
+            "into it; rewrite the snapshot bucketed with SnapshotUpsert.rebucket")
       }
+      val (rewrite, carried) = files.partition(f => touched.contains(bucketOfPath(f).get))
       val base = CommitLog.readFiles(spark, dir, schema, rewrite)
       val merged = Upsert.mergeLatest(base, pinned, keys, versionCol,
         deleteCol = None, versionDominates = true)

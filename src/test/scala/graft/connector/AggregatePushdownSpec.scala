@@ -220,16 +220,16 @@ class AggregatePushdownSpec extends AnyFunSuite {
     // 10 000 keys, every third with a second version: 13 334 rows in
     // one partition, over four 4096-row batches; the MIN and MAX of s
     // ("00000" at key 0, "10006" at key 1040) sit in the first batch
-    val b = new graft.store.InMemoryBigtable.Builder
+    val b = new graft.store.ConcurrentBigtable
     (0 until 10000).foreach { i =>
       val key = f"k$i%05d"
       val versions = if (i % 3 == 0) Seq(1L, 2L) else Seq(1L)
-      versions.foreach { ts =>
-        b.put("big", key, BtCell("f", "s", ts, CellCodec.encodeString(f"${(i * 7919L + (ts - 1) * 5003L) % 10007L}%05d")))
-        b.put("big", key, BtCell("f", "v", ts, CellCodec.encodeLong(i * 10L + ts)))
-      }
+      b.mutateRows("big", Seq(key -> versions.flatMap { ts =>
+        Seq(BtCell("f", "s", ts, CellCodec.encodeString(f"${(i * 7919L + (ts - 1) * 5003L) % 10007L}%05d")),
+          BtCell("f", "v", ts, CellCodec.encodeLong(i * 10L + ts)))
+      }))
     }
-    graft.store.BigtableStores.register("agg-multibatch", b.build())
+    graft.store.BigtableStores.register("agg-multibatch", b)
     def table(extra: Map[String, String]) =
       extra.foldLeft(spark.read.format("bigtable")
         .option("store", "agg-multibatch").option("table", "big")

@@ -301,11 +301,11 @@ class BigtableConnectorSpec extends AnyFunSuite {
     // latest temperature for key 'a' is "9.9"; an older version is "9.6".
     // Predicate temperature='9.6' must match NOTHING (latest-then-value
     // chain order): the older passing version must not resurface.
-    val b = new graft.store.InMemoryBigtable.Builder
-    b.put("vt", "a", graft.model.BtCell("f", "temperature", 200L, graft.model.CellCodec.encodeString("9.9")))
-    b.put("vt", "a", graft.model.BtCell("f", "temperature", 100L, graft.model.CellCodec.encodeString("9.6")))
-    b.put("vt", "b", graft.model.BtCell("f", "temperature", 200L, graft.model.CellCodec.encodeString("9.6")))
-    graft.store.BigtableStores.register("value-vt", b.build())
+    val b = new graft.store.ConcurrentBigtable
+    b.mutateRows("vt", Seq("a" -> Seq(graft.model.BtCell("f", "temperature", 200L, graft.model.CellCodec.encodeString("9.9")))))
+    b.mutateRows("vt", Seq("a" -> Seq(graft.model.BtCell("f", "temperature", 100L, graft.model.CellCodec.encodeString("9.6")))))
+    b.mutateRows("vt", Seq("b" -> Seq(graft.model.BtCell("f", "temperature", 200L, graft.model.CellCodec.encodeString("9.6")))))
+    graft.store.BigtableStores.register("value-vt", b)
     val df = spark.read.format("bigtable")
       .option("store", "value-vt").option("table", "vt")
       .option("columnFamily", "f").option("partitionCols", "_row_key")

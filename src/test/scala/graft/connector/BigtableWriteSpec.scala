@@ -1,7 +1,7 @@
 package graft.connector
 
 import graft.SparkTestSession
-import graft.store.{BigtableStores, ConcurrentBigtable, InMemoryBigtable}
+import graft.store.{BigtableStores, ConcurrentBigtable, RetryingStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -165,7 +165,7 @@ class BigtableWriteSpec extends AnyFunSuite {
 
   test("writing to a read-only store is rejected") {
     val name = s"write-spec-ro-${System.identityHashCode(this)}"
-    BigtableStores.register(name, new InMemoryBigtable.Builder().build())
+    BigtableStores.register(name, new RetryingStore(new ConcurrentBigtable))
     val e = intercept[Exception] {
       Seq(("a", 1L)).toDF("k", "v").write.format("bigtable")
         .option("store", name).option("table", "t").option("columnFamily", "f")

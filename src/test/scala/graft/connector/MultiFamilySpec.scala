@@ -14,16 +14,16 @@ class MultiFamilySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private def seeded(): Unit = {
-    val b = new graft.store.InMemoryBigtable.Builder
+    val b = new graft.store.ConcurrentBigtable
     Seq(("k1", "alice", 7L, "x"), ("k2", "bob", 9L, "y"), ("k3", "carol", 7L, "z")).foreach {
       case (k, name, score, tag) =>
-        b.put("mf", k, BtCell("meta", "name", 1L, CellCodec.encodeString(name)))
-        b.put("mf", k, BtCell("stats", "score", 1L, CellCodec.encodeLong(score)))
+        b.mutateRows("mf", Seq(k -> Seq(BtCell("meta", "name", 1L, CellCodec.encodeString(name)))))
+        b.mutateRows("mf", Seq(k -> Seq(BtCell("stats", "score", 1L, CellCodec.encodeLong(score)))))
         // an UNDECLARED qualifier sharing a declared name but in another
         // family — must never leak into the declared column
-        b.put("mf", k, BtCell("other", "name", 1L, CellCodec.encodeString(tag)))
+        b.mutateRows("mf", Seq(k -> Seq(BtCell("other", "name", 1L, CellCodec.encodeString(tag)))))
     }
-    graft.store.BigtableStores.register("mf-store", b.build())
+    graft.store.BigtableStores.register("mf-store", b)
   }
 
   private def table() = {

@@ -2,7 +2,7 @@ package graft.connector
 
 import graft.SparkTestSession
 import graft.model._
-import graft.store.{BigtableStore, BigtableStores, InMemoryBigtable}
+import graft.store.{BigtableStore, BigtableStores, ConcurrentBigtable}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.ConcurrentHashMap
@@ -41,16 +41,15 @@ class PlanningRoundTripsSpec extends AnyFunSuite {
   private val users = 2000
   private def user(i: Int) = f"u$i%05d"
 
-  /** One seeded snapshot, registered bare and behind the counter. */
+  /** One seeded store, registered bare and behind the counter. */
   private lazy val counting: CountingStore = {
-    val b = new InMemoryBigtable.Builder
-    (0 until users).foreach { i =>
-      b.put("users", user(i), BtCell("f", "age", 1L, CellCodec.encodeLong(20L + i % 50)))
-    }
-    (0 until users by 97).foreach { i =>
-      b.put("vip", user(i), BtCell("f", "level", 1L, CellCodec.encodeString(if (i % 2 == 0) "gold" else "silver")))
-    }
-    val store = b.build()
+    val store = new ConcurrentBigtable
+    store.mutateRows("users", (0 until users).map { i =>
+      user(i) -> Seq(BtCell("f", "age", 1L, CellCodec.encodeLong(20L + i % 50)))
+    })
+    store.mutateRows("vip", (0 until users by 97).map { i =>
+      user(i) -> Seq(BtCell("f", "level", 1L, CellCodec.encodeString(if (i % 2 == 0) "gold" else "silver")))
+    })
     BigtableStores.register("prt-bare", store)
     val counted = new CountingStore(store)
     BigtableStores.register("prt-counting", counted)

@@ -110,11 +110,11 @@ class RuntimeFilteringSpec extends AnyFunSuite {
 
   test("e2e composite probe: join on both key components narrows the scan") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val b = new graft.store.InMemoryBigtable.Builder
+    val b = new graft.store.ConcurrentBigtable
     for (a <- Seq("1", "2", "3"); k <- Seq("x", "y")) {
-      b.put("t2", s"$a#$k", BtCell("f", "q", 1L, CellCodec.encodeString(s"v$a$k")))
+      b.mutateRows("t2", Seq(s"$a#$k" -> Seq(BtCell("f", "q", 1L, CellCodec.encodeString(s"v$a$k")))))
     }
-    graft.store.BigtableStores.register("rf-store2", b.build())
+    graft.store.BigtableStores.register("rf-store2", b)
     val fact = spark.read.format("bigtable")
       .option("store", "rf-store2").option("table", "t2")
       .option("columnFamily", "f").option("partitionCols", "a,k")
@@ -151,11 +151,11 @@ class RuntimeFilteringSpec extends AnyFunSuite {
 
   test("e2e prefix probe: join on only the LEADING component narrows to prefix ranges") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val b = new graft.store.InMemoryBigtable.Builder
+    val b = new graft.store.ConcurrentBigtable
     for (a <- Seq("1", "2", "3"); k <- Seq("x", "y")) {
-      b.put("t3", s"$a#$k", BtCell("f", "q", 1L, CellCodec.encodeString(s"v$a$k")))
+      b.mutateRows("t3", Seq(s"$a#$k" -> Seq(BtCell("f", "q", 1L, CellCodec.encodeString(s"v$a$k")))))
     }
-    graft.store.BigtableStores.register("rf-store3", b.build())
+    graft.store.BigtableStores.register("rf-store3", b)
     val fact = spark.read.format("bigtable")
       .option("store", "rf-store3").option("table", "t3")
       .option("columnFamily", "f").option("partitionCols", "a,k")
@@ -187,11 +187,11 @@ class RuntimeFilteringSpec extends AnyFunSuite {
 
   test("e2e probe: broadcast join on the row key delivers a runtime filter") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val b = new graft.store.InMemoryBigtable.Builder
+    val b = new graft.store.ConcurrentBigtable
     Seq("a", "b", "c", "d", "e").foreach { k =>
-      b.put("t", k, BtCell("f", "q", 1L, CellCodec.encodeString(s"v$k")))
+      b.mutateRows("t", Seq(k -> Seq(BtCell("f", "q", 1L, CellCodec.encodeString(s"v$k")))))
     }
-    graft.store.BigtableStores.register("rf-store", b.build())
+    graft.store.BigtableStores.register("rf-store", b)
     val fact = spark.read.format("bigtable")
       .option("store", "rf-store").option("table", "t")
       .option("columnFamily", "f").option("partitionCols", "_row_key")

@@ -4,7 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, 
 
 import graft.SparkTestSession
 import graft.model.{BtCell, CellCodec}
-import graft.store.{BigtableStores, InMemoryBigtable}
+import graft.store.{BigtableStores, ConcurrentBigtable}
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,12 +20,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class ShipStoreSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private def seed(name: String): InMemoryBigtable = {
-    val b = new InMemoryBigtable.Builder
-    (1 to 9).foreach { i =>
-      b.put("t", f"k$i%02d", BtCell("f", "q", 1000L + i, CellCodec.encodeLong(i.toLong)))
-    }
-    val store = b.build()
+  private def seed(name: String): ConcurrentBigtable = {
+    val store = new ConcurrentBigtable
+    store.mutateRows("t", (1 to 9).map { i =>
+      f"k$i%02d" -> Seq(BtCell("f", "q", 1000L + i, CellCodec.encodeLong(i.toLong)))
+    })
     BigtableStores.register(name, store)
     store
   }

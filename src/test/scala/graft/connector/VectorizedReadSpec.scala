@@ -133,10 +133,10 @@ class VectorizedReadSpec extends AnyFunSuite {
 
   test("NULL cells surface as SQL NULL in the columnar path") {
     import graft.model.{BtCell, CellCodec}
-    val b = new graft.store.InMemoryBigtable.Builder
-    b.put("tn", "k1", BtCell("f", "a", 1L, CellCodec.encodeString("x")))
-    b.put("tn", "k2", BtCell("f", "b", 1L, CellCodec.encodeLong(9L)))
-    graft.store.BigtableStores.register("vec-nulls", b.build())
+    val b = new graft.store.ConcurrentBigtable
+    b.mutateRows("tn", Seq("k1" -> Seq(BtCell("f", "a", 1L, CellCodec.encodeString("x")))))
+    b.mutateRows("tn", Seq("k2" -> Seq(BtCell("f", "b", 1L, CellCodec.encodeLong(9L)))))
+    graft.store.BigtableStores.register("vec-nulls", b)
     val df = spark.read.format("bigtable")
       .option("store", "vec-nulls").option("table", "tn")
       .option("columnFamily", "f").option("partitionCols", "_row_key")

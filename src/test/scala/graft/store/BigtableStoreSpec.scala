@@ -12,14 +12,12 @@ class BigtableStoreSpec extends AnyFunSuite {
     BtCell(fam, q, ts, CellCodec.encodeString(v))
 
   private val store = {
-    val b = new InMemoryBigtable.Builder
+    val b = new ConcurrentBigtable
     Seq("a", "b", "c", "d", "e").zipWithIndex.foreach { case (k, i) =>
-      b.put("t", k, cell("q1", 100L + i, s"v$k"))
-      b.put("t", k, cell("q1", 50L, s"old$k"))
-      b.put("t", k, cell("q2", 100L + i, s"w$k"))
-      b.put("t", k, cell("q2", 100L + i, s"x$k", fam = "other"))
+      b.mutateRows("t", Seq(k -> Seq(cell("q1", 100L + i, s"v$k"), cell("q1", 50L, s"old$k"),
+        cell("q2", 100L + i, s"w$k"), cell("q2", 100L + i, s"x$k", fam = "other"))))
     }
-    b.build()
+    b
   }
 
   test("closed-closed range includes both endpoints") {

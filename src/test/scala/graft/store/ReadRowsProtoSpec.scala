@@ -102,14 +102,13 @@ class ReadRowsProtoSpec extends AnyFunSuite {
     BtCell(fam, q, ts, CellCodec.encodeString(v))
 
   private lazy val backing = {
-    val b = new InMemoryBigtable.Builder
+    val b = new ConcurrentBigtable
     Seq("a", "b", "c", "d", "e").zipWithIndex.foreach { case (k, i) =>
-      b.put("t", k, cell("q1", 100L + i, s"v$k"))
-      b.put("t", k, cell("q1", 50L, s"old$k"))
-      b.put("t", k, cell("q2", 100L + i, s"w$k"))
+      b.mutateRows("t", Seq(k -> Seq(cell("q1", 100L + i, s"v$k"), cell("q1", 50L, s"old$k"),
+        cell("q2", 100L + i, s"w$k"))))
     }
-    (0 until 1500).foreach { i => b.put("wide", f"k$i%06d", cell("q", 1L, s"v$i")) }
-    b.build()
+    b.mutateRows("wide", (0 until 1500).map(i => f"k$i%06d" -> Seq(cell("q", 1L, s"v$i"))))
+    b
   }
   private lazy val server = new ProtoSocketBigtableServer(backing)
   private lazy val client = server.clientStore
@@ -141,7 +140,7 @@ class ReadRowsProtoSpec extends AnyFunSuite {
     assert(client.sampleRowKeys("t") == backing.sampleRowKeys("t"))
     assert(client.estimateSize("t", Seq(RowRange.full)) ==
       backing.estimateSize("t", Seq(RowRange.full)))
-    // writes need a MUTABLE backing store (InMemoryBigtable is frozen)
+    // writes through the wire land in a fresh store, not the shared backing
     val mutable = new ConcurrentBigtable
     val wServer = new ProtoSocketBigtableServer(mutable)
     val wClient = wServer.clientStore
@@ -158,11 +157,9 @@ class ReadRowsProtoSpec extends AnyFunSuite {
 
   test("proto transport: a server fault mid-request surfaces as the mapped exception") {
     val e = intercept[UnsupportedOperationException] {
-      new ProtoSocketBigtableServer(new InMemoryBigtable.Builder().build() match {
-        case s => new BigtableStore { // read-only wrapper: writes must 12/UNIMPLEMENTED
-          def readRows(t: String, r: Seq[RowRange], f: Seq[RowFilter]) = s.readRows(t, r, f)
-        }
-      }).clientStore.mutateRows("t", Seq(("k", Seq(cell("q", 1L, "v")))))
+      // a RetryingStore is read-only: writes must 12/UNIMPLEMENTED
+      new ProtoSocketBigtableServer(new RetryingStore(new ConcurrentBigtable))
+        .clientStore.mutateRows("t", Seq(("k", Seq(cell("q", 1L, "v")))))
     }
     assert(e.getMessage.contains("status 12"))
   }
@@ -306,9 +303,9 @@ class ReadRowsProtoSpec extends AnyFunSuite {
   }
 
   test("proto transport: a 512-row scan of 200 KB cells streams within the frame limit") {
-    val b = new InMemoryBigtable.Builder
-    bigRows.foreach { case (k, cells) => cells.foreach(c => b.put("docs", k, c)) }
-    val srv = new ProtoSocketBigtableServer(b.build())
+    val b = new ConcurrentBigtable
+    b.mutateRows("docs", bigRows)
+    val srv = new ProtoSocketBigtableServer(b)
     try assertBigRows(srv.clientStore.readRows("docs", Seq(RowRange.full), Nil))
     finally srv.close()
   }

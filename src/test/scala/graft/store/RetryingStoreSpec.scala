@@ -7,11 +7,9 @@ class RetryingStoreSpec extends AnyFunSuite {
   private def cell(q: String, ts: Long, v: String) = BtCell("f", q, ts, CellCodec.encodeString(v))
 
   private def freshStore = {
-    val b = new InMemoryBigtable.Builder
-    Seq("a", "ab", "a\u0001", "b", "c", "d", "e").foreach { k =>
-      b.put("t", k, cell("q1", 100L, s"v$k"))
-    }
-    b.build()
+    val store = new ConcurrentBigtable
+    store.mutateRows("t", Seq("a", "ab", "a\u0001", "b", "c", "d", "e").map(k => k -> Seq(cell("q1", 100L, s"v$k"))))
+    store
   }
   // "a\u0001" sits between "a" and its +NUL successor's neighbours — a
   // resume right after "a" must not skip it

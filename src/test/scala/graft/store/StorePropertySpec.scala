@@ -3,11 +3,12 @@ package graft.store
 import graft.model._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Randomized store semantics check: for random cell layouts, range
-  * sets, and filter chains, `InMemoryBigtable.readRows` must agree with
-  * a brute-force evaluation of the same Bigtable semantics (range
-  * membership, in-order filter chain, cell ordering, empty-row
-  * elision).
+/** Randomized store semantics check: for random write sequences, range
+  * sets, and filter chains, `ConcurrentBigtable.readRows` must agree with
+  * a brute-force evaluation of the same Bigtable semantics (SetCell
+  * upserts, range membership, in-order filter chain, cell ordering,
+  * empty-row elision); and concurrent writers must leave the size ledger
+  * equal to what a full read walks.
   */
 class StorePropertySpec extends AnyFunSuite {
   private val rnd = new scala.util.Random(987654321L)
@@ -15,20 +16,28 @@ class StorePropertySpec extends AnyFunSuite {
   private val quals = Vector("q1", "q2", "q3")
   private val fams = Vector("f", "g")
 
-  private def randomStore(): (InMemoryBigtable, Map[String, Vector[BtCell]]) = {
-    val b = new InMemoryBigtable.Builder
-    val truth = scala.collection.mutable.Map.empty[String, Vector[BtCell]]
+  /** A store written in several `mutateRows` batches per row, so cells
+    * land both in new rows and merged into stored ones and coordinates
+    * repeat; the truth keeps the last cell written at each (family,
+    * qualifier, timestamp), as SetCell does.
+    */
+  private def randomStore(): (ConcurrentBigtable, Map[String, Vector[BtCell]]) = {
+    val store = new ConcurrentBigtable
+    val truth = scala.collection.mutable.Map.empty[String, Map[(String, String, Long), BtCell]]
     keys.foreach { k =>
       if (rnd.nextDouble() < 0.8) {
-        val nCells = 1 + rnd.nextInt(5)
-        val cells = Vector.fill(nCells)(
-          BtCell(fams(rnd.nextInt(fams.size)), quals(rnd.nextInt(quals.size)),
-            rnd.nextInt(5).toLong, CellCodec.encodeString(rnd.nextInt(100).toString)))
-        cells.foreach(c => b.put("t", k, c))
-        truth(k) = cells
+        (1 to 1 + rnd.nextInt(3)).foreach { _ =>
+          val cells = Vector.fill(1 + rnd.nextInt(4))(
+            BtCell(fams(rnd.nextInt(fams.size)), quals(rnd.nextInt(quals.size)),
+              rnd.nextInt(5).toLong, CellCodec.encodeString(rnd.nextInt(100).toString)))
+          store.mutateRows("t", Seq(k -> cells))
+          truth(k) = cells.foldLeft(truth.getOrElse(k, Map.empty)) { (m, c) =>
+            m.updated((c.family, c.qualifier, c.timestampMicros), c)
+          }
+        }
       }
     }
-    (b.build(), truth.toMap)
+    (store, truth.map { case (k, m) => k -> m.values.toVector }.toMap)
   }
 
   private def randomRanges(): Seq[RowRange] =
@@ -74,7 +83,7 @@ class StorePropertySpec extends AnyFunSuite {
   ): Seq[(String, Seq[(String, String, Long, String)])] =
     keys
       .filter(k => truth.contains(k) && ranges.exists(_.contains(k)))
-      .sorted(InMemoryBigtable.keyOrdering)
+      .sortWith(RowRange.compareKeys(_, _) < 0)
       .map { k =>
         val kept = filters.foldLeft(truth(k)) { (cs, f) =>
           f match {
@@ -109,11 +118,44 @@ class StorePropertySpec extends AnyFunSuite {
         .map(r => r.rowKey -> r.cells.map(c =>
           (c.family, c.qualifier, c.timestampMicros, new String(c.value, "UTF-8"))))
       val want = bruteForce(truth, ranges, filters)
-      // cell ordering within equal (family, qualifier, ts) groups can
-      // differ when duplicate timestamps exist — compare sorted triples
-      val gotCanon = got.map { case (k, cs) => k -> cs.sorted }
-      val wantCanon = want.map { case (k, cs) => k -> cs.sorted }
-      assert(gotCanon == wantCanon, s"case $i\nranges=$ranges\nfilters=$filters")
+      assert(got == want, s"case $i\nranges=$ranges\nfilters=$filters")
     }
+  }
+
+  test("concurrent upserts of overlapping rows leave the size ledger equal to a full read") {
+    val store = new ConcurrentBigtable
+    val threads = 4
+    val rowKeys = (0 until 200).map(i => f"r$i%04d")
+    // every thread rewrites a shared column (values of varying length, so
+    // each rewrite moves the byte ledger) and adds columns of its own, so
+    // a lost update would drop cells
+    val workers = (0 until threads).map { w =>
+      new Thread(() => {
+        val r = new scala.util.Random(w.toLong)
+        (0 until 3000).foreach { i =>
+          val k = rowKeys(r.nextInt(rowKeys.size))
+          store.mutateRows("t", Seq(k -> Seq(
+            BtCell("f", "shared", (i % 3).toLong, CellCodec.encodeString("x" * r.nextInt(20))),
+            BtCell("f", s"own$w", (i % 5).toLong, CellCodec.encodeString(i.toString)))))
+        }
+      })
+    }
+    workers.foreach(_.start())
+    workers.foreach(_.join())
+
+    val rows = store.readRows("t", Seq(RowRange.full), Nil).toVector
+    val walkedBytes = rows.map(r => r.rowKey.length + r.cells.map(c => 16L + c.qualifier.length + c.value.length).sum).sum
+    assert(store.estimateSize("t", Seq(RowRange.full)).contains((rows.size.toLong, walkedBytes)))
+    val someRows = Seq(RowRange.closed("r0010", "r0099"))
+    val someRead = store.readRows("t", someRows, Nil).toVector
+    assert(store.estimateSize("t", someRows).contains((someRead.size.toLong,
+      someRead.map(r => r.rowKey.length + r.cells.map(c => 16L + c.qualifier.length + c.value.length).sum).sum)))
+    // no cell was lost to a racing rewrite of its row
+    rows.foreach { r =>
+      val cols = r.cells.map(c => (c.qualifier, c.timestampMicros)).toSet
+      assert(cols.size == r.cells.size, s"${r.rowKey} holds a coordinate twice")
+    }
+    val columns = rows.flatMap(_.cells.map(_.qualifier)).toSet
+    assert(columns == Set("shared") ++ (0 until threads).map(w => s"own$w"))
   }
 }

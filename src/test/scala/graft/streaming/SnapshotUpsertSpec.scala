@@ -150,6 +150,22 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     assert(latest == Map(1L -> "a2", 2L -> "b", 3L -> "c"))
   }
 
+  test("a snapshot listing an un-bucketed data file is rejected, naming the dir and the file") {
+    val dir = java.nio.file.Files.createTempDirectory("snap-unbucketed").toString
+    SnapshotUpsert.processBatch(Seq((1L, "a", 1L)).toDF("k", "v", "ver"),
+      Seq("k"), "ver", dir, Some(0L), numBuckets = 4)
+    Seq((2L, "b", 1L)).toDF("k", "v", "ver").write.parquet(s"$dir/data/flat")
+    val flat = new java.io.File(s"$dir/data/flat").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(f => s"data/flat/${f.getName}").head
+    CommitLog.commitFiles(dir, CommitLog.currentFiles(dir) :+ flat, replace = true): Unit
+    val e = intercept[IllegalStateException] {
+      SnapshotUpsert.processBatch(Seq((3L, "c", 2L)).toDF("k", "v", "ver"),
+        Seq("k"), "ver", dir, Some(1L), numBuckets = 4)
+    }
+    assert(e.getMessage.contains(dir) && e.getMessage.contains(flat), e.getMessage)
+    assert(SnapshotUpsert.latestVersion(dir) == 2, "a rejected batch must not publish")
+  }
+
   test("crashed unpublished data is invisible to readers and swept by vacuum") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, Long)]

@@ -331,14 +331,14 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpoint restart resumes from the committed offset: no replays, only new cells") {
     import graft.model.{BtCell, CellCodec}
     def seed(extra: Boolean): Unit = {
-      val b = new graft.store.InMemoryBigtable.Builder
-      b.put("cp", "k1", BtCell("f", "v", 1000000L, CellCodec.encodeString("a")))
-      b.put("cp", "k1", BtCell("f", "v", 2000000L, CellCodec.encodeString("b")))
+      val b = new graft.store.ConcurrentBigtable
+      b.mutateRows("cp", Seq("k1" -> Seq(BtCell("f", "v", 1000000L, CellCodec.encodeString("a")))))
+      b.mutateRows("cp", Seq("k1" -> Seq(BtCell("f", "v", 2000000L, CellCodec.encodeString("b")))))
       if (extra) {
-        b.put("cp", "k2", BtCell("f", "v", 3000000L, CellCodec.encodeString("c")))
-        b.put("cp", "k2", BtCell("f", "v", 4000000L, CellCodec.encodeString("d")))
+        b.mutateRows("cp", Seq("k2" -> Seq(BtCell("f", "v", 3000000L, CellCodec.encodeString("c")))))
+        b.mutateRows("cp", Seq("k2" -> Seq(BtCell("f", "v", 4000000L, CellCodec.encodeString("d")))))
       }
-      graft.store.BigtableStores.register("cp-store", b.build())
+      graft.store.BigtableStores.register("cp-store", b)
     }
     // memory sink can't recover from a checkpoint — use a parquet sink
     def run(outDir: String, checkpoint: String): Unit = {
@@ -374,12 +374,12 @@ class StreamingSpec extends AnyFunSuite {
     import graft.model.{BtCell, CellCodec}
     // two tables with DIFFERENT timestamp domains: each source must step
     // by its own TsOffset, not a shared watermark
-    val b = new graft.store.InMemoryBigtable.Builder
-    b.put("t1", "a", BtCell("f", "v", 1000000L, CellCodec.encodeString("t1-a")))
-    b.put("t1", "b", BtCell("f", "v", 2000000L, CellCodec.encodeString("t1-b")))
-    b.put("t2", "c", BtCell("f", "v", 900000000L, CellCodec.encodeString("t2-c")))
-    b.put("t2", "d", BtCell("f", "v", 990000000L, CellCodec.encodeString("t2-d")))
-    graft.store.BigtableStores.register("union-store", b.build())
+    val b = new graft.store.ConcurrentBigtable
+    b.mutateRows("t1", Seq("a" -> Seq(BtCell("f", "v", 1000000L, CellCodec.encodeString("t1-a")))))
+    b.mutateRows("t1", Seq("b" -> Seq(BtCell("f", "v", 2000000L, CellCodec.encodeString("t1-b")))))
+    b.mutateRows("t2", Seq("c" -> Seq(BtCell("f", "v", 900000000L, CellCodec.encodeString("t2-c")))))
+    b.mutateRows("t2", Seq("d" -> Seq(BtCell("f", "v", 990000000L, CellCodec.encodeString("t2-d")))))
+    graft.store.BigtableStores.register("union-store", b)
     def src(table: String) = spark.readStream.format("bigtable")
       .option("store", "union-store").option("table", table)
       .option("columnFamily", "f").option("qualifiers", "v:string")
