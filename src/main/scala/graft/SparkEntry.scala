@@ -446,14 +446,14 @@ object SparkEntry {
 
     // ORDER BY the row key itself: the scan reports its per-partition
     // (key, ts) order (SupportsReportOrdering), so the per-partition
-    // sort is elided by RemoveRedundantSorts — with the range read as
-    // one partition that IS the total order, and the plan contains no
-    // Sort node at all. (A global `orderBy` would still range-exchange:
-    // Spark 4 reports DSv2 scans as UnknownPartitioning even for one
-    // input partition, so OrderedDistribution is never satisfied
-    // statically.)
+    // sort is elided by RemoveRedundantSorts — the range's partitions
+    // are contiguous key groups in key order, so their concatenation IS
+    // the total order, and the plan contains no Sort node at all. (A
+    // global `orderBy` would still range-exchange: Spark 4 reports DSv2
+    // scans as UnknownPartitioning even for one input partition, so
+    // OrderedDistribution is never satisfied statically.)
     "bt_orderby_key" -> ((s, dir) =>
-      GraftTables.nation(s, dir, Map("maxPartitions" -> "1"))
+      GraftTables.nation(s, dir)
         .where(col("n_key").between("0000", "9999"))
         .select(col("n_key"), col("n_name"))
         .sortWithinPartitions(col("n_key"))),

@@ -32,7 +32,6 @@ final case class BigtableConfig(
     qualifierFamilies: Map[String, String] = Map.empty,
     onlyReadLatest: Boolean,
     allowFullScan: Boolean,
-    maxPartitions: Int,
     /** Plan-size budget: if the composer's range set (cartesian products
       * of wide IN lists, OR-splitting) exceeds this, it collapses to one
       * covering range — over-broad but safe under inexact pushdown, and
@@ -118,7 +117,6 @@ object BigtableConfig {
     *   qualifiers        comma-separated name:type, type ∈ {long,string,double}
     *   onlyReadLatest    default true
     *   allowFullScan     default false (reference behavior: composer.rs:72-77)
-    *   maxPartitions     scan split budget (default 32)
     *   maxComposedRanges range-set budget before collapsing to one range (default 4096)
     *   exactFilterPushdown  report provably-exact filters as pushed (default false)
     *   streamStepMicros  micro-batch timestamp step (default: no step)
@@ -126,9 +124,16 @@ object BigtableConfig {
     *   writeTimestampMicros, writeBatchRows  write path (defaults 0, 512)
     * }}}
     * A boolean or integer option with a malformed value fails with an
-    * `IllegalArgumentException` naming the option and the value.
+    * `IllegalArgumentException` naming the option and the value. Scan
+    * partitions are sized by Spark's own `spark.sql.files.minPartitionNum`
+    * and `spark.sql.files.maxPartitionBytes` (see
+    * [[BigtableScan.planPartitions]]); the removed `maxPartitions` option
+    * fails rather than being silently ignored.
     */
   def fromOptions(opts: java.util.Map[String, String]): BigtableConfig = {
+    require(!opts.containsKey("maxPartitions"),
+      "bigtable option 'maxPartitions' was removed: scans size their partitions by " +
+        "spark.sql.files.maxPartitionBytes and spark.sql.files.minPartitionNum")
     def req(k: String): String = {
       val v = opts.get(k)
       require(v != null && v.nonEmpty, s"bigtable option '$k' is required")
@@ -186,7 +191,6 @@ object BigtableConfig {
       qualifierFamilies = qualFams,
       onlyReadLatest = typed("onlyReadLatest", true, "a boolean")(_.toBoolean),
       allowFullScan = typed("allowFullScan", false, "a boolean")(_.toBoolean),
-      maxPartitions = typed("maxPartitions", 32, "an integer")(_.toInt),
       maxComposedRanges = typed("maxComposedRanges", 4096, "an integer")(_.toInt),
       streamStepMicros = typed[Option[Long]]("streamStepMicros", None, "an integer")(v => Some(v.toLong)),
       shipStore = typed("shipStore", false, "a boolean")(_.toBoolean),

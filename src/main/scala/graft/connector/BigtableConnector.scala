@@ -20,7 +20,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `V2ScanRelationPushDown` drives column pruning and filter pushdown
   * into [[BigtableScanBuilder]]; the row-range composition is
   * [[RowRangeComposer]]; execution is a standard `BatchScanExec` over
-  * one [[BigtableInputPartition]] per *split* key range — true
+  * [[BigtableInputPartition]]s sized by work (a key set reads in one
+  * task, a range scan split at sampled keys fills a wave) — true
   * partition-aware parallelism the reference lacks
   * (`UnknownPartitioning(1)`, execute_plan.rs:84-86; unchecked roadmap
   * item README.md:50) — with readers that stream bounded columnar
@@ -470,9 +471,9 @@ final class BigtableScan(
   /** Store metadata, asked at most once per scan. Spark re-derives a
     * `BatchScanExec`'s partitions on every copy of the plan node, and
     * all copies share this one `Scan`, so the answers are kept here:
-    * one `estimateSize` for [[estimateStatistics]], one `sampleRowKeys`
-    * shared by every [[planInputPartitions]] call (before and after
-    * runtime filtering).
+    * one `estimateSize` for [[estimateStatistics]] and the partition
+    * plan's byte count, one `sampleRowKeys` shared by every
+    * [[planInputPartitions]] call (before and after runtime filtering).
     * Both are lazy, so a scan that never needs one never asks.
     * Planning on a driver without the store answers "unknown".
     */
@@ -484,25 +485,22 @@ final class BigtableScan(
     try BigtableStores.resolve(cfg.storeName, shippedStore).sampleRowKeys(cfg.table)
     catch { case _: IllegalStateException => Nil }
 
-  /** One InputPartition per split range group. Composed ranges are split
-    * at the store's sampled row keys (the emulator analogue of
-    * Bigtable's `SampleRowKeys` RPC, used exactly this way by the
-    * public HBase/Beam connectors) so a large BETWEEN range fans out
-    * across executors instead of reading on one task like the
-    * reference's single-partition scan (execute_plan.rs:84-86).
-    *
-    * The samples are fetched at most once per scan, and not at all when
-    * every effective range is a point: [[BigtableScan.splitRanges]] cuts
-    * only at keys strictly inside a range, so a point range never splits
-    * and the partitions are the same without them. A key-filtered lookup
-    * thus plans with no `SampleRowKeys` round trip.
+  /** Partitions sized by work ([[BigtableScan.planPartitions]]): a key
+    * set (every effective range a point, after any runtime filter) reads
+    * as ONE partition — one task, one `ReadRows` — and asks the store
+    * for neither samples nor an estimate. A range scan splits at the
+    * store's sampled row keys (the emulator analogue of Bigtable's
+    * `SampleRowKeys` RPC, used this way by the public HBase/Beam
+    * connectors) and groups the pieces contiguously into one wave of
+    * tasks, or into `spark.sql.files.maxPartitionBytes`-sized groups when
+    * the scan's estimate is larger — the reference instead reads every
+    * scan on one task (execute_plan.rs:84-86).
     */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val ranges = effectiveRanges
-    val split = if (ranges.forall(_.isPoint)) ranges else BigtableScan.splitRanges(ranges, samples)
-    val groups = BigtableScan.chunkContiguous(split, cfg.maxPartitions)
-    groups.map(g => BigtableInputPartition(g, tsRange): InputPartition).toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    BigtableScan
+      .planPartitions(effectiveRanges, samples, estimate.map(_._2))
+      .map(g => BigtableInputPartition(g, tsRange): InputPartition)
+      .toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     // agg mode ignores the pushed limit: Spark never pushes a limit
@@ -593,6 +591,39 @@ object BigtableScan {
     }
     out.result()
   }
+
+  /** The scan's partition plan, sized by work rather than by range count.
+    * Inputs are Spark's own file-source settings, read from the session
+    * planning the scan: the parallelism `p` is
+    * `spark.sql.files.minPartitionNum` when set, else `defaultParallelism`;
+    * the split size is `spark.sql.files.maxPartitionBytes`.
+    *   - Every range a point (a key set; the composer and the runtime
+    *     filter cap it at `maxComposedRanges` keys): one partition, and
+    *     neither `samples` nor `estimatedBytes` is evaluated.
+    *   - Otherwise the ranges split at the sample keys; at most `p` pieces
+    *     read one piece per partition (one wave, no estimate needed);
+    *     more pieces group contiguously into
+    *     `min(pieces, max(p, ⌈bytes / maxPartitionBytes⌉))` partitions
+    *     (`p` when the store has no estimate).
+    * Both by-name inputs are evaluated at most once.
+    */
+  def planPartitions(
+      ranges: Vector[RowRange],
+      samples: => Seq[String],
+      estimatedBytes: => Option[Long]
+  ): Vector[Vector[RowRange]] =
+    if (ranges.isEmpty) Vector.empty
+    else if (ranges.forall(_.isPoint)) Vector(ranges)
+    else {
+      val conf = org.apache.spark.sql.internal.SQLConf.get
+      val p = conf.filesMinPartitionNum.getOrElse(
+        org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
+      val pieces = splitRanges(ranges, samples)
+      val maxBytes = conf.filesMaxPartitionBytes
+      val bySize =
+        if (pieces.size <= p) 0L else estimatedBytes.fold(0L)(b => (b + maxBytes - 1) / maxBytes)
+      chunkContiguous(pieces, math.min(pieces.size.toLong, math.max(p.toLong, bySize)).toInt)
+    }
 }
 
 /** One scan task: a group of disjoint key ranges, plus (streaming only)

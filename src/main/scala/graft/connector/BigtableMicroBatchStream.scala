@@ -40,15 +40,8 @@ final class BigtableMicroBatchStream(
     with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
-  /** AvailableNow target: the end offset is the max cell timestamp,
-    * read once when the stream first asks for an offset (`maxTs`), so a
-    * run stops at the cells present when it started — batches step
-    * toward it under `streamStepMicros` admission control until caught
-    * up; cells written during the run wait for the next one.
-    */
-  override def prepareForTriggerAvailableNow(): Unit = ()
-
-  private lazy val (minTs, maxTs): (Long, Long) = {
+  /** Cell-timestamp bounds of the composed ranges, read from the store. */
+  private def readBounds(): (Long, Long) = {
     val store = BigtableStores.resolve(cfg.storeName, shippedStore)
     store
       .readRows(cfg.table, comp.ranges, comp.rowFilters)
@@ -58,9 +51,32 @@ final class BigtableMicroBatchStream(
       }
   }
 
+  /** AvailableNow target, read once when the run starts: a run stops at
+    * the cells present then — batches step toward it under
+    * `streamStepMicros` admission control until caught up; cells written
+    * during the run wait for the next one.
+    */
+  @volatile private var pinned: Option[(Long, Long)] = None
+
+  /** The bounds the last offset was planned from; `reportLatestOffset`
+    * answers from them instead of reading the store again.
+    */
+  @volatile private var lastBounds: (Long, Long) = (Long.MaxValue, Long.MinValue)
+
+  override def prepareForTriggerAvailableNow(): Unit = pinned = Some(readBounds())
+
+  /** Any other trigger re-reads the high watermark on every offset
+    * request, so cells written while the stream runs are admitted.
+    */
+  private def bounds(): (Long, Long) = {
+    val b = pinned.getOrElse(readBounds())
+    lastBounds = b
+    b
+  }
+
   override def initialOffset(): Offset = TsOffset(Long.MinValue)
 
-  override def latestOffset(): Offset = TsOffset(maxTs)
+  override def latestOffset(): Offset = TsOffset(bounds()._2)
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
@@ -69,6 +85,7 @@ final class BigtableMicroBatchStream(
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val lo = start.asInstanceOf[TsOffset].ts
+    val (minTs, maxTs) = bounds()
     cfg.streamStepMicros match {
       case None => TsOffset(maxTs)
       case Some(step) =>
@@ -80,7 +97,7 @@ final class BigtableMicroBatchStream(
     }
   }
 
-  override def reportLatestOffset(): Offset = TsOffset(maxTs)
+  override def reportLatestOffset(): Offset = TsOffset(lastBounds._2)
 
   override def deserializeOffset(json: String): Offset =
     TsOffset("""-?\d+""".r.findFirstIn(json).map(_.toLong).getOrElse(Long.MinValue))
@@ -89,12 +106,12 @@ final class BigtableMicroBatchStream(
     val lo = start.asInstanceOf[TsOffset].ts
     val hi = end.asInstanceOf[TsOffset].ts
     if (hi <= lo) return Array.empty
-    val samples =
-      try BigtableStores.resolve(cfg.storeName, shippedStore).sampleRowKeys(cfg.table)
-      catch { case _: IllegalStateException => Nil }
-    val split = BigtableScan.splitRanges(comp.ranges, samples)
+    lazy val store = BigtableStores.resolve(cfg.storeName, shippedStore)
     BigtableScan
-      .chunkContiguous(split, cfg.maxPartitions)
+      .planPartitions(
+        comp.ranges,
+        try store.sampleRowKeys(cfg.table) catch { case _: IllegalStateException => Nil },
+        try store.estimateSize(cfg.table, comp.ranges).map(_._2) catch { case _: IllegalStateException => None })
       .map(g => BigtableInputPartition(g, Some((lo, hi))): InputPartition)
       .toArray
   }

@@ -35,8 +35,9 @@ trait BigtableStore extends Serializable {
   /** Evenly-spaced row keys usable as partition split points, in key
     * order — the emulator's stand-in for Bigtable's public
     * `SampleRowKeys` RPC (which the HBase/Beam connectors use for
-    * exactly this). Default: no hints (scan planning falls back to one
-    * partition per composed range).
+    * exactly this). Default: no hints (a range scan then splits only
+    * between its composed ranges; a key set needs no hints, it reads as
+    * one partition either way).
     */
   def sampleRowKeys(table: String): Seq[String] = Nil
 

@@ -235,23 +235,26 @@ class AggregatePushdownSpec extends AnyFunSuite {
         .option("store", "agg-multibatch").option("table", "big")
         .option("columnFamily", "f").option("partitionCols", "k")
         .option("qualifiers", "s:string,v:long")
-        .option("onlyReadLatest", "false")
-        .option("maxPartitions", "1")) { case (r, (k, v)) => r.option(k, v) }
+        .option("onlyReadLatest", "false")) { case (r, (k, v)) => r.option(k, v) }
         .load()
         .where(col("k").between("k00000", "k99999"))
     def global(extra: Map[String, String]) =
       table(extra).agg(min("s").as("min_s"), max("s").as("max_s"), count("*").as("n"))
     def grouped(extra: Map[String, String]) =
       table(extra).groupBy(col("k")).agg(count("*").as("n"), sum("v").as("sum_v")).orderBy(col("k"))
-    val exact = Map("exactFilterPushdown" -> "true")
-    assert(scanDesc(global(exact)).contains("agg=[MIN(s), MAX(s), COUNT(*)]"), scanDesc(global(exact)))
-    assert(scanDesc(grouped(exact)).contains("groupBy=[k] agg=[COUNT(*), SUM(v)]"), scanDesc(grouped(exact)))
-    assert(table(Map.empty).rdd.getNumPartitions == 1)
-    val plain = global(Map.empty).collect().toSeq
-    assert(plain.map(r => (r.getString(0), r.getString(1), r.getLong(2))) == Seq(("00000", "10006", 13334L)), plain)
-    assert(global(exact).collect().toSeq == plain)
-    val plainGroups = grouped(Map.empty).collect().toSeq
-    assert(plainGroups.size == 10000)
-    assert(grouped(exact).collect().toSeq == plainGroups)
+    // a parallelism of 1 plans the 10 000-key range as one partition
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try {
+      val exact = Map("exactFilterPushdown" -> "true")
+      assert(scanDesc(global(exact)).contains("agg=[MIN(s), MAX(s), COUNT(*)]"), scanDesc(global(exact)))
+      assert(scanDesc(grouped(exact)).contains("groupBy=[k] agg=[COUNT(*), SUM(v)]"), scanDesc(grouped(exact)))
+      assert(table(Map.empty).rdd.getNumPartitions == 1)
+      val plain = global(Map.empty).collect().toSeq
+      assert(plain.map(r => (r.getString(0), r.getString(1), r.getLong(2))) == Seq(("00000", "10006", 13334L)), plain)
+      assert(global(exact).collect().toSeq == plain)
+      val plainGroups = grouped(Map.empty).collect().toSeq
+      assert(plainGroups.size == 10000)
+      assert(grouped(exact).collect().toSeq == plainGroups)
+    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
   }
 }

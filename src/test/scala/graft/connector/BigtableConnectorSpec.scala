@@ -229,7 +229,7 @@ class BigtableConnectorSpec extends AnyFunSuite {
       partitionCols = Seq("_row_key"), separator = "#",
       qualifiers = Seq(("pressure", org.apache.spark.sql.types.LongType),
         ("temperature", org.apache.spark.sql.types.StringType)),
-      onlyReadLatest = true, allowFullScan = false, maxPartitions = 8))
+      onlyReadLatest = true, allowFullScan = false))
     val rows = spark
       .sql("""SELECT pressure, temperature FROM bt.default.weather_balloons
               WHERE `_row_key` = 'us-west2#3698#2021-03-05-1201'""")
@@ -320,7 +320,7 @@ class BigtableConnectorSpec extends AnyFunSuite {
   test("a malformed boolean or integer reader option fails naming the option and the value") {
     val badValues = Seq(
       "onlyReadLatest" -> "yes", "allowFullScan" -> "1", "shipStore" -> "on",
-      "exactFilterPushdown" -> "maybe", "maxPartitions" -> "x", "maxComposedRanges" -> "4k",
+      "exactFilterPushdown" -> "maybe", "maxComposedRanges" -> "x", "maxComposedRanges" -> "4k",
       "streamStepMicros" -> "1.5", "writeTimestampMicros" -> "now", "writeBatchRows" -> "many")
     badValues.foreach { case (option, value) =>
       val e = intercept[IllegalArgumentException] {

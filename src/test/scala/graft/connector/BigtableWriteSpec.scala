@@ -153,7 +153,7 @@ class BigtableWriteSpec extends AnyFunSuite {
       storeName = store, table = "t", columnFamily = "f",
       partitionCols = Seq("k"), separator = "#",
       qualifiers = Seq(("v", org.apache.spark.sql.types.LongType)),
-      onlyReadLatest = true, allowFullScan = true, maxPartitions = 8))
+      onlyReadLatest = true, allowFullScan = true))
     spark.sql("INSERT INTO btw.default.kv (k, v) VALUES ('a', CAST(1 AS BIGINT))")
     spark.sql("INSERT INTO btw.default.kv (k, v) VALUES ('b', CAST(2 AS BIGINT))")
     val twoRows = spark.sql("SELECT k, v FROM btw.default.kv ORDER BY k").collect()

@@ -57,7 +57,7 @@ class ComposerPropertySpec extends AnyFunSuite {
         storeName = "s", table = "t", columnFamily = "f",
         partitionCols = c.cols, separator = "#",
         qualifiers = Seq(("q", StringType)),
-        onlyReadLatest = true, allowFullScan = false, maxPartitions = 4)
+        onlyReadLatest = true, allowFullScan = false)
       val filters: Seq[Filter] =
         c.eqIn.toSeq.map { case (col, vals) =>
           if (vals.size == 1 && rnd.nextBoolean()) EqualTo(col, vals.head)
@@ -109,6 +109,8 @@ class ComposerPropertySpec extends AnyFunSuite {
   }
 
   test("partitions planned with the point-range shortcut == split-at-samples over 300 random cases") {
+    // the sizing rule reads Spark's file-source settings from the session
+    val spark = graft.SparkTestSession.spark
     val name = "prop-samples"
     try {
       (1 to 300).foreach { i =>
@@ -122,7 +124,9 @@ class ComposerPropertySpec extends AnyFunSuite {
           else RowRange.closedOpen(lo, hi)
         })
         val samples = alphabet.filter(_ => rnd.nextBoolean())
+        val bytes = rnd.nextInt(1 << 20).toLong
         val sampleCalls = new java.util.concurrent.atomic.AtomicInteger()
+        val estimateCalls = new java.util.concurrent.atomic.AtomicInteger()
         graft.store.BigtableStores.register(name, new graft.store.BigtableStore {
           override def readRows(t: String, r: Seq[RowRange], f: Seq[RowFilter]): Iterator[BtRow] =
             Iterator.empty
@@ -130,23 +134,46 @@ class ComposerPropertySpec extends AnyFunSuite {
             sampleCalls.incrementAndGet()
             samples
           }
+          override def estimateSize(t: String, r: Seq[RowRange]): Option[(Long, Long)] = {
+            estimateCalls.incrementAndGet()
+            Some((1L, bytes))
+          }
         })
-        val maxPartitions = 1 + rnd.nextInt(4)
+        val parallelism = 1 + rnd.nextInt(4)
+        val maxPartitionBytes = 1L + rnd.nextInt(1 << 18)
+        spark.conf.set("spark.sql.files.minPartitionNum", parallelism.toString)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", maxPartitionBytes.toString)
         val cfg = BigtableConfig(
           storeName = name, table = "t", columnFamily = "f",
           partitionCols = Seq("_row_key"), separator = "#",
           qualifiers = Seq(("q", StringType)),
-          onlyReadLatest = true, allowFullScan = false, maxPartitions = maxPartitions)
+          onlyReadLatest = true, allowFullScan = false)
         val scan = new BigtableScan(cfg, cfg.schema, RowRangeComposer.Composition(ranges, Vector.empty))
         val planned = scan.planInputPartitions().toVector
           .map(_.asInstanceOf[BigtableInputPartition].ranges.toVector)
-        val expected = BigtableScan.chunkContiguous(BigtableScan.splitRanges(ranges, samples), maxPartitions)
-        assert(planned == expected, s"case $i\nranges=$ranges\nsamples=$samples")
-        scan.planInputPartitions(): Unit
         val allPoints = ranges.forall(_.isPoint)
+        val pieces = BigtableScan.splitRanges(ranges, samples)
+        val sized = pieces.size > parallelism
+        val expected =
+          if (allPoints) Vector(ranges)
+          else if (!sized) pieces.map(Vector(_))
+          else {
+            val bySize = (bytes + maxPartitionBytes - 1) / maxPartitionBytes
+            BigtableScan.chunkContiguous(pieces, math.min(pieces.size.toLong, math.max(parallelism.toLong, bySize)).toInt)
+          }
+        assert(planned == expected, s"case $i p=$parallelism\nranges=$ranges\nsamples=$samples")
+        // the groups are contiguous and together cover the pieces
+        assert(planned.flatten == (if (allPoints) ranges else pieces), s"case $i")
+        scan.planInputPartitions(): Unit
         assert(sampleCalls.get == (if (allPoints) 0 else 1),
           s"case $i: ${sampleCalls.get} sampleRowKeys calls for ranges=$ranges")
+        assert(estimateCalls.get == (if (!allPoints && sized) 1 else 0),
+          s"case $i: ${estimateCalls.get} estimateSize calls for ranges=$ranges")
       }
-    } finally graft.store.BigtableStores.unregister(name)
+    } finally {
+      graft.store.BigtableStores.unregister(name)
+      spark.conf.unset("spark.sql.files.minPartitionNum")
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
   }
 }

@@ -2,11 +2,8 @@ package graft.connector
 
 import graft.SparkTestSession
 import graft.model._
-import graft.store.{BigtableStore, BigtableStores, ConcurrentBigtable}
+import graft.store.{BigtableStores, ConcurrentBigtable}
 import org.scalatest.funsuite.AnyFunSuite
-
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The scan-planning contract, counted at the store: a key-filtered
   * query plans with no `sampleRowKeys` round trip when every range is a
@@ -16,27 +13,6 @@ import java.util.concurrent.atomic.AtomicInteger
   */
 class PlanningRoundTripsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-
-  /** Counts metadata calls per (method, table); reads pass through. */
-  private final class CountingStore(underlying: BigtableStore) extends BigtableStore {
-    private val counts = new ConcurrentHashMap[(String, String), AtomicInteger]()
-    private def bump(method: String, table: String): Unit =
-      counts.computeIfAbsent((method, table), _ => new AtomicInteger()).incrementAndGet(): Unit
-    def count(method: String, table: String): Int =
-      Option(counts.get((method, table))).map(_.get).getOrElse(0)
-    def reset(): Unit = counts.clear()
-
-    override def readRows(table: String, ranges: Seq[RowRange], filters: Seq[RowFilter]): Iterator[BtRow] =
-      underlying.readRows(table, ranges, filters)
-    override def sampleRowKeys(table: String): Seq[String] = {
-      bump("sample", table)
-      underlying.sampleRowKeys(table)
-    }
-    override def estimateSize(table: String, ranges: Seq[RowRange]): Option[(Long, Long)] = {
-      bump("estimate", table)
-      underlying.estimateSize(table, ranges)
-    }
-  }
 
   private val users = 2000
   private def user(i: Int) = f"u$i%05d"

@@ -26,21 +26,26 @@ class ReportOrderingSpec extends AnyFunSuite {
 
   test("sort-by-key over a single-partition scan elides the Sort and stays correct") {
     val sf = "/root/testdata/sf0.001"
-    val df = GraftTables.nation(spark, sf, Map("maxPartitions" -> "1"))
-      .where(col("n_key").between("0000", "9999"))
-      .select(col("n_key"), col("n_name"))
-      .sortWithinPartitions(col("n_key"))
-    val got = df.collect().map(_.getString(0)).toSeq
-    assert(got == got.sorted, "result must actually be key-ordered")
-    assert(got.nonEmpty)
-    val plan = df.queryExecution.executedPlan
-    val sorts = allNodes(plan).filter(_.getClass.getSimpleName.startsWith("Sort"))
-    assert(sorts.isEmpty, s"expected no Sort node, plan:\n$plan")
+    // a parallelism of 1 plans the small range as one partition
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try {
+      val df = GraftTables.nation(spark, sf)
+        .where(col("n_key").between("0000", "9999"))
+        .select(col("n_key"), col("n_name"))
+        .sortWithinPartitions(col("n_key"))
+      val got = df.collect().map(_.getString(0)).toSeq
+      assert(df.rdd.getNumPartitions == 1)
+      assert(got == got.sorted, "result must actually be key-ordered")
+      assert(got.nonEmpty)
+      val plan = df.queryExecution.executedPlan
+      val sorts = allNodes(plan).filter(_.getClass.getSimpleName.startsWith("Sort"))
+      assert(sorts.isEmpty, s"expected no Sort node, plan:\n$plan")
+    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
   }
 
   test("sort on a non-key column keeps its Sort (ordering is key-only)") {
     val sf = "/root/testdata/sf0.001"
-    val df = GraftTables.nation(spark, sf, Map("maxPartitions" -> "1"))
+    val df = GraftTables.nation(spark, sf)
       .where(col("n_key").between("0000", "9999"))
       .sortWithinPartitions(col("n_name"))
     df.collect()

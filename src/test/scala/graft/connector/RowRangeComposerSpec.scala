@@ -15,7 +15,7 @@ class RowRangeComposerSpec extends AnyFunSuite {
     storeName = "s", table = "t", columnFamily = "f",
     partitionCols = Seq("_row_key"), separator = "#",
     qualifiers = Seq(("pressure", LongType), ("temperature", StringType)),
-    onlyReadLatest = true, allowFullScan = false, maxPartitions = 8)
+    onlyReadLatest = true, allowFullScan = false)
 
   private val composite = simple.copy(partitionCols = Seq("region", "balloon_id", "event_minute"))
 

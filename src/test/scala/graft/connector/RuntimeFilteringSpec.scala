@@ -17,7 +17,7 @@ class RuntimeFilteringSpec extends AnyFunSuite {
     storeName = "rf-store", table = "t", columnFamily = "f",
     partitionCols = Seq("_row_key"), separator = "#",
     qualifiers = Seq(("q", StringType)),
-    onlyReadLatest = true, allowFullScan = true, maxPartitions = 8)
+    onlyReadLatest = true, allowFullScan = true)
 
   private def v2In(col: String, values: String*) = {
     import org.apache.spark.sql.connector.expressions.Expressions

@@ -38,7 +38,7 @@ class ShipStoreSpec extends AnyFunSuite {
       .option("qualifiers", "q:long")
       .option("shipStore", "true")
 
-  test("e2e: registry cleared after load(), scan still reads via shipped snapshot") {
+  test("e2e: registry cleared after load(), scan still reads via the shipped store") {
     val name = "ship_e2e"
     seed(name)
     try {
@@ -59,7 +59,7 @@ class ShipStoreSpec extends AnyFunSuite {
         storeName = name, table = "t", columnFamily = "f",
         partitionCols = Seq("_row_key"), separator = "#",
         qualifiers = Seq(("q", LongType)),
-        onlyReadLatest = true, allowFullScan = true, maxPartitions = 4,
+        onlyReadLatest = true, allowFullScan = true,
         shipStore = true)
       val factory = new BigtablePartitionReaderFactory(
         cfg, cfg.schema, Nil, None, Some(store))
@@ -97,7 +97,7 @@ class ShipStoreSpec extends AnyFunSuite {
     } finally BigtableStores.unregister(name)
   }
 
-  test("shipped snapshot also serves planning: sampleRowKeys and statistics") {
+  test("the shipped store also serves planning: sampleRowKeys and statistics") {
     val name = "ship_plan"
     val store = seed(name)
     try {
@@ -105,7 +105,7 @@ class ShipStoreSpec extends AnyFunSuite {
         storeName = name, table = "t", columnFamily = "f",
         partitionCols = Seq("_row_key"), separator = "#",
         qualifiers = Seq(("q", LongType)),
-        onlyReadLatest = true, allowFullScan = true, maxPartitions = 4,
+        onlyReadLatest = true, allowFullScan = true,
         shipStore = true)
       val comp = RowRangeComposer.Composition(Vector(graft.model.RowRange.full), Vector.empty)
       val scan = new BigtableScan(cfg, cfg.schema, comp, None, None, Array.empty, Some(store))

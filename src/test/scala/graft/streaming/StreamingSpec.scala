@@ -370,6 +370,31 @@ class StreamingSpec extends AnyFunSuite {
       s"restart must deliver only cells past the committed offset (no replays), got $all")
   }
 
+  test("a processing-time stream admits cells written after it started") {
+    import graft.model.{BtCell, CellCodec}
+    val b = new graft.store.ConcurrentBigtable
+    b.mutateRows("live", Seq("k1" -> Seq(BtCell("f", "v", 1000000L, CellCodec.encodeString("a")))))
+    graft.store.BigtableStores.register("live-store", b)
+    val q = spark.readStream.format("bigtable")
+      .option("store", "live-store").option("table", "live")
+      .option("columnFamily", "f").option("qualifiers", "v:string")
+      .option("onlyReadLatest", "false").option("allowFullScan", "true")
+      .load().select(col("_row_key"), col("v"))
+      .writeStream.format("memory").queryName("live_sink").outputMode("append")
+      .trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table("live_sink").count() == 1)
+      b.mutateRows("live", Seq("k2" -> Seq(BtCell("f", "v", 2000000L, CellCodec.encodeString("b")))))
+      q.processAllAvailable()
+      val rows = spark.table("live_sink").collect().map(r => (r.getString(0), r.getString(1))).toSet
+      assert(rows == Set(("k1", "a"), ("k2", "b")), s"the later cell must stream in, got $rows")
+    } finally {
+      q.stop()
+      graft.store.BigtableStores.unregister("live-store")
+    }
+  }
+
   test("multi-table change streams union with independent per-source offsets") {
     import graft.model.{BtCell, CellCodec}
     // two tables with DIFFERENT timestamp domains: each source must step
