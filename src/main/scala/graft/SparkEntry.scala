@@ -405,15 +405,19 @@ object SparkEntry {
       // exact recovery a gRPC-backed deployment runs when a ReadRows
       // channel drops. The injector sits between the retry layer and the
       // wire client so faults are deterministic; raw connection-drop
-      // recovery is pinned separately in ReadRowsProtoSpec.
+      // recovery is pinned separately in ReadRowsProtoSpec. The 25-row
+      // table reads as one partition (too small for split samples), so
+      // one stream may take all eight faults: its retry budget covers them.
       GraftTables.ensureRemote(s, dir)
       val flaky = s"${GraftTables.storeName(dir)}-flaky"
+      val faults = 8
       if (!graft.store.BigtableStores.contains(flaky))
         graft.store.BigtableStores.register(flaky,
           new graft.store.RetryingStore(
             new graft.store.FaultInjectingStore(
               graft.store.BigtableStores.get(GraftTables.remoteStoreName(dir)),
-              failAfterRows = 1, maxFaults = 8),
+              failAfterRows = 1, maxFaults = faults),
+            maxAttempts = faults + 1,
             sleep = _ => ()))
       s.read.format("bigtable")
         .option("store", flaky)

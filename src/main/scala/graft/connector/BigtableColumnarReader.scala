@@ -23,6 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Rows are emitted in (rowKey, timestamp) ascending order per
   * partition, which is what `SupportsReportOrdering` reports. The
   * vectors are reused: each `next()` overwrites the previous batch.
+  * They start at `InitialBatchRows` and double as a batch fills, up to
+  * `batchSize`, so a one-row lookup does not allocate 4096-row vectors.
   */
 final class BigtableColumnarPartitionReader(
     cfg: BigtableConfig,
@@ -43,16 +45,24 @@ final class BigtableColumnarPartitionReader(
   private val groupIter: BigtablePivot.GroupIterator =
     BigtablePivot.groups(cfg, rowFilters, ranges, tsRange, limit, shippedStore, postFilter)
 
+  private val initialRows = math.min(batchSize, BigtableColumnarPartitionReader.InitialBatchRows)
   private val vectors: Array[OnHeapColumnVector] =
-    OnHeapColumnVector.allocateColumns(batchSize, readSchema)
+    OnHeapColumnVector.allocateColumns(initialRows, readSchema)
   private val batch = new ColumnarBatch(vectors.map(v => v: org.apache.spark.sql.vectorized.ColumnVector))
 
   override def next(): Boolean = {
     if (!groupIter.hasNext) return false
     vectors.foreach(_.reset())
+    // rows every vector holds at least: a reset may shrink a vector back
+    // to its first allocation, and Spark's `reserve` may give more
+    var capacity = initialRows
     var n = 0
     while (n < batchSize && groupIter.hasNext) {
       val g = groupIter.next()
+      if (n == capacity) {
+        capacity = math.min(batchSize, capacity * 2)
+        vectors.foreach(_.reserve(capacity))
+      }
       var i = 0
       while (i < plan.length) {
         // boxed extraction, then an unbox into the vector — no per-row
@@ -86,4 +96,7 @@ final class BigtableColumnarPartitionReader(
 object BigtableColumnarPartitionReader {
   /** Rows per emitted batch, at most. */
   val MaxBatchRows = 4096
+
+  /** Rows the vectors are first allocated for. */
+  val InitialBatchRows = 32
 }

@@ -21,7 +21,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * into [[BigtableScanBuilder]]; the row-range composition is
   * [[RowRangeComposer]]; execution is a standard `BatchScanExec` over
   * [[BigtableInputPartition]]s sized by work (a key set reads in one
-  * task, a range scan split at sampled keys fills a wave) — true
+  * task, a range scan split at sampled keys fills a wave; a `collect()`
+  * of an unsplit scan reads on the driver with no job,
+  * [[BigtableCollectExec]]) — true
   * partition-aware parallelism the reference lacks
   * (`UnknownPartitioning(1)`, execute_plan.rs:84-86; unchecked roadmap
   * item README.md:50) — with readers that stream bounded columnar
@@ -494,13 +496,31 @@ final class BigtableScan(
     * connectors) and groups the pieces contiguously into one wave of
     * tasks, or into `spark.sql.files.maxPartitionBytes`-sized groups when
     * the scan's estimate is larger — the reference instead reads every
-    * scan on one task (execute_plan.rs:84-86).
+    * scan on one task (execute_plan.rs:84-86). These partitions serve
+    * every job over the scan; a `collect()` of the scan alone reads on
+    * the driver instead when [[driverPartition]] allows it
+    * ([[BigtableCollectExec]]).
     */
   override def planInputPartitions(): Array[InputPartition] =
     BigtableScan
       .planPartitions(effectiveRanges, samples, estimate.map(_._2))
       .map(g => BigtableInputPartition(g, tsRange): InputPartition)
       .toArray
+
+  /** The one partition a driver-side collect reads: every effective
+    * range, when no range would split — all of them points (no samples
+    * asked), or no sampled key strictly inside any of them (the same
+    * memoized `samples` the partition plan uses). None for a split range,
+    * a pushed aggregate, or a store the driver cannot reach (neither
+    * registered here nor shipped); the collect then runs the job, whose
+    * tasks resolve the store themselves.
+    */
+  private[connector] def driverPartition: Option[BigtableInputPartition] = {
+    val ranges = effectiveRanges
+    val reachable = shippedStore.isDefined || BigtableStores.contains(cfg.storeName)
+    def unsplit = ranges.forall(_.isPoint) || BigtableScan.splitRanges(ranges, samples).size == ranges.size
+    if (aggs.isEmpty && reachable && unsplit) Some(BigtableInputPartition(ranges, tsRange)) else None
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     // agg mode ignores the pushed limit: Spark never pushes a limit

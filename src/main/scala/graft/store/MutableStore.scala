@@ -93,11 +93,13 @@ final class ConcurrentBigtable extends MutableBigtableStore {
 
   /** ~32 evenly spaced keys in one streaming pass (no full key-set
     * materialization); the ledger row count `n` sets the stride, since
-    * skip-list size() is itself O(n).
+    * skip-list size() is itself O(n). A table under 64 rows has none,
+    * as a tiny Bigtable table has no tablet boundaries to report; its
+    * stride of one would split a range at every row.
     */
   private def walkSamples(t: Table, n: Long): Vector[String] = {
     val targetSamples = 32
-    if (n <= 1) Vector.empty
+    if (n < 2 * targetSamples) Vector.empty
     else {
       val step = math.max(1L, n / targetSamples)
       val out = Vector.newBuilder[String]

@@ -5,7 +5,8 @@ package graft.tools
   * ONLY when the plan's structure changed. Raw explain text embeds
   * values that differ on every run with zero semantic content —
   * expression IDs, plan_ids, JVM object addresses, lambda class names,
-  * temp checkpoint paths, stream runIds, wall-clock batch timestamps —
+  * temp checkpoint paths, stream runIds, wall-clock batch timestamps,
+  * codegen and query-stage ids —
   * and those spurious diffs would bury a real plan regression
   * (ADVICE r12).
   *
@@ -63,7 +64,17 @@ object PlanSnapshot {
     // session-lifetime counter (x/y/z by lambda arity); diffs on every
     // regeneration, zero content. Single letter + underscore + digits
     // only, so real column names never match
-    ("""\b([a-z])_\d+""".r, "$1_N")
+    ("""\b([a-z])_\d+""".r, "$1_N"),
+    // whole-stage codegen ids: `[codegen id : 9]` in formatted explain,
+    // `*(9) Project` in the tree form — numbered in traversal order, so
+    // they swap between runs of one plan whose stages complete in a
+    // different order; the `*` marking a codegen'd node survives
+    ("""\[codegen id : \d+\]""".r, "[codegen id : N]"),
+    ("""\*\(\d+\) """.r, "*(N) "),
+    // query-stage ids (`Arguments: 8` under a `(79) ShuffleQueryStage`
+    // header): AQE numbers stages as they are created, the same churn;
+    // other nodes' `Arguments:` (limits, partitionings) survive
+    ("""(?m)(^\(\d+\) \w*QueryStage\n(?:Output \[\d+\]: .*\n)?)Arguments: \d+$""".r, "$1Arguments: N")
   )
 
   def normalize(txt: String): String =

@@ -87,6 +87,15 @@ class BigtableStoreSpec extends AnyFunSuite {
     assert(samples == samples.sorted)
   }
 
+  test("a table under 64 rows has no samples; one of 64 rows has 31 interior ones") {
+    val b = new ConcurrentBigtable
+    b.mutateRows("t", (0 until 63).map(i => f"k$i%03d" -> Seq(cell("q1", 1L, "v"))))
+    assert(b.sampleRowKeys("t").isEmpty)
+    b.mutateRows("t", Seq("k063" -> Seq(cell("q1", 1L, "v"))))
+    val samples = b.sampleRowKeys("t")
+    assert(samples == (2 until 64 by 2).map(i => f"k$i%03d"), samples)
+  }
+
   test("codec: long round-trip is big-endian (execute_plan.rs:287-293)") {
     val bytes = CellCodec.encodeLong(94558L)
     assert(bytes.length == 8 && bytes(0) == 0 && CellCodec.decodeLong(bytes).contains(94558L))
@@ -158,13 +167,15 @@ class BigtableStoreSpec extends AnyFunSuite {
     assert(wrong.flatMap(_.cells.filter(_.qualifier == "q1")).map(c => new String(c.value)) == Seq("olda"))
   }
 
-  /** The samples a fresh walk of `table` yields: every ~n/32-th key. */
+  /** The samples a fresh walk of `table` yields: every ~n/32-th key, or
+    * none under 64 rows.
+    */
   private def walkedSamples(store: BigtableStore, table: String): Seq[String] = {
     val keys =
       try store.readRows(table, Seq(RowRange.full), Nil).map(_.rowKey).toVector
       catch { case _: IllegalArgumentException => Vector.empty } // truncated: no table
     val step = math.max(1, keys.size / 32)
-    if (keys.size <= 1) Nil else keys.zipWithIndex.collect { case (k, i) if i > 0 && i % step == 0 => k }
+    if (keys.size < 64) Nil else keys.zipWithIndex.collect { case (k, i) if i > 0 && i % step == 0 => k }
   }
 
   test("ConcurrentBigtable.sampleRowKeys == an uncached walk after every step of random writes and truncates") {

@@ -51,6 +51,34 @@ class PlanSnapshotSpec extends AnyFunSuite {
     assert(norm == "((v_ts#N-T3600000ms <= p_ts#N-T3600000ms))", norm)
   }
 
+  test("codegen and query-stage ids mask; other Arguments survive") {
+    val raw =
+      """(79) HashAggregate [codegen id : 9]
+        |Input [1]: [__sid#12]
+        |
+        |(80) ShuffleQueryStage
+        |Output [1]: [__sid#12]
+        |Arguments: 8
+        |
+        |(81) ResultQueryStage
+        |Arguments: 10
+        |
+        |(82) CollectLimit
+        |Input [1]: [__sid#12]
+        |Arguments: 5
+        |*(3) Project [a#1]
+        |""".stripMargin
+    val norm = PlanSnapshot.normalize(raw)
+    assert(norm.contains("(79) HashAggregate [codegen id : N]"), norm)
+    assert(norm.contains("(80) ShuffleQueryStage\nOutput [1]: [__sid#N]\nArguments: N"), norm)
+    assert(norm.contains("(81) ResultQueryStage\nArguments: N"), norm)
+    assert(norm.contains("Input [1]: [__sid#N]\nArguments: 5"), norm) // a limit is content
+    assert(norm.contains("*(N) Project [a#N]"), norm)
+    // two runs that differ only by codegen and stage numbering normalize alike
+    val swapped = raw.replace("codegen id : 9", "codegen id : 10").replace("Arguments: 8", "Arguments: 9")
+    assert(PlanSnapshot.normalize(swapped) == norm)
+  }
+
   test("key literals and fixture-pinned constants survive") {
     val raw =
       """BigtableScan orders ranges=2 ([O#1-URGENT#0000000100, O#1-URGENT#0000000900])
