@@ -46,6 +46,61 @@ object Bench {
     df.queryExecution.toRdd.count(): Unit
   }
 
+  /** One gate's timed runs (seconds), or its first failure's message. */
+  private[graft] final case class GateResult(runs: Seq[Double], error: Option[String]) {
+    /** The reported timing: the fastest run, or -1 for a failed gate. */
+    def timing: Double = if (error.isDefined || runs.isEmpty) -1.0 else runs.min
+  }
+
+  /** Run one gate: one UNTIMED warm-up execution when `warmup` is set,
+    * then up to `repeats` timed ones. The warm-up takes JIT compilation,
+    * codegen class loading and first-shuffle file creation out of the
+    * first timed window (r11: min total 89.9s vs median 160s — repeat-1
+    * contamination made min-of-N a lottery).
+    *
+    * The first failure, warm-up or timed, is the gate's error and ends
+    * the gate: a later run can pass only because the failure changed
+    * some state (a fault injector that has spent its faults), so its
+    * timing would hide the failure. `snapshot` saves the plan of the
+    * first successful execution, after it ran so AQE's final plan is
+    * available; a snapshot failure is not the gate's. `cleanup` follows
+    * every execution, told whether it was the warm-up.
+    */
+  private[graft] def runGate[A](
+      repeats: Int,
+      warmup: Boolean,
+      execute: () => A,
+      snapshot: A => Unit,
+      cleanup: Boolean => Unit
+  ): GateResult = {
+    val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
+    var snapshotted = false
+    def run(isWarmup: Boolean): Option[String] = {
+      val t0 = System.nanoTime()
+      try {
+        val out = execute()
+        if (!isWarmup) runs += (System.nanoTime() - t0) / 1e9
+        if (!snapshotted) {
+          try snapshot(out)
+          catch { case _: Throwable => () }
+          snapshotted = true
+        }
+        None
+      } catch {
+        case e: Throwable =>
+          Some(Option(e.getMessage).getOrElse(e.getClass.getName).linesIterator.nextOption()
+            .getOrElse(e.getClass.getName).take(200))
+      } finally cleanup(isWarmup)
+    }
+    var error = if (warmup) run(isWarmup = true) else None
+    var rep = 0
+    while (rep < repeats && error.isEmpty) {
+      error = run(isWarmup = false)
+      rep += 1
+    }
+    GateResult(runs.toSeq, error)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -79,70 +134,34 @@ object Bench {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        val perRun = scala.collection.mutable.ArrayBuffer.empty[Double]
-        var planSaved = false
-        var failed = false
-        // one UNTIMED warmup execution: JIT compilation, codegen class
-        // loading, and first-shuffle file creation otherwise land inside
-        // repeat 1's timed window (r11: min total 89.9s vs median 160s —
-        // repeat-1 contamination made min-of-N a lottery). The warmup also
-        // provides the AQE-final plan snapshot. Warmup failures fall
-        // through to the timed loop so error reporting stays unchanged.
-        // SPARK_GRAFT_WARMUP=0 skips it (scale-proof runs at sf10, where
-        // each execution is minutes and the question is "does it blow
-        // up", not a ±10% timing) — the plan snapshot then comes from
-        // the first timed execution.
-        if (sys.env.get("SPARK_GRAFT_WARMUP").forall(_ != "0")) try {
-          val df = fn(spark, sfDir)
-          Bench.evaluateAll(df)
-          try {
-            // normalized (PlanSnapshot): snapshots are committed, so
-            // regeneration must only diff on structural plan changes
-            val txt = graft.tools.PlanSnapshot.normalize(
-              df.queryExecution.explainString(FormattedMode))
-            Files.write(
-              Paths.get(plansDir, s"$name.txt"),
-              txt.getBytes(StandardCharsets.UTF_8))
-          } catch { case _: Throwable => () }
-          planSaved = true
-        } catch { case _: Throwable => () }
-        finally {
-          spark.catalog.clearCache()
-          try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-          catch { case _: Throwable => () }
-        }
-        var rep = 0
-        while (rep < repeats && !failed) {
-          val t0 = System.nanoTime()
-          try {
+        val result = runGate(
+          repeats,
+          // SPARK_GRAFT_WARMUP=0 skips the warm-up (scale-proof runs at
+          // sf10, where each execution is minutes and the question is
+          // "does it blow up", not a ±10% timing)
+          warmup = sys.env.get("SPARK_GRAFT_WARMUP").forall(_ != "0"),
+          execute = () => {
             val df = fn(spark, sfDir)
             Bench.evaluateAll(df)
-            perRun += (System.nanoTime() - t0) / 1e9
-            if (!planSaved) {
-              // after the first execution so AQE's final plan is available
-              try {
-                val txt = graft.tools.PlanSnapshot.normalize(
-                  df.queryExecution.explainString(FormattedMode))
-                Files.write(
-                  Paths.get(plansDir, s"$name.txt"),
-                  txt.getBytes(StandardCharsets.UTF_8))
-              } catch { case _: Throwable => () }
-              planSaved = true
-            }
-          } catch {
-            case e: Throwable =>
-              failed = true
-              errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-                .linesIterator.next().take(200)
-          } finally {
+            df
+          },
+          // normalized (PlanSnapshot): snapshots are committed, so
+          // regeneration must only diff on structural plan changes
+          snapshot = (df: org.apache.spark.sql.DataFrame) => {
+            val txt = graft.tools.PlanSnapshot.normalize(df.queryExecution.explainString(FormattedMode))
+            Files.write(Paths.get(plansDir, s"$name.txt"), txt.getBytes(StandardCharsets.UTF_8)): Unit
+          },
+          cleanup = afterWarmup => {
             // drop per-query persisted intermediates (LSH signature frames
             // etc.) so runs don't interfere through cache pressure
             spark.catalog.clearCache()
-          }
-          rep += 1
-        }
-        timings(name) = if (failed || perRun.isEmpty) -1.0 else perRun.min
-        runs(name) = perRun.toSeq
+            if (afterWarmup)
+              try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+              catch { case _: Throwable => () }
+          })
+        result.error.foreach(errors(name) = _)
+        timings(name) = result.timing
+        runs(name) = result.runs
         // Session hygiene BETWEEN queries (round-6 item 1): broadcast
         // blocks and shuffle files are reclaimed only when a GC enqueues
         // their references for the ContextCleaner — in a 98x3-execution

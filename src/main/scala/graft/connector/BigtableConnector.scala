@@ -22,8 +22,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * [[RowRangeComposer]]; execution is a standard `BatchScanExec` over
   * [[BigtableInputPartition]]s sized by work (a key set reads in one
   * task, a range scan split at sampled keys fills a wave; a `collect()`
-  * of an unsplit scan reads on the driver with no job,
-  * [[BigtableCollectExec]]) — true
+  * of a small scan, or of a row-key join of two scans, reads on the
+  * driver with no job, [[BigtableCollectExec]] and
+  * [[BigtableJoinCollectExec]]) — true
   * partition-aware parallelism the reference lacks
   * (`UnknownPartitioning(1)`, execute_plan.rs:84-86; unchecked roadmap
   * item README.md:50) — with readers that stream bounded columnar
@@ -347,9 +348,9 @@ final class BigtableScan(
     *     components) → one prefix range `[p#, successor(p#))` per
     *     prefix combination. A non-leading pinned component can't
     *     factor into lexicographic ranges and is ignored.
-    * Candidate ranges are clipped to the planned composition
-    * ([[RowRange.intersect]]) so narrowing never reads beyond it, and
-    * the combination count is budgeted by `maxComposedRanges`.
+    * The ranges come from [[keyRanges]], clipped to the planned
+    * composition so narrowing never reads beyond it; a combination count
+    * over `maxComposedRanges` leaves the scan as planned.
     */
   override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
     // no key columns → nothing to narrow on; without this guard the fold
@@ -365,32 +366,44 @@ final class BigtableScan(
       .takeWhile(_.isDefined)
       .flatten
       .toVector
-    if (leading.isEmpty) return
-    val product = leading.map(_.size.toLong).product
-    if (product > cfg.maxComposedRanges) return
-    val prefixes = leading
+    if (leading.isEmpty || leading.map(_.size.toLong).product > cfg.maxComposedRanges) return
+    val tuples = leading
       .map(_.toVector.sorted)
-      .foldLeft(Vector("")) { (acc, vs) =>
-        for (p <- acc; v <- vs) yield if (p.isEmpty) v else p + cfg.separator + v
-      }
-    val fullPin = leading.size == cfg.partitionCols.size
-    val candidates: Vector[RowRange] =
-      if (fullPin) prefixes.map(RowRange.point)
-      else {
-        // prefix ranges are exact only for ASCII prefixes (successor =
-        // last byte + 1); if ANY prefix can't be bounded exactly we must
-        // not narrow at all — dropping that prefix would lose its rows
-        val bounded = prefixes.map { p =>
+      .foldLeft(Vector(Vector.empty[String])) { (acc, vs) => for (t <- acc; v <- vs) yield t :+ v }
+    keyRanges(tuples).foreach(effectiveRanges = _)
+  }
+
+  /** The ranges that read exactly the rows whose leading row-key
+    * components equal one of `keys` (tuples of the first k components,
+    * the same k for every tuple), clipped to the planned composition:
+    *   - every component pinned → one point key per tuple;
+    *   - a leading subset pinned (a join on the first k of n components)
+    *     → one prefix range `[p#, successor(p#))` per tuple.
+    * None when there are more than `maxComposedRanges` tuples, or when a
+    * prefix is not ASCII: its successor (last byte + 1) is exact only
+    * for ASCII, and dropping that prefix would lose its rows. Pure: the
+    * scan is not changed, so a driver-side join can narrow a scan that
+    * Spark's plan shares.
+    */
+  private[connector] def keyRanges(keys: Iterable[Seq[String]]): Option[Vector[RowRange]] = {
+    val tuples = keys.toVector
+    if (tuples.size > cfg.maxComposedRanges) return None
+    val prefixes = tuples.map(_.mkString(cfg.separator))
+    val candidates: Vector[Option[RowRange]] =
+      if (tuples.forall(_.size == cfg.partitionCols.size)) prefixes.map(p => Some(RowRange.point(p)))
+      else
+        prefixes.map { p =>
           val pre = p + cfg.separator
           if (pre.forall(_ < 0x80)) Some(RowRangeComposer.prefixRange(pre)) else None
         }
-        if (bounded.exists(_.isEmpty)) return
-        bounded.flatten
-      }
-    // an empty intersection legitimately yields zero partitions
-    effectiveRanges = RowRange.normalize(
-      candidates.flatMap(c => comp.ranges.flatMap(r => RowRange.intersect(c, r))))
+    if (candidates.exists(_.isEmpty)) None
+    // an empty intersection legitimately yields no ranges
+    else Some(RowRange.normalize(
+      candidates.flatten.flatMap(c => comp.ranges.flatMap(r => RowRange.intersect(c, r)))))
   }
+
+  /** The row-key columns, in key order. */
+  private[connector] def keyColumns: Seq[String] = cfg.partitionCols
 
   /** Visible for tests/metrics: the ranges the scan will actually read. */
   private[connector] def currentRanges: Vector[RowRange] = effectiveRanges
@@ -473,9 +486,10 @@ final class BigtableScan(
   /** Store metadata, asked at most once per scan. Spark re-derives a
     * `BatchScanExec`'s partitions on every copy of the plan node, and
     * all copies share this one `Scan`, so the answers are kept here:
-    * one `estimateSize` for [[estimateStatistics]] and the partition
-    * plan's byte count, one `sampleRowKeys` shared by every
-    * [[planInputPartitions]] call (before and after runtime filtering).
+    * one `estimateSize` for [[estimateStatistics]], [[driverPartition]]
+    * and the partition plan's byte count, one `sampleRowKeys` shared by
+    * every [[planInputPartitions]] call (before and after runtime
+    * filtering).
     * Both are lazy, so a scan that never needs one never asks.
     * Planning on a driver without the store answers "unknown".
     */
@@ -496,10 +510,11 @@ final class BigtableScan(
     * connectors) and groups the pieces contiguously into one wave of
     * tasks, or into `spark.sql.files.maxPartitionBytes`-sized groups when
     * the scan's estimate is larger — the reference instead reads every
-    * scan on one task (execute_plan.rs:84-86). These partitions serve
-    * every job over the scan; a `collect()` of the scan alone reads on
-    * the driver instead when [[driverPartition]] allows it
-    * ([[BigtableCollectExec]]).
+    * scan on one task (execute_plan.rs:84-86). Only a job asks for these
+    * partitions: planning does not ([[columnarSupportMode]]), and a
+    * `collect()` of the scan alone, or of a row-key join of two scans,
+    * reads on the driver instead when [[driverPartition]] admits it
+    * ([[BigtableCollectExec]], [[BigtableJoinCollectExec]]).
     */
   override def planInputPartitions(): Array[InputPartition] =
     BigtableScan
@@ -507,20 +522,49 @@ final class BigtableScan(
       .map(g => BigtableInputPartition(g, tsRange): InputPartition)
       .toArray
 
-  /** The one partition a driver-side collect reads: every effective
-    * range, when no range would split — all of them points (no samples
-    * asked), or no sampled key strictly inside any of them (the same
-    * memoized `samples` the partition plan uses). None for a split range,
-    * a pushed aggregate, or a store the driver cannot reach (neither
-    * registered here nor shipped); the collect then runs the job, whose
-    * tasks resolve the store themselves.
+  /** Declared, so that Spark's planning never calls
+    * [[planInputPartitions]] to find out (the default asks every
+    * partition's reader factory, which makes a range scan sample the
+    * store at planning time, and a runtime-filtered probe side plan its
+    * partitions before the filter arrives): every scan reads columnar
+    * batches, except in agg mode ([[BigtablePartitionReaderFactory]]).
+    */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    if (aggs.isEmpty) Scan.ColumnarSupportMode.SUPPORTED else Scan.ColumnarSupportMode.UNSUPPORTED
+
+  /** The one partition a driver-side read takes: every planned range,
+    * when the scan is small enough to read on the driver — every range a
+    * point (no estimate asked), or the memoized [[estimate]] (the one
+    * [[estimateStatistics]] reports) at most one batch (`MaxBatchRows`)
+    * of rows and at most `spark.sql.files.maxPartitionBytes` bytes. A
+    * store with no estimate is tried, and the reader's one-batch cap
+    * bounds that read. None for a larger scan, a pushed aggregate, or a
+    * store the driver cannot reach (neither registered here nor
+    * shipped); the query then runs Spark's plan, whose tasks resolve the
+    * store themselves.
+    *
+    * The planned ranges, not [[currentRanges]]: a scan collected alone
+    * has no runtime filter, and a join side must not read the keys a
+    * previous run of Spark's plan narrowed it to.
     */
   private[connector] def driverPartition: Option[BigtableInputPartition] = {
-    val ranges = effectiveRanges
-    val reachable = shippedStore.isDefined || BigtableStores.contains(cfg.storeName)
-    def unsplit = ranges.forall(_.isPoint) || BigtableScan.splitRanges(ranges, samples).size == ranges.size
-    if (aggs.isEmpty && reachable && unsplit) Some(BigtableInputPartition(ranges, tsRange)) else None
+    def small = comp.ranges.forall(_.isPoint) || estimate.forall { case (rows, bytes) =>
+      rows <= BigtableColumnarPartitionReader.MaxBatchRows &&
+        bytes <= org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
+    }
+    partitionOver(comp.ranges).filter(_ => small)
   }
+
+  /** A partition over `ranges` for a driver-side read; None for a
+    * pushed aggregate or a store the driver cannot reach.
+    */
+  private[connector] def partitionOver(ranges: Vector[RowRange]): Option[BigtableInputPartition] = {
+    val reachable = shippedStore.isDefined || BigtableStores.contains(cfg.storeName)
+    if (aggs.isEmpty && reachable) Some(BigtableInputPartition(ranges, tsRange)) else None
+  }
+
+  /** The estimate's row count (asking the store at most once). */
+  private[connector] def estimatedRows: Option[Long] = estimate.map(_._1)
 
   override def createReaderFactory(): PartitionReaderFactory =
     // agg mode ignores the pushed limit: Spark never pushes a limit

@@ -14,11 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicInteger
 
-/** `collect()` of a plain Bigtable scan with no sampled key inside any of
-  * its ranges reads on the driver ([[BigtableCollectExec]]): no Spark job
-  * and one `readRows`, with the same rows as the job path. A read longer
-  * than one batch, a split scan and a runtime-filtered join keep their
-  * jobs.
+/** `collect()` of a plain Bigtable scan whose ranges are points or whose
+  * estimate is at most one batch reads on the driver
+  * ([[BigtableCollectExec]]): no Spark job and one `readRows`, with the
+  * same rows as the job path. A read longer than one batch, a larger
+  * estimate and a sorted runtime-filtered join keep their jobs; the
+  * unsorted join reads on the driver ([[BigtableJoinCollectExec]]).
   */
 class DriverCollectSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -153,13 +154,21 @@ class DriverCollectSpec extends AnyFunSuite {
     assert(rows == expected)
   }
 
-  test("a scan split by samples runs the job path and makes no driver read") {
+  test("a 901-row BETWEEN with samples inside collects on the driver") {
     val df = usersTable().where(col("_row_key").between(user(100), user(1000))).select("_row_key", "age")
+    assert(!unsplit(df, "users"), "the store samples keys inside the range")
+    assertDriverCollect(df, "users", (100 to 1000).map(i => s"${user(i)},${20 + i % 50}"))
+  }
+
+  test("a scan split by samples runs the job path and makes no driver read") {
+    val df = usersTable().where(col("_row_key").between(user(100), user(5000))).select("_row_key", "age")
     assert(!unsplit(df, "users"))
     val Seq(scan) = scans(df.queryExecution.executedPlan)
+    assert(scan.estimatedRows.exists(_ > BigtableColumnarPartitionReader.MaxBatchRows),
+      "an estimate past one batch is not read on the driver")
     val partitions = scan.planInputPartitions().length
     val (rows, nJobs, reads) = counted("users")(df.collect().length)
-    assert(rows == 901)
+    assert(rows == 4901)
     assert(nJobs == 1)
     assert(reads == partitions, "one read per partition, none on the driver")
   }
@@ -176,8 +185,9 @@ class DriverCollectSpec extends AnyFunSuite {
   test("a DPP join keeps its jobs, reuses the broadcast and probes only the build side's keys") {
     usersTable("allowFullScan" -> "true").createOrReplaceTempView("dc_users")
     table("vip", "level:string", "allowFullScan" -> "true").createOrReplaceTempView("dc_vip")
+    // a Sort root stays Spark's plan; the unsorted join reads on the driver (below)
     val df = spark.sql("SELECT u._row_key, u.age FROM dc_users u JOIN dc_vip v " +
-      "ON u._row_key = v._row_key WHERE v.level = 'gold'")
+      "ON u._row_key = v._row_key WHERE v.level = 'gold' ORDER BY u._row_key")
     val gold = (0 until users by 97).filter(_ % 2 == 0).map(user)
     val (rows, nJobs, _) = counted("users")(df.collect().map(_.getString(0)).sorted.toSeq)
     assert(rows == gold)
@@ -187,5 +197,20 @@ class DriverCollectSpec extends AnyFunSuite {
     val probe = scans(df.queryExecution.executedPlan).filter(_.currentRanges.forall(_.isPoint))
     assert(probe.size == 1, plan)
     assert(probe.head.currentRanges == gold.map(RowRange.point).toVector)
+  }
+
+  test("an unsorted DPP join answers on the driver with one ReadRows per table") {
+    usersTable("allowFullScan" -> "true").createOrReplaceTempView("dc_users")
+    table("vip", "level:string", "allowFullScan" -> "true").createOrReplaceTempView("dc_vip")
+    val df = spark.sql("SELECT u._row_key, u.age FROM dc_users u JOIN dc_vip v " +
+      "ON u._row_key = v._row_key WHERE v.level = 'gold'")
+    assert(df.queryExecution.executedPlan.isInstanceOf[BigtableJoinCollectExec], df.queryExecution.executedPlan)
+    val gold = (0 until users by 97).filter(_ % 2 == 0)
+    val (rows, nJobs, reads) = counted("users")(df.collect().toSeq.map(r => render(r.toSeq)).sorted)
+    assert(nJobs == 0)
+    assert(reads == 1 && counting.count("readRows", "vip") == 1)
+    assert(counting.count("sample", "users") == 0 && counting.count("sample", "vip") == 0)
+    assert(rows == gold.map(i => s"${user(i)},${20 + i % 50}"))
+    assert(rows == viaJob(df).sorted)
   }
 }

@@ -5,11 +5,12 @@ import graft.model._
 import graft.store.{BigtableStores, ConcurrentBigtable}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The scan-planning contract, counted at the store: a key-filtered
-  * query plans with no `sampleRowKeys` round trip when every range is a
-  * point, and with at most one `sampleRowKeys` and one `estimateSize`
-  * per scan otherwise. Each query runs through a counting decorator and
-  * again through the bare store; the answers must agree.
+/** The scan-planning contract, counted at the store: planning makes no
+  * `sampleRowKeys` round trip (only a job's partition plan samples), and
+  * a scan asks for at most one `sampleRowKeys` and one `estimateSize`.
+  * A key set, or a range whose estimate is one batch, then collects on
+  * the driver with no samples at all. Each query runs through a counting
+  * decorator and again through the bare store; the answers must agree.
   */
 class PlanningRoundTripsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -80,16 +81,16 @@ class PlanningRoundTripsSpec extends AnyFunSuite {
     assert(estimates <= 1)
   }
 
-  test("a BETWEEN plans with exactly one sampleRowKeys and at most one estimateSize") {
+  test("a BETWEEN plans with no sampleRowKeys call and at most one estimateSize") {
     val (samples, estimates) = counted(
       s"SELECT _row_key, age FROM users_$$v WHERE _row_key BETWEEN '${user(100)}' AND '${user(900)}'", "users")
-    assert(samples == 1)
+    assert(samples == 0)
     assert(estimates <= 1)
   }
 
-  test("a prefix LIKE plans with exactly one sampleRowKeys and at most one estimateSize") {
+  test("a prefix LIKE plans with no sampleRowKeys call and at most one estimateSize") {
     val (samples, estimates) = counted("SELECT _row_key, age FROM users_$v WHERE _row_key LIKE 'u01%'", "users")
-    assert(samples == 1)
+    assert(samples == 0)
     assert(estimates <= 1)
   }
 
