@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.planning.{ExtractEquiJoinKeys, PhysicalOper
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftSemi, QueryPlan}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ReturnAnswer}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{LeafExecNode, SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.execution.graft.PreparedPlan
 import org.apache.spark.sql.types.StringType
@@ -216,8 +216,8 @@ final case class JoinSide(
   * by adaptive execution, which runs the broadcast's job before
   * `executeCollect` is called. Spark's plan for `root` is planned and
   * prepared only on first use (the fallback, `execute()`, explain),
-  * rendered through `innerChildren`, and is what the node canonicalizes
-  * to.
+  * rendered through `innerChildren` (except in the node's own running
+  * query), and is what the node canonicalizes to.
   */
 final case class BigtableJoinCollectExec(
     joinType: JoinType,
@@ -236,7 +236,17 @@ final case class BigtableJoinCollectExec(
     */
   @transient private lazy val sparkPlan: SparkPlan = PreparedPlan(session, root)
 
-  override def innerChildren: Seq[QueryPlan[_]] = Seq(sparkPlan)
+  /** Spark's plan, except while this node's own query runs: the query's
+    * execution-start event renders the formatted plan, which walks
+    * `innerChildren`, and would otherwise prepare the fallback of every
+    * collect answered on the driver.
+    */
+  override def innerChildren: Seq[QueryPlan[_]] = if (runningOwnQuery) Nil else Seq(sparkPlan)
+
+  private def runningOwnQuery: Boolean =
+    Option(sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY))
+      .flatMap(id => Option(SQLExecution.getQueryExecution(id.toLong)))
+      .exists(_.executedPlan eq this)
 
   override protected def doCanonicalize(): SparkPlan = sparkPlan.canonicalized
 

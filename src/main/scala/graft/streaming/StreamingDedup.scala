@@ -1,11 +1,14 @@
 package graft.streaming
 
+import graft.functions.JaccardImpl
 import graft.operators.Dedup
 
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Incremental (streaming) near-duplicate detection — the pipeline shape
   * a continuously-ingesting training-data corpus needs: new documents
@@ -31,19 +34,25 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *      where millions of documents share a band bucket is exactly what
   *      [[compactIndex]] + the batch operator's periodic re-dedup are
   *      for, not per-batch probing.
-  *   2. Candidates = batch buckets ⋈ accumulated bucket index (new vs
-  *      old) ∪ batch self-join (new vs new).
+  *   2. Candidates = (accumulated bucket index ∪ batch buckets) ⋈ batch
+  *      buckets on (band, bucket): new-vs-old and new-vs-new pairs in
+  *      ONE join, each pair canonical (id1 < id2).
   *   3. Exact verification: true Jaccard on sorted shingle hashes
-  *      (native merge walk), only on candidates.
+  *      (native merge walk), only on candidates. A micro-batch collects
+  *      its distinct candidates and verifies them on the driver against
+  *      only the candidate ids' shingle rows.
   *   4. Append confirmed pairs to the result, then append the batch's
   *      buckets + shingles to the index — parquet appends, so the index
   *      survives restarts and is readable by any later job.
   *
-  * Scale shape: each batch's bucket rows join against the index on
-  * (band, bucket) — at real ingest rates the batch side is broadcast-
-  * sized and Catalyst picks BHJ from the frame sizes on its own (hints
-  * were measured slower here at fixture scale: the extra broadcast
-  * collect/build rounds cost more than the 2 MB shuffle they avoid).
+  * Scale shape: a micro-batch broadcasts its bucket rows, so the index
+  * streams past them map-side, and its verify reads the candidates'
+  * shingle rows alone (the id-partitioned files they hash into, filtered
+  * by id): no micro-batch shuffles, and no per-batch cost grows with the
+  * shingle log. A catch-up batch — past the broadcast's band-row budget
+  * or the verify's candidate budget — runs the direct plan instead:
+  * shuffled joins with the batch as build side, and the candidates
+  * joined against the whole shingle log.
   *
   * Delivery: all three datasets (pairs, bands index, shingles) live in a
   * [[CommitLog]] — data files are invisible until their manifest
@@ -66,6 +75,8 @@ object StreamingDedup {
     StructField("sigb", org.apache.spark.sql.types.BinaryType)))
   private def shinglesSchema = StructType(Seq(
     StructField("id", LongType), StructField("sh", ArrayType(LongType))))
+  private def pairsSchema = StructType(Seq(
+    StructField("id1", LongType), StructField("id2", LongType), StructField("jaccard", DoubleType)))
 
   /** Batch-side broadcast budget for the index probe join, in band rows
     * (docs × bands). 500k rows ≈ 75–100 MB with the sigb sketch — small
@@ -74,41 +85,13 @@ object StreamingDedup {
     */
   private val MaxBroadcastBandRows = 500000L
 
-  /** Accumulated-shingle-log size below which the verify joins always
-    * take the direct plan (see the gate comment in [[processBatch]]).
-    * 64 MB ≈ a million short documents' hashes — well before the
-    * per-batch full-log shuffle dominates. Overridable per session
-    * (ops knob + A/B measurement):
-    * `spark.graft.streaming.verifySemiFilterMinBytes`; Long.MaxValue
-    * disables the semi filter entirely, a negative value forces it.
+  /** Candidate-pair budget of the micro-batch verify: a batch whose
+    * distinct candidate pairs fit is verified on the driver, holding at
+    * most twice this many documents' shingle hashes (≈ 64 MB at 8 KB of
+    * hashes per document); past it the batch takes the direct plan.
+    * A 1000-document perfbench `ingest_dedup` batch confirms about 55.
     */
-  private val VerifySemiFilterMinBytes = 64L * 1024 * 1024
-
-  private[graft] val VerifySemiFilterConf =
-    "spark.graft.streaming.verifySemiFilterMinBytes"
-
-  private def verifySemiFilterMinBytes(spark: SparkSession): Long =
-    graft.SessionConf.long(spark, VerifySemiFilterConf, VerifySemiFilterMinBytes)
-
-  /** Duplicate-coverage ceiling for the verify semi filter: the filter
-    * only pays when the candidate ids are a SMALL fraction of the
-    * corpus (each kept id still rides both pair-join shuffles — at high
-    * coverage the filter's persist/distinct/broadcast machinery buys
-    * almost no shuffle reduction; measured at the 100× probe on a
-    * duplication-saturated corpus: direct 176.5s vs semi 254.2s).
-    * Coverage is estimated from ALREADY-COMMITTED data with zero jobs:
-    * 2 × confirmed-pair rows / corpus rows, both read from parquet
-    * footers driver-side. Confirmed pairs under-count candidates, but
-    * with the signature prefilter candidates ≈ near-threshold pairs,
-    * and the proxy errs toward the direct plan — the safe default.
-    */
-  private val VerifySemiFilterMaxCoverage = 0.2
-
-  /** Driver-side exact row count of a CommitLog dataset from parquet
-    * footers (no Spark job; file count is bounded by compaction).
-    */
-  private[streaming] def footerRows(spark: SparkSession, dir: String): Long =
-    CommitLog.rowCount(spark, dir)
+  private val MaxLocalCandidates = 4096
 
   /** Run independent driver actions concurrently (guide §2.6: Spark
     * schedules jobs submitted from several threads at once, so a later
@@ -216,9 +199,7 @@ object StreamingDedup {
     CommitLog.init(s"$workDir/bands", bandsSchema)
     requireBandsSchema(s"$workDir/bands")
     CommitLog.init(s"$workDir/shingles", shinglesSchema)
-    CommitLog.init(s"$workDir/pairs",
-      StructType(Seq(StructField("id1", LongType), StructField("id2", LongType),
-        StructField("jaccard", org.apache.spark.sql.types.DoubleType))))
+    CommitLog.init(s"$workDir/pairs", pairsSchema)
   }
 
   /** Fail fast on a bands log whose recorded schema is not
@@ -265,6 +246,19 @@ object StreamingDedup {
       numHashes: Int,
       bands: Int,
       batchId: Option[Long] = None
+  ): BatchStats =
+    processBatch(batch, workDir, threshold, shingleK, numHashes, bands, batchId, MaxLocalCandidates)
+
+  /** [[processBatch]] with the micro-batch verify's candidate budget. */
+  private[streaming] def processBatch(
+      batch: DataFrame,
+      workDir: String,
+      threshold: Double,
+      shingleK: Int,
+      numHashes: Int,
+      bands: Int,
+      batchId: Option[Long],
+      candidateBudget: Int
   ): BatchStats = {
     val spark = batch.sparkSession
     // fast path: every dataset already holds this batch's commit — the
@@ -303,229 +297,197 @@ object StreamingDedup {
         ).as(Seq("band", "bucket")))
       val newSh = base.select(col("id"), col("sh"))
 
-      // index probe with PARTITION PRUNING over a compacted
-      // ([[compactIndex]]) bucket-partitioned layout: only the files
-      // whose bucket-hash partition this batch's (band, bucket) pairs
-      // touch are read — identical join result (a matching index row
-      // shares the batch row's (band, bucket), hence its partition)
+      // ONE job over the batch (it also fills the persisted `base`): its
+      // band-row count, which sizes the broadcast below, and, per
+      // bucket-hash modulus of a compacted ([[compactIndex]]) bands
+      // index, the partitions its (band, bucket) pairs hash into. The
+      // probe then reads only those partitions' files — identical join
+      // result (a matching index row shares the batch row's (band,
+      // bucket), hence its partition). Modulus-1 (sorted-hybrid) and
+      // unpartitioned files are always read.
+      def moduliOf(files: Seq[String]): Seq[Int] =
+        files.flatMap(f => PartDirRe.findFirstMatchIn(f).map(_.group(1).toInt)).distinct
       val allBandFiles = CommitLog.currentFiles(bandsDir)
-      val bandFiles = {
-        val moduli =
-          allBandFiles.flatMap(f => PartDirRe.findFirstMatchIn(f).map(_.group(1).toInt)).distinct
-        if (moduli.isEmpty) allBandFiles
-        else {
-          // one tiny distinct job per modulus over the (persisted)
-          // batch bands — realistically exactly one modulus. Modulus 1
-          // (the sorted-hybrid marker) always hashes to 0: no job.
-          val touched = moduli.map { m =>
-            if (m == 1) m -> Set(0)
-            else m -> newBands
-              .select(pmod(xxhash64(col("band"), col("bucket")), lit(m.toLong)).cast("int").as("p"))
-              .distinct().collect().map(_.getInt(0)).toSet
-          }.toMap
-          pruneBandFiles(allBandFiles, touched)
-        }
-      }
+      val moduli = moduliOf(allBandFiles).filter(_ != 1)
+      val nModuli = moduli.size
+      val perTask = newBands
+        .select(moduli.map(m =>
+          pmod(xxhash64(col("band"), col("bucket")), lit(m.toLong)).cast("int")): _*)
+        .queryExecution.toRdd.mapPartitions { rows =>
+          val touched = Array.fill(nModuli)(scala.collection.mutable.Set.empty[Int])
+          var n = 0L
+          rows.foreach { r => n += 1; (0 until nModuli).foreach(i => touched(i) += r.getInt(i)) }
+          Iterator.single((n, touched.map(_.toSet)))
+        }.collect()
+      val bandFiles = pruneBandFiles(allBandFiles,
+        moduli.indices.map(i => moduli(i) -> perTask.flatMap(_._2(i)).toSet).toMap)
       val oldBands =
         CommitLog.readFiles(spark, bandsDir, bandsSchema, bandFiles)
-      // estimated-Jaccard prefilter inline in both bucket joins (batch
+      // estimated-Jaccard prefilter inline in the bucket join (batch
       // operator's exact machinery — see Dedup.estimateCut): the low-j
       // candidate mass dies in codegen before distinct/verify.
       val estCut = Dedup.estimateCut(threshold, numHashes)
       def estOk(a: Column, b: Column): Column =
         if (estCut > 0.0) Dedup.sigAgreement(a, b) >= lit(estCut) else lit(true)
-      // Index-side join shape — the sf10 curve-bender (VERDICT r14 #5):
-      // the batch side is micro-batch-sized, so BROADCAST it and let the
+      // Join shape — the sf10 curve-bender (VERDICT r14 #5): the batch
+      // side is micro-batch-sized, so BROADCAST it and let the
       // accumulated index STREAM map-side — the index (the one frame that
       // grows without bound) is never shuffled, never sorted, never
       // hash-built; per-batch cost is one index scan. Guarded by batch
       // size: an AvailableNow catch-up batch can be the whole backlog,
-      // and broadcasting that would OOM — past the row budget the old
-      // shuffle_hash plan (shuffles both sides, sorts neither) returns.
-      val batchBandRows = base.count() * bands
-      val broadcastBatch = batchBandRows <= MaxBroadcastBandRows
-      // the shuffled-hash hints below are a MICRO-BATCH optimization
-      // (SMJ would sort shingle arrays per trigger: +2.6s at sf0.1) and
-      // share the broadcast gate's size signal: a catch-up batch's
-      // candidate set can put GBs behind one skewed id (a hub doc in a
-      // degenerate near-dup cluster), and a shuffled-hash BUILD cannot
-      // spill — the r17 sf10 run died with "Can't acquire 8589934592
-      // bytes to build hash relation" on exactly that shape. Past the
-      // budget the hints come off and AQE plans spillable sort-merge
-      // with skew-join splitting — the 100 TB catch-up path.
-      def microBatchHint(df: DataFrame): DataFrame =
-        if (broadcastBatch) df.hint("shuffle_hash") else df
-      // fallback build side = the BATCH, never the index: a shuffled hash
-      // join cannot spill its build side, and the index is the one frame
-      // that grows without bound — building it OOM'd outright at the 3.2M
-      // doc steady-state probe ("not enough memory to build hash map")
-      // while the batch side is backlog-bounded
-      val crossJoined =
+      // and broadcasting that would OOM — past the row budget the
+      // shuffle_hash plan returns, with the BATCH as build side, never
+      // the index: a shuffled hash join cannot spill its build side, and
+      // building the index OOM'd outright at the 3.2M doc steady-state
+      // probe ("not enough memory to build hash map").
+      val broadcastBatch = perTask.map(_._1).sum <= MaxBroadcastBandRows
+      // ONE candidate join, (index ∪ batch) ⋈ batch, finds new-vs-old and
+      // new-vs-new pairs together. The id guard drops every row meeting
+      // itself, including a batch replayed after a crash between its
+      // index append and its checkpoint commit (at-least-once replay
+      // emits no self-pairs); least/greatest makes each pair canonical.
+      val probe = oldBands.unionByName(newBands)
+      val joined =
         if (broadcastBatch)
-          oldBands.alias("o").join(broadcast(newBands.alias("n")), Seq("band", "bucket"))
+          probe.alias("o").join(broadcast(newBands.alias("n")), Seq("band", "bucket"))
         else
-          newBands.alias("n").hint("shuffle_hash").join(oldBands.alias("o"), Seq("band", "bucket"))
-      val cross = crossJoined
-        // a crash between the index append and the checkpoint commit makes
-        // the restarted batch meet ITSELF in the index — the id guard keeps
-        // that at-least-once replay from emitting self-pairs
+          newBands.alias("n").hint("shuffle_hash").join(probe.alias("o"), Seq("band", "bucket"))
+      val cands = joined
         .where(col("n.id") =!= col("o.id") && estOk(col("n.sigb"), col("o.sigb")))
         .select(
           least(col("n.id"), col("o.id")).as("id1"),
           greatest(col("n.id"), col("o.id")).as("id2"))
-      val within = newBands.alias("a")
-        .join(microBatchHint(newBands.alias("b")), Seq("band", "bucket"))
-        .where(col("a.id") < col("b.id") && estOk(col("a.sigb"), col("b.sigb")))
-        .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      // Verify-side semi filter, GATED on size AND duplicate coverage
-      // (VERDICT r14 #5, second half): once the accumulated shingles log
-      // is big, joining it whole per batch shuffles the entire corpus
-      // every trigger — the semi filter bounds the shuffled volume by
-      // CANDIDATE ids (pair-bounded, broadcast), so per-batch verify I/O
-      // scales with the batch's duplicates, not the corpus. Three
-      // regimes keep the direct r14 plan instead:
-      //   - small logs: the filter's persist/broadcast machinery costs
-      //     more than the small shuffle it avoids (+1.4 s sf0.1);
-      //   - duplication-saturated corpora: candidate ids cover most of
-      //     the corpus, so the filter pays its machinery and still
-      //     shuffles nearly everything (100× probe: 254.2s vs 176.5s);
-      //   - a candidate set too big to broadcast (budget check on THIS
-      //     batch's candidates, below) — the committed-data coverage
-      //     gate cannot see a duplicate-heavy catch-up batch.
-      // The first two signals are driver-side (file lengths + parquet
-      // footer row counts of already-committed data) — no job runs to
-      // decide; the third reuses the persist the filter needs anyway.
+
       val shinglesDir = s"$workDir/shingles"
       val shFilesAll = CommitLog.currentFiles(shinglesDir)
-      val shModuli = shFilesAll
-        .flatMap(f => PartDirRe.findFirstMatchIn(f).map(_.group(1).toInt)).distinct
-      val semiFloor = verifySemiFilterMinBytes(spark)
-      val wantSemi =
-        if (semiFloor < 0L) true
-        else {
-          val logBytes = shFilesAll
-            .map(f => new java.io.File(s"$shinglesDir/$f").length).sum
-          logBytes >= semiFloor && {
-            val corpusRows = footerRows(spark, shinglesDir)
-            val dupTouched = 2L * footerRows(spark, s"$workDir/pairs")
-            corpusRows > 0L &&
-              dupTouched.toDouble / corpusRows.toDouble <= VerifySemiFilterMaxCoverage
+      val shSchema = CommitLog.schemaOf(shinglesDir)
+      val local = if (broadcastBatch) localCandidates(cands, candidateBudget) else None
+      val (pairs, shFilesSel) = local match {
+        case Some(candPairs) =>
+          // Micro-batch verify on the driver: only the candidate ids'
+          // shingle rows are read — the batch's from the persisted base,
+          // older ones from the log files their ids hash into (the same
+          // `__p<m>=` prune the compaction writer's xxhash64(id) defines,
+          // computed here with no job) under an `id IN` filter. Nothing
+          // is shuffled, and verify cost follows the candidates, not the
+          // accumulated corpus.
+          val ids = candPairs.flatMap(p => Seq(p._1, p._2)).toSeq
+          val files =
+            if (ids.isEmpty) Nil
+            else pruneBandFiles(shFilesAll,
+              moduliOf(shFilesAll).map(m => m -> ids.map(idPartition(_, m)).toSet).toMap)
+          val sh: Map[Long, ArrayData] =
+            if (ids.isEmpty) Map.empty
+            else newSh.where(col("id").isin(ids: _*))
+              .unionByName(CommitLog.readFiles(spark, shinglesDir, shSchema, files)
+                .where(col("id").isin(ids: _*)))
+              .queryExecution.toRdd
+              .flatMap(r => if (r.isNullAt(1)) None else Some((r.getLong(0), r.getArray(1).toLongArray())))
+              .collect()
+              // the batch's rows come first and win: a replayed batch's
+              // own shingles over its earlier append
+              .reverseIterator.map { case (id, hs) => id -> UnsafeArrayData.fromPrimitiveArray(hs) }.toMap
+          val confirmed = candPairs.toSeq.flatMap { case (a, b) =>
+            for {
+              sa <- sh.get(a)
+              sb <- sh.get(b)
+              j = JaccardImpl.jaccardSorted(sa, sb)
+              if j >= threshold
+            } yield Row(a, b, roundJaccard(j))
           }
-        }
-      // persisted when either consumer below references the candidate
-      // frame more than once — the verify semi filter (three branches)
-      // or the shingle-partition prune (a driver-side collect of the
-      // candidate ids' partitions, then the two pair joins). Without a
-      // cache each reference would re-run the bucket joins — tripling
-      // the per-batch index scan. Unfiltered, candidates feed ONE plan.
-      val candsRaw = cross.union(within).distinct()
-      // modulus-1 marker files never need the candidate ids to prune —
-      // don't pay the persist just for them
-      val persistCands = wantSemi || shModuli.exists(_ != 1)
-      val cands =
-        if (persistCands) candsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else candsRaw
-      try {
-        // Verify-side SCAN prune over a compacted ([[compactIndex]])
-        // id-hash-partitioned shingles log: the verify joins only ever
-        // match shingle rows whose id appears in a candidate pair, so a
-        // partition no candidate id hashes into cannot contribute —
-        // per-batch verify INPUT I/O is bounded by the batch's
-        // candidates (touched partitions), not the accumulated corpus.
-        // The semi filter below bounds what the verify SHUFFLES; this
-        // bounds what it READS. Pre-compaction (no `__p<m>=` files) the
-        // whole log is read, exactly as before.
-        val shFilesSel =
-          if (shModuli.isEmpty) shFilesAll
-          else {
-            val touched = shModuli.map { m =>
-              if (m == 1) m -> Set(0)
-              else m -> cands.select(pmod(xxhash64(col("id1")), lit(m.toLong)).cast("int").as("p"))
-                .union(cands.select(pmod(xxhash64(col("id2")), lit(m.toLong)).cast("int").as("p")))
-                .distinct().collect().map(_.getInt(0)).toSet
-            }.toMap
-            pruneBandFiles(shFilesAll, touched)
-          }
-        val oldSh =
-          CommitLog.readFiles(spark, shinglesDir, CommitLog.schemaOf(shinglesDir), shFilesSel)
-        // the coverage gate above inspects only COMMITTED data, so a
-        // duplicate-heavy catch-up batch could still make the candidate
-        // id set broadcast-fatal (the adjacent index join guards its
-        // broadcast by batch size for exactly this reason). The persist
-        // makes counting candidates one cheap reuse of work the three
-        // consumers materialize anyway — size the broadcast on THIS
-        // batch's candidates, falling back to the direct plan past the
-        // budget: 2 ids/pair × (8 B long + 48 B row) × 2× relation
-        // overhead against heap/16 (capped 750 MB), the exactVerifyJoin
-        // budget discipline.
-        val semiFilter = wantSemi && {
-          val budget = math.min(750L * 1024 * 1024, Runtime.getRuntime.maxMemory / 16)
-          2L * cands.count() * (8L + 48L) * 2L <= budget
-        }
-        val allShBase = newSh.union(oldSh)
-        val allSh =
-          if (semiFilter) {
-            val candIds = cands.select(col("id1").as("id"))
-              .union(cands.select(col("id2").as("id"))).distinct()
-            allShBase.join(broadcast(candIds), Seq("id"), "left_semi")
-          } else allShBase
-        // the pair joins keep explicit shuffle_hash hints FOR MICRO
-        // BATCHES: left to AQE they plan sort-merge and SORT the shingle
-        // arrays per batch (measured +2.6 s on the sf0.1 gate when
-        // tried); AQE still upgrades tiny sides to broadcast under the
-        // hint. The hints sit on the CANDIDATE side (and the
-        // candidates+sh1 intermediate), never on allSh: a shuffled hash
-        // join cannot spill its build side, and allSh is corpus-sized
-        // exactly when the semi filter declines — building it OOM'd the
-        // 3.2M-doc steady-state probe. Catch-up batches drop the hints
-        // entirely (microBatchHint): their candidate partitions can skew
-        // past task memory behind one hub id.
-        val pairs = microBatchHint(cands)
-          .join(allSh.select(col("id").as("id1"), col("sh").as("sh1")), "id1")
-        val pairs2 = microBatchHint(pairs)
-          .join(allSh.select(col("id").as("id2"), col("sh").as("sh2")), "id2")
-          .withColumn("j", Dedup.jaccardSortedCol(col("sh1"), col("sh2")))
-          .where(col("j") >= threshold)
-          .select(col("id1"), col("id2"), round(col("j"), 6).as("jaccard"))
+          (spark.createDataFrame(java.util.Arrays.asList(confirmed: _*), pairsSchema), files)
+        case None =>
+          // Catch-up batch (past the broadcast gate or the candidate
+          // budget): the direct plan, the candidates joined twice against
+          // the whole shingle log. The pair joins keep explicit
+          // shuffle_hash hints for a batch that passed the broadcast gate
+          // (left to AQE they plan sort-merge and SORT the shingle arrays:
+          // +2.6 s on the sf0.1 gate), on the CANDIDATE side only — the
+          // log is corpus-sized, and a shuffled hash build cannot spill.
+          // Past the gate the hints come off and AQE plans spillable
+          // sort-merge with skew-join splitting: a catch-up batch's
+          // candidates can put GBs behind one hub id (the r17 sf10 run
+          // died with "Can't acquire 8589934592 bytes to build hash
+          // relation" on exactly that shape).
+          def hint(df: DataFrame): DataFrame = if (broadcastBatch) df.hint("shuffle_hash") else df
+          val allSh = newSh.unionByName(CommitLog.readFiles(spark, shinglesDir, shSchema, shFilesAll))
+          val withSh1 = hint(cands.distinct())
+            .join(allSh.select(col("id").as("id1"), col("sh").as("sh1")), "id1")
+          (hint(withSh1)
+            .join(allSh.select(col("id").as("id2"), col("sh").as("sh2")), "id2")
+            .withColumn("j", Dedup.jaccardSortedCol(col("sh1"), col("sh2")))
+            .where(col("j") >= threshold)
+            .select(col("id1"), col("id2"), round(col("j"), 6).as("jaccard"))
+            // a replay after a crash between the shingles and pairs commits
+            // finds its own shingles in the log too: one row per pair
+            .distinct(), shFilesAll)
+      }
 
-        // each dataset's commit is independently idempotent on batchId: a
-        // crash after some of the three published replays to exactly the
-        // missing ones (the self-pair guard covers the index-before-pairs
-        // interleavings)
-        def commit(df: DataFrame, dataset: String): Unit = batchId match {
-          case Some(b) => CommitLog.append(df, s"$workDir/$dataset", b): Unit
-          case None => CommitLog.appendAlways(df, s"$workDir/$dataset")
-        }
-        // the three datasets are independent logs, so their commit jobs
-        // run CONCURRENTLY (guide-§2.6 overlap): the two projection
-        // writes (bands/shingles, reads of the persisted base) back-fill
-        // executors while the verify pipeline's write finishes its tail.
-        // Replay correctness never depended on commit ORDER — each
-        // append is atomic + idempotent per batchId, and the self-pair
-        // guard already covers index-before-pairs interleavings.
-        // ONLY when batchId is defined (ADVICE r18): the batchId-less
-        // mode commits via appendAlways (at-least-once, NOT idempotent),
-        // and concurrent commits there widen a partial failure from
-        // "an ordered prefix committed" to "any subset committed" —
-        // a caller retry then duplicate-appends datasets whose reads
-        // are not all defensively deduped (only pairs is). Sequential
-        // order restores the documented prefix semantics.
-        val commits = Seq(
-          () => commit(pairs2, "pairs"),
-          () => commit(newBands, "bands"),
-          () => commit(newSh, "shingles"))
-        if (batchId.isDefined) parallelUnits(commits)
-        else commits.foreach(_.apply())
-        def bytesOf(dir: String, fs: Seq[String]): Long =
-          fs.map(f => new java.io.File(s"$dir/$f").length).sum
-        BatchStats(replayed = false,
-          bandFiles.size, allBandFiles.size,
-          bytesOf(bandsDir, bandFiles), bytesOf(bandsDir, allBandFiles),
-          shFilesSel.size, shFilesAll.size,
-          bytesOf(shinglesDir, shFilesSel), bytesOf(shinglesDir, shFilesAll))
-      } finally { if (persistCands) cands.unpersist(): Unit }
+      // each dataset's commit is independently idempotent on batchId: a
+      // crash after some of the three published replays to exactly the
+      // missing ones (the self-pair guard covers the index-before-pairs
+      // interleavings)
+      def commit(df: DataFrame, dataset: String): Unit = batchId match {
+        case Some(b) => CommitLog.append(df, s"$workDir/$dataset", b): Unit
+        case None => CommitLog.appendAlways(df, s"$workDir/$dataset")
+      }
+      // the three datasets are independent logs, so their commit jobs
+      // run CONCURRENTLY (guide-§2.6 overlap): the two projection
+      // writes (bands/shingles, reads of the persisted base) back-fill
+      // executors while the pairs write finishes its tail.
+      // Replay correctness never depended on commit ORDER — each
+      // append is atomic + idempotent per batchId, and the self-pair
+      // guard already covers index-before-pairs interleavings.
+      // ONLY when batchId is defined (ADVICE r18): the batchId-less
+      // mode commits via appendAlways (at-least-once, NOT idempotent),
+      // and concurrent commits there widen a partial failure from
+      // "an ordered prefix committed" to "any subset committed" —
+      // a caller retry then duplicate-appends datasets whose reads
+      // are not all defensively deduped (only pairs is). Sequential
+      // order restores the documented prefix semantics.
+      val commits = Seq(
+        () => commit(pairs, "pairs"),
+        () => commit(newBands, "bands"),
+        () => commit(newSh, "shingles"))
+      if (batchId.isDefined) parallelUnits(commits)
+      else commits.foreach(_.apply())
+      def bytesOf(dir: String, fs: Seq[String]): Long =
+        fs.map(f => new java.io.File(s"$dir/$f").length).sum
+      BatchStats(replayed = false,
+        bandFiles.size, allBandFiles.size,
+        bytesOf(bandsDir, bandFiles), bytesOf(bandsDir, allBandFiles),
+        shFilesSel.size, shFilesAll.size,
+        bytesOf(shinglesDir, shFilesSel), bytesOf(shinglesDir, shFilesAll))
     } finally base.unpersist()
   }
+
+  /** The distinct candidate pairs, collected in one job with no
+    * shuffle: each task dedups its own pairs and sends at most
+    * `budget + 1`, so the driver holds at most tasks × (budget + 1)
+    * pairs. None when the batch has more than `budget` distinct pairs.
+    */
+  private def localCandidates(cands: DataFrame, budget: Int): Option[Set[(Long, Long)]] = {
+    val perTask = cands.queryExecution.toRdd.mapPartitions { rows =>
+      val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
+      while (rows.hasNext && seen.size <= budget) {
+        val r = rows.next()
+        seen += ((r.getLong(0), r.getLong(1)))
+      }
+      Iterator.single(seen.toArray)
+    }.collect()
+    val all = perTask.iterator.flatten.toSet
+    if (all.size > budget) None else Some(all)
+  }
+
+  /** Spark's `pmod(xxhash64(id), m)` for a long id, on the driver: the
+    * shingle-log partition [[compactIndex]] writes `id` into.
+    */
+  private[streaming] def idPartition(id: Long, m: Int): Int =
+    java.lang.Math.floorMod(XXH64.hashLong(id, 42L), m.toLong).toInt
+
+  /** SQL `round(j, 6)` on a double: HALF_UP on its decimal string. */
+  private def roundJaccard(j: Double): Double =
+    java.math.BigDecimal.valueOf(j).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Read back the accumulated confirmed pairs. The streaming path is
     * exactly-once (commit-log replay skip), so the distinct() only

@@ -6,7 +6,7 @@ import graft.store.{BigtableStores, ConcurrentBigtable}
 import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -155,6 +155,21 @@ class DriverJoinSpec extends AnyFunSuite {
       "SELECT u._row_key, u.age, v.level FROM dj_users u JOIN dj_vip v ON u._row_key = v._row_key " +
         "WHERE v.level = 'gold'",
       Seq("users", "vip"), gold.map(i => s"${user(i)},${age(i)},gold"))
+  }
+
+  test("a collect answered on the driver never prepares Spark's plan; explain still shows it") {
+    views()
+    val df = spark.sql("SELECT u._row_key, u.age, v.level FROM dj_users u JOIN dj_vip v " +
+      "ON u._row_key = v._row_key WHERE v.level = 'gold'")
+    val node = df.queryExecution.executedPlan.asInstanceOf[BigtableJoinCollectExec]
+    val fallback = classOf[BigtableJoinCollectExec].getDeclaredField("sparkPlan")
+    fallback.setAccessible(true)
+    val (rows, nJobs) = counted(collected(df))
+    assert(nJobs == 0 && rows == gold.map(i => s"${user(i)},${age(i)},gold").sorted)
+    assert(fallback.get(node) == null, "the driver-side collect prepared Spark's plan")
+    val explained = df.queryExecution.explainString(FormattedMode)
+    assert("BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin".r.findFirstIn(explained).nonEmpty, explained)
+    assert(fallback.get(node) != null)
   }
 
   test("a left-semi join on the row key answers on the driver") {

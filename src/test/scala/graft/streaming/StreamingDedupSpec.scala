@@ -1,6 +1,9 @@
 package graft.streaming
 
 import graft.SparkTestSession
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -349,42 +352,124 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(CommitLog.currentFiles(s"$work/bands").forall(_.contains("/__p1=0/")))
   }
 
-  test("forced verify semi filter yields exactly the direct plan's pairs") {
-    import spark.implicits._
-    val b1 = Seq((1L, base), (2L, base),
-      (3L, "completely different text about spark partitions " * 5)).toDF("id", "text")
-    val b2 = Seq((10L, base + "tail."), (11L, base),
-      (12L, "yet another unrelated document body " * 6)).toDF("id", "text")
-    def run(): Set[(Long, Long, Double)] = {
-      val work = java.nio.file.Files.createTempDirectory("sdedup-semi").toString
-      StreamingDedup.incrementalNearDuplicatesInit(spark, work)
-      StreamingDedup.processBatch(b1, work, 0.9, 5, 120, 20, batchId = Some(0L))
-      StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, batchId = Some(1L))
-      StreamingDedup.pairs(spark, work)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+  private def pairRows(work: String): Set[(Long, Long, Double)] =
+    StreamingDedup.pairs(spark, work)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  private def batchPairs(docs: DataFrame): Set[(Long, Long, Double)] =
+    graft.operators.Dedup
+      .nearDuplicates(docs.toDF("doc_id", "text"), "doc_id", "text",
+        threshold = 0.9, numHashes = 120, bands = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** `body`'s result and the shuffle bytes its tasks wrote. */
+  private def withShuffleBytes[A](body: => A): (A, Long) = {
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => written.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
-    val direct = run() // tiny log — the gate picks the direct plan
-    spark.conf.set(StreamingDedup.VerifySemiFilterConf, "-1") // force semi
-    val semi =
-      try run()
-      finally spark.conf.unset(StreamingDedup.VerifySemiFilterConf)
-    assert(semi == direct, s"semi=$semi direct=$direct")
-    assert(direct.map(p => (p._1, p._2)) == Set((1L, 2L), (1L, 10L), (2L, 10L),
-      (1L, 11L), (2L, 11L), (10L, 11L)), s"unexpected pair set: $direct")
+    ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    val out =
+      try { val a = body; ListenerDrain.drain(spark.sparkContext); a }
+      finally spark.sparkContext.removeSparkListener(l)
+    (out, written.get)
   }
 
-  test("a malformed verifySemiFilterMinBytes conf fails naming the key and the value") {
+  /** Two batches with within- and cross-batch duplicates; the first
+    * carries 16 unrelated documents, so a compaction spreads the
+    * shingle log over several id partitions.
+    */
+  private def dupBatches = {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("sdedup-conf").toString
+    (Seq((1L, base), (2L, base),
+      (3L, "completely different text about spark partitions " * 5)).toDF("id", "text")
+      .union((20L until 36L).map(i => (i, s"unique document number $i with its own content " * 6))
+        .toDF("id", "text")),
+     Seq((10L, base + "tail."), (11L, base),
+      (12L, "yet another unrelated document body " * 6)).toDF("id", "text"))
+  }
+
+  test("a micro-batch processBatch shuffles nothing and equals the batch operator exactly") {
+    val (b1, b2) = dupBatches
+    val work = java.nio.file.Files.createTempDirectory("sdedup-noshuffle").toString
     StreamingDedup.incrementalNearDuplicatesInit(spark, work)
-    val b = Seq((1L, base), (2L, base)).toDF("id", "text")
-    spark.conf.set(StreamingDedup.VerifySemiFilterConf, "three")
-    val e =
-      try intercept[IllegalArgumentException](
-        StreamingDedup.processBatch(b, work, 0.9, 5, 120, 20, batchId = Some(0L)))
-      finally spark.conf.unset(StreamingDedup.VerifySemiFilterConf)
-    assert(e.getMessage.contains(StreamingDedup.VerifySemiFilterConf) &&
-      e.getMessage.contains("'three'"), e.getMessage)
+    val (_, first) =
+      withShuffleBytes(StreamingDedup.processBatch(b1, work, 0.9, 5, 120, 20, batchId = Some(0L)))
+    // the second batch probes a bucket-partitioned index and an
+    // id-partitioned shingle log: both prunes run without a shuffle too
+    StreamingDedup.compactIndex(spark, work, targetRecordsPerFile = 10L, indexPartitions = 32,
+      bandsPartitions = StreamingDedup.FollowIndexPartitions)
+    val (stats, second) =
+      withShuffleBytes(StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, batchId = Some(1L)))
+    assert(first == 0L && second == 0L, s"shuffle bytes written: $first, $second")
+    assert(stats.shFilesSelected < stats.shFilesTotal, s"verify read every shingle file: $stats")
+    val streamed = pairRows(work)
+    assert(streamed == batchPairs(b1.union(b2)), s"streamed=$streamed")
+    assert(streamed.map(p => (p._1, p._2)) == Set((1L, 2L), (1L, 10L), (2L, 10L),
+      (1L, 11L), (2L, 11L), (10L, 11L)), s"unexpected pair set: $streamed")
+  }
+
+  test("a batch past the candidate budget takes the direct plan and finds the same pairs") {
+    val (b1, b2) = dupBatches
+    def run(budget: Int): (Set[(Long, Long, Double)], StreamingDedup.BatchStats, Long) = {
+      val work = java.nio.file.Files.createTempDirectory("sdedup-catchup").toString
+      StreamingDedup.incrementalNearDuplicatesInit(spark, work)
+      StreamingDedup.processBatch(b1, work, 0.9, 5, 120, 20, Some(0L), budget)
+      StreamingDedup.compactIndex(spark, work, targetRecordsPerFile = 10L, indexPartitions = 32)
+      val (stats, shuffled) =
+        withShuffleBytes(StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, Some(1L), budget))
+      (pairRows(work), stats, shuffled)
+    }
+    val (local, localStats, localShuffled) = run(4096)
+    val (direct, directStats, directShuffled) = run(0)
+    // the direct plan shuffles, and joins the candidates against the
+    // whole shingle log
+    assert(localShuffled == 0L && directShuffled > 0L, s"$localShuffled, $directShuffled")
+    assert(localStats.shFilesSelected < localStats.shFilesTotal, s"$localStats")
+    assert(directStats.shFilesSelected == directStats.shFilesTotal, s"$directStats")
+    assert(direct == local, s"direct=$direct local=$local")
+    assert(local == batchPairs(b1.union(b2)), s"local=$local")
+  }
+
+  test("a batch whose pairs commit failed replays to exactly the missing pairs on both verify plans") {
+    val (b1, b2) = dupBatches
+    Seq(4096, 0).foreach { budget =>
+      val work = java.nio.file.Files.createTempDirectory("sdedup-crash").toString
+      StreamingDedup.incrementalNearDuplicatesInit(spark, work)
+      StreamingDedup.processBatch(b1, work, 0.9, 5, 120, 20, Some(0L), budget)
+      // crash window: batch 1's pairs commit fails (a file where its data
+      // dir belongs) while its bands and shingles publish
+      val data = new java.io.File(s"$work/pairs/data")
+      val moved = new java.io.File(s"$work/pairs/data.moved")
+      assert(data.renameTo(moved) && data.createNewFile())
+      intercept[Exception](StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, Some(1L), budget))
+      assert(data.delete() && moved.renameTo(data))
+      assert(CommitLog.isCommitted(s"$work/bands", 1L) && CommitLog.isCommitted(s"$work/shingles", 1L))
+      assert(!CommitLog.isCommitted(s"$work/pairs", 1L))
+      // the replay meets its own rows in the index: no self-pairs, and
+      // a second replay is skipped whole
+      StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, Some(1L), budget)
+      assert(StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, Some(1L), budget).replayed)
+      val raw = CommitLog.read(spark, s"$work/pairs")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(raw.size == raw.distinct.size, s"budget $budget: duplicate raw pairs $raw")
+      assert(raw.toSet == batchPairs(b1.union(b2)), s"budget $budget: $raw")
+    }
+  }
+
+  test("the driver-side id partition equals Spark's pmod(xxhash64(id), m)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261019L)
+    val ids = Seq(0L, -1L, 1L, Long.MinValue, Long.MaxValue, -42L) ++
+      Seq.fill(200)(rnd.nextLong()) ++ Seq.fill(50)(-math.abs(rnd.nextLong() % 1000000L))
+    Seq(7, 32, 64).foreach { m =>
+      val viaSpark = ids.toDF("id")
+        .select(col("id"), pmod(xxhash64(col("id")), lit(m.toLong)).cast("int"))
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      ids.foreach(id => assert(StreamingDedup.idPartition(id, m) == viaSpark(id), s"id $id, modulus $m"))
+    }
   }
 
   test("incremental pairs equal the batch operator's pairs on the same corpus") {

@@ -153,6 +153,20 @@ class StreamingSpanDedupSpec extends AnyFunSuite {
     assert(default.contains(0L) && default(1L).endsWith("x y z w"))
   }
 
+  test("a malformed spanProbeBroadcastMaxRows conf fails") {
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("sspan-conf").toString
+    StreamingSpanDedup.init(spark, work, "doc_id", "text")
+    val b = Seq((1L, "p q r s")).toDF("doc_id", "text")
+    spark.conf.set(StreamingSpanDedup.SpanProbeBroadcastConf, "three")
+    val e =
+      try intercept[IllegalArgumentException](
+        StreamingSpanDedup.processBatch(b, "doc_id", "text", work, 2, Some(0L)))
+      finally spark.conf.unset(StreamingSpanDedup.SpanProbeBroadcastConf)
+    assert(e.getMessage.contains(StreamingSpanDedup.SpanProbeBroadcastConf) &&
+      e.getMessage.contains("'three'"), e.getMessage)
+  }
+
   test("replaying a committed batch changes nothing (exactly-once)") {
     import spark.implicits._
     val work = java.nio.file.Files.createTempDirectory("sspan-replay").toString
