@@ -2,37 +2,145 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** MinHash signature as a native loop. The naive formulation —
-  * `transform(sequence(0, k-1), i -> array_min(transform(hashes, h ->
-  * xxhash64(h, i))))` — evaluates k × |shingles| *interpreted* lambda
-  * calls per row (Spark's higher-order functions don't participate in
-  * codegen), which measured ~240 s for 5000 docs × 128 hashes at
-  * sf0.1. This expression runs the same double loop as compiled JVM
-  * code (~1 s): h_i(s) = XXH64(shingleHash_s, seed = i).
+/** MinHash signature, LSH band hashes and the per-document sketch
+  * kernel, all over primitive `long[]` loops.
+  *
+  * The naive signature — `transform(sequence(0, k-1), i ->
+  * array_min(transform(hashes, h -> xxhash64(h, i))))` — evaluates
+  * k × |shingles| interpreted lambda calls per row (Spark's higher-order
+  * functions don't participate in codegen): ~240 s for 5000 docs × 128
+  * hashes at sf0.1. [[MinHashImpl.signature]] runs the same double loop
+  * as compiled code, h_i(s) = XXH64(shingleHash_s, seed = i), with the
+  * input-only half of XXH64 hoisted out of the per-seed loop. The band
+  * hashes replace the interpreted `transform(sequence(0, bands-1), b ->
+  * xxhash64(slice(sig, b·r+1, r)))` lambda with the same fold. Every
+  * caller — the [[MinHashSignature]] and [[MinHashBands]] expressions
+  * the batch operators plan, and the [[MinHashSketch]] kernel the
+  * streaming ingest runs inside its tasks — shares these loops, so batch
+  * and incremental dedup compute bit-identical signatures and buckets.
   */
 object MinHashImpl {
-  def signature(hashes: ArrayData, numHashes: Int): ArrayData = {
-    val n = hashes.numElements()
+  // XXH64 primes (org.apache.spark.sql.catalyst.expressions.XXH64)
+  private final val Prime1 = 0x9E3779B185EBCA87L
+  private final val Prime2 = 0xC2B2AE3D27D4EB4FL
+  private final val Prime3 = 0x165667B19E3779F9L
+  private final val Prime4 = 0x85EBCA77C2B2AE63L
+  private final val Prime5 = 0x27D4EB2F165667C5L
+
+  // Spark's `xxhash64` seed: the fold start of every band hash
+  private final val BandSeed = 42L
+
+  /** Signature over the non-null elements of `hashes`. */
+  def signature(hashes: ArrayData, numHashes: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(signature(nonNullLongs(hashes), numHashes))
+
+  /** Component i is min over s of `XXH64.hashLong(s, i)`, Long.MaxValue
+    * for an empty set. `hashLong(s, i)` is
+    * `fmix(rotl((i + P5 + 8) ^ (rotl(s·P2, 31)·P1), 27)·P1 + P4)`: the
+    * `rotl(s·P2, 31)·P1` half depends on the input only, so it is
+    * computed once per element instead of once per (element, seed).
+    */
+  def signature(hashes: Array[Long], numHashes: Int): Array[Long] = {
+    val n = hashes.length
+    val mixed = new Array[Long](n)
+    var j = 0
+    while (j < n) {
+      mixed(j) = java.lang.Long.rotateLeft(hashes(j) * Prime2, 31) * Prime1
+      j += 1
+    }
     val out = new Array[Long](numHashes)
     var i = 0
     while (i < numHashes) {
+      val seeded = i.toLong + Prime5 + 8L
       var mn = Long.MaxValue
-      var j = 0
+      j = 0
       while (j < n) {
-        if (!hashes.isNullAt(j)) {
-          val h = XXH64.hashLong(hashes.getLong(j), i.toLong)
-          if (h < mn) mn = h
-        }
+        var h = java.lang.Long.rotateLeft(seeded ^ mixed(j), 27) * Prime1 + Prime4
+        h ^= h >>> 33
+        h *= Prime2
+        h ^= h >>> 29
+        h *= Prime3
+        h ^= h >>> 32
+        if (h < mn) mn = h
         j += 1
       }
       out(i) = mn
       i += 1
     }
-    new GenericArrayData(out)
+    out
+  }
+
+  /** Band hashes of a null-free signature: band b is Spark's
+    * `xxhash64(slice(sig, b·r+1, r))` with r = |sig| / bands, the fold
+    * `hashLong(sig(b·r + t), acc)` from acc = 42. A null signature
+    * hashes every band to the seed, as `xxhash64(null)` does.
+    */
+  def bandHashes(sig: Array[Long], bands: Int): Array[Long] = {
+    val out = new Array[Long](bands)
+    if (sig == null) {
+      java.util.Arrays.fill(out, BandSeed)
+      return out
+    }
+    val r = sig.length / bands
+    var b = 0
+    while (b < bands) {
+      var acc = BandSeed
+      var t = b * r
+      val end = t + r
+      while (t < end) {
+        acc = XXH64.hashLong(sig(t), acc)
+        t += 1
+      }
+      out(b) = acc
+      b += 1
+    }
+    out
+  }
+
+  def bandHashes(sig: ArrayData, bands: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(
+      bandHashes(if (sig == null) null else nonNullLongs(sig), bands))
+
+  private def nonNullLongs(a: ArrayData): Array[Long] = {
+    val n = a.numElements()
+    var nulls = 0
+    var j = 0
+    while (j < n) { if (a.isNullAt(j)) nulls += 1; j += 1 }
+    if (nulls == 0) return a.toLongArray()
+    val out = new Array[Long](n - nulls)
+    var w = 0
+    j = 0
+    while (j < n) {
+      if (!a.isNullAt(j)) { out(w) = a.getLong(j); w += 1 }
+      j += 1
+    }
+    out
+  }
+}
+
+/** One document's LSH sketch, computed in one pass over its text: the
+  * sorted distinct shingle hashes, the 1-byte-per-component signature
+  * sketch and the band hashes. The signature itself stays inside the
+  * kernel. Each output equals the expression chain the batch operators
+  * plan: `shingle_hash_set(text, k)`, `pack_low_bytes(minhash_signature(
+  * sh, numHashes))` and `minhash_bands(minhash_signature(sh, numHashes),
+  * bands)`.
+  */
+object MinHashSketch {
+  final case class Sketch(sh: Array[Long], sigb: Array[Byte], buckets: Array[Long])
+
+  def sketch(text: UTF8String, shingleK: Int, numHashes: Int, bands: Int): Sketch = {
+    val sh = ShingleHashesImpl.hashArray(text, shingleK, ShingleHashesImpl.XxhDistinctSorted)
+    val sig = MinHashImpl.signature(sh, numHashes)
+    Sketch(sh, MinHashBytesImpl.packLowBytes(sig), MinHashImpl.bandHashes(sig, bands))
   }
 }
 
@@ -43,12 +151,13 @@ object MinHashBytesImpl {
     * carrying it through a bucket self-join costs ~1/16th of carrying
     * the signature itself.
     */
-  def packLowBytes(sig: ArrayData): Array[Byte] = {
-    val n = sig.numElements()
-    val out = new Array[Byte](n)
+  def packLowBytes(sig: ArrayData): Array[Byte] = packLowBytes(sig.toLongArray())
+
+  def packLowBytes(sig: Array[Long]): Array[Byte] = {
+    val out = new Array[Byte](sig.length)
     var i = 0
-    while (i < n) {
-      out(i) = (sig.getLong(i) & 0xffL).toByte
+    while (i < sig.length) {
+      out(i) = (sig(i) & 0xffL).toByte
       i += 1
     }
     out
@@ -141,5 +250,37 @@ case class MinHashSignature(child: Expression, numHashes: Int) extends UnaryExpr
     defineCodeGen(ctx, ev, c => s"graft.functions.MinHashImpl.signature($c, $numHashes)")
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
+    copy(child = newChild)
+}
+
+/** `minhash_bands(array<long>, bands) -> array<long>`: the LSH band
+  * hashes of a signature ([[MinHashImpl.bandHashes]]), one codegen'd
+  * static call in place of the interpreted `transform(sequence(0,
+  * bands-1), b -> xxhash64(slice(sig, b·r+1, r)))` lambda. Never null:
+  * a null signature bands to the seed, exactly as that lambda did.
+  */
+case class MinHashBands(child: Expression, bands: Int) extends UnaryExpression {
+  require(bands >= 1, s"bands must be >= 1, got $bands")
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case other =>
+      TypeCheckResult.TypeCheckFailure(s"minhash_bands requires array<long>, got ${other.sql}")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "minhash_bands"
+
+  override def eval(input: InternalRow): Any =
+    MinHashImpl.bandHashes(child.eval(input).asInstanceOf[ArrayData], bands)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${classOf[ArrayData].getName} ${ev.value} = graft.functions.MinHashImpl.bandHashes(
+        ${c.isNull} ? null : ${c.value}, $bands);""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashBands =
     copy(child = newChild)
 }

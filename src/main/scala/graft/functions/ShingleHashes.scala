@@ -74,7 +74,13 @@ object ShingleHashesImpl {
     java.util.Arrays.copyOf(offs, n + 1)
   }
 
-  def hashes(text: UTF8String, k: Int, mode: Int): ArrayData = {
+  def hashes(text: UTF8String, k: Int, mode: Int): ArrayData =
+    new GenericArrayData(hashArray(text, k, mode))
+
+  /** [[hashes]] as a primitive array — the input of
+    * [[MinHashSketch.sketch]], which never boxes an element.
+    */
+  def hashArray(text: UTF8String, k: Int, mode: Int): Array[Long] = {
     val bytes = text.getBytes
     val offs = charOffsets(bytes)
     val nChars = offs.length - 1
@@ -107,8 +113,8 @@ object ShingleHashesImpl {
         if (w == 0 || out(r) != out(w - 1)) { out(w) = out(r); w += 1 }
         r += 1
       }
-      new GenericArrayData(java.util.Arrays.copyOf(out, w))
-    } else new GenericArrayData(out)
+      if (w == n) out else java.util.Arrays.copyOf(out, w)
+    } else out
   }
 }
 

@@ -307,6 +307,16 @@ object Dedup {
       graft.functions.MinHashSignature(ColumnBridge.expression(shingleHashes), numHashes))
   }
 
+  /** LSH band hashes of a signature: band b is
+    * `xxhash64(slice(sig, b·r+1, r))`, computed by the native
+    * [[graft.functions.MinHashBands]] loop the streaming ingest kernel
+    * shares.
+    */
+  private def minhashBands(sig: Column, bands: Int): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(graft.functions.MinHashBands(ColumnBridge.expression(sig), bands))
+  }
+
   /** 1-byte-per-component sketch of a MinHash signature (binary). */
   private[graft] def packSigBytes(sig: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
@@ -411,17 +421,11 @@ object Dedup {
       withSketch: Boolean
   ): DataFrame = {
     require(numHashes % bands == 0, s"numHashes=$numHashes must divide into bands=$bands")
-    val rowsPerBand = numHashes / bands
     val sig = parallelize(df).select(
       col(idCol).as("__id"),
       minhashSignature(col(textCol), shingleK, numHashes).as("__sig")
     )
-    val bandCol = posexplode(
-      transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("__sig"), b * rowsPerBand + 1, lit(rowsPerBand)))
-      )
-    ).as(Seq("__band", "__bucket"))
+    val bandCol = posexplode(minhashBands(col("__sig"), bands)).as(Seq("__band", "__bucket"))
     if (withSketch) sig.select(col("__id"), packSigBytes(col("__sig")).as("__sigb"), bandCol)
     else sig.select(col("__id"), bandCol)
   }
@@ -827,7 +831,6 @@ object Dedup {
       persistIntermediate: Boolean = false
   ): DataFrame = {
     require(numHashes % bands == 0)
-    val rowsPerBand = numHashes / bands
     val base = parallelize(df).select(
       col(idCol).as("__id"),
       array_sort(transform(wordShingles(tokens(col(textCol)), n), s => xxhash64(s))).as("__sh")
@@ -841,12 +844,7 @@ object Dedup {
     val banded = sig.select(
       col("__id"),
       packSigBytes(col("__sig")).as("__sigb"),
-      posexplode(
-        transform(
-          sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("__sig"), b * rowsPerBand + 1, lit(rowsPerBand)))
-        )
-      ).as(Seq("__band", "__bucket"))
+      posexplode(minhashBands(col("__sig"), bands)).as(Seq("__band", "__bucket"))
     )
     // signature-agreement prefilter inline in the bucket join (see
     // estimateCut): kills the S-curve's low-j candidate mass inside

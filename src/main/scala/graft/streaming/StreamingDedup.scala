@@ -1,13 +1,15 @@
 package graft.streaming
 
-import graft.functions.JaccardImpl
+import graft.functions.{JaccardImpl, MinHashImpl, MinHashSketch}
 import graft.operators.Dedup
 
-import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalRowsBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Incremental (streaming) near-duplicate detection — the pipeline shape
@@ -17,11 +19,15 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   * the full batch LSH join.
   *
   * Per micro-batch (foreachBatch):
-  *   1. MinHash signatures + banded LSH buckets for the batch's docs —
-  *      the same banding as [[graft.operators.Dedup.minhashCandidates]],
-  *      so the accumulated result is identical to the batch operator run
-  *      over the union (gated against the same exhaustive oracle, and
-  *      asserted equal to the batch operator in StreamingDedupSpec).
+  *   1. Each document is sketched once, inside the batch's own tasks, by
+  *      the [[graft.functions.MinHashSketch]] kernel: its sorted shingle
+  *      hashes, signature sketch and banded LSH buckets in one pass over
+  *      the text. The banding is the one
+  *      [[graft.operators.Dedup.minhashCandidates]] plans (the same
+  *      primitive loops), so the accumulated result is identical to the
+  *      batch operator run over the union (gated against the same
+  *      exhaustive oracle, and asserted equal to the batch operator in
+  *      StreamingDedupSpec).
   *      One deliberate divergence: the batch operator's OVERSIZED-BUCKET
   *      guard (maxBucket sub-splitting, which trades bounded recall loss
   *      in degenerate buckets for a cost bound) has no streaming
@@ -45,14 +51,17 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   *      buckets + shingles to the index — parquet appends, so the index
   *      survives restarts and is readable by any later job.
   *
-  * Scale shape: a micro-batch broadcasts its bucket rows, so the index
-  * streams past them map-side, and its verify reads the candidates'
-  * shingle rows alone (the id-partitioned files they hash into, filtered
-  * by id): no micro-batch shuffles, and no per-batch cost grows with the
-  * shingle log. A catch-up batch — past the broadcast's band-row budget
-  * or the verify's candidate budget — runs the direct plan instead:
-  * shuffled joins with the batch as build side, and the candidates
-  * joined against the whole shingle log.
+  * Scale shape: the sketch runs in the batch's tasks whatever the batch
+  * is (a local frame included: the sketched frame is a scan of the
+  * kernel's RDD, so no optimizer rule evaluates it on the driver) and is
+  * persisted by the first job. A micro-batch broadcasts its bucket rows,
+  * so the index streams past them map-side, and its verify reads the
+  * candidates' shingle rows alone (the id-partitioned files they hash
+  * into, filtered by id): no micro-batch shuffles, and no per-batch cost
+  * grows with the shingle log. A catch-up batch — past the broadcast's
+  * band-row budget or the verify's candidate budget — runs the direct
+  * plan instead: shuffled joins with the batch as build side, and the
+  * candidates joined against the whole shingle log.
   *
   * Delivery: all three datasets (pairs, bands index, shingles) live in a
   * [[CommitLog]] — data files are invisible until their manifest
@@ -72,7 +81,7 @@ object StreamingDedup {
   // are deterministic; both paths drop precisely the same pairs)
   private def bandsSchema = StructType(Seq(
     StructField("id", LongType), StructField("band", IntegerType), StructField("bucket", LongType),
-    StructField("sigb", org.apache.spark.sql.types.BinaryType)))
+    StructField("sigb", BinaryType)))
   private def shinglesSchema = StructType(Seq(
     StructField("id", LongType), StructField("sh", ArrayType(LongType))))
   private def pairsSchema = StructType(Seq(
@@ -274,27 +283,30 @@ object StreamingDedup {
       s"numHashes=$numHashes must divide into bands=$bands")
     val bandsDir = s"$workDir/bands"
     requireBandsSchema(bandsDir)
-    val rowsPerBand = numHashes / bands
     // the id is hashed (xxhash64) by both partition prunes against logs
     // whose compaction writer hashed LONGS — an IntegerType id from a
     // batch-mode caller would hash differently, prune away the true
     // partitions, and silently miss duplicate pairs (ADVICE r16): pin
     // the type at entry, exactly like incrementalNearDuplicates does
-    val base = batch.select(
-      col("id").cast("long").as("id"),
-      Dedup.minhashSignature(col("text"), shingleK, numHashes).as("sig"),
-      Dedup.sortedShingleHashes(col("text"), shingleK).as("sh"))
+    val in = batch.select(col("id").cast("long").as("id"), col("text"))
+    require(in.schema("text").dataType == StringType,
+      s"text column must be a string, got ${in.schema("text").dataType.sql}")
+    // the kernel sketches the batch inside its own tasks: the frame is a
+    // scan of the kernel's RDD, so Catalyst never sees the sketch (as a
+    // projection over a local batch, ConvertToLocalRelation would
+    // evaluate it interpreted on the driver); the job below that counts
+    // the band rows fills the persisted frame
+    val base = InternalRowsBridge.dataFrame(spark,
+      in.queryExecution.toRdd.mapPartitions(sketchRows(_, shingleK, numHashes, bands)),
+      StructType(Seq(
+        StructField("id", LongType, in.schema("id").nullable),
+        StructField("sh", ArrayType(LongType, containsNull = false), in.schema("text").nullable),
+        StructField("sigb", BinaryType, in.schema("text").nullable),
+        StructField("buckets", ArrayType(LongType, containsNull = false), nullable = false))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val newBands = base.select(
-        col("id"),
-        Dedup.packSigBytes(col("sig")).as("sigb"),
-        posexplode(
-          transform(
-            sequence(lit(0), lit(bands - 1)),
-            b => xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))
-          )
-        ).as(Seq("band", "bucket")))
+        col("id"), col("sigb"), posexplode(col("buckets")).as(Seq("band", "bucket")))
       val newSh = base.select(col("id"), col("sh"))
 
       // ONE job over the batch (it also fills the persisted `base`): its
@@ -459,6 +471,24 @@ object StreamingDedup {
         shFilesSel.size, shFilesAll.size,
         bytesOf(shinglesDir, shFilesSel), bytesOf(shinglesDir, shFilesAll))
     } finally base.unpersist()
+  }
+
+  /** (id, text) rows → (id, sh, sigb, buckets) through the
+    * [[MinHashSketch]] kernel. A null text keeps its row: null `sh` and
+    * `sigb`, every band at the seed, as `xxhash64` of a null slice.
+    */
+  private def sketchRows(
+      rows: Iterator[InternalRow], shingleK: Int, numHashes: Int, bands: Int): Iterator[InternalRow] = {
+    val nullBuckets = UnsafeArrayData.fromPrimitiveArray(MinHashImpl.bandHashes(null: Array[Long], bands))
+    rows.map { r =>
+      val id = if (r.isNullAt(0)) null else r.getLong(0)
+      if (r.isNullAt(1)) new GenericInternalRow(Array[Any](id, null, null, nullBuckets))
+      else {
+        val s = MinHashSketch.sketch(r.getUTF8String(1), shingleK, numHashes, bands)
+        new GenericInternalRow(Array[Any](id, UnsafeArrayData.fromPrimitiveArray(s.sh), s.sigb,
+          UnsafeArrayData.fromPrimitiveArray(s.buckets)))
+      }
+    }
   }
 
   /** The distinct candidate pairs, collected in one job with no

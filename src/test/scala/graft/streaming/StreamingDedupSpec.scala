@@ -4,6 +4,8 @@ import graft.SparkTestSession
 import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -457,6 +459,63 @@ class StreamingDedupSpec extends AnyFunSuite {
       assert(raw.size == raw.distinct.size, s"budget $budget: duplicate raw pairs $raw")
       assert(raw.toSet == batchPairs(b1.union(b2)), s"budget $budget: $raw")
     }
+  }
+
+  test("a null text or a null id writes the rows the sketch expression chain wrote") {
+    import spark.implicits._
+    val batch = Seq[(java.lang.Long, String)]((1L, base), (2L, base), (3L, null),
+      (null, base + "x"), (4L, ""), (5L, "abc")).toDF("id", "text")
+    val work = java.nio.file.Files.createTempDirectory("sdedup-nulls").toString
+    StreamingDedup.incrementalNearDuplicatesInit(spark, work)
+    StreamingDedup.processBatch(batch, work, 0.9, 5, 120, 20, batchId = Some(0L))
+    // the logs as the Catalyst chain built them before the sketch kernel
+    val sig = batch.select(col("id").cast("long").as("id"),
+      graft.operators.Dedup.minhashSignature(col("text"), 5, 120).as("sig"),
+      graft.operators.Dedup.sortedShingleHashes(col("text"), 5).as("sh"))
+    val wantBands = sig.select(col("id"), graft.operators.Dedup.packSigBytes(col("sig")).as("sigb"),
+      posexplode(transform(sequence(lit(0), lit(19)),
+        b => xxhash64(slice(col("sig"), b * 6 + 1, lit(6))))).as(Seq("band", "bucket")))
+    def rows(df: DataFrame, cols: String*): Seq[String] =
+      df.select(cols.map(col): _*).collect().map(_.toSeq.map {
+        case a: Array[Byte] => a.mkString("bytes[", ",", "]")
+        case v => String.valueOf(v)
+      }.mkString("|")).toSeq.sorted
+    val bandCols = Seq("id", "band", "bucket", "sigb")
+    assert(rows(CommitLog.read(spark, s"$work/bands"), bandCols: _*) == rows(wantBands, bandCols: _*))
+    assert(rows(CommitLog.read(spark, s"$work/shingles"), "id", "sh") == rows(sig, "id", "sh"))
+    // a null text bands every row to the seed, with a null sketch
+    assert(rows(CommitLog.read(spark, s"$work/bands").where(col("id") === 3L), "bucket", "sigb") ==
+      Seq.fill(20)("42|null"))
+    assert(pairRows(work) == Set((1L, 2L, 1.0)))
+  }
+
+  test("processBatch over a local frame sketches inside its tasks, not in the optimizer") {
+    // records every LocalRelation an optimized plan of the batch holds:
+    // a sketch column there means the optimizer folded the sketch into a
+    // local relation, i.e. evaluated it on the driver
+    val session = spark.newSession()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
+    session.experimental.extraOptimizations = Seq(new Rule[LogicalPlan] {
+      override def apply(plan: LogicalPlan): LogicalPlan = {
+        plan.foreach {
+          case l: LocalRelation => seen.add(l.output.map(_.name))
+          case _ =>
+        }
+        plan
+      }
+    })
+    import session.implicits._
+    val batch = Seq((1L, base), (2L, base),
+      (3L, "completely different text about spark partitions " * 5)).toDF("id", "text")
+    val work = java.nio.file.Files.createTempDirectory("sdedup-intask").toString
+    StreamingDedup.incrementalNearDuplicatesInit(session, work)
+    StreamingDedup.processBatch(batch, work, 0.9, 5, 120, 20, batchId = Some(0L))
+    import scala.jdk.CollectionConverters._
+    val relations = seen.asScala.toSeq
+    assert(relations.nonEmpty, "the recording rule saw no local relation")
+    val sketched = relations.filter(_.exists(Set("sh", "sig", "sigb", "buckets")))
+    assert(sketched.isEmpty, s"sketch columns in a local relation: $sketched")
+    assert(pairRows(work) == Set((1L, 2L, 1.0)))
   }
 
   test("the driver-side id partition equals Spark's pmod(xxhash64(id), m)") {
