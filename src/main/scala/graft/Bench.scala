@@ -128,7 +128,7 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     try Files.createDirectories(Paths.get(plansDir))
     catch { case _: Throwable => () }
-    SparkEntry.streamPlansDir = Some(Paths.get(plansDir))
+    StreamGates.streamPlansDir = Some(Paths.get(plansDir))
     // dev aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run (unset for the driver)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     SparkEntry.queries.toSeq.sortBy(_._1)

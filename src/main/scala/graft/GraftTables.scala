@@ -22,7 +22,13 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *     o_totalprice (double-as-string)
   *   - `events`  → key `lpad(user_id, 6, '0')`; quals event_type (utf8),
   *     value (double-as-string); cell timestamp = event ts in µs —
-  *     a genuinely multi-version table (one version per event).
+  *     a genuinely multi-version table (one version per event);
+  *     `events_flush` is the same layout plus two end-of-stream sentinels.
+  *   - `documents` → key `lpad(doc_id, 8, '0')`; qual text (utf8); cell
+  *     timestamp spreads the docs over 8 one-second arrival slots.
+  *
+  * [[layouts]] holds each table's reader options; the batch readers and
+  * [[changeStream]] below all start from it.
   *
   * Seeding collects the parquet to the driver: this populates the test
   * emulator only (a real deployment reads from the Bigtable service,
@@ -164,10 +170,8 @@ object GraftTables {
     * the object Scaladoc) so the conf stays pinned across execution, not
     * just planning — SQLConf is captured when the job RUNS.
     */
-  private[graft] def eventsWithMicros(spark: SparkSession, path: String): Array[org.apache.spark.sql.Row] = {
-    val prevNanos = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try {
+  private[graft] def eventsWithMicros(spark: SparkSession, path: String): Array[org.apache.spark.sql.Row] =
+    SessionConf.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       val raw = spark.read.parquet(path)
       val tsUs = raw.schema("ts").dataType match {
         case LongType => expr("(ts - pmod(ts, 1000L)) div 1000L")
@@ -189,17 +193,49 @@ object GraftTables {
             s"fixture $path likely changed physical unit; update the decode branch")
       }
       rows
-    } finally {
-      prevNanos match {
-        case Some(v) => spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None    => spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
     }
+
+  /** Each fixture table's reader options, declared once (the layouts
+    * in the object Scaladoc): every batch reader and change stream over
+    * a fixture table starts from its entry here.
+    */
+  val layouts: Map[String, Map[String, String]] = {
+    val events = Map("columnFamily" -> "f", "partitionCols" -> "u_key",
+      "qualifiers" -> "event_type:string,value:double")
+    Map(
+      "nation" -> Map("columnFamily" -> "f", "partitionCols" -> "n_key",
+        "qualifiers" -> "n_name:string,n_regionkey:long"),
+      "orders" -> Map("columnFamily" -> "f", "partitionCols" -> "o_orderstatus,o_orderpriority,o_key",
+        "separator" -> "#", "qualifiers" -> "o_custkey:long,o_totalprice:double"),
+      "events" -> events,
+      "events_flush" -> events,
+      "documents" -> Map("columnFamily" -> "f", "partitionCols" -> "d_key", "qualifiers" -> "text:string"))
+      .map { case (table, opts) => table -> (opts + ("table" -> table)) }
   }
 
-  private def reader(spark: SparkSession, sfDir: String) = {
+  private def fixtureOptions(sfDir: String, table: String, extraOptions: Map[String, String]) =
+    layouts(table) + ("store" -> storeName(sfDir)) ++ extraOptions
+
+  private def read(spark: SparkSession, sfDir: String, table: String,
+      extraOptions: Map[String, String]): DataFrame = {
     ensure(spark, sfDir)
-    spark.read.format("bigtable").option("store", storeName(sfDir))
+    spark.read.format("bigtable").options(fixtureOptions(sfDir, table, extraOptions)).load()
+  }
+
+  /** `table` as a connector change stream over the fixture store: every
+    * cell version (`onlyReadLatest=false`) of the whole table, replayed
+    * in `stepMicros`-wide slices of cell time per micro-batch.
+    * `extraOptions` override the table's layout.
+    */
+  def changeStream(spark: SparkSession, sfDir: String, table: String, stepMicros: Long,
+      extraOptions: Map[String, String] = Map.empty): DataFrame = {
+    ensure(spark, sfDir)
+    spark.readStream.format("bigtable")
+      .options(fixtureOptions(sfDir, table, Map(
+        "onlyReadLatest" -> "false",
+        "allowFullScan" -> "true",
+        "streamStepMicros" -> stepMicros.toString) ++ extraOptions))
+      .load()
   }
 
   // -------------------------------------------------------------------
@@ -230,67 +266,31 @@ object GraftTables {
   /** nation over the connector THROUGH the protobuf wire transport. */
   def nationRemote(spark: SparkSession, sfDir: String): DataFrame = {
     ensureRemote(spark, sfDir)
-    spark.read.format("bigtable").option("store", remoteStoreName(sfDir))
-      .option("table", "nation")
-      .option("columnFamily", "f")
-      .option("partitionCols", "n_key")
-      .option("qualifiers", "n_name:string,n_regionkey:long")
+    spark.read.format("bigtable")
+      .options(layouts("nation") + ("store" -> remoteStoreName(sfDir)))
       .load()
   }
 
   /** nation over the connector: key n_key = lpad(n_nationkey, 4, '0'). */
   def nation(spark: SparkSession, sfDir: String, extraOptions: Map[String, String] = Map.empty): DataFrame =
-    extraOptions.foldLeft(
-      reader(spark, sfDir)
-        .option("table", "nation")
-        .option("columnFamily", "f")
-        .option("partitionCols", "n_key")
-        .option("qualifiers", "n_name:string,n_regionkey:long")
-    ) { case (r, (k, v)) => r.option(k, v) }
-      .load()
+    read(spark, sfDir, "nation", extraOptions)
 
   /** nation split across two column families (multi-family extension):
     * n_name in `meta`, n_regionkey in `stats`.
     */
   def nationMultiFamily(spark: SparkSession, sfDir: String): DataFrame =
-    reader(spark, sfDir)
-      .option("table", "nation_mf")
-      .option("columnFamily", "meta")
-      .option("partitionCols", "n_key")
-      .option("qualifiers", "meta:n_name:string,stats:n_regionkey:long")
-      .load()
+    read(spark, sfDir, "nation", Map("table" -> "nation_mf", "columnFamily" -> "meta",
+      "qualifiers" -> "meta:n_name:string,stats:n_regionkey:long"))
 
   /** orders over the connector: composite (o_orderstatus, o_orderpriority, o_key). */
   def orders(spark: SparkSession, sfDir: String, extraOptions: Map[String, String] = Map.empty): DataFrame =
-    extraOptions.foldLeft(
-      reader(spark, sfDir)
-        .option("table", "orders")
-        .option("columnFamily", "f")
-        .option("partitionCols", "o_orderstatus,o_orderpriority,o_key")
-        .option("separator", "#")
-        .option("qualifiers", "o_custkey:long,o_totalprice:double")
-    ) { case (r, (k, v)) => r.option(k, v) }
-      .load()
+    read(spark, sfDir, "orders", extraOptions)
 
   /** events over the connector, all cell versions: one row per (u_key, ts). */
   def eventsAllVersions(spark: SparkSession, sfDir: String, extraOptions: Map[String, String] = Map.empty): DataFrame =
-    extraOptions.foldLeft(
-      reader(spark, sfDir)
-        .option("table", "events")
-        .option("columnFamily", "f")
-        .option("partitionCols", "u_key")
-        .option("qualifiers", "event_type:string,value:double")
-        .option("onlyReadLatest", "false")
-    ) { case (r, (k, v)) => r.option(k, v) }
-      .load()
+    read(spark, sfDir, "events", Map("onlyReadLatest" -> "false") ++ extraOptions)
 
   /** events over the connector, latest version per column only (A11). */
-  def eventsLatest(spark: SparkSession, sfDir: String): DataFrame =
-    reader(spark, sfDir)
-      .option("table", "events")
-      .option("columnFamily", "f")
-      .option("partitionCols", "u_key")
-      .option("qualifiers", "event_type:string,value:double")
-      .option("onlyReadLatest", "true")
-      .load()
+  def eventsLatest(spark: SparkSession, sfDir: String, extraOptions: Map[String, String] = Map.empty): DataFrame =
+    read(spark, sfDir, "events", Map("onlyReadLatest" -> "true") ++ extraOptions)
 }

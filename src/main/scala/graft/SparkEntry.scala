@@ -29,63 +29,12 @@ object SparkEntry {
       .orderBy(col("r_name"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  /** Where [[snapshotStreamingPlan]] writes: set by [[Bench]] to its plans
-    * dir for the run, unset everywhere else, so only a Bench run writes
-    * snapshot files (a Verify run or a test never rewrites the committed
-    * ones).
-    */
-  @volatile private[graft] var streamPlansDir: Option[java.nio.file.Path] = None
-
-  /** Persist a completed streaming query's physical plan next to the
-    * batch plan snapshots (Bench snapshots only the post-replay batch
-    * plan of the returned DataFrame — the streaming plan, watermarks and
-    * state operators included, lives in the StreamingQuery itself).
-    */
-  private def snapshotStreamingPlan(
-      q: org.apache.spark.sql.streaming.StreamingQuery, name: String): Unit =
-    try streamPlansDir.foreach { dir =>
-      val buf = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) { q.explain() }
-      java.nio.file.Files.write(
-        dir.resolve(s"$name.stream.txt"),
-        // normalized (PlanSnapshot): streaming plans embed runIds,
-        // temp checkpoint paths and batch timestamps — strip them so
-        // committed snapshots only diff on structure (ADVICE r12)
-        graft.tools.PlanSnapshot.normalize(new String(buf.toByteArray, "UTF-8"))
-          .getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
-
-  /** Run a streaming replay gate with a small shuffle-partition count.
-    * Streaming state stores are per shuffle partition PER stateful
-    * operator PER micro-batch (checkpoint delta files, commit fsyncs):
-    * at the session default of 32 partitions a 5-batch replay of a
-    * 2-operator query touches hundreds of state files for kilobytes of
-    * fixture state. 4 partitions cut that fixed overhead ~8× without
-    * changing any result (gates order their output; state semantics are
-    * partition-count-independent). A production deployment sizes
-    * `spark.sql.shuffle.partitions` to its real state volume instead —
-    * this helper only scopes the REPLAY-GATE setting; the conf is
-    * captured by the query at `start()` and restored after the body.
-    */
-  /** Documents-table on-disk bytes under which the stream gates run at
-    * 4 shuffle partitions (micro-batch frames: task-scheduling overhead
-    * beats parallelism at fixture scale — measured on the readStream
-    * gates). PAST the floor the session default stands: at sf10 a
-    * catch-up batch is 10M band rows, and 4-partition shuffled-hash
-    * builds blow the per-task memory budget ("Can't acquire 8589934592
-    * bytes to build hash relation" — found by the r17 sf10 run).
-    * 64 MB ≈ sf1; the scale-proof runs (sf10+) keep their
-    * SPARK_GRAFT_SHUFFLE_PARTITIONS sizing.
-    */
-  private val FastStreamMaxDocBytes = 64L * 1024 * 1024
-
   /** Planted-id shift: max(keyCol)+1 over `df`, derived from the corpus
     * so planted rows can never collide with real ids at any scale
     * factor. `max` over zero rows is NULL and `.getLong(0)` on it NPEs,
     * so an empty table degrades to shift=1 instead (ADVICE r17).
     */
-  private def shiftPastMax(df: DataFrame, keyCol: String): Long = {
+  private[graft] def shiftPastMax(df: DataFrame, keyCol: String): Long = {
     val row = df.agg(max(col(keyCol).cast("long"))).head
     (if (row.isNullAt(0)) 0L else row.getLong(0)) + 1L
   }
@@ -110,25 +59,6 @@ object SparkEntry {
     df.repartitionByRange(
         graft.operators.Spread.scaledPartitions(df.sparkSession, df), keys: _*)
       .sortWithinPartitions(keys: _*)
-
-  private def dirBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else f.length
-    walk(new java.io.File(path))
-  }
-
-  private def withFastStreams[T](s: SparkSession, dir: String)(body: => T): T = {
-    val conf = s.conf
-    val prev = conf.getOption("spark.sql.shuffle.partitions")
-    if (dirBytes(s"$dir/documents.parquet") <= FastStreamMaxDocBytes)
-      conf.set("spark.sql.shuffle.partitions", "4")
-    try body
-    finally prev match {
-      case Some(v) => conf.set("spark.sql.shuffle.partitions", v)
-      case None    => conf.unset("spark.sql.shuffle.partitions")
-    }
-  }
 
   /** Inverted-index table for `sfDir`'s documents, built once per JVM
     * per scale factor (the deployment shape: build is a one-time job,
@@ -247,43 +177,6 @@ object SparkEntry {
       dir
     })
 
-  /** Events replayed as a file stream INTO a mutable store through
-    * `writeStream.format("bigtable")` — once per JVM per scale factor;
-    * the gate then batch-reads the store back through the connector.
-    */
-  private val btStreamWriteStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def btStreamWriteStore(s: SparkSession, sfDir: String): String =
-    btStreamWriteStores.computeIfAbsent(sfDir, { _ =>
-      val name = s"${GraftTables.storeName(sfDir)}-streamwrite"
-      graft.store.BigtableStores.register(name, new graft.store.ConcurrentBigtable)
-      val work = java.nio.file.Files.createTempDirectory("graft-btsw").toString
-      // explicit schema omitting ts: this stream keys on event_id and
-      // pins cell timestamps to writeTimestampMicros, so the ts column
-      // (whose physical type has drifted across fixture regenerations)
-      // is never read at all
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType)))
-      s.read.schema(schema).parquet(s"$sfDir/events.parquet")
-        .repartition(4).write.parquet(s"$work/src") // 4 files -> several epochs
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$work/src")
-        .select(
-          lpad(col("event_id").cast("string"), 8, "0").as("e_key"),
-          col("event_type"), col("user_id"), col("value"))
-        .writeStream.format("bigtable")
-        .option("store", name).option("table", "events_w").option("columnFamily", "f")
-        .option("partitionCols", "e_key")
-        .option("qualifiers", "event_type:string,user_id:long,value:double")
-        .option("checkpointLocation", s"$work/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
-      name
-    })
-
   /** Seeds (once per JVM per scale factor) a two-version `nation_v`
     * table through the batch WRITE path — v1 at FixedTs, v2 with the
     * name uppercased one second later, both pinned via the `_timestamp`
@@ -307,18 +200,13 @@ object SparkEntry {
       val v2 = base
         .withColumn("n_name", upper(col("n_name")))
         .withColumn("_timestamp", timestamp_micros(lit(GraftTables.FixedTs + 1000000L)))
-      val w1 = v1.write.format("bigtable").mode("overwrite")
-      opts.foreach { case (k, v) => w1.option(k, v) }
-      w1.save()
-      val w2 = v2.write.format("bigtable").mode("append")
-      opts.foreach { case (k, v) => w2.option(k, v) }
-      w2.save()
+      v1.write.format("bigtable").mode("overwrite").options(opts).save()
+      v2.write.format("bigtable").mode("append").options(opts).save()
       storeName
     })
     s.read.format("bigtable")
-      .option("store", name).option("table", "nation_v").option("columnFamily", "f")
-      .option("partitionCols", "n_key").option("qualifiers", "n_name:string")
-      .option("allowFullScan", "true")
+      .options(Map("store" -> name, "table" -> "nation_v", "columnFamily" -> "f",
+        "partitionCols" -> "n_key", "qualifiers" -> "n_name:string", "allowFullScan" -> "true"))
   }
 
   /** Force every once-per-JVM fixture for `sfDir` (index builds, stream
@@ -339,12 +227,21 @@ object SparkEntry {
     exactKnnTop10(s, sfDir).count()
     ivfIndexDir(s, sfDir)
     ivfStreamDir(s, sfDir)
-    btStreamWriteStore(s, sfDir)
+    StreamGates.btStreamWriteStore(s, sfDir)
     btVersionedNation(s, sfDir)
     (System.nanoTime() - t0) / 1e9
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = batchQueries ++ StreamGates.queries
+
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omit for non-SQL-expressible ops.
+    */
+  def oracleSql: Map[String, String] = batchOracleSql ++ StreamGates.oracleSql
+
+  /** Every gate but the streaming replays, which live in [[StreamGates]]. */
+  private[graft] def batchQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- §2A A4: partition pruning, equality (composer.rs:163-192) ---
     "bt_key_eq" -> ((s, dir) =>
       GraftTables.nation(s, dir)
@@ -367,12 +264,7 @@ object SparkEntry {
         graft.store.BigtableStores.register(name, store)
       }
       s.read.format("bigtable")
-        .option("store", name)
-        .option("table", "nation")
-        .option("columnFamily", "f")
-        .option("partitionCols", "n_key")
-        .option("qualifiers", "n_name:string,n_regionkey:long")
-        .option("shipStore", "true")
+        .options(GraftTables.layouts("nation") + ("store" -> name) + ("shipStore" -> "true"))
         .load()
         .where(col("n_key").between("0003", "0015"))
         .select(col("n_key"), col("n_name"), col("n_regionkey"))
@@ -420,12 +312,7 @@ object SparkEntry {
             maxAttempts = faults + 1,
             sleep = _ => ()))
       s.read.format("bigtable")
-        .option("store", flaky)
-        .option("table", "nation")
-        .option("columnFamily", "f")
-        .option("partitionCols", "n_key")
-        .option("qualifiers", "n_name:string,n_regionkey:long")
-        .option("allowFullScan", "true")
+        .options(GraftTables.layouts("nation") + ("store" -> flaky) + ("allowFullScan" -> "true"))
         .load()
         .select(col("n_key"), col("n_name"), col("n_regionkey"))
         .orderBy(col("n_key"))
@@ -536,18 +423,9 @@ object SparkEntry {
         .orderBy(col("u_key"))),
 
     // --- §2A A8 relaxed: explicit full scan feeding a whole-table agg ---
-    "bt_full_scan_agg" -> ((s, dir) => {
-      GraftTables.ensure(s, dir)
-      s.read.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "nation")
-        .option("columnFamily", "f")
-        .option("partitionCols", "n_key")
-        .option("qualifiers", "n_name:string,n_regionkey:long")
-        .option("allowFullScan", "true")
-        .load()
-        .agg(count("*").as("n"), sum(col("n_regionkey")).as("sum_rk"))
-    }),
+    "bt_full_scan_agg" -> ((s, dir) =>
+      GraftTables.nation(s, dir, Map("allowFullScan" -> "true"))
+        .agg(count("*").as("n"), sum(col("n_regionkey")).as("sum_rk"))),
 
     // Columnar decode volume: a whole-table scan of events grouped on a
     // qualifier — the scan emits bounded ColumnarBatches (values decoded
@@ -555,20 +433,11 @@ object SparkEntry {
     // codegen through a vectorized ColumnarToRow, the parquet-reader
     // shape. Grouping on a qualifier keeps the aggregate in Spark, so
     // this times the actual columnar decode.
-    "bt_vectorized_agg" -> ((s, dir) => {
-      GraftTables.ensure(s, dir)
-      s.read.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "events")
-        .option("columnFamily", "f")
-        .option("partitionCols", "u_key")
-        .option("qualifiers", "event_type:string,value:double")
-        .option("allowFullScan", "true")
-        .load()
+    "bt_vectorized_agg" -> ((s, dir) =>
+      GraftTables.eventsLatest(s, dir, Map("allowFullScan" -> "true"))
         .groupBy(col("event_type"))
         .agg(count("*").as("n"), round(sum(col("value")), 4).as("sum_value"))
-        .orderBy(col("event_type"))
-    }),
+        .orderBy(col("event_type"))),
 
     // Aggregate pushdown (SupportsPushDownAggregates, beyond the
     // reference's roadmap): with the key range reported as EXACTLY
@@ -703,20 +572,14 @@ object SparkEntry {
       val name = s"${GraftTables.storeName(dir)}-writeback"
       if (!graft.store.BigtableStores.contains(name))
         graft.store.BigtableStores.register(name, new graft.store.ConcurrentBigtable)
-      val opts = Map(
-        "store" -> name, "table" -> "nation", "columnFamily" -> "f",
-        "partitionCols" -> "n_key", "qualifiers" -> "n_name:string,n_regionkey:long")
-      val w = s.read.parquet(s"$dir/nation.parquet")
+      val opts = GraftTables.layouts("nation") + ("store" -> name)
+      s.read.parquet(s"$dir/nation.parquet")
         .select(
           lpad(col("n_nationkey").cast("string"), 4, "0").as("n_key"),
           col("n_name"),
           col("n_regionkey").cast("long").as("n_regionkey"))
-        .write.format("bigtable").mode("overwrite")
-      opts.foreach { case (k, v) => w.option(k, v) }
-      w.save()
-      val r = s.read.format("bigtable").option("allowFullScan", "true")
-      opts.foreach { case (k, v) => r.option(k, v) }
-      r.load()
+        .write.format("bigtable").mode("overwrite").options(opts).save()
+      s.read.format("bigtable").options(opts + ("allowFullScan" -> "true")).load()
         .select(col("n_key"), col("n_name"), col("n_regionkey"))
         .orderBy(col("n_key"))
     }),
@@ -742,34 +605,11 @@ object SparkEntry {
         .orderBy(col("n_key"))
     }),
 
-    // --- STREAMING write: events replayed as a multi-epoch file stream
-    //     through writeStream.format("bigtable") (effectively-once via
-    //     pinned cell coordinates), then batch-read back ---
-    "stream_bt_write" -> ((s, dir) => withFastStreams(s, dir) {
-      val store = btStreamWriteStore(s, dir)
-      s.read.format("bigtable")
-        .option("store", store).option("table", "events_w").option("columnFamily", "f")
-        .option("partitionCols", "e_key")
-        .option("qualifiers", "event_type:string,user_id:long,value:double")
-        .option("allowFullScan", "true")
-        .load()
-        .select(col("e_key"), col("event_type"), col("user_id"), col("value"))
-        .orderBy(col("e_key"))
-    }),
-
     // --- runtime filtering (DPP): no static key predicate on the fact
     //     side — the broadcast dim's keys narrow the scan to point
     //     lookups at runtime via SupportsRuntimeV2Filtering ---
     "bt_dpp_join" -> ((s, dir) => {
-      GraftTables.ensure(s, dir)
-      val fact = s.read.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "nation")
-        .option("columnFamily", "f")
-        .option("partitionCols", "n_key")
-        .option("qualifiers", "n_name:string,n_regionkey:long")
-        .option("allowFullScan", "true")
-        .load()
+      val fact = GraftTables.nation(s, dir, Map("allowFullScan" -> "true"))
       val dim = s.read.parquet(s"$dir/nation.parquet")
         .where(col("n_nationkey") < 8)
         .select(lpad(col("n_nationkey").cast("string"), 4, "0").as("k"))
@@ -1134,13 +974,10 @@ object SparkEntry {
     //     The shuffle hint keeps the physical pick a shuffle join too.
     //     BloomJoinSpec asserts might_contain sits in the fact side's
     //     plan and the join stayed a ShuffledHashJoin. ---
-    "rel_bloom_join" -> ((s, dir) => {
-      val overrides = Seq(
+    "rel_bloom_join" -> ((s, dir) =>
+      SessionConf.withConf(s,
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      val prev = overrides.map { case (k, _) => k -> s.conf.getOption(k) }
-      overrides.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val l = s.read.parquet(s"$dir/lineitem.parquet")
         val o = s.read.parquet(s"$dir/orders.parquet")
           .where(col("o_orderpriority") === "1-URGENT" && col("o_orderstatus") === "F")
@@ -1150,16 +987,10 @@ object SparkEntry {
             round(sum(col("l_quantity")), 4).as("sum_qty"))
           .orderBy(col("o_orderpriority"))
         // force planning (and therefore bloom injection) under the
-        // overridden confs before they are restored below
+        // overridden confs before they are restored
         joined.queryExecution.executedPlan
         joined
-      } finally {
-        prev.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
-        }
-      }
-    }),
+      }),
 
     // --- window top-3 per segment on customer ---
     "rel_window" -> ((s, dir) => {
@@ -1171,616 +1002,6 @@ object SparkEntry {
         .where(col("rn") <= 3)
         .select(col("c_mktsegment"), col("c_custkey"), col("rn"))
         .orderBy(col("c_mktsegment"), col("rn"))
-    }),
-
-    // --- Structured Streaming: connector change-stream → windowed agg ---
-    // Runs the micro-batch stream to completion (AvailableNow, stepped
-    // offsets) into a memory sink, then returns the final result — so
-    // the streaming path sits inside the same oracle gate.
-    "stream_windowed_counts" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "events")
-        .option("columnFamily", "f")
-        .option("partitionCols", "u_key")
-        .option("qualifiers", "event_type:string,value:double")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        .option("streamStepMicros", "8000000000000") // ~3 months per batch
-        .load()
-      val counts = stream
-        .groupBy(window(col("_timestamp"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(unix_micros(col("w.start")).as("ws_us"), col("event_type"), col("n_events"))
-      val qname = s"stream_wc_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = counts.writeStream.format("memory").queryName(qname)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname).orderBy(col("ws_us"), col("event_type"))
-    }),
-
-    // --- streaming distinct-count SKETCH over the change stream: per
-    //     event_type distinct users via the KMV aggregator inside a
-    //     streaming aggregation. The state per group is ONE <=k-long
-    //     buffer (k=4096 → 32 KB) instead of the full user set — the
-    //     bounded-state way to run COUNT(DISTINCT) on an unbounded
-    //     stream. Gated in the exact-below-k regime (<=1500 distinct
-    //     users per type at every fixture SF), where the final sketch
-    //     answer equals DuckDB's exact count(DISTINCT). ---
-    "stream_distinct_sketch" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "events")
-        .option("columnFamily", "f")
-        .option("partitionCols", "u_key")
-        .option("qualifiers", "event_type:string,value:double")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        .option("streamStepMicros", "8000000000000")
-        .load()
-      val kmv = udaf(new graft.functions.KmvDistinct(4096))
-      val counts = stream
-        .groupBy(col("event_type"))
-        .agg(kmv(xxhash64(col("u_key"))).as("n_users"))
-      val qname = s"stream_ds_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = counts.writeStream.format("memory").queryName(qname)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname).orderBy(col("event_type"))
-    }),
-
-    // --- streaming quantiles: the KLL-style sketch as streaming state —
-    //     per event type, mergeable level buffers in the state store
-    //     across micro-batches; k=4096 >= any group's count pins the
-    //     EXACT nearest-rank regime, hash-matching DuckDB quantile_disc ---
-    "stream_quantiles" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "events")
-        .option("columnFamily", "f")
-        .option("partitionCols", "u_key")
-        .option("qualifiers", "event_type:string,value:double")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        .option("streamStepMicros", "8000000000000")
-        .load()
-      val kll = udaf(new graft.functions.KllQuantiles.Sketch(4096, Seq(0.5, 0.9)))
-      val agg = stream.groupBy(col("event_type")).agg(kll(col("value")).as("qv"))
-      val qname = s"stream_q_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = agg.writeStream.format("memory").queryName(qname)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(col("event_type"),
-          col("qv").getItem(0).as("p50"),
-          col("qv").getItem(1).as("p90"))
-        .orderBy(col("event_type"))
-    }),
-
-    // --- streaming heavy hitters: the Misra-Gries sketch as streaming
-    //     state — Spark maintains the <=k-counter buffer in the state
-    //     store across micro-batches (same mergeable-summary property as
-    //     the batch gate; k=4096 >= distinct users pins the EXACT
-    //     regime, so the final counts hash-match the true GROUP BY) ---
-    "stream_heavy_hitters" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "events")
-        .option("columnFamily", "f")
-        .option("partitionCols", "u_key")
-        .option("qualifiers", "event_type:string,value:double")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        .option("streamStepMicros", "8000000000000")
-        .load()
-      val mg = udaf(new graft.functions.FrequentItems.MisraGries(4096))
-      val agg = stream.agg(mg(col("u_key")).as("hh"))
-      val qname = s"stream_hh_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = agg.writeStream.format("memory").queryName(qname)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(explode(col("hh")).as("h"))
-        .select(col("h.item").as("u_key"), col("h.count_lb").as("n"))
-        .orderBy(desc("n"), col("u_key"))
-        .limit(20)
-    }),
-
-    // --- streaming exact dedup over the change stream: each distinct
-    //     (user, event_type) emitted once at first sight (append mode) ---
-    "stream_dedup" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "events")
-        .option("columnFamily", "f")
-        .option("partitionCols", "u_key")
-        .option("qualifiers", "event_type:string,value:double")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        .option("streamStepMicros", "8000000000000")
-        .load()
-      val deduped = graft.streaming.EventStreams.dedupStream(
-        stream.select(col("u_key"), col("event_type")), Seq("u_key", "event_type"))
-      val qname = s"stream_dd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = deduped.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname).orderBy(col("u_key"), col("event_type"))
-    }),
-
-    // --- multi-table change streams unioned into one aggregation: the
-    //     events and orders tables live in DIFFERENT timestamp domains
-    //     (event-time µs vs a fixed seed ts), so each source must step by
-    //     its own committed offset — the union would under-deliver if the
-    //     sources shared a watermark. Gated: counts match DuckDB over the
-    //     same two parquet tables. ---
-    "stream_union_counts" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      def src(table: String, partitionCols: String, quals: String) =
-        s.readStream.format("bigtable")
-          .option("store", GraftTables.storeName(dir))
-          .option("table", table)
-          .option("columnFamily", "f")
-          .option("partitionCols", partitionCols)
-          .option("separator", "#")
-          .option("qualifiers", quals)
-          .option("onlyReadLatest", "false")
-          .option("allowFullScan", "true")
-          .option("streamStepMicros", "8000000000000")
-          .load()
-      val ev = src("events", "u_key", "event_type:string,value:double")
-        .select(lit("events").as("src"), col("event_type").as("k"))
-      val ord = src("orders", "o_orderstatus,o_orderpriority,o_key", "o_custkey:long,o_totalprice:double")
-        .select(lit("orders").as("src"), col("o_orderstatus").as("k"))
-      val counts = ev.unionByName(ord).groupBy(col("src"), col("k")).agg(count(lit(1)).as("n"))
-      val qname = s"stream_un_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = counts.writeStream.format("memory").queryName(qname)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname).orderBy(col("src"), col("k"))
-    }),
-
-    // --- stream-stream inner join: purchases joined to views of the
-    //     same user within the preceding hour, both sides live change
-    //     streams. Both sides carry watermarks and the time bound is on
-    //     the watermarked event-time columns, so Spark derives state
-    //     eviction: view state is dropped once the watermark passes
-    //     v_ts + 1h, purchase state once it passes p_ts — bounded state
-    //     on an unbounded stream. The replay steps event time forward
-    //     monotonically between batches, so no on-time row is dropped
-    //     and results are identical to the unwatermarked join. ---
-    "stream_join" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      def src() = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "events")
-        .option("columnFamily", "f")
-        .option("partitionCols", "u_key")
-        .option("qualifiers", "event_type:string,value:double")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        .option("streamStepMicros", "8000000000000")
-        .load()
-      val p = src().where(col("event_type") === "purchase")
-        .select(col("u_key"), col("_timestamp").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val v = src().where(col("event_type") === "view")
-        .select(col("u_key").as("v_key"), col("_timestamp").as("v_ts"))
-        .withWatermark("v_ts", "1 hour")
-      val joined = p.join(
-        v,
-        col("u_key") === col("v_key") &&
-          col("v_ts") <= col("p_ts") &&
-          col("v_ts") > col("p_ts") - expr("INTERVAL 1 HOUR"),
-        "inner")
-      // stream-stream joins emit in APPEND mode only: the stream emits
-      // matched pairs; the count-per-user aggregation runs in batch on
-      // the sink table after the replay terminates.
-      // no-data micro-batches exist purely to run state eviction between
-      // data batches; on a finite replay the inner join's output is
-      // identical without them, so skip the ~2× batch overhead here (an
-      // unbounded production run keeps the default true)
-      val qname = s"stream_j_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val prevNoData = s.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = joined.writeStream.format("memory").queryName(qname)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        snapshotStreamingPlan(q, "stream_join")
-      } finally {
-        prevNoData match {
-          case Some(prev) => s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev)
-          case None => s.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-        }
-      }
-      s.table(qname)
-        .groupBy(col("u_key")).agg(count(lit(1)).as("n_view_purchase_pairs"))
-        .orderBy(col("u_key"))
-    }),
-
-    // --- streaming sessionization: the change stream replayed through
-    //     the stateful sessionizer (flatMapGroupsWithState, event-time
-    //     timeout). The events_flush table carries two end-of-stream
-    //     sentinels (user keys >= 999990, filtered out below): the first
-    //     advances the watermark past every real session's end + gap, the
-    //     second forms one more batch so the timers fire — every real
-    //     session is flushed, and the result matches the SAME
-    //     gaps-and-islands oracle as the batch operator. ---
-    "stream_sessionize" -> ((s, dir) => withFastStreams(s, dir) {
-      import s.implicits._
-      GraftTables.ensure(s, dir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "events_flush")
-        .option("columnFamily", "f")
-        .option("partitionCols", "u_key")
-        .option("qualifiers", "event_type:string,value:double")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        .option("streamStepMicros", GraftTables.FlushStepMicros.toString)
-        .load()
-      val evs = stream.select(
-        lit(0L).as("event_id"),
-        col("_timestamp").as("ts"),
-        col("u_key").cast("long").as("user_id"),
-        col("event_type"),
-        col("value")).as[graft.streaming.EventStreams.Event]
-      val sessions = graft.streaming.EventStreams
-        .sessionize(s, evs, gapMinutes = 30, watermarkDelay = "10 minutes")
-      val qname = s"stream_se_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = sessions.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      snapshotStreamingPlan(q, "stream_sessionize")
-      s.table(qname)
-        .where(col("user_id") < 999990L) // drop flush sentinels
-        .select(col("user_id"),
-          unix_micros(col("session_start")).as("session_start_us"),
-          unix_micros(col("session_end")).as("session_end_us"),
-          col("n_events").cast("long").as("n_events"),
-          round(col("total_value"), 4).as("sum_value"))
-        .orderBy(col("user_id"), col("session_start_us"))
-    }),
-
-    // --- streaming conversation assembly: the stream_sessionize state
-    //     machine, but CLOSED conversations emit ordered transcripts —
-    //     the streaming twin of rel_conversations (flush sentinels push
-    //     the watermark past every real event so all conversations
-    //     close; per-key state is bounded by conversation length) ---
-    "stream_conversations" -> ((s, dir) => withFastStreams(s, dir) {
-      import s.implicits._
-      GraftTables.ensure(s, dir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "events_flush")
-        .option("columnFamily", "f")
-        .option("partitionCols", "u_key")
-        .option("qualifiers", "event_type:string,value:double")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        .option("streamStepMicros", GraftTables.FlushStepMicros.toString)
-        .load()
-      val evs = stream.select(
-        // a real deterministic per-row sequence (the cell timestamp) —
-        // (user, ts) is unique by the seeding assertion in GraftTables,
-        // so this tie-break is never exercised, but the streaming sort
-        // must not depend on arrival order even in principle
-        unix_micros(col("_timestamp")).as("event_id"),
-        col("_timestamp").as("ts"),
-        col("u_key").cast("long").as("user_id"),
-        col("event_type"),
-        col("value")).as[graft.streaming.EventStreams.Event]
-      val convs = graft.streaming.EventStreams
-        .assembleConversations(s, evs, gapMinutes = 30, watermarkDelay = "10 minutes")
-      val qname = s"stream_cv_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = convs.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      snapshotStreamingPlan(q, "stream_conversations")
-      s.table(qname)
-        .where(col("user_id") < 999990L) // drop flush sentinels
-        .select(col("user_id"),
-          unix_micros(col("conv_start")).as("conv_start_us"),
-          unix_micros(col("conv_end")).as("conv_end_us"),
-          col("n_turns").cast("long").as("n_turns"),
-          col("transcript"))
-        .orderBy(col("user_id"), col("conv_start_us"))
-    }),
-
-    // --- incremental streaming near-dup: documents arrive on the change
-    //     stream in 8 timestamp-stepped batches; each batch's MinHash-LSH
-    //     buckets probe the accumulated signature index (new-vs-corpus)
-    //     and self-join (new-vs-batch), candidates exact-verified with
-    //     true Jaccard. Same banding as the batch operator, so the
-    //     accumulated pairs match the SAME exhaustive oracle as
-    //     doc_near_dup — incremental result == batch result. ---
-    "stream_doc_near_dup" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "documents")
-        .option("columnFamily", "f")
-        .option("partitionCols", "d_key")
-        .option("qualifiers", "text:string")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        // 4 slots per batch: the pair SET is batching-invariant (within-
-        // batch banding plus cross-batch index probe find every pair at
-        // any batching), so two batches keep the probe/append/replay-skip
-        // path exercised while halving the per-batch LSH fixed cost —
-        // the same fewer-larger-batches trade stream_term_index makes
-        .option("streamStepMicros", "4000000")
-        .load()
-      val docs = stream.select(col("d_key").cast("long").as("doc_id"), col("text"))
-      val work = java.nio.file.Files.createTempDirectory("graft-sdedup").toString
-      val q = graft.streaming.StreamingDedup.incrementalNearDuplicates(
-        docs, "doc_id", "text", work, threshold = 0.9, numHashes = 120, bands = 20,
-        checkpoint = s"$work/_checkpoint")
-      q.awaitTermination()
-      graft.streaming.StreamingDedup.pairs(s, work)
-        .orderBy(col("id1"), col("id2"))
-    }),
-
-    // --- the same incremental dedup with index MAINTENANCE in the loop:
-    //     batch 1 ingests, compactIndex rewrites the bands log into the
-    //     bucket-hash partitioned layout (__p64=<k>/ — the steady-state
-    //     shape a long-running stream converges to), and batch 2's probe
-    //     PRUNES index files by partition (StreamingDedup.pruneBandFiles).
-    //     Same exhaustive oracle as the streaming gate: the pair set is
-    //     batching- and layout-invariant, so this gate pins that the
-    //     partition-pruned read loses nothing. Driven through
-    //     processBatch (the periodic-ingest entry point) rather than a
-    //     readStream so the compaction call sits between ingests exactly
-    //     where a maintenance job runs it. ---
-    // withFastStreams for the same reason the readStream gates use it:
-    // every frame here is micro-batch-sized, so 4 shuffle partitions
-    // beat 32 tasks of scheduling overhead; compactIndex's partitioned
-    // layout is pinned by its own explicit repartition(IndexPartitions).
-    "stream_doc_near_dup_compact" -> ((s, dir) => withFastStreams(s, dir) {
-      // repartition(defaultParallelism): the sf0.1 parquet is one input
-      // split, which would compute every minhash signature on one thread
-      // (~2s/batch measured); a real periodic-ingest batch arrives
-      // partitioned from its source, like the readStream gate's bigtable
-      // ranges. Deliberately NOT inside processBatch: streaming
-      // micro-batch frames report source statistics, and a stats-driven
-      // spread there re-shuffles raw text every trigger (measured 2x on
-      // the readStream gate when tried).
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id").cast("long").as("id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism, col("id"))
-      val work = java.nio.file.Files.createTempDirectory("graft-sdedupc").toString
-      graft.streaming.StreamingDedup.incrementalNearDuplicatesInit(s, work)
-      graft.streaming.StreamingDedup.processBatch(
-        docs.where(pmod(col("id"), lit(2)) === 0), work, 0.9, 5, 120, 20, batchId = Some(0L))
-      // layout pinned (not AUTO) so the gate times the same partitioned
-      // probe path every round — AUTO is gated by _tiered below
-      graft.streaming.StreamingDedup.compactIndex(s, work, targetRecordsPerFile = 1000L,
-        bandsPartitions = graft.streaming.StreamingDedup.FollowIndexPartitions)
-      graft.streaming.StreamingDedup.processBatch(
-        docs.where(pmod(col("id"), lit(2)) === 1), work, 0.9, 5, 120, 20, batchId = Some(1L))
-      graft.streaming.StreamingDedup.pairs(s, work)
-        .orderBy(col("id1"), col("id2"))
-    }),
-
-    // --- the STEADY-STATE ingest regime (VERDICT r15 #1): the whole
-    //     corpus is already ingested AND compacted into the partitioned
-    //     layouts (`__p64=` bands by bucket-hash, shingles by id-hash),
-    //     then ONE small trailing batch (50 duplicated docs — 1% of the
-    //     corpus at sf0.1) probes it. This is the regime a real nightly
-    //     ingest runs: the batch's index probe prunes bands partitions,
-    //     its verify prunes shingle partitions to candidate ids, and the
-    //     accumulated pair set must STILL equal the exhaustive oracle
-    //     over corpus ∪ trailing — the prune loses nothing. The timing
-    //     curve (per-batch cost flat as the index grows) is pinned by
-    //     tools/SteadyStateProbe + SCALING.md; this gate pins
-    //     correctness and keeps the path in the per-round bench. ---
-    "stream_doc_near_dup_steady" -> ((s, dir) => withFastStreams(s, dir) {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id").cast("long").as("id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism, col("id"))
-      val work = java.nio.file.Files.createTempDirectory("graft-sdedups").toString
-      graft.streaming.StreamingDedup.incrementalNearDuplicatesInit(s, work)
-      graft.streaming.StreamingDedup.processBatch(
-        docs, work, 0.9, 5, 120, 20, batchId = Some(0L))
-      // 400 < sf0.01's 500 shingle rows: both logs cross the
-      // partitioned-layout threshold at every gated sf. Layout pinned
-      // (not AUTO) for round-over-round bench comparability.
-      graft.streaming.StreamingDedup.compactIndex(s, work, targetRecordsPerFile = 400L,
-        bandsPartitions = graft.streaming.StreamingDedup.FollowIndexPartitions)
-      // trailing ids shift by max(doc_id)+1 — derived from the corpus on
-      // BOTH sides (ADVICE r16: a fixed +500000 collides with corpus ids
-      // once a scale factor reaches 500k docs, silently corrupting the
-      // index identity and the oracle union in agreement)
-      val shift = shiftPastMax(docs, "id")
-      graft.streaming.StreamingDedup.processBatch(
-        docs.where(col("id") < 50).select((col("id") + lit(shift)).as("id"), col("text")),
-        work, 0.9, 5, 120, 20, batchId = Some(1L))
-      graft.streaming.StreamingDedup.pairs(s, work)
-        .orderBy(col("id1"), col("id2"))
-    }),
-
-    // --- TIERED index maintenance (VERDICT r16 #1): the nightly
-    //     schedule a long-running ingest actually runs — ONE major
-    //     compaction ever, then each maintenance pass folds ONLY the
-    //     files appended since the last one into a new tier of the same
-    //     layout, carrying the compacted base BY REFERENCE (O(delta),
-    //     not O(index)). The gate self-checks the schedule (requires
-    //     major then minor on the index logs — a regression to full
-    //     rewrites fails loudly) and holds the final pair set to the
-    //     same exhaustive oracle: tiering loses nothing. Bands layout is
-    //     AUTO — chosen from measured on-disk inflation (VERDICT r16 #6).
-    "stream_doc_near_dup_tiered" -> ((s, dir) => withFastStreams(s, dir) {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id").cast("long").as("id"), col("text"))
-        .repartition(s.sparkContext.defaultParallelism, col("id"))
-      val work = java.nio.file.Files.createTempDirectory("graft-sdedupt").toString
-      val SD = graft.streaming.StreamingDedup
-      SD.incrementalNearDuplicatesInit(s, work)
-      SD.processBatch(docs.where(pmod(col("id"), lit(3)) === 0),
-        work, 0.9, 5, 120, 20, batchId = Some(0L))
-      val major = SD.compactIndexDetailed(s, work, targetRecordsPerFile = 100L)
-      require(Seq("bands", "shingles").forall(d => major(d).mode == "major"),
-        s"first compaction must be major: $major")
-      SD.processBatch(docs.where(pmod(col("id"), lit(3)) === 1),
-        work, 0.9, 5, 120, 20, batchId = Some(1L))
-      val minor = SD.compactIndexDetailed(s, work, targetRecordsPerFile = 100L)
-      require(Seq("bands", "shingles").forall(d => minor(d).mode == "minor"),
-        s"re-compaction must fold only the delta (minor): $minor")
-      SD.processBatch(docs.where(pmod(col("id"), lit(3)) === 2),
-        work, 0.9, 5, 120, 20, batchId = Some(2L))
-      SD.pairs(s, work).orderBy(col("id1"), col("id2"))
-    }),
-
-    // --- incremental SPAN dedup over the documents change stream:
-    //     spans claimed by earlier arrival batches drop, keep-first
-    //     within each batch, result + span index exactly-once in a
-    //     CommitLog. The 8 (doc_id % 8) arrival slots replay four per
-    //     micro-batch (fixture replay overhead is micro-batch count ×
-    //     fixed cost; 2 batches still exercise probe/append/replay-skip
-    //     exactly like 8 did), so the oracle is keep-first under
-    //     (slot-quad, doc_id, idx) ---
-    "stream_span_dedup" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "documents")
-        .option("columnFamily", "f")
-        .option("partitionCols", "d_key")
-        .option("qualifiers", "text:string")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        .option("streamStepMicros", "4000000") // 4s = four arrival slots per batch
-        .load()
-      val docs = stream.select(col("d_key").cast("long").as("doc_id"), col("text"))
-      val work = java.nio.file.Files.createTempDirectory("graft-sspan").toString
-      graft.streaming.StreamingSpanDedup.incrementalSpanDedup(
-        docs, "doc_id", "text", work, spanTokens = 4,
-        checkpoint = s"$work/_checkpoint")
-        .awaitTermination()
-      graft.streaming.StreamingSpanDedup.docs(s, work)
-        .orderBy(col("doc_id"))
-    }),
-
-    // --- streaming index maintenance: the documents change stream feeds
-    //     Retrieval.indexSink (one batch-keyed append commit per
-    //     micro-batch, exactly-once, periodic manifest folding); the
-    //     search at the end probes the streamed index and must match the
-    //     WHOLE-corpus oracle — incremental result == batch result, the
-    //     stream_doc_near_dup contract applied to retrieval ---
-    "stream_term_index" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "documents")
-        .option("columnFamily", "f")
-        .option("partitionCols", "d_key")
-        .option("qualifiers", "text:string")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        // 4 slots per batch: index contents are batching-insensitive (the
-        // final search reads the UNION of postings and the recorded corpus
-        // size), so fewer, larger batches cut replay fixed cost while two
-        // batches still exercise the append-commit + replay-skip path
-        .option("streamStepMicros", "4000000")
-        .load()
-      val docs = stream.select(col("d_key").cast("long").as("doc_id"), col("text"))
-      val work = java.nio.file.Files.createTempDirectory("graft-sindex").toString
-      val q = graft.operators.Retrieval.indexSink(
-        docs, "doc_id", "text", s"$work/idx", checkpoint = s"$work/_checkpoint",
-        numBuckets = 64)
-      q.awaitTermination()
-      snapshotStreamingPlan(q, "stream_term_index")
-      graft.operators.Retrieval
-        .indexSearch(s, s"$work/idx", query = Seq("dup", "key", "batch"), topK = 25)
-        .select(col("doc").as("doc_id"), col("score"))
-    }),
-
-    // --- streaming encode through a FROZEN BPE model: train + save on
-    //     the batch corpus, then stream the same documents through the
-    //     loaded artifact — batch-local encode per arrival, exactly-once
-    //     CommitLog appends; the final table equals the batch encode
-    //     (same oracle). The nightly-ingest serving shape ---
-    "stream_bpe_encode" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      val model = graft.operators.Bpe.learn(
-        s.read.parquet(s"$dir/documents.parquet"), "text", steps = 8)
-      val mdir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft-bpe-model-stream-${Integer.toHexString(dir.hashCode)}").toString
-      graft.operators.Bpe.save(model, mdir)
-      val loaded = graft.operators.Bpe.load(s, mdir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "documents")
-        .option("columnFamily", "f")
-        .option("partitionCols", "d_key")
-        .option("qualifiers", "text:string")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        .option("streamStepMicros", "4000000")
-        .load()
-        .select(col("d_key").cast("long").as("doc_id"), col("text"))
-      val work = java.nio.file.Files.createTempDirectory("graft-bpe-stream").toString
-      val q = graft.operators.Bpe.encodeSink(stream, "doc_id", "text", loaded,
-        s"$work/enc", checkpoint = s"$work/_checkpoint")
-      q.awaitTermination()
-      snapshotStreamingPlan(q, "stream_bpe_encode")
-      graft.streaming.CommitLog.read(s, s"$work/enc").orderBy(col("doc_id"))
-    }),
-
-    // --- streaming CDC upsert: the events change stream maintains a
-    //     keep-latest snapshot through versioned parquet commits (one
-    //     Upsert.mergeLatest per micro-batch); final snapshot == the
-    //     batch latest-per-user, which the oracle pins ---
-    "stream_upsert" -> ((s, dir) => withFastStreams(s, dir) {
-      GraftTables.ensure(s, dir)
-      val stream = s.readStream.format("bigtable")
-        .option("store", GraftTables.storeName(dir))
-        .option("table", "events")
-        .option("columnFamily", "f")
-        .option("partitionCols", "u_key")
-        .option("qualifiers", "event_type:string,value:string")
-        .option("onlyReadLatest", "false")
-        .option("allowFullScan", "true")
-        // the events replay spans ~30 days of event time: 8-day steps
-        // give a multi-batch replay without per-batch overhead dominating
-        .option("streamStepMicros", (8L * 86400 * 1000000).toString)
-        .load()
-      val work = java.nio.file.Files.createTempDirectory("graft-supsert").toString
-      // 8 buckets at fixture scale: the wide replay batches touch every
-      // bucket (the pruning win shows on narrow batches; at 100 TB the
-      // bucket count scales with the table, see SnapshotUpsert scaladoc)
-      val q = graft.streaming.SnapshotUpsert.maintain(
-        stream, Seq("u_key"), "_timestamp", work, numBuckets = 8)
-      q.awaitTermination()
-      graft.streaming.SnapshotUpsert.read(s, work)
-        .select(col("u_key"), col("event_type"),
-          col("value").cast("double").as("value"),
-          unix_micros(col("_timestamp")).as("ts_us"))
-        .orderBy(col("u_key"))
     }),
 
     // ================= LLM-data-pipeline tier (SURVEY.md §7.4) =========
@@ -3304,7 +2525,7 @@ object SparkEntry {
        SELECT * FROM ($union) ORDER BY step"""
   }
 
-  private def bpeEncodeOracle(steps: Int): String =
+  private[graft] def bpeEncodeOracle(steps: Int): String =
     s"""${bpeCtes(steps)},
        wl AS (SELECT w, len(string_split(trim(seq), '  ')) AS nt FROM w$steps),
        dw AS (
@@ -3346,7 +2567,7 @@ object SparkEntry {
     * delta) and doc_term_search_tiered (major + delta + minor fold):
     * four plans, one semantic.
     */
-  private val termSearchOracle =
+  private[graft] val termSearchOracle =
     """WITH tok AS (
          SELECT doc_id, unnest(regexp_extract_all(lower(text), '[\p{L}\p{N}'']+')) AS t
          FROM documents),
@@ -3458,7 +2679,7 @@ object SparkEntry {
     * identical to the all-pairs join — re-proven equal row-for-row at
     * sf0.01 and sf0.1 when introduced.
     */
-  private def shinglePrefixPairCtes(thr: String, src: String = "documents"): String =
+  private[graft] def shinglePrefixPairCtes(thr: String, src: String = "documents"): String =
     s"""s AS (
            SELECT doc_id,
                   list_distinct(list_transform(range(1, greatest(length(text)-4, 1) + 1),
@@ -3490,7 +2711,7 @@ object SparkEntry {
                  GROUP BY c.id1, c.id2, c.l1, c.l2)
            WHERE CAST(i AS DOUBLE) / (l1 + l2 - i) >= $thr)"""
 
-  private val nearDupPairSelect =
+  private[graft] val nearDupPairSelect =
     "SELECT id1, id2, jaccard FROM prs ORDER BY id1, id2"
 
   /** Connected components over the `prs` pair CTE without WITH
@@ -3543,10 +2764,8 @@ object SparkEntry {
            FROM l$ccLevels)"""
   }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  def oracleSql: Map[String, String] = Map(
+  /** Oracle SQL of [[batchQueries]]. */
+  private[graft] def batchOracleSql: Map[String, String] = Map(
     "bt_key_eq" ->
       """SELECT lpad(CAST(n_nationkey AS VARCHAR), 4, '0') AS n_key, n_name,
          CAST(n_regionkey AS BIGINT) AS n_regionkey
@@ -3725,10 +2944,6 @@ object SparkEntry {
       """SELECT lpad(CAST(n_nationkey AS VARCHAR), 4, '0') AS n_key,
          upper(n_name) AS n_name
          FROM nation ORDER BY n_key""",
-    "stream_bt_write" ->
-      """SELECT lpad(CAST(event_id AS VARCHAR), 8, '0') AS e_key, event_type,
-         user_id, value
-         FROM events ORDER BY e_key""",
     "bt_prefix" ->
       """SELECT lpad(CAST(n_nationkey AS VARCHAR), 4, '0') AS n_key, n_name
          FROM nation WHERE lpad(CAST(n_nationkey AS VARCHAR), 4, '0') LIKE '000%'
@@ -3858,9 +3073,6 @@ object SparkEntry {
          FROM orders JOIN lineitem ON o_orderkey = l_orderkey
          WHERE o_orderstatus = 'O'
          GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "stream_windowed_counts" ->
-      """SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS ws_us, event_type, count(*) AS n_events
-         FROM events GROUP BY 1, 2 ORDER BY ws_us, event_type""",
     "doc_salted_count" ->
       """SELECT event_type, count(*) AS cnt FROM events GROUP BY event_type ORDER BY event_type""",
     "rel_bucketed_join" ->
@@ -3929,103 +3141,6 @@ object SparkEntry {
          ORDER BY doc_id""",
     "doc_compact" ->
       """SELECT doc_id, lang, n_chars FROM documents ORDER BY doc_id""",
-    "stream_dedup" ->
-      """SELECT DISTINCT lpad(CAST(user_id AS VARCHAR), 6, '0') AS u_key, event_type
-         FROM events ORDER BY u_key, event_type""",
-    // Streaming KMV sketch in the exact-below-k regime: the final
-    // streamed sketch answer must equal the exact distinct-user count.
-    "stream_distinct_sketch" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "stream_heavy_hitters" ->
-      """SELECT lpad(CAST(user_id AS VARCHAR), 6, '0') AS u_key, count(*) AS n
-         FROM events GROUP BY 1 ORDER BY n DESC, u_key LIMIT 20""",
-    "stream_quantiles" ->
-      """SELECT event_type,
-                quantile_disc(value, 0.5) AS p50,
-                quantile_disc(value, 0.9) AS p90
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "stream_join" ->
-      """WITH p AS (
-           SELECT lpad(CAST(user_id AS VARCHAR), 6, '0') AS u_key, epoch_us(ts) AS p_us
-           FROM events WHERE event_type = 'purchase'),
-         v AS (
-           SELECT lpad(CAST(user_id AS VARCHAR), 6, '0') AS u_key, epoch_us(ts) AS v_us
-           FROM events WHERE event_type = 'view')
-         SELECT p.u_key, count(*) AS n_view_purchase_pairs
-         FROM p JOIN v ON p.u_key = v.u_key
-           AND v.v_us <= p.p_us AND v.v_us > p.p_us - 3600000000
-         GROUP BY p.u_key ORDER BY p.u_key""",
-    "stream_upsert" ->
-      """WITH latest AS (
-           SELECT user_id, event_type, value, epoch_us(ts) AS ts_us,
-                  row_number() OVER (PARTITION BY user_id ORDER BY ts DESC) AS rn
-           FROM events)
-         SELECT lpad(CAST(user_id AS VARCHAR), 6, '0') AS u_key,
-                event_type, value, ts_us
-         FROM latest WHERE rn = 1 ORDER BY u_key""",
-    "stream_union_counts" ->
-      """SELECT 'events' AS src, event_type AS k, count(*) AS n FROM events GROUP BY 2
-         UNION ALL
-         SELECT 'orders' AS src, o_orderstatus AS k, count(*) AS n FROM orders GROUP BY 2
-         ORDER BY src, k""",
-    "stream_doc_near_dup" ->
-      s"""WITH ${shinglePrefixPairCtes("0.9")}
-         $nearDupPairSelect""",
-    // layout-invariant: the compacted/partition-pruned index must yield
-    // exactly the exhaustive pair set the streaming gate is held to
-    "stream_doc_near_dup_compact" ->
-      s"""WITH ${shinglePrefixPairCtes("0.9")}
-         $nearDupPairSelect""",
-    // tiering-invariant: major-then-minor maintenance must yield exactly
-    // the exhaustive pair set too
-    "stream_doc_near_dup_tiered" ->
-      s"""WITH ${shinglePrefixPairCtes("0.9")}
-         $nearDupPairSelect""",
-    // steady-state regime: exhaustive pairs over corpus ∪ the 50-doc
-    // trailing batch (ids shifted past the corpus max, same derivation
-    // as the gate) — partition-pruned probe and verify reads must lose
-    // nothing
-    "stream_doc_near_dup_steady" ->
-      s"""WITH ${shinglePrefixPairCtes("0.9",
-             src = """(SELECT doc_id, text FROM documents
-                       UNION ALL
-                       SELECT CAST(doc_id + (SELECT max(doc_id) + 1 FROM documents) AS BIGINT) AS doc_id, text
-                       FROM documents WHERE doc_id < 50)""")}
-         $nearDupPairSelect""",
-    "stream_sessionize" ->
-      """WITH e AS (
-           SELECT user_id, epoch_us(ts) AS ts_us, value FROM events),
-         lagd AS (
-           SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) AS prev FROM e),
-         marks AS (
-           SELECT *, CASE WHEN prev IS NULL OR ts_us - prev > 1800000000 THEN 1 ELSE 0 END AS new_s
-           FROM lagd),
-         sess AS (
-           SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts_us
-                                      ROWS UNBOUNDED PRECEDING) AS session_id
-           FROM marks)
-         SELECT CAST(user_id AS BIGINT) AS user_id,
-                min(ts_us) AS session_start_us, max(ts_us) AS session_end_us,
-                count(*) AS n_events, round(sum(value), 4) AS sum_value
-         FROM sess GROUP BY user_id, session_id ORDER BY user_id, session_start_us""",
-    "stream_conversations" ->
-      """WITH e AS (
-           SELECT user_id, epoch_us(ts) AS ts_us, event_type FROM events),
-         lagd AS (
-           SELECT *, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) AS prev FROM e),
-         marks AS (
-           SELECT *, CASE WHEN prev IS NULL OR ts_us - prev > 1800000000 THEN 1 ELSE 0 END AS new_c
-           FROM lagd),
-         conv AS (
-           SELECT *, sum(new_c) OVER (PARTITION BY user_id ORDER BY ts_us
-                                      ROWS UNBOUNDED PRECEDING) AS conv_id
-           FROM marks)
-         SELECT CAST(user_id AS BIGINT) AS user_id,
-                min(ts_us) AS conv_start_us, max(ts_us) AS conv_end_us,
-                count(*) AS n_turns,
-                string_agg(event_type, ' > ' ORDER BY ts_us) AS transcript
-         FROM conv GROUP BY user_id, conv_id ORDER BY user_id, conv_start_us""",
     "emb_near_dup" ->
       """WITH c AS (
            SELECT vec_id, embedding FROM embeddings
@@ -4277,19 +3392,6 @@ object SparkEntry {
            SELECT doc_id, idx, span,
                   row_number() OVER (PARTITION BY span ORDER BY doc_id, idx) AS rn
            FROM spans)
-         SELECT doc_id, string_agg(span, ' ' ORDER BY idx) AS text
-         FROM keep WHERE rn = 1 GROUP BY doc_id ORDER BY doc_id""",
-    "stream_span_dedup" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         idxs AS (SELECT doc_id, t,
-                  unnest(generate_series(0, CAST(ceil(len(t)/4.0) AS BIGINT)-1)) AS idx
-                  FROM toks),
-         spans AS (SELECT doc_id, idx,
-                   array_to_string(t[(idx*4+1):(idx*4+4)], ' ') AS span FROM idxs),
-         keep AS (SELECT doc_id, idx, span,
-                  row_number() OVER (PARTITION BY span
-                                     ORDER BY (doc_id % 8) // 4, doc_id, idx) AS rn
-                  FROM spans)
          SELECT doc_id, string_agg(span, ' ' ORDER BY idx) AS text
          FROM keep WHERE rn = 1 GROUP BY doc_id ORDER BY doc_id""",
     "doc_span_scrub" ->
@@ -4581,7 +3683,6 @@ object SparkEntry {
     "doc_term_search_incr" -> termSearchOracle,
     "doc_term_search_indexed" -> termSearchOracle,
     "doc_term_search_tiered" -> termSearchOracle,
-    "stream_term_index" -> termSearchOracle,
     "doc_phrases" -> phrasesOracle,
     "doc_phrases_join" -> phrasesOracle,
     "doc_phrase_fuse" -> phraseFuseOracle,
@@ -4629,7 +3730,6 @@ object SparkEntry {
     "doc_bpe_encode" -> bpeEncodeOracle(8),
     "doc_bpe_encode_loaded" -> bpeEncodeOracle(8),
     "doc_bpe_encode_expr" -> bpeEncodeOracle(8),
-    "stream_bpe_encode" -> bpeEncodeOracle(8),
     "rel_stats" ->
       """WITH s AS (
            SELECT 'c_custkey' AS column_name, count(*) AS n_rows,

@@ -84,43 +84,6 @@ object Phrases {
           (col("n_w1").cast("double") * col("n_w2")), 6).as("lift"))
   }
 
-  /** The APPLY step of word2phrase: rewrite an ALREADY-MATERIALIZED token
-    * array, greedily fusing each adjacent pair found in `phrases` into a
-    * single `w1_w2` token, left to right, no overlap (a token consumed by
-    * a fusion cannot start another: "a a a" with phrase (a,a) becomes
-    * "a_a a"). One row-local pass via a Catalyst `aggregate` carrying
-    * (emitted, pending-previous-token) — a pure projection, no shuffle,
-    * each document rewrites independently at any scale. `phrases` is the
-    * mined top-N (tens to thousands of pairs), inlined as a sorted array
-    * literal; membership is a per-token scan of that small literal, so
-    * keep N modest (the mining step's job) — the same small-literal rule
-    * as [[Vocab.encodeColumn]].
-    */
-  def fuseTokens(ts: Column, phrases: Seq[(String, String)]): Column = {
-    require(phrases.nonEmpty, "phrases must contain at least one (w1, w2) pair")
-    val phraseLit = typedlit(phrases.map { case (a, b) => s"$a $b" }.distinct.sorted)
-    val empty = array().cast("array<string>")
-    val st0 = struct(empty.as("out"), lit(null).cast("string").as("prev"))
-    val flush = (st: Column) =>
-      when(st.getField("prev").isNotNull, concat(st.getField("out"), array(st.getField("prev"))))
-        .otherwise(st.getField("out"))
-    aggregate(
-      ts,
-      st0,
-      (st, t) => {
-        // concat_ws skips the null prev, so the probe never matches a
-        // 2-word phrase when there is nothing pending
-        val pair = concat_ws(" ", st.getField("prev"), t)
-        when(st.getField("prev").isNotNull && array_contains(phraseLit, pair),
-          struct(
-            concat(st.getField("out"),
-              array(concat_ws("_", st.getField("prev"), t))).as("out"),
-            lit(null).cast("string").as("prev")))
-          .otherwise(struct(flush(st).as("out"), t.as("prev")))
-      },
-      flush)
-  }
-
   /** 0-based start positions of adjacent token pairs present in the
     * phrase literal — the match set the greedy walk consumes.
     */
@@ -138,7 +101,7 @@ object Phrases {
     * list, never the token array — the r19 rewrite that took the fuse
     * step from O(tokens²) to O(tokens + matches²) per document (the old
     * per-token `aggregate` fold copied its accumulated output array on
-    * every token; see [[fuseTokens]], kept as the reference).
+    * every token; PhrasesSpec keeps that fold as the reference).
     */
   private def fusePositions(mp: Column): Column = {
     val st0 = struct(array().cast("array<int>").as("out"),
@@ -168,12 +131,17 @@ object Phrases {
           .otherwise(array(element_at(ts, i + 1))))))
   }
 
-  /** [[fuseTokens]] over a corpus: (idCol, fused) with `fused` the
-    * phrase-merged token sequence of `textCol` — the tokenization a
-    * vocabulary build runs AFTER phrase mining. Value-exact with
-    * [[fuseTokens]] (PhrasesSpec pins it on randomized corpora), but
-    * built from the staged match-position columns, not the per-token
-    * fold.
+  /** The APPLY step of word2phrase over a corpus: (idCol, fused) with
+    * `fused` the token sequence of `textCol` with each adjacent pair found
+    * in `phrases` fused into a single `w1_w2` token, greedily left to
+    * right, no overlap (a token consumed by a fusion cannot start
+    * another: "a a a" with phrase (a,a) becomes "a_a a") — the
+    * tokenization a vocabulary build runs AFTER phrase mining. A pure
+    * projection, no shuffle: each document rewrites independently from
+    * its staged match-position columns. `phrases` is the mined top-N,
+    * inlined as a sorted array literal, so keep N modest (the same
+    * small-literal rule as [[Vocab.encodeColumn]]); PhrasesSpec pins the
+    * result against a per-token fold on randomized corpora.
     */
   def fuseCorpus(docs: DataFrame, idCol: String, textCol: String, phrases: Seq[(String, String)]): DataFrame = {
     require(phrases.nonEmpty, "phrases must contain at least one (w1, w2) pair")
@@ -194,7 +162,7 @@ object Phrases {
     * hazard as [[Vocab.encodeColumn]]'s map literal). Value-exact with
     * the literal path; chooses the plan by phrase count:
     *
-    *  - P <= `literalThreshold`: collect + [[fuseTokens]]'s literal walk.
+    *  - P <= `literalThreshold`: collect + [[fuseCorpus]]'s literal walk.
     *  - P > `literalThreshold`: adjacent pairs explode row-locally with
     *    their start positions, a BROADCAST hash join against the phrase
     *    table marks matching positions (O(1) probes, the corpus never
@@ -204,7 +172,7 @@ object Phrases {
     *    and the greedy left-to-right non-overlap walk runs row-locally
     *    over (tokens, matched positions): fuse at i unless i-1 already
     *    fused — alternating positions within runs, exactly
-    *    [[fuseTokens]]'s semantics.
+    *    [[fuseCorpus]]'s semantics.
     *
     * `phrasesDf` columns: (w1, w2).
     */

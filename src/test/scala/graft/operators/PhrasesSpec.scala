@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkTestSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class PhrasesSpec extends AnyFunSuite {
@@ -127,12 +129,44 @@ class PhrasesSpec extends AnyFunSuite {
     // reference: the per-token fold, exactly the pre-r19 fuseCorpus body
     val want = Spread.small(docs)
       .select($"doc_id", graft.functions.TextFunctions.tokens($"text").as("__ts"))
-      .select($"doc_id", Phrases.fuseTokens($"__ts", phrases).as("fused"))
+      .select($"doc_id", fuseTokens($"__ts", phrases).as("fused"))
       .as[(Long, Seq[String])].collect().toMap
     assert(got == want, {
       val bad = want.keys.filter(k => got.get(k) != want.get(k)).take(3)
       s"positional fuse diverges from the fold at docs $bad: " +
         bad.map(k => s"$k: got=${got.get(k)} want=${want.get(k)}").mkString("; ")
     })
+  }
+
+  /** The reference fold for [[Phrases.fuseCorpus]]: rewrite a token
+    * array, greedily fusing each adjacent pair found in `phrases` into a
+    * single `w1_w2` token, left to right, no overlap, in one Catalyst
+    * `aggregate` carrying (emitted, pending-previous-token). Simple to
+    * read but O(tokens²) per document (the fold copies its accumulated
+    * output array on every token), hence not the operator's plan.
+    */
+  private def fuseTokens(ts: Column, phrases: Seq[(String, String)]): Column = {
+    require(phrases.nonEmpty, "phrases must contain at least one (w1, w2) pair")
+    val phraseLit = typedlit(phrases.map { case (a, b) => s"$a $b" }.distinct.sorted)
+    val empty = array().cast("array<string>")
+    val st0 = struct(empty.as("out"), lit(null).cast("string").as("prev"))
+    val flush = (st: Column) =>
+      when(st.getField("prev").isNotNull, concat(st.getField("out"), array(st.getField("prev"))))
+        .otherwise(st.getField("out"))
+    aggregate(
+      ts,
+      st0,
+      (st, t) => {
+        // concat_ws skips the null prev, so the probe never matches a
+        // 2-word phrase when there is nothing pending
+        val pair = concat_ws(" ", st.getField("prev"), t)
+        when(st.getField("prev").isNotNull && array_contains(phraseLit, pair),
+          struct(
+            concat(st.getField("out"),
+              array(concat_ws("_", st.getField("prev"), t))).as("out"),
+            lit(null).cast("string").as("prev")))
+          .otherwise(struct(flush(st).as("out"), t.as("prev")))
+      },
+      flush)
   }
 }
