@@ -85,8 +85,8 @@ object StreamGates {
       SessionConf.withConf(s, "spark.sql.shuffle.partitions" -> "4")(body)
     else body
 
-  /** Prefix of the checkpoint dirs [[replay]] creates under
-    * `java.io.tmpdir`.
+  /** Prefix of the checkpoint dirs [[replay]] and `stream_upsert`
+    * create under `java.io.tmpdir`, each deleted after a clean stop.
     */
   private[graft] val ReplayCheckpointPrefix = "graft-replay-cp"
 
@@ -657,9 +657,11 @@ object StreamGates {
       // 8 buckets at fixture scale: the wide replay batches touch every
       // bucket (the pruning win shows on narrow batches; at 100 TB the
       // bucket count scales with the table, see SnapshotUpsert scaladoc)
+      val checkpoint = java.nio.file.Files.createTempDirectory(ReplayCheckpointPrefix).toFile
       val q = graft.streaming.SnapshotUpsert.maintain(
-        stream, Seq("u_key"), "_timestamp", work, numBuckets = 8)
+        stream, Seq("u_key"), "_timestamp", work, checkpoint.getPath, numBuckets = 8)
       q.awaitTermination()
+      org.apache.spark.network.util.JavaUtils.deleteRecursively(checkpoint)
       graft.streaming.SnapshotUpsert.read(s, work)
         .select(col("u_key"), col("event_type"),
           col("value").cast("double").as("value"),

@@ -10,11 +10,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Delta/Iceberg-style protocol that upgrades a streaming sink from
   * at-least-once to EXACTLY-ONCE without changing any operator logic:
   *
-  *  - Data files are written under `dir`/data/<uuid>/ and are INVISIBLE
-  *    until a manifest naming them is atomically renamed into
-  *    `dir`/_commits/ — a crash between the data write and the publish
-  *    leaves orphan files that no reader ever sees (vacuumed later),
-  *    never a partial commit.
+  *  - Data files are written under a stage dir `dir`/data/<uuid>/ and
+  *    are INVISIBLE until a manifest naming them is atomically renamed
+  *    into `dir`/_commits/ — a crash between the data write and the
+  *    publish leaves orphan files that no reader ever sees (vacuumed
+  *    later), never a partial commit. There are two ways to append: a
+  *    frame ([[append]], [[appendAlways]] write it into a fresh stage
+  *    with `df.write.parquet`), or files the caller already wrote into
+  *    a [[stageDir]] (from its own tasks, say) handed to [[appendFiles]].
+  *    Both publish through [[appendFiles]].
   *  - Each commit records the micro-batch id that produced it; a
   *    replayed batch (foreachBatch crash-recovery, the at-least-once
   *    window) is detected by [[committedBatchIds]] and SKIPPED — append
@@ -169,10 +173,38 @@ object CommitLog {
     }
   }
 
-  /** Append `df` as one commit for `batchId`. Returns false (and writes
-    * NOTHING) when that batch is already committed — the exactly-once
-    * guard; true when the commit published. Auto-checkpoints the
-    * manifest tail every `checkpointEvery` commits.
+  /** A fresh stage dir for one commit's data files: `data/<uuid>`,
+    * relative to `dir` and not yet created. Files written under it stay
+    * invisible until [[appendFiles]] or [[commitFiles]] names them; a
+    * stage that is never published is debris for the owner's vacuum
+    * (every data dir no commit references).
+    */
+  def stageDir(dir: String): String = s"data/${java.util.UUID.randomUUID()}"
+
+  /** Publish `files` (paths relative to `dir`, normally under one
+    * [[stageDir]]) as one append commit. With a `batchId` that is
+    * already committed it publishes NOTHING and returns false — the
+    * exactly-once guard; the caller still owns the stage. Without one it
+    * always publishes (at-least-once). Auto-checkpoints the manifest tail
+    * every `checkpointEvery` commits.
+    */
+  def appendFiles(
+      dir: String,
+      files: Seq[String],
+      batchId: Option[Long],
+      checkpointEvery: Int = DefaultCheckpointEvery
+  ): Boolean = {
+    batchId.foreach(b => require(b >= 0, s"batchId must be non-negative, got $b"))
+    val st = loadState(dir)
+    if (batchId.exists(st.batchIds.contains)) return false
+    publish(dir, files, replace = false, batchId, st.maxSeq + 1)
+    if (st.tailManifests + 1 >= checkpointEvery) checkpoint(dir): Unit
+    true
+  }
+
+  /** Append `df` as one commit for `batchId`: write it into a fresh
+    * stage, then [[appendFiles]]. Returns false (and writes NOTHING) when
+    * that batch is already committed; true when the commit published.
     */
   def append(
       df: DataFrame,
@@ -182,11 +214,8 @@ object CommitLog {
   ): Boolean = {
     require(batchId >= 0, s"batchId must be non-negative, got $batchId")
     init(dir, df.schema)
-    val st = loadState(dir)
-    if (st.batchIds.contains(batchId)) return false
-    publishData(df, dir, replace = false, Some(batchId), st.maxSeq + 1)
-    if (st.tailManifests + 1 >= checkpointEvery) checkpoint(dir): Unit
-    true
+    !isCommitted(dir, batchId) &&
+      appendFiles(dir, writeStage(df, dir, stageDir(dir)), Some(batchId), checkpointEvery)
   }
 
   /** Append without a batch identity — still atomic-publish (the crash
@@ -195,10 +224,12 @@ object CommitLog {
     */
   def appendAlways(df: DataFrame, dir: String, checkpointEvery: Int = DefaultCheckpointEvery): Unit = {
     init(dir, df.schema)
-    val st = loadState(dir)
-    publishData(df, dir, replace = false, batchId = None, st.maxSeq + 1)
-    if (st.tailManifests + 1 >= checkpointEvery) checkpoint(dir): Unit
+    appendFiles(dir, writeStage(df, dir, stageDir(dir)), None, checkpointEvery): Unit
   }
+
+  /** Delete a stage that will never be published. */
+  private[streaming] def discardStage(dir: String, stage: String): Unit =
+    deleteRecursively(new java.io.File(s"$dir/$stage"))
 
   /** Publish an externally-written fileset (paths relative to `dir`,
     * normally under data/<uuid>/) as one commit — the hook a layout-
@@ -317,13 +348,13 @@ object CommitLog {
         df.repartitionByRange(nFiles, sortBy.map(org.apache.spark.sql.functions.col): _*)
           .sortWithinPartitions(sortBy.map(org.apache.spark.sql.functions.col): _*)
       else df.repartition(nFiles)
-    val st = loadState(dir)
-    val uuid = publishData(shaped, dir, replace = true, batchId = None, st.maxSeq + 1)
+    val stage = stageDir(dir)
+    commitFiles(dir, writeStage(shaped, dir, stage), replace = true): Unit
     // the replace commit carries the whole fileset, so the folded history
     // is pure metadata debt — checkpoint it away immediately
     checkpoint(dir): Unit
     // retention: data directories no manifest references anymore
-    val live = referencedDataDirs(dir) + uuid
+    val live = referencedDataDirs(dir) + stage.stripPrefix("data/")
     Option(new java.io.File(s"$dir/data").listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory && !live.contains(d.getName))
       .foreach(deleteRecursively)
@@ -399,16 +430,12 @@ object CommitLog {
 
   // ---- internals -----------------------------------------------------
 
-  /** Write `df` under a fresh data/<uuid>/ dir, then publish the
-    * manifest at `seq`. Returns the uuid.
+  /** Write `df` into `stage` with `df.write.parquet`; its files,
+    * relative to `dir`.
     */
-  private def publishData(
-      df: DataFrame, dir: String, replace: Boolean, batchId: Option[Long], seq: Long): String = {
-    val uuid = java.util.UUID.randomUUID().toString
-    val dataDir = s"$dir/data/$uuid"
-    df.write.parquet(dataDir)
-    publish(dir, relativeFiles(dir, dataDir), replace, batchId, seq)
-    uuid
+  private def writeStage(df: DataFrame, dir: String, stage: String): Seq[String] = {
+    df.write.parquet(s"$dir/$stage")
+    relativeFiles(dir, s"$dir/$stage")
   }
 
   /** Manifest format (text, dependency-free): first line

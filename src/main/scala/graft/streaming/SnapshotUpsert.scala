@@ -54,12 +54,18 @@ object SnapshotUpsert {
     * are filtered out by [[read]]'s `deleteCol`. `numBuckets` is pinned
     * in `dir`/_snapshot.json on first creation; later calls follow the
     * stored layout (a mismatched bucket function would mis-prune).
+    *
+    * `checkpoint` is REQUIRED, one per `dir`, reused across restarts: a
+    * restarted stream resumes from its committed offsets. Without one
+    * Spark would mint a fresh temp checkpoint per run and replay the
+    * whole source into a new version.
     */
   def maintain(
       stream: DataFrame,
       keys: Seq[String],
       versionCol: String,
       dir: String,
+      checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       numBuckets: Int = 64
   ): StreamingQuery = {
@@ -71,6 +77,7 @@ object SnapshotUpsert {
         processBatch(batch, keys, versionCol, dir, Some(bid))
       }
       .trigger(trigger)
+      .option("checkpointLocation", checkpoint)
       .start()
   }
 

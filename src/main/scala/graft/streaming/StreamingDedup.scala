@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.InternalRowsBridge
+import org.apache.spark.sql.graft.StagedParquetWriter
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Incremental (streaming) near-duplicate detection — the pipeline shape
   * a continuously-ingesting training-data corpus needs: new documents
@@ -47,30 +47,37 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   *      (native merge walk), only on candidates. A micro-batch collects
   *      its distinct candidates and verifies them on the driver against
   *      only the candidate ids' shingle rows.
-  *   4. Append confirmed pairs to the result, then append the batch's
-  *      buckets + shingles to the index — parquet appends, so the index
-  *      survives restarts and is readable by any later job.
+  *   4. Commit: the batch's bands and shingles files were already
+  *      written by the tasks that sketched it, into unpublished stage
+  *      dirs of the two logs; a micro-batch's confirmed pairs are one
+  *      file written on the driver. Committing publishes three manifests
+  *      naming those files — no write job runs — so the index survives
+  *      restarts and is readable by any later job.
   *
   * Scale shape: the sketch runs in the batch's tasks whatever the batch
-  * is (a local frame included: the sketched frame is a scan of the
-  * kernel's RDD, so no optimizer rule evaluates it on the driver) and is
-  * persisted by the first job. A micro-batch broadcasts its bucket rows,
-  * so the index streams past them map-side, and its verify reads the
-  * candidates' shingle rows alone (the id-partitioned files they hash
-  * into, filtered by id): no micro-batch shuffles, and no per-batch cost
-  * grows with the shingle log. A catch-up batch — past the broadcast's
-  * band-row budget or the verify's candidate budget — runs the direct
-  * plan instead: shuffled joins with the batch as build side, and the
-  * candidates joined against the whole shingle log.
+  * is (a local frame included: the kernel runs over the batch's RDD, so
+  * no optimizer rule evaluates it on the driver), and the same tasks
+  * write the batch's index files, read back for the joins: a micro-batch
+  * is one staging job, the broadcast of its bucket rows, the candidate
+  * collect and the verify collect. The index streams past the broadcast
+  * map-side, and the verify reads the candidates' shingle rows alone
+  * (the id-partitioned files they hash into, filtered by id): no
+  * micro-batch shuffles, and no per-batch cost grows with the shingle
+  * log. A catch-up batch — past the broadcast's band-row budget or the
+  * verify's candidate budget — runs the direct plan instead: shuffled
+  * joins with the batch as build side, the candidates joined against
+  * the whole shingle log, and its pairs written by a Spark write job.
   *
   * Delivery: all three datasets (pairs, bands index, shingles) live in a
   * [[CommitLog]] — data files are invisible until their manifest
-  * publishes atomically, and each dataset's append is independently
-  * idempotent per micro-batch id, so a crash anywhere in the batch
-  * replays to exactly the missing commits and nothing duplicates:
-  * EXACTLY-ONCE end to end when driven from a checkpointed stream.
-  * Batch callers invoking [[processBatch]] without a batchId get
-  * atomic-publish at-least-once (reads still dedup defensively).
+  * publishes atomically, and each dataset's publish is independently
+  * idempotent per micro-batch id, in the fixed order bands, shingles,
+  * pairs, so a crash anywhere in the batch replays to exactly the
+  * missing commits and nothing duplicates: EXACTLY-ONCE end to end when
+  * driven from a checkpointed stream. A stage that never publishes is
+  * vacuumed by the next [[compactIndex]]. Batch callers invoking
+  * [[processBatch]] without a batchId get atomic-publish at-least-once
+  * (reads still dedup defensively).
   */
 object StreamingDedup {
 
@@ -282,6 +289,8 @@ object StreamingDedup {
     require(bands > 0 && numHashes % bands == 0,
       s"numHashes=$numHashes must divide into bands=$bands")
     val bandsDir = s"$workDir/bands"
+    val shinglesDir = s"$workDir/shingles"
+    val pairsDir = s"$workDir/pairs"
     requireBandsSchema(bandsDir)
     // the id is hashed (xxhash64) by both partition prunes against logs
     // whose compaction writer hashed LONGS — an IntegerType id from a
@@ -291,204 +300,236 @@ object StreamingDedup {
     val in = batch.select(col("id").cast("long").as("id"), col("text"))
     require(in.schema("text").dataType == StringType,
       s"text column must be a string, got ${in.schema("text").dataType.sql}")
-    // the kernel sketches the batch inside its own tasks: the frame is a
-    // scan of the kernel's RDD, so Catalyst never sees the sketch (as a
-    // projection over a local batch, ConvertToLocalRelation would
-    // evaluate it interpreted on the driver); the job below that counts
-    // the band rows fills the persisted frame
-    val base = InternalRowsBridge.dataFrame(spark,
-      in.queryExecution.toRdd.mapPartitions(sketchRows(_, shingleK, numHashes, bands)),
-      StructType(Seq(
-        StructField("id", LongType, in.schema("id").nullable),
-        StructField("sh", ArrayType(LongType, containsNull = false), in.schema("text").nullable),
-        StructField("sigb", BinaryType, in.schema("text").nullable),
-        StructField("buckets", ArrayType(LongType, containsNull = false), nullable = false))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val newBands = base.select(
-        col("id"), col("sigb"), posexplode(col("buckets")).as(Seq("band", "bucket")))
-      val newSh = base.select(col("id"), col("sh"))
 
-      // ONE job over the batch (it also fills the persisted `base`): its
-      // band-row count, which sizes the broadcast below, and, per
-      // bucket-hash modulus of a compacted ([[compactIndex]]) bands
-      // index, the partitions its (band, bucket) pairs hash into. The
-      // probe then reads only those partitions' files — identical join
-      // result (a matching index row shares the batch row's (band,
-      // bucket), hence its partition). Modulus-1 (sorted-hybrid) and
-      // unpartitioned files are always read.
-      def moduliOf(files: Seq[String]): Seq[Int] =
-        files.flatMap(f => PartDirRe.findFirstMatchIn(f).map(_.group(1).toInt)).distinct
-      val allBandFiles = CommitLog.currentFiles(bandsDir)
-      val moduli = moduliOf(allBandFiles).filter(_ != 1)
-      val nModuli = moduli.size
-      val perTask = newBands
-        .select(moduli.map(m =>
-          pmod(xxhash64(col("band"), col("bucket")), lit(m.toLong)).cast("int")): _*)
-        .queryExecution.toRdd.mapPartitions { rows =>
-          val touched = Array.fill(nModuli)(scala.collection.mutable.Set.empty[Int])
-          var n = 0L
-          rows.foreach { r => n += 1; (0 until nModuli).foreach(i => touched(i) += r.getInt(i)) }
-          Iterator.single((n, touched.map(_.toSet)))
-        }.collect()
-      val bandFiles = pruneBandFiles(allBandFiles,
-        moduli.indices.map(i => moduli(i) -> perTask.flatMap(_._2(i)).toSet).toMap)
-      val oldBands =
-        CommitLog.readFiles(spark, bandsDir, bandsSchema, bandFiles)
-      // estimated-Jaccard prefilter inline in the bucket join (batch
-      // operator's exact machinery — see Dedup.estimateCut): the low-j
-      // candidate mass dies in codegen before distinct/verify.
-      val estCut = Dedup.estimateCut(threshold, numHashes)
-      def estOk(a: Column, b: Column): Column =
-        if (estCut > 0.0) Dedup.sigAgreement(a, b) >= lit(estCut) else lit(true)
-      // Join shape — the sf10 curve-bender (VERDICT r14 #5): the batch
-      // side is micro-batch-sized, so BROADCAST it and let the
-      // accumulated index STREAM map-side — the index (the one frame that
-      // grows without bound) is never shuffled, never sorted, never
-      // hash-built; per-batch cost is one index scan. Guarded by batch
-      // size: an AvailableNow catch-up batch can be the whole backlog,
-      // and broadcasting that would OOM — past the row budget the
-      // shuffle_hash plan returns, with the BATCH as build side, never
-      // the index: a shuffled hash join cannot spill its build side, and
-      // building the index OOM'd outright at the 3.2M doc steady-state
-      // probe ("not enough memory to build hash map").
-      val broadcastBatch = perTask.map(_._1).sum <= MaxBroadcastBandRows
-      // ONE candidate join, (index ∪ batch) ⋈ batch, finds new-vs-old and
-      // new-vs-new pairs together. The id guard drops every row meeting
-      // itself, including a batch replayed after a crash between its
-      // index append and its checkpoint commit (at-least-once replay
-      // emits no self-pairs); least/greatest makes each pair canonical.
-      val probe = oldBands.unionByName(newBands)
-      val joined =
-        if (broadcastBatch)
-          probe.alias("o").join(broadcast(newBands.alias("n")), Seq("band", "bucket"))
-        else
-          newBands.alias("n").hint("shuffle_hash").join(probe.alias("o"), Seq("band", "bucket"))
-      val cands = joined
-        .where(col("n.id") =!= col("o.id") && estOk(col("n.sigb"), col("o.sigb")))
-        .select(
-          least(col("n.id"), col("o.id")).as("id1"),
-          greatest(col("n.id"), col("o.id")).as("id2"))
+    // ONE job over the batch: its tasks sketch each document and write
+    // its band and shingle rows straight into fresh stage dirs of the two
+    // logs (see [[stageSketches]]). Those staged files ARE the batch's
+    // side of the joins below and the data its commits publish. Each
+    // task also returns its band-row count, which sizes the broadcast
+    // below, and, per bucket-hash modulus of a compacted
+    // ([[compactIndex]]) bands index, the partitions its (band, bucket)
+    // pairs hash into. The probe then reads only those partitions' files
+    // — identical join result (a matching index row shares the batch
+    // row's (band, bucket), hence its partition). Modulus-1
+    // (sorted-hybrid) and unpartitioned files are always read.
+    def moduliOf(files: Seq[String]): Seq[Int] =
+      files.flatMap(f => PartDirRe.findFirstMatchIn(f).map(_.group(1).toInt)).distinct
+    val allBandFiles = CommitLog.currentFiles(bandsDir)
+    val moduli = moduliOf(allBandFiles).filter(_ != 1)
+    val bandsStage = CommitLog.stageDir(bandsDir)
+    val shStage = CommitLog.stageDir(shinglesDir)
+    val staged = stageSketches(in, s"$bandsDir/$bandsStage", s"$shinglesDir/$shStage",
+      shingleK, numHashes, bands, moduli.toArray)
+    val newBandFiles = staged.flatMap(_.bandsFile).map(f => s"$bandsStage/$f").toSeq
+    val newShFiles = staged.flatMap(_.shFile).map(f => s"$shStage/$f").toSeq
+    val newBands = CommitLog.readFiles(spark, bandsDir, bandsSchema, newBandFiles)
+    val newSh = CommitLog.readFiles(spark, shinglesDir, shinglesSchema, newShFiles)
+    val bandFiles = pruneBandFiles(allBandFiles,
+      moduli.indices.map(i => moduli(i) -> staged.flatMap(_.touched(i)).toSet).toMap)
+    val oldBands =
+      CommitLog.readFiles(spark, bandsDir, bandsSchema, bandFiles)
+    // estimated-Jaccard prefilter inline in the bucket join (batch
+    // operator's exact machinery — see Dedup.estimateCut): the low-j
+    // candidate mass dies in codegen before distinct/verify.
+    val estCut = Dedup.estimateCut(threshold, numHashes)
+    def estOk(a: Column, b: Column): Column =
+      if (estCut > 0.0) Dedup.sigAgreement(a, b) >= lit(estCut) else lit(true)
+    // Join shape — the sf10 curve-bender (VERDICT r14 #5): the batch
+    // side is micro-batch-sized, so BROADCAST it and let the
+    // accumulated index STREAM map-side — the index (the one frame that
+    // grows without bound) is never shuffled, never sorted, never
+    // hash-built; per-batch cost is one index scan. Guarded by batch
+    // size: an AvailableNow catch-up batch can be the whole backlog,
+    // and broadcasting that would OOM — past the row budget the
+    // shuffle_hash plan returns, with the BATCH as build side, never
+    // the index: a shuffled hash join cannot spill its build side, and
+    // building the index OOM'd outright at the 3.2M doc steady-state
+    // probe ("not enough memory to build hash map").
+    val broadcastBatch = staged.map(_.bandRows).sum <= MaxBroadcastBandRows
+    // ONE candidate join, (index ∪ batch) ⋈ batch, finds new-vs-old and
+    // new-vs-new pairs together. The id guard drops every row meeting
+    // itself, including a batch replayed after a crash between its
+    // index append and its checkpoint commit (at-least-once replay
+    // emits no self-pairs); least/greatest makes each pair canonical.
+    val probe = oldBands.unionByName(newBands)
+    val joined =
+      if (broadcastBatch)
+        probe.alias("o").join(broadcast(newBands.alias("n")), Seq("band", "bucket"))
+      else
+        newBands.alias("n").hint("shuffle_hash").join(probe.alias("o"), Seq("band", "bucket"))
+    val cands = joined
+      .where(col("n.id") =!= col("o.id") && estOk(col("n.sigb"), col("o.sigb")))
+      .select(
+        least(col("n.id"), col("o.id")).as("id1"),
+        greatest(col("n.id"), col("o.id")).as("id2"))
 
-      val shinglesDir = s"$workDir/shingles"
-      val shFilesAll = CommitLog.currentFiles(shinglesDir)
-      val shSchema = CommitLog.schemaOf(shinglesDir)
-      val local = if (broadcastBatch) localCandidates(cands, candidateBudget) else None
-      val (pairs, shFilesSel) = local match {
-        case Some(candPairs) =>
-          // Micro-batch verify on the driver: only the candidate ids'
-          // shingle rows are read — the batch's from the persisted base,
-          // older ones from the log files their ids hash into (the same
-          // `__p<m>=` prune the compaction writer's xxhash64(id) defines,
-          // computed here with no job) under an `id IN` filter. Nothing
-          // is shuffled, and verify cost follows the candidates, not the
-          // accumulated corpus.
-          val ids = candPairs.flatMap(p => Seq(p._1, p._2)).toSeq
-          val files =
-            if (ids.isEmpty) Nil
-            else pruneBandFiles(shFilesAll,
-              moduliOf(shFilesAll).map(m => m -> ids.map(idPartition(_, m)).toSet).toMap)
-          val sh: Map[Long, ArrayData] =
-            if (ids.isEmpty) Map.empty
-            else newSh.where(col("id").isin(ids: _*))
-              .unionByName(CommitLog.readFiles(spark, shinglesDir, shSchema, files)
-                .where(col("id").isin(ids: _*)))
-              .queryExecution.toRdd
-              .flatMap(r => if (r.isNullAt(1)) None else Some((r.getLong(0), r.getArray(1).toLongArray())))
-              .collect()
-              // the batch's rows come first and win: a replayed batch's
-              // own shingles over its earlier append
-              .reverseIterator.map { case (id, hs) => id -> UnsafeArrayData.fromPrimitiveArray(hs) }.toMap
-          val confirmed = candPairs.toSeq.flatMap { case (a, b) =>
-            for {
-              sa <- sh.get(a)
-              sb <- sh.get(b)
-              j = JaccardImpl.jaccardSorted(sa, sb)
-              if j >= threshold
-            } yield Row(a, b, roundJaccard(j))
-          }
-          (spark.createDataFrame(java.util.Arrays.asList(confirmed: _*), pairsSchema), files)
-        case None =>
-          // Catch-up batch (past the broadcast gate or the candidate
-          // budget): the direct plan, the candidates joined twice against
-          // the whole shingle log. The pair joins keep explicit
-          // shuffle_hash hints for a batch that passed the broadcast gate
-          // (left to AQE they plan sort-merge and SORT the shingle arrays:
-          // +2.6 s on the sf0.1 gate), on the CANDIDATE side only — the
-          // log is corpus-sized, and a shuffled hash build cannot spill.
-          // Past the gate the hints come off and AQE plans spillable
-          // sort-merge with skew-join splitting: a catch-up batch's
-          // candidates can put GBs behind one hub id (the r17 sf10 run
-          // died with "Can't acquire 8589934592 bytes to build hash
-          // relation" on exactly that shape).
-          def hint(df: DataFrame): DataFrame = if (broadcastBatch) df.hint("shuffle_hash") else df
-          val allSh = newSh.unionByName(CommitLog.readFiles(spark, shinglesDir, shSchema, shFilesAll))
-          val withSh1 = hint(cands.distinct())
-            .join(allSh.select(col("id").as("id1"), col("sh").as("sh1")), "id1")
-          (hint(withSh1)
-            .join(allSh.select(col("id").as("id2"), col("sh").as("sh2")), "id2")
-            .withColumn("j", Dedup.jaccardSortedCol(col("sh1"), col("sh2")))
-            .where(col("j") >= threshold)
-            .select(col("id1"), col("id2"), round(col("j"), 6).as("jaccard"))
-            // a replay after a crash between the shingles and pairs commits
-            // finds its own shingles in the log too: one row per pair
-            .distinct(), shFilesAll)
-      }
+    val shFilesAll = CommitLog.currentFiles(shinglesDir)
+    val shSchema = CommitLog.schemaOf(shinglesDir)
+    val local = if (broadcastBatch) localCandidates(cands, candidateBudget) else None
+    // the confirmed pairs: rows verified on the driver, or a frame
+    val (pairs, shFilesSel) = local match {
+      case Some(candPairs) =>
+        // Micro-batch verify on the driver: only the candidate ids'
+        // shingle rows are read — the batch's from its staged files,
+        // older ones from the log files their ids hash into (the same
+        // `__p<m>=` prune the compaction writer's xxhash64(id) defines,
+        // computed here with no job) under an `id IN` filter. Nothing
+        // is shuffled, and verify cost follows the candidates, not the
+        // accumulated corpus.
+        val ids = candPairs.flatMap(p => Seq(p._1, p._2)).toSeq
+        val files =
+          if (ids.isEmpty) Nil
+          else pruneBandFiles(shFilesAll,
+            moduliOf(shFilesAll).map(m => m -> ids.map(idPartition(_, m)).toSet).toMap)
+        val sh: Map[Long, ArrayData] =
+          if (ids.isEmpty) Map.empty
+          else newSh.where(col("id").isin(ids: _*))
+            .unionByName(CommitLog.readFiles(spark, shinglesDir, shSchema, files)
+              .where(col("id").isin(ids: _*)))
+            .queryExecution.toRdd
+            .flatMap(r => if (r.isNullAt(1)) None else Some((r.getLong(0), r.getArray(1).toLongArray())))
+            .collect()
+            // the batch's rows come first and win: a replayed batch's
+            // own shingles over its earlier append
+            .reverseIterator.map { case (id, hs) => id -> UnsafeArrayData.fromPrimitiveArray(hs) }.toMap
+        val confirmed = candPairs.toSeq.flatMap { case (a, b) =>
+          for {
+            sa <- sh.get(a)
+            sb <- sh.get(b)
+            j = JaccardImpl.jaccardSorted(sa, sb)
+            if j >= threshold
+          } yield new GenericInternalRow(Array[Any](a, b, roundJaccard(j))): InternalRow
+        }
+        (Left(confirmed), files)
+      case None =>
+        // Catch-up batch (past the broadcast gate or the candidate
+        // budget): the direct plan, the candidates joined twice against
+        // the whole shingle log. The pair joins keep explicit
+        // shuffle_hash hints for a batch that passed the broadcast gate
+        // (left to AQE they plan sort-merge and SORT the shingle arrays:
+        // +2.6 s on the sf0.1 gate), on the CANDIDATE side only — the
+        // log is corpus-sized, and a shuffled hash build cannot spill.
+        // Past the gate the hints come off and AQE plans spillable
+        // sort-merge with skew-join splitting: a catch-up batch's
+        // candidates can put GBs behind one hub id (the r17 sf10 run
+        // died with "Can't acquire 8589934592 bytes to build hash
+        // relation" on exactly that shape).
+        def hint(df: DataFrame): DataFrame = if (broadcastBatch) df.hint("shuffle_hash") else df
+        val allSh = newSh.unionByName(CommitLog.readFiles(spark, shinglesDir, shSchema, shFilesAll))
+        val withSh1 = hint(cands.distinct())
+          .join(allSh.select(col("id").as("id1"), col("sh").as("sh1")), "id1")
+        (Right(hint(withSh1)
+          .join(allSh.select(col("id").as("id2"), col("sh").as("sh2")), "id2")
+          .withColumn("j", Dedup.jaccardSortedCol(col("sh1"), col("sh2")))
+          .where(col("j") >= threshold)
+          .select(col("id1"), col("id2"), round(col("j"), 6).as("jaccard"))
+          // a replay after a crash between the shingles and pairs commits
+          // finds its own shingles in the log too: one row per pair
+          .distinct()), shFilesAll)
+    }
 
-      // each dataset's commit is independently idempotent on batchId: a
-      // crash after some of the three published replays to exactly the
-      // missing ones (the self-pair guard covers the index-before-pairs
-      // interleavings)
-      def commit(df: DataFrame, dataset: String): Unit = batchId match {
-        case Some(b) => CommitLog.append(df, s"$workDir/$dataset", b): Unit
-        case None => CommitLog.appendAlways(df, s"$workDir/$dataset")
-      }
-      // the three datasets are independent logs, so their commit jobs
-      // run CONCURRENTLY (guide-§2.6 overlap): the two projection
-      // writes (bands/shingles, reads of the persisted base) back-fill
-      // executors while the pairs write finishes its tail.
-      // Replay correctness never depended on commit ORDER — each
-      // append is atomic + idempotent per batchId, and the self-pair
-      // guard already covers index-before-pairs interleavings.
-      // ONLY when batchId is defined (ADVICE r18): the batchId-less
-      // mode commits via appendAlways (at-least-once, NOT idempotent),
-      // and concurrent commits there widen a partial failure from
-      // "an ordered prefix committed" to "any subset committed" —
-      // a caller retry then duplicate-appends datasets whose reads
-      // are not all defensively deduped (only pairs is). Sequential
-      // order restores the documented prefix semantics.
-      val commits = Seq(
-        () => commit(pairs, "pairs"),
-        () => commit(newBands, "bands"),
-        () => commit(newSh, "shingles"))
-      if (batchId.isDefined) parallelUnits(commits)
-      else commits.foreach(_.apply())
-      def bytesOf(dir: String, fs: Seq[String]): Long =
-        fs.map(f => new java.io.File(s"$dir/$f").length).sum
-      BatchStats(replayed = false,
-        bandFiles.size, allBandFiles.size,
-        bytesOf(bandsDir, bandFiles), bytesOf(bandsDir, allBandFiles),
-        shFilesSel.size, shFilesAll.size,
-        bytesOf(shinglesDir, shFilesSel), bytesOf(shinglesDir, shFilesAll))
-    } finally base.unpersist()
-  }
-
-  /** (id, text) rows → (id, sh, sigb, buckets) through the
-    * [[MinHashSketch]] kernel. A null text keeps its row: null `sh` and
-    * `sigb`, every band at the seed, as `xxhash64` of a null slice.
-    */
-  private def sketchRows(
-      rows: Iterator[InternalRow], shingleK: Int, numHashes: Int, bands: Int): Iterator[InternalRow] = {
-    val nullBuckets = UnsafeArrayData.fromPrimitiveArray(MinHashImpl.bandHashes(null: Array[Long], bands))
-    rows.map { r =>
-      val id = if (r.isNullAt(0)) null else r.getLong(0)
-      if (r.isNullAt(1)) new GenericInternalRow(Array[Any](id, null, null, nullBuckets))
-      else {
-        val s = MinHashSketch.sketch(r.getUTF8String(1), shingleK, numHashes, bands)
-        new GenericInternalRow(Array[Any](id, UnsafeArrayData.fromPrimitiveArray(s.sh), s.sigb,
-          UnsafeArrayData.fromPrimitiveArray(s.buckets)))
+    // Commit: three manifest publishes in a fixed order — bands,
+    // shingles, pairs. Each is independently idempotent on batchId, so a
+    // crash after some of them replays to exactly the missing ones (the
+    // self-pair guard covers a replay that meets its own index rows).
+    // Pairs go last: a published pair set implies a published index, and
+    // in the batchId-less mode a failure leaves an ordered prefix, so a
+    // caller's retry duplicates only index rows, which the candidate sets
+    // and the pairs read's distinct() absorb.
+    val bandsPublished = CommitLog.appendFiles(bandsDir, newBandFiles, batchId)
+    val shPublished = CommitLog.appendFiles(shinglesDir, newShFiles, batchId)
+    pairs match {
+      case Left(rows) =>
+        // a micro-batch's pairs are a few rows: one file, written here
+        val stage = CommitLog.stageDir(pairsDir)
+        val files = Seq(s"$stage/" +
+          StagedParquetWriter(spark, pairsSchema).writeFile(s"$pairsDir/$stage", rows.iterator))
+        if (!CommitLog.appendFiles(pairsDir, files, batchId)) CommitLog.discardStage(pairsDir, stage)
+      case Right(df) => batchId match {
+        case Some(b) => CommitLog.append(df, pairsDir, b): Unit
+        case None => CommitLog.appendAlways(df, pairsDir)
       }
     }
+    // a replay's stages hold rows their logs already have; the catch-up
+    // pairs frame reads them lazily, so they are deleted only now
+    if (!bandsPublished) CommitLog.discardStage(bandsDir, bandsStage)
+    if (!shPublished) CommitLog.discardStage(shinglesDir, shStage)
+    def bytesOf(dir: String, fs: Seq[String]): Long =
+      fs.map(f => new java.io.File(s"$dir/$f").length).sum
+    BatchStats(replayed = false,
+      bandFiles.size, allBandFiles.size,
+      bytesOf(bandsDir, bandFiles), bytesOf(bandsDir, allBandFiles),
+      shFilesSel.size, shFilesAll.size,
+      bytesOf(shinglesDir, shFilesSel), bytesOf(shinglesDir, shFilesAll))
+  }
+
+  /** What one task of [[stageSketches]] wrote: its band-row count, per
+    * modulus the partitions its (band, bucket) pairs hash into, and the
+    * names of its staged bands and shingles files (None for no rows).
+    */
+  private final case class StagedTask(
+      bandRows: Long, touched: Array[Set[Int]], bandsFile: Option[String], shFile: Option[String])
+
+  /** Sketch each (id, text) row once through the [[MinHashSketch]]
+    * kernel, inside the batch's own tasks, and write its bands rows
+    * (id, band, bucket, sigb) and its shingles row (id, sh) into one file
+    * per task under `bandsOut` and `shOut`. A null text keeps its rows:
+    * null `sh` and `sigb`, every band at the seed, as `xxhash64` of a
+    * null slice. The touched partition of a band row is Spark's
+    * `pmod(xxhash64(band, bucket), m)`. A failing task deletes its
+    * partial files.
+    */
+  private def stageSketches(
+      in: DataFrame, bandsOut: String, shOut: String,
+      shingleK: Int, numHashes: Int, bands: Int, moduli: Array[Int]): Array[StagedTask] = {
+    val spark = in.sparkSession
+    val bandsWriter = StagedParquetWriter(spark, bandsSchema)
+    val shWriter = StagedParquetWriter(spark, shinglesSchema)
+    in.queryExecution.toRdd.mapPartitions { rows =>
+      val bandsFile = bandsWriter.open(bandsOut)
+      val shFile = shWriter.open(shOut)
+      try {
+        val nullBuckets = MinHashImpl.bandHashes(null: Array[Long], bands)
+        val touched = Array.fill(moduli.length)(scala.collection.mutable.Set.empty[Int])
+        val bandRow = new GenericInternalRow(4)
+        val shRow = new GenericInternalRow(2)
+        var n = 0L
+        rows.foreach { r =>
+          val id = if (r.isNullAt(0)) null else r.getLong(0)
+          val buckets =
+            if (r.isNullAt(1)) {
+              shRow.update(1, null)
+              bandRow.update(3, null)
+              nullBuckets
+            } else {
+              val s = MinHashSketch.sketch(r.getUTF8String(1), shingleK, numHashes, bands)
+              shRow.update(1, UnsafeArrayData.fromPrimitiveArray(s.sh))
+              bandRow.update(3, s.sigb)
+              s.buckets
+            }
+          shRow.update(0, id)
+          shFile.write(shRow)
+          bandRow.update(0, id)
+          var b = 0
+          while (b < buckets.length) {
+            bandRow.setInt(1, b)
+            bandRow.setLong(2, buckets(b))
+            bandsFile.write(bandRow)
+            val h = XXH64.hashLong(buckets(b), XXH64.hashInt(b, 42L))
+            var i = 0
+            while (i < moduli.length) {
+              touched(i) += java.lang.Math.floorMod(h, moduli(i).toLong).toInt
+              i += 1
+            }
+            b += 1
+          }
+          n += buckets.length
+        }
+        Iterator.single(StagedTask(n, touched.map(_.toSet), bandsFile.close(), shFile.close()))
+      } catch {
+        case e: Throwable => bandsFile.abort(); shFile.abort(); throw e
+      }
+    }.collect()
   }
 
   /** The distinct candidate pairs, collected in one job with no

@@ -16,7 +16,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("snap-upsert").toString
     val q = SnapshotUpsert.maintain(
       in.toDF().toDF("k", "v", "version"), Seq("k"), "version", dir,
-      trigger = Trigger.ProcessingTime(0))
+      checkpoint = s"$dir-ckpt", trigger = Trigger.ProcessingTime(0))
     in.addData((1L, "a", 1L), (2L, "b", 1L))
     q.processAllAvailable()
     in.addData((1L, "a2", 2L), (3L, "c", 2L))
@@ -33,6 +33,27 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     assert(v1 == Map(1L -> "a", 2L -> "b"))
     // version 0 is the empty table
     assert(SnapshotUpsert.read(spark, dir, version = 0).isEmpty)
+  }
+
+  test("a restart over the same checkpoint publishes no new commit") {
+    val dir = java.nio.file.Files.createTempDirectory("snap-restart").toString
+    val src = java.nio.file.Files.createTempDirectory("snap-restart-src").toString
+    val v1 = (1L to 4L).map(k => (k, s"a$k", 1L)).toDF("k", "v", "version")
+    v1.repartition(1).write.mode("append").parquet(src)
+    Seq((1L, "a1-v2", 2L)).toDF("k", "v", "version").repartition(1).write.mode("append").parquet(src)
+    // one file per micro-batch: the first run commits batches 0 and 1
+    def run(): Unit = SnapshotUpsert.maintain(
+      spark.readStream.schema(v1.schema).option("maxFilesPerTrigger", 1).parquet(src),
+      Seq("k"), "version", dir, checkpoint = s"$dir-ckpt", numBuckets = 4).awaitTermination()
+    run()
+    val first = CommitLog.latestCommit(dir)
+    assert(first.exists(_._2.contains(1L)), s"latest commit after the first run: $first")
+    // the restart resumes past both batches instead of replaying the source
+    run()
+    assert(CommitLog.latestCommit(dir) == first)
+    val latest = SnapshotUpsert.read(spark, dir)
+      .select($"k", $"v").as[(Long, String)].collect().toMap
+    assert(latest == Map(1L -> "a1-v2", 2L -> "a2", 3L -> "a3", 4L -> "a4"))
   }
 
   test("changesBetween returns exactly the net effect of the later version") {
@@ -60,7 +81,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("snap-upsert2").toString
     val q = SnapshotUpsert.maintain(
       in.toDF().toDF("k", "v", "version"), Seq("k"), "version", dir,
-      trigger = Trigger.ProcessingTime(0))
+      checkpoint = s"$dir-ckpt", trigger = Trigger.ProcessingTime(0))
     in.addData((1L, "old", 5L), (1L, "new", 9L), (1L, "mid", 7L))
     q.processAllAvailable()
     q.stop()
@@ -75,7 +96,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("snap-upsert3").toString
     val q = SnapshotUpsert.maintain(
       in.toDF().toDF("k", "v", "version", "deleted"), Seq("k"), "version", dir,
-      trigger = Trigger.ProcessingTime(0))
+      checkpoint = s"$dir-ckpt", trigger = Trigger.ProcessingTime(0))
     // batch 1: k=1 updated at v5, k=2 deleted at v7
     in.addData((1L, "a-v5", 5L, false), (2L, "gone", 7L, true))
     q.processAllAvailable()
@@ -100,7 +121,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("snap-prune").toString
     val q = SnapshotUpsert.maintain(
       in.toDF().toDF("k", "v", "version"), Seq("k"), "version", dir,
-      trigger = Trigger.ProcessingTime(0), numBuckets = 8)
+      checkpoint = s"$dir-ckpt", trigger = Trigger.ProcessingTime(0), numBuckets = 8)
     // batch 1: a wide key range fans out over the buckets
     in.addData((1L to 40L).map(k => (k, s"b1-$k", 1L)): _*)
     q.processAllAvailable()
@@ -172,7 +193,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("snap-crash").toString
     val q = SnapshotUpsert.maintain(
       in.toDF().toDF("k", "v", "version"), Seq("k"), "version", dir,
-      trigger = Trigger.ProcessingTime(0), numBuckets = 4)
+      checkpoint = s"$dir-ckpt", trigger = Trigger.ProcessingTime(0), numBuckets = 4)
     in.addData((1L, "a", 1L))
     q.processAllAvailable()
     q.stop()
@@ -196,7 +217,7 @@ class SnapshotUpsertSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("snap-vacuum").toString
     val q = SnapshotUpsert.maintain(
       in.toDF().toDF("k", "v", "version"), Seq("k"), "version", dir,
-      trigger = Trigger.ProcessingTime(0), numBuckets = 4)
+      checkpoint = s"$dir-ckpt", trigger = Trigger.ProcessingTime(0), numBuckets = 4)
     // 60 keys over 4 buckets: every batch touches every bucket (the
     // P(empty bucket) tail is ~1e-7, so the GC count below is stable)
     (1 to 6).foreach { b =>

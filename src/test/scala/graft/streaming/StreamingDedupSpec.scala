@@ -2,12 +2,15 @@ package graft.streaming
 
 import graft.SparkTestSession
 import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.command.DataWritingCommand
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingDedupSpec extends AnyFunSuite {
@@ -458,6 +461,141 @@ class StreamingDedupSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(raw.size == raw.distinct.size, s"budget $budget: duplicate raw pairs $raw")
       assert(raw.toSet == batchPairs(b1.union(b2)), s"budget $budget: $raw")
+    }
+  }
+
+  /** `body`'s result, the Spark jobs it started, and the write commands
+    * (the `FileFormatWriter` path of `df.write`) it ran.
+    */
+  private def withJobsAndWrites[A](body: => A): (A, Int, Seq[String]) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    val ql = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = record(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = record(qe)
+      private def record(qe: QueryExecution): Unit =
+        qe.logical.collect { case w: DataWritingCommand => w.nodeName }.foreach(writes.add)
+    }
+    ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    spark.listenerManager.register(ql)
+    val out =
+      try { val a = body; ListenerDrain.drain(spark.sparkContext); a }
+      finally {
+        spark.sparkContext.removeSparkListener(l)
+        spark.listenerManager.unregister(ql)
+      }
+    import scala.jdk.CollectionConverters._
+    (out, jobs.get, writes.asScala.toSeq)
+  }
+
+  test("a micro-batch processBatch runs at most 4 jobs and no write job") {
+    val (b1, b2) = dupBatches
+    val work = java.nio.file.Files.createTempDirectory("sdedup-jobs").toString
+    StreamingDedup.incrementalNearDuplicatesInit(spark, work)
+    val (_, jobs1, writes1) =
+      withJobsAndWrites(StreamingDedup.processBatch(b1, work, 0.9, 5, 120, 20, batchId = Some(0L)))
+    StreamingDedup.compactIndex(spark, work, targetRecordsPerFile = 10L, indexPartitions = 32,
+      bandsPartitions = StreamingDedup.FollowIndexPartitions)
+    val (_, jobs2, writes2) =
+      withJobsAndWrites(StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, batchId = Some(1L)))
+    // staging, the broadcast of the batch's bucket rows, the candidate
+    // collect and the verify collect
+    assert(jobs1 <= 4 && jobs2 <= 4, s"jobs per batch: $jobs1, $jobs2")
+    assert(writes1.isEmpty && writes2.isEmpty, s"write commands ran: ${writes1 ++ writes2}")
+    assert(pairRows(work) == batchPairs(b1.union(b2)))
+    // the catch-up plan still writes its pairs with a Spark write job
+    val direct = java.nio.file.Files.createTempDirectory("sdedup-jobs-direct").toString
+    StreamingDedup.incrementalNearDuplicatesInit(spark, direct)
+    StreamingDedup.processBatch(b1, direct, 0.9, 5, 120, 20, Some(0L), 0)
+    val (_, _, writes3) =
+      withJobsAndWrites(StreamingDedup.processBatch(b2, direct, 0.9, 5, 120, 20, Some(1L), 0))
+    assert(writes3.size == 1, s"catch-up write commands: $writes3")
+  }
+
+  /** Data dirs of `dataset` under `work`. */
+  private def dataDirs(work: String, dataset: String): Set[String] =
+    Option(new java.io.File(s"$work/$dataset/data").listFiles()).getOrElse(Array.empty)
+      .filter(_.isDirectory).map(_.getName).toSet
+
+  test("a batch whose index publish fails leaves nothing visible, replays exactly, and its stages are vacuumed") {
+    val (b1, b2) = dupBatches
+    val b2Ids = b2.collect().map(_.getLong(0)).toSet
+    Seq(4096, 0).foreach { budget =>
+      val work = java.nio.file.Files.createTempDirectory("sdedup-stagefail").toString
+      StreamingDedup.incrementalNearDuplicatesInit(spark, work)
+      StreamingDedup.processBatch(b1, work, 0.9, 5, 120, 20, Some(0L), budget)
+      val before = Seq("bands", "shingles", "pairs").map(d => d -> dataDirs(work, d)).toMap
+      // crash window: batch 1 is staged, then its first publish fails (a
+      // file where the bands manifests belong)
+      val commits = new java.io.File(s"$work/bands/_commits")
+      val moved = new java.io.File(s"$work/bands/_commits.moved")
+      assert(commits.renameTo(moved) && commits.createNewFile())
+      intercept[Exception](StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, Some(1L), budget))
+      assert(commits.delete() && moved.renameTo(commits))
+      // no row of the batch is visible in any log
+      Seq("bands", "shingles").foreach { d =>
+        val ids = CommitLog.read(spark, s"$work/$d").collect().map(_.getLong(0)).toSet
+        assert((ids & b2Ids).isEmpty, s"budget $budget: $d shows batch 1 rows")
+      }
+      assert(pairRows(work) == batchPairs(b1), s"budget $budget: ${pairRows(work)}")
+      val orphans = Seq("bands", "shingles").map(d => d -> (dataDirs(work, d) -- before(d))).toMap
+      assert(orphans.values.forall(_.nonEmpty), s"budget $budget: no staged dirs $orphans")
+      // the replay publishes the batch once and finds exactly its pairs
+      StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, Some(1L), budget)
+      val raw = CommitLog.read(spark, s"$work/pairs")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(raw.size == raw.distinct.size, s"budget $budget: duplicate raw pairs $raw")
+      assert(raw.toSet == batchPairs(b1.union(b2)), s"budget $budget: $raw")
+      // the next compaction vacuums the stages that never published
+      StreamingDedup.compactIndex(spark, work)
+      orphans.foreach { case (d, dirs) =>
+        assert((dataDirs(work, d) & dirs).isEmpty, s"budget $budget: $d stages left: $dirs")
+      }
+    }
+  }
+
+  test("without a batchId, a retry after a failed pairs publish finds the batch operator's pairs") {
+    val (b1, b2) = dupBatches
+    Seq(4096, 0).foreach { budget =>
+      val work = java.nio.file.Files.createTempDirectory("sdedup-retry").toString
+      StreamingDedup.incrementalNearDuplicatesInit(spark, work)
+      StreamingDedup.processBatch(b1, work, 0.9, 5, 120, 20, None, budget)
+      val data = new java.io.File(s"$work/pairs/data")
+      val moved = new java.io.File(s"$work/pairs/data.moved")
+      assert(data.renameTo(moved) && data.createNewFile())
+      intercept[Exception](StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, None, budget))
+      assert(data.delete() && moved.renameTo(data))
+      StreamingDedup.processBatch(b2, work, 0.9, 5, 120, 20, None, budget)
+      // the index now holds batch 1 twice; candidate sets and the pairs
+      // read's distinct() absorb the copies
+      val shIds = CommitLog.read(spark, s"$work/shingles").collect().map(_.getLong(0)).toSeq
+      assert(shIds.count(_ == 10L) == 2, s"budget $budget: $shIds")
+      assert(pairRows(work) == batchPairs(b1.union(b2)), s"budget $budget: ${pairRows(work)}")
+    }
+  }
+
+  test("staged index and pairs files carry the codec df.write.parquet uses under the session conf") {
+    val (b1, b2) = dupBatches
+    def extension(f: String): String = f.substring(f.lastIndexOf("-c000") + "-c000".length)
+    val gzip = spark.newSession()
+    gzip.conf.set("spark.sql.parquet.compression.codec", "gzip")
+    Seq(spark, gzip).foreach { s =>
+      val out = java.nio.file.Files.createTempDirectory("sdedup-codec-ref").toString
+      s.range(3).write.mode("overwrite").parquet(out)
+      val want = new java.io.File(out).list().filter(_.endsWith(".parquet")).map(extension).toSet
+      assert(want.size == 1, s"reference write: $want")
+      val work = java.nio.file.Files.createTempDirectory("sdedup-codec").toString
+      StreamingDedup.incrementalNearDuplicatesInit(s, work)
+      StreamingDedup.processBatch(s.createDataFrame(b1.rdd, b1.schema), work, 0.9, 5, 120, 20, Some(0L))
+      StreamingDedup.processBatch(s.createDataFrame(b2.rdd, b2.schema), work, 0.9, 5, 120, 20, Some(1L))
+      val files = Seq("bands", "shingles", "pairs").map(d => d -> CommitLog.currentFiles(s"$work/$d")).toMap
+      assert(files.values.forall(_.nonEmpty), s"$files")
+      assert(files.values.flatten.map(extension).toSet == want,
+        s"codec ${s.conf.get("spark.sql.parquet.compression.codec")}: $files")
     }
   }
 
